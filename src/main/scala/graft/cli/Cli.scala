@@ -1,11 +1,12 @@
 package graft.cli
 
 import graft.gen.SyntheticRepoFiles
+import graft.graph.{GraphOps, SuperstepMetric}
 import graft.mine.MineJob
 import graft.model._
 import graft.resolve.ResolveJob
 import graft.util.Fs
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -142,6 +143,46 @@ object Cli {
     else if (Fs.exists(spark, s"$dir/aa_edges")) ("aa_edges", "srcArtifactId", "dstArtifactId")
     else throw new IllegalStateException(s"no pp_edges or aa_edges table in $dir — run `start` first")
 
+  /** One kernel command's launch over the store's linkage graph. */
+  private final case class KernelLaunch(spark: SparkSession, dir: String, edges: DataFrame,
+                                        dict: DataFrame, checkpointDir: String, stopFlag: String,
+                                        stopAfterMs: Long, stopSeqSeen: Long) {
+    /** Write `frame`'s `column` keyed by package id to `table`, if one is
+      * given, and the run's superstep metrics. */
+    def publish(frame: DataFrame, column: String, table: Option[String], metrics: Seq[SuperstepMetric]): Unit = {
+      table.foreach(t => frame.join(dict, Seq("id")).select(col("vid").as("package_id"), col(column))
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/$t"))
+      graft.Metrics.write(spark, dir, Seq.empty, metrics)
+    }
+  }
+
+  /**
+   * Launches a resumable kernel command. Checkpoints land in a directory
+   * named by `ckptName` from a fingerprint of the edge table, so a changed
+   * graph (after `update`) or a different iteration target never resumes
+   * from a stale snapshot — it starts fresh — while a killed run of the
+   * SAME graph continues mid-convergence with the same command.
+   *
+   * Stale-marker handling is by WATERMARK, not deletion: markers from before
+   * this invocation are ignored, so a `stop` racing a fresh launch is never
+   * swallowed and concurrent runs on the same store can't cancel each
+   * other's stop requests. Both channels are captured at COMMAND ENTRY,
+   * before the fingerprint and indexing jobs, so a stop issued during that
+   * set-up counts as "after launch": the entry time, and the seq of any
+   * marker present now — only a HIGHER seq written later is honored, a
+   * clock-free comparison (GraphOps.fsModifiedSince channel 1).
+   */
+  private def launch(spark: SparkSession, dir: String, ckptName: Long => String): KernelLaunch = {
+    val invokedAtMs = System.currentTimeMillis()
+    val seqSeen = GraphOps.stopMarkerSeq(spark, s"$dir/STOP").getOrElse(0L)
+    val (edgeTable, srcCol, dstCol) = graphTable(spark, dir)
+    val g = spark.read.parquet(s"$dir/$edgeTable")
+    val fp = g.select(xxhash64(col(srcCol), col(dstCol)).as("h"))
+      .agg(expr("coalesce(bit_xor(h), 0L)")).first().getLong(0) // order-independent; 0 for an empty graph
+    val (e, dict) = GraphOps.indexEdges(spark, g, srcCol, dstCol)
+    KernelLaunch(spark, dir, e, dict, s"$dir/checkpoints/${ckptName(fp)}", s"$dir/STOP", invokedAtMs, seqSeen)
+  }
+
   def run(spark: SparkSession, cmd: String, dir: String, rest: Array[String]): Unit = {
     import spark.implicits._
     cmd match {
@@ -198,109 +239,34 @@ object Cli {
         println(s"parse: $oldDeps AP -> $newDeps AA edges")
 
       case "pagerank" =>
-        // Resumable kernel run: checkpoints land in a directory keyed by a
-        // fingerprint of (edge table, iteration target), so a changed graph
-        // (after `update`) or a different iteration count never resumes from
-        // a stale snapshot — it starts fresh. A killed run of the SAME
-        // (graph, iters) continues mid-convergence with the same command.
-        // Stale-marker handling is by WATERMARK, not deletion: markers from
-        // before this invocation are ignored, so a `stop` racing a fresh
-        // launch is never swallowed and concurrent runs on the same store
-        // can't cancel each other's stop requests. Captured at COMMAND ENTRY
-        // (before the fingerprint/indexing jobs): a stop issued during that
-        // setup window must count as "after launch", not stale.
-        val invokedAtMs = System.currentTimeMillis()
-        // seq seen at entry: a marker already present now (whatever its
-        // clocks say) must NOT stop this run; only a HIGHER seq written
-        // later is honored — clock-free (GraphOps.fsModifiedSince channel 1)
-        val seqSeen = graft.graph.GraphOps.stopMarkerSeq(spark, s"$dir/STOP").getOrElse(0L)
         val iters = rest.headOption.map(_.toInt).getOrElse(20)
-        val (edgeTable, srcCol, dstCol) = graphTable(spark, dir)
-        val pp = spark.read.parquet(s"$dir/$edgeTable")
-        val fp = pp.select(xxhash64(col(srcCol), col(dstCol)).as("h"))
-          .agg(expr("coalesce(bit_xor(h), 0L)")).first().getLong(0) // order-independent; 0 for an empty graph
-        val ckptDir = f"$dir/checkpoints/pr-$fp%016x-i$iters"
-        val (e, dict) = graft.graph.GraphOps.indexEdges(spark, pp, srcCol, dstCol)
-        val latest = graft.graph.GraphOps.latestCheckpoint(spark, ckptDir)
-        val stopFlag = s"$dir/STOP"
-        val result = latest match {
-          case Some(step) if step <= iters =>
-            graft.graph.GraphOps.resumePageRank(spark, e, iters, ckptDir,
-              stopFlag = Some(stopFlag), stopAfterMs = invokedAtMs, stopSeqSeen = seqSeen)
-          case _ =>
-            graft.graph.GraphOps.pageRank(spark, e, iters, checkpointDir = Some(ckptDir),
-              stopFlag = Some(stopFlag), stopAfterMs = invokedAtMs, stopSeqSeen = seqSeen)
-        }
-        val hasCkpt = latest.isDefined
-        result.ranks.join(dict, Seq("id"))
-          .select($"vid".as("package_id"), $"rank")
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/pagerank")
-        graft.Metrics.write(spark, dir, Seq.empty, result.metrics)
-        val stopped = result.supersteps < iters
-        println(s"pagerank: ${result.supersteps} supersteps (resumed=$hasCkpt, stopped=$stopped)")
+        val k = launch(spark, dir, fp => f"pr-$fp%016x-i$iters")
+        val resumed = GraphOps.latestCheckpoint(spark, k.checkpointDir).isDefined
+        val r = GraphOps.pageRank(spark, k.edges, iters, checkpointDir = Some(k.checkpointDir),
+          stopFlag = Some(k.stopFlag), stopAfterMs = k.stopAfterMs, stopSeqSeen = k.stopSeqSeen)
+        k.publish(r.ranks, "rank", Some("pagerank"), r.metrics)
+        println(s"pagerank: ${r.supersteps} supersteps (resumed=$resumed, stopped=${r.supersteps < iters})")
 
       case "components" =>
-        // Resumable connected components over the store's linkage graph,
-        // same checkpoint-fingerprint discipline as `pagerank`: a changed
-        // graph starts fresh; a killed run of the same graph continues from
-        // the latest contracted edge snapshot.
-        // same cooperative-stop wiring as `pagerank`: watermark captured at
-        // COMMAND ENTRY so a stop issued during the fingerprint/indexing
-        // setup jobs is "after launch", never stale
-        val ccStop = Some(s"$dir/STOP"); val ccInvokedAt = System.currentTimeMillis()
-        val ccSeqSeen = graft.graph.GraphOps.stopMarkerSeq(spark, s"$dir/STOP").getOrElse(0L)
-        val (et, sc, dc) = graphTable(spark, dir)
-        val g = spark.read.parquet(s"$dir/$et")
-        val fp = g.select(xxhash64(col(sc), col(dc)).as("h"))
-          .agg(expr("coalesce(bit_xor(h), 0L)")).first().getLong(0)
-        val ckptDir = f"$dir/checkpoints/cc-$fp%016x"
-        val (e, dict) = graft.graph.GraphOps.indexEdges(spark, g, sc, dc)
-        val result = graft.graph.GraphOps.latestCheckpoint(spark, ckptDir, "cc") match {
-          case Some(_) => graft.graph.GraphOps.resumeConnectedComponents(spark, e, ckptDir,
-            stopFlag = ccStop, stopAfterMs = ccInvokedAt, stopSeqSeen = ccSeqSeen)
-          case None => graft.graph.GraphOps.connectedComponentsResult(spark, e,
-            checkpointDir = Some(ckptDir), stopFlag = ccStop, stopAfterMs = ccInvokedAt,
-            stopSeqSeen = ccSeqSeen)
-        }
+        val k = launch(spark, dir, fp => f"cc-$fp%016x")
+        val r = GraphOps.connectedComponentsResult(spark, k.edges, checkpointDir = Some(k.checkpointDir),
+          stopFlag = Some(k.stopFlag), stopAfterMs = k.stopAfterMs, stopSeqSeen = k.stopSeqSeen)
         // a STOPPED run's labels are partial — don't overwrite the published
         // table with them; the checkpoint carries the state for resume
-        if (!result.stopped) {
-          result.components.join(dict, Seq("id"))
-            .select($"vid".as("package_id"), $"component")
-            .write.mode(SaveMode.Overwrite).parquet(s"$dir/components")
-        }
-        graft.Metrics.write(spark, dir, Seq.empty, result.metrics)
-        println(if (result.stopped)
-          s"components: stopped at round ${result.rounds} (checkpointed, resumable; table NOT updated)"
-        else s"components: converged in ${result.rounds} rounds")
+        k.publish(r.components, "component", Option.unless(r.stopped)("components"), r.metrics)
+        println(if (r.stopped)
+          s"components: stopped at round ${r.rounds} (checkpointed, resumable; table NOT updated)"
+        else s"components: converged in ${r.rounds} rounds")
 
       case "labelprop" =>
-        // stop watermark at command entry (see `components`)
-        val lpStop = Some(s"$dir/STOP"); val lpInvokedAt = System.currentTimeMillis()
-        val lpSeqSeen = graft.graph.GraphOps.stopMarkerSeq(spark, s"$dir/STOP").getOrElse(0L)
         val iters = rest.headOption.map(_.toInt).getOrElse(10)
-        val (et, sc, dc) = graphTable(spark, dir)
-        val g = spark.read.parquet(s"$dir/$et")
-        val fp = g.select(xxhash64(col(sc), col(dc)).as("h"))
-          .agg(expr("coalesce(bit_xor(h), 0L)")).first().getLong(0)
-        val ckptDir = f"$dir/checkpoints/lp-$fp%016x-i$iters"
-        val (e, dict) = graft.graph.GraphOps.indexEdges(spark, g, sc, dc)
-        val result = graft.graph.GraphOps.latestCheckpoint(spark, ckptDir, "lp") match {
-          case Some(step) if step < iters =>
-            graft.graph.GraphOps.resumeLabelPropagation(spark, e, iters, ckptDir,
-              stopFlag = lpStop, stopAfterMs = lpInvokedAt, stopSeqSeen = lpSeqSeen)
-          case _ => graft.graph.GraphOps.labelPropagationResult(spark, e, iters,
-            checkpointDir = Some(ckptDir), stopFlag = lpStop, stopAfterMs = lpInvokedAt,
-            stopSeqSeen = lpSeqSeen)
-        }
+        val k = launch(spark, dir, fp => f"lp-$fp%016x-i$iters")
+        val r = GraphOps.labelPropagationResult(spark, k.edges, iters, checkpointDir = Some(k.checkpointDir),
+          stopFlag = Some(k.stopFlag), stopAfterMs = k.stopAfterMs, stopSeqSeen = k.stopSeqSeen)
         // a k-superstep LP label set is valid in its own right — publish it
         // even when stopped early (unlike CC's partial contraction)
-        result.labels.join(dict, Seq("id"))
-          .select($"vid".as("package_id"), $"label")
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/labels")
-        graft.Metrics.write(spark, dir, Seq.empty, result.metrics)
-        val lpStopped = result.supersteps < iters
-        println(s"labelprop: ${result.supersteps} supersteps (stopped=$lpStopped)")
+        k.publish(r.labels, "label", Some("labels"), r.metrics)
+        println(s"labelprop: ${r.supersteps} supersteps (stopped=${r.supersteps < iters})")
 
       case "stop" =>
         // Cooperative cancel (reference Task.java:207-217): a running
@@ -312,7 +278,7 @@ object Cli {
         // the epoch-ms keeps the timestamp fallback working for runners that
         // didn't capture a seq (GraphOps.fsModifiedSince documents both
         // channels).
-        val nextSeq = graft.graph.GraphOps.stopMarkerSeq(spark, s"$dir/STOP").getOrElse(0L) + 1L
+        val nextSeq = GraphOps.stopMarkerSeq(spark, s"$dir/STOP").getOrElse(0L) + 1L
         Fs.write(spark, s"$dir/STOP", s"${System.currentTimeMillis()} seq=$nextSeq")
         println("stop: requested (takes effect at the next checkpoint boundary)")
 

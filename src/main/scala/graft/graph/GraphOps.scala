@@ -98,8 +98,10 @@ object GraphOps {
    * @param tol       stop when the conservative bound on max |rank delta|
    *                  across a checkpoint block is < tol (checked at
    *                  boundaries only); <=0 = fixed iteration count.
-   * @param checkpointDir directory for resumable state; on restart, pass the
-   *                  same dir to [[resumePageRank]].
+   * @param checkpointDir directory for resumable state, written at every
+   *                  checkpoint boundary; a run whose dir already holds a
+   *                  checkpoint at a superstep <= `iterations` continues
+   *                  from it instead of starting fresh.
    * @param stopFlag  path of a cooperative STOP marker: the run ends at the
    *                  next checkpoint boundary if the file exists and was
    *                  modified at/after `stopAfterMs`.
@@ -114,19 +116,12 @@ object GraphOps {
                damping: Double = 0.85, redistributeDangling: Boolean = true,
                tol: Double = 0.0, checkpointEvery: Int = 5,
                checkpointDir: Option[String] = None,
-               startRanks: Option[DataFrame] = None, startSuperstep: Int = 0,
                stopFlag: Option[String] = None, stopAfterMs: Long = 0L,
                stopSeqSeen: Long = -1L,
                restart: Option[DataFrame] = None,
-               weightCol: Option[String] = None): PageRankResult = {
+               weightCol: Option[String] = None): PageRankResult =
+    inRun(spark, "pagerank", checkpointDir, stopFlag, stopAfterMs, stopSeqSeen) { run =>
     import spark.implicits._
-    val confPartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // AQE re-plans every superstep and its partition coalescing breaks the
-    // co-partitioning reuse between ranks/outDeg/edges (measured 3x slower
-    // with AQE on). Iterative kernels run with it off, restored afterwards.
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
 
     // Sentinel id for the dangling supernode (below any dense vertex id).
     val Sent = Long.MinValue
@@ -134,27 +129,23 @@ object GraphOps {
     // cache the raw projection so the partition-sizing count and the
     // repartition read the SOURCE once, not twice; released as soon as the
     // partitioned edge table is materialized
-    val eRaw = (weightCol match {
+    val eRaw = run.cache(weightCol match {
       // weighted arm: transition probability becomes wt/sum(wt) per src —
       // duplicate (src, dst) rows are MULTI-EDGES and sum their weight
       case Some(wc) => edges.select($"src".cast("long"), $"dst".cast("long"),
         col(wc).cast("double").as("wt"))
       case None => edges.select($"src".cast("long"), $"dst".cast("long"))
-    }).persist(StorageLevel.MEMORY_AND_DISK)
+    })
     val edgeCount = eRaw.count()
-    val shufflePartitions = kernelPartitions(confPartitions, edgeCount)
-    // kernel-internal shuffle width: every aggregation exchange in the loop
-    // must match the static edge/state layout's width, or EnsureRequirements
-    // inserts an extra per-superstep exchange to reconcile the two
-    // (measured on the 48k-edge mined graph: agg at 32 vs layout at 8);
-    // restored in the finally
-    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
-    val e = eRaw
-      .repartition(shufflePartitions, $"src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val shufflePartitions = kernelPartitions(run.confWidth, edgeCount)
+    // every aggregation exchange in the loop must match the static
+    // edge/state layout's width, or EnsureRequirements inserts an extra
+    // per-superstep exchange to reconcile the two (measured on the 48k-edge
+    // mined graph: agg at 32 vs layout at 8)
+    run.width(shufflePartitions)
+    val e = run.cache(eRaw.repartition(shufflePartitions, $"src"))
 
-    val vertices = e.select($"src".as("id")).union(e.select($"dst".as("id")))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    val vertices = run.cache(e.select($"src".as("id")).union(e.select($"dst".as("id"))).distinct())
     // count + reserved-id guard in ONE job — which also materializes the
     // partitioned edge cache (vertices derive from e), so e needs no count
     // action of its own. Long.MinValue is the dangling supernode's sentinel
@@ -180,22 +171,20 @@ object GraphOps {
     // redistributeDangling=false semantic).
     require(restart.isEmpty || !redistributeDangling,
       "personalized restart requires redistributeDangling=false")
-    val restartSeeds = restart.map { s =>
-      val sv = s.select(col("id").cast("long").as("id")).distinct()
-        .join(vertices, Seq("id"), "left_semi")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    val pFrame = restart.map { s =>
+      val sv = run.cache(s.select(col("id").cast("long").as("id")).distinct()
+        .join(vertices, Seq("id"), "left_semi"))
       val ns = sv.count()
       require(ns > 0, "pageRank restart: no seed id is present in the graph")
-      (sv, sv.withColumn("p", lit(1.0 / ns)))
+      sv.withColumn("p", lit(1.0 / ns))
     }
-    val pFrame = restartSeeds.map(_._2)
 
     // Static weighted transition edges E' (see Scaladoc): built once,
     // hash-partitioned by src once, reused by every superstep's join.
-    val outDeg = (weightCol match {
+    val outDeg = run.cache(weightCol match {
       case Some(_) => e.groupBy($"src").agg(count(lit(1)).as("outDeg"), sum($"wt").as("wsum"))
       case None    => e.groupBy($"src").agg(count(lit(1)).as("outDeg"))
-    }).persist(StorageLevel.MEMORY_AND_DISK)
+    })
     if (weightCol.isDefined) {
       // zero/negative/NULL weights would silently corrupt the distribution
       // (wsum<=0 divides to Inf/negative mass; NULL rows drop their edge's
@@ -250,10 +239,9 @@ object GraphOps {
       .select($"src", least(lit(shufflePartitions.toLong),
         ($"outDeg" / hubThreshold) + 1L).cast("int").as("nsalt"))
     val sentSalt = math.min(shufflePartitions.toLong, n / hubThreshold + 1L).toInt
-    val hubs = (if (redistributeDangling && sentSalt > 1)
+    val hubs = run.cache(if (redistributeDangling && sentSalt > 1)
         realHubs.unionByName(Seq((Sent, sentSalt)).toDF("src", "nsalt"))
       else realHubs)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val haveHubs = nRealHubs > 0 || (redistributeDangling && sentSalt > 1)
 
     // CSR-style adjacency: partitions hash-bucketed by (src[, salt]) and
@@ -266,7 +254,7 @@ object GraphOps {
     // (Queries.indexedPpEdges), so per-superstep analysis stays O(k).
     // Hub-free graphs skip the salt machinery entirely (no generator in the
     // hot path).
-    val eWS = (if (!haveHubs) eW.withColumn("salt", lit(0))
+    val eWS = run.cache(if (!haveHubs) eW.withColumn("salt", lit(0))
       .repartition(shufflePartitions, $"src")
       .sortWithinPartitions($"src")
     else eW.join(broadcast(hubs), Seq("src"), "left")
@@ -274,7 +262,6 @@ object GraphOps {
         pmod(hash($"dst"), coalesce($"nsalt", lit(1))).as("salt"))
       .repartition(shufflePartitions, $"src", $"salt")
       .sortWithinPartitions($"src", $"salt"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     eWS.count()
 
     // Every id that owns a state row each superstep (sentinel included).
@@ -294,27 +281,22 @@ object GraphOps {
         .select($"id", coalesce($"p", lit(0.0)).as("p"))
       case None => allIdsBase
     })
-    val allIds = (if (!haveHubs) allIdsP
+    val allIds = run.cache((if (!haveHubs) allIdsP
       else allIdsP.join(broadcast(hubs.withColumnRenamed("src", "id")), Seq("id"), "left")
         .withColumn("nsalt", coalesce($"nsalt", lit(1))))
       .repartition(shufflePartitions, $"id")
-      .sortWithinPartitions($"id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .sortWithinPartitions($"id"))
     // no count action: the state-init localCheckpoint below scans every
     // allIds partition and materializes this cache in the same job
 
     // State: x(v) per vertex plus x(Sent) = m; rank_t = x_t + d*m_t.
-    // Internal checkpoints carry column "x" (sentinel row included); a
-    // caller-provided plain ranks frame (column "rank") enters as x = rank,
-    // m = 0 — exact, since rank_0 has no dangling mass applied yet.
-    // (Checkpoints may also carry nsalt; it is dropped and re-derived.)
-    val withSalt = (df: DataFrame) =>
-      if (!haveHubs) df else df.join(allIds.select($"id", $"nsalt"), Seq("id"))
-    var state = (startRanks match {
-      case Some(s) if s.columns.contains("x") => withSalt(s.select($"id", $"x"))
-      case Some(r) =>
-        val base = r.select($"id", $"rank".as("x"))
-        withSalt(if (redistributeDangling) base.unionByName(Seq((Sent, 0.0)).toDF("id", "x")) else base)
+    // Checkpoints carry column "x" (sentinel row included) and may also
+    // carry nsalt, which a resumed run drops and re-derives.
+    val resumed = run.restorePoint(iterations)
+    var state = (resumed match {
+      case Some((_, s)) =>
+        if (!haveHubs) s.select($"id", $"x")
+        else s.select($"id", $"x").join(allIds.select($"id", $"nsalt"), Seq("id"))
       case None => pFrame match {
         // PPR starts AT the restart distribution (the walk's stationary
         // point under d=0); uniform starts at 1/n as before
@@ -332,16 +314,14 @@ object GraphOps {
 
     val metrics = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetric]
     val edgePartitions = eWS.rdd.getNumPartitions
-    var step = startSuperstep
+    var step = resumed.fold(0)(_._1)
     var converged = false
 
     // Block width stays at checkpointEvery even when no tol/checkpoint/stop
     // is requested: running q14's 8 (or q36's 10) supersteps as ONE deep job
-    // was MEASURED ~10% slower than 5-step blocks (R6Probe, 3 runs each) —
-    // the mid-chain materialization buys better stage scheduling than the
+    // was MEASURED ~10% slower than 5-step blocks (3 runs each) — the
+    // mid-chain materialization buys better stage scheduling than the
     // saved job costs.
-    val effCkptEvery = checkpointEvery
-
     while (step < iterations && !converged) {
       val t0 = System.nanoTime()
       // One join + one aggregation; supersteps between checkpoint boundaries
@@ -364,7 +344,7 @@ object GraphOps {
         .select($"dst".as("id"), ($"x" * $"w").as("c"))
         .groupBy($"id").agg(sum($"c").as("c"))
       step += 1
-      val atCheckpoint = step % effCkptEvery == 0 || step == iterations
+      val atCheckpoint = step % checkpointEvery == 0 || step == iterations
       // restart term: uniform keeps the EXACT op sequence rounds 1-4 shipped
       // ((1-d)/n as one literal); personalized reads p off the allIds leaf
       val restartTerm = pFrame match {
@@ -379,7 +359,7 @@ object GraphOps {
         .select(Seq($"id", xNext) ++ (if (haveHubs) Seq($"nsalt") else Nil): _*)
       // debug/evidence hook: dump the first boundary block's physical plan
       // (the real executed superstep shape) without touching the hot path
-      if (atCheckpoint && step <= effCkptEvery && sys.env.contains("GRAFT_KERNEL_EXPLAIN"))
+      if (atCheckpoint && step <= checkpointEvery && sys.env.contains("GRAFT_KERNEL_EXPLAIN"))
         Console.err.println("=== pagerank boundary block plan ===\n" +
           chained.queryExecution.explainString(
             org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
@@ -399,13 +379,8 @@ object GraphOps {
           maxDelta = dx + (if (redistributeDangling) damping * dm else 0.0)
           if (maxDelta < tol) converged = true
         }
-        checkpointDir.foreach(dir => writeCheckpoint(spark, dir, "pagerank", step, newState))
         prevBoundary = newState
-        // cooperative cancel (reference `stop`, Task.java:207-217): a STOP
-        // marker on the store FS ends the run at this (checkpointed,
-        // resumable) boundary — works from any node that shares the FS;
-        // markers older than the caller's watermark are stale and ignored
-        if (stopFlag.exists(f => fsModifiedSince(spark, f, stopAfterMs, stopSeqSeen))) converged = true
+        if (run.boundary(step, newState)) converged = true
       }
       state = newState
       metrics += SuperstepMetric("pagerank", step, (System.nanoTime() - t0) / 1000000L,
@@ -420,28 +395,7 @@ object GraphOps {
         val m = state.filter($"id" === Sent).select($"x").as[Double].head()
         state.filter($"id" =!= Sent).select($"id", ($"x" + lit(damping * m)).as("rank"))
       }
-    e.unpersist(false); eWS.unpersist(false); hubs.unpersist(false)
-    outDeg.unpersist(false); vertices.unpersist(false); allIds.unpersist(false)
-    // unpersist the frame that was actually persisted (the derived
-    // withColumn plan would not match any cache entry)
-    restartSeeds.foreach(_._1.unpersist(false))
     PageRankResult(ranks, metrics.toSeq, step)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-  }
-
-  /** Resume PageRank mid-convergence from the latest checkpoint in `dir`. */
-  def resumePageRank(spark: SparkSession, edges: DataFrame, iterations: Int, dir: String,
-                     damping: Double = 0.85, redistributeDangling: Boolean = true,
-                     tol: Double = 0.0, checkpointEvery: Int = 5,
-                     stopFlag: Option[String] = None, stopAfterMs: Long = 0L,
-               stopSeqSeen: Long = -1L,
-               restart: Option[DataFrame] = None,
-               weightCol: Option[String] = None): PageRankResult = {
-    val (step, ranks) = readLatestCheckpoint(spark, dir, "pagerank")
-    pageRank(spark, edges, iterations, damping, redistributeDangling, tol, checkpointEvery,
-      Some(dir), startRanks = Some(ranks), startSuperstep = step, stopFlag = stopFlag,
-      stopAfterMs = stopAfterMs, stopSeqSeen = stopSeqSeen, restart = restart,
-      weightCol = weightCol)
   }
 
   /** Small-file IO through the Hadoop FileSystem so checkpoints work on any
@@ -458,18 +412,17 @@ object GraphOps {
     * for SMALL graphs (~150k edges per partition, floor 8). Guide §2.2 sizes
     * partitions by work volume (100 MB–1 GB each), not core count; the old
     * 10k-edge budget (~160 KB/partition) made every kernel stage overhead-
-    * bound on sub-10M-edge graphs — re-measured in r6 with a budget sweep
-    * (R6Probe, warm runs at sf0.1): CC 10.6 s → 6.8 s and PageRank
-    * 6.7 s → 5.6 s going 10k → 150k, with the round-1 CC contraction job
-    * alone dropping 3.3 s → 1.5 s. 150k edges ≈ 2.4 MB is still well below
-    * the guide's floor, so this moves TOWARD principled sizing, not past
-    * it. The configured value always wins once the graph is big
-    * (100 TB ⇒ the cap), so the large-scale plan is unchanged; the env
-    * override exists for per-deployment tuning. */
+    * bound on sub-10M-edge graphs — re-measured with a budget sweep (warm
+    * runs at sf0.1): CC 10.6 s → 6.8 s and PageRank 6.7 s → 5.6 s going
+    * 10k → 150k, with the round-1 CC contraction job alone dropping
+    * 3.3 s → 1.5 s. 150k edges ≈ 2.4 MB is still well below the guide's
+    * floor, so this moves TOWARD principled sizing, not past it. The
+    * configured value always wins once the graph is big (100 TB ⇒ the
+    * cap), so the large-scale plan is unchanged. */
   private[graph] def kernelPartitions(conf: Int, edgeCount: Long): Int =
     // never EXCEED the configured value (a 4-core box configured to 4 stays
     // at 4); below it, floor at 8 so tiny graphs keep some parallelism
-    math.min(conf.toLong, math.max(8L, edgeCount / sys.env.getOrElse("GRAFT_EDGES_PER_PARTITION", "150000").toLong + 1L)).toInt
+    math.min(conf.toLong, math.max(8L, edgeCount / 150000L + 1L)).toInt
 
   /** Monotonic sequence number recorded in a STOP marker payload
     * (`"<epochMs> seq=<n>"`), if present. Kernel launchers capture it at
@@ -553,10 +506,77 @@ object GraphOps {
     fsWrite(spark, s"$dir/$kernel/LATEST", step.toString)
   }
 
-  private def readLatestCheckpoint(spark: SparkSession, dir: String, kernel: String): (Int, DataFrame) = {
-    val step = latestCheckpoint(spark, dir, kernel)
-      .getOrElse(throw new IllegalStateException(s"no $kernel checkpoint in $dir"))
-    (step, spark.read.parquet(s"$dir/$kernel/superstep=$step"))
+  // ------------------------------------------------------------ run scope
+
+  private val AqeKey = "spark.sql.adaptive.enabled"
+  private val WidthKey = "spark.sql.shuffle.partitions"
+  private val SmjKey = "spark.sql.join.preferSortMergeJoin"
+
+  /** The configured shuffle width that kernels size themselves against. */
+  private def confPartitions(spark: SparkSession): Int = spark.conf.get(WidthKey, "32").toInt
+
+  /**
+   * One iterative-kernel run: the session conf it changes and the frames it
+   * caches, restored and released in ONE place. Opening the scope saves AQE,
+   * the shuffle width and the sort-merge-join preference and turns AQE off:
+   * AQE re-plans every superstep, and its partition coalescing breaks the
+   * co-partitioning reuse between the state and the static edge layout
+   * (measured 3x slower with it on). Closing restores all three and
+   * unpersists every frame registered through [[cache]], on success and on
+   * failure alike; a frame the returned result still reads is persisted
+   * outside the scope instead.
+   *
+   * The resumable kernels (PageRank, CC, LP) also take their checkpoint and
+   * STOP-marker settings from the scope: [[restorePoint]] is where a run
+   * continues from, [[boundary]] is their shared checkpoint-then-stop step.
+   */
+  private final class KernelRun(spark: SparkSession, kernel: String,
+                                checkpointDir: Option[String], stopFlag: Option[String],
+                                stopAfterMs: Long, stopSeqSeen: Long) {
+    private val saved = { val set = spark.conf.getAll; Seq(AqeKey, WidthKey, SmjKey).map(k => k -> set.get(k)) }
+    private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val confWidth: Int = confPartitions(spark)
+    spark.conf.set(AqeKey, "false")
+
+    /** Kernel-internal shuffle width for every exchange the loop plans. */
+    def width(p: Int): Unit = spark.conf.set(WidthKey, p.toLong)
+
+    def preferHashJoin(): Unit = spark.conf.set(SmjKey, "false")
+
+    /** Persist `df` until the run ends. */
+    def cache(df: DataFrame): DataFrame = {
+      frames += df
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+
+    /** The latest checkpoint in `checkpointDir` at a step <= `target`. */
+    def restorePoint(target: Int): Option[(Int, DataFrame)] =
+      for (dir <- checkpointDir; step <- latestCheckpoint(spark, dir, kernel) if step <= target)
+        yield (step, spark.read.parquet(s"$dir/$kernel/superstep=$step"))
+
+    /** Checkpoint `state` (when a dir is set), then report whether a STOP
+      * marker asks the run to end at this boundary — the reference's `stop`
+      * (Task.java:207-217) as a cooperative cancel that leaves the run
+      * resumable from any node sharing the FS; markers older than the
+      * caller's watermark are stale and ignored. */
+    def boundary(step: Int, state: DataFrame): Boolean = {
+      checkpointDir.foreach(dir => writeCheckpoint(spark, dir, kernel, step, state))
+      stopFlag.exists(f => fsModifiedSince(spark, f, stopAfterMs, stopSeqSeen))
+    }
+
+    def close(): Unit = {
+      // newest first: uncaching a frame re-plans every still-registered,
+      // never-built cache derived from it
+      frames.reverseIterator.foreach(_.unpersist(false))
+      saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+  }
+
+  private def inRun[T](spark: SparkSession, kernel: String,
+                       checkpointDir: Option[String] = None, stopFlag: Option[String] = None,
+                       stopAfterMs: Long = 0L, stopSeqSeen: Long = -1L)(body: KernelRun => T): T = {
+    val run = new KernelRun(spark, kernel, checkpointDir, stopFlag, stopAfterMs, stopSeqSeen)
+    try body(run) finally run.close()
   }
 
   // ------------------------------------------------- connected components
@@ -585,48 +605,32 @@ object GraphOps {
   def connectedComponents(spark: SparkSession, edges: DataFrame, maxIter: Int = 50): DataFrame =
     connectedComponentsResult(spark, edges, maxIter).components
 
-  /** Resume a checkpointed CC run mid-convergence: continues from the latest
-    * contracted edge set written to `dir` (north_rule: every kernel run is
-    * resumable with per-partition lineage + metrics). */
-  def resumeConnectedComponents(spark: SparkSession, edges: DataFrame, dir: String,
-                                maxIter: Int = 50, checkpointEvery: Int = 5,
-                                stopFlag: Option[String] = None, stopAfterMs: Long = 0L,
-               stopSeqSeen: Long = -1L): CcResult = {
-    val (round, state) = readLatestCheckpoint(spark, dir, "cc")
-    connectedComponentsResult(spark, edges, maxIter, checkpointEvery, Some(dir),
-      startState = Some(state), startRound = round,
-      stopFlag = stopFlag, stopAfterMs = stopAfterMs, stopSeqSeen = stopSeqSeen)
-  }
-
-  /** @param stopFlag cooperative STOP marker (same watermark semantics as
+  /** @param checkpointDir resumable state, same contract as [[pageRank]]'s:
+    *                 a run whose dir holds a contracted edge set at a round
+    *                 <= `maxIter` continues from it.
+    * @param stopFlag cooperative STOP marker (same watermark semantics as
     *                 [[pageRank]]): the run ends at the next checkpoint
-    *                 boundary, resumable via [[resumeConnectedComponents]];
+    *                 boundary, resumable through the same `checkpointDir`;
     *                 a stopped run's result carries `stopped = true` and
     *                 PARTIAL component labels. */
   def connectedComponentsResult(spark: SparkSession, edges: DataFrame, maxIter: Int = 50,
                                 checkpointEvery: Int = 5, checkpointDir: Option[String] = None,
-                                startState: Option[DataFrame] = None,
-                                startRound: Int = 0,
                                 stopFlag: Option[String] = None, stopAfterMs: Long = 0L,
-               stopSeqSeen: Long = -1L): CcResult = {
+                                stopSeqSeen: Long = -1L): CcResult =
+    inRun(spark, "cc", checkpointDir, stopFlag, stopAfterMs, stopSeqSeen) { run =>
     import spark.implicits._
-    val confPartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val smjWas = spark.conf.get("spark.sql.join.preferSortMergeJoin", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     // Shuffled-hash over sort-merge for the star-round joins (guide §3.1):
     // the build sides (minsDeg / withMin) hold ONE row per src key, so a
     // per-partition hash table always fits, and the streamed sym/dir side
-    // skips its per-round O(E log E) sort entirely. Restored in the finally.
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    try {
+    // skips its per-round O(E log E) sort entirely.
+    run.preferHashJoin()
     // cache the raw projection: the partition-sizing count, the vertex set
     // and the initial contracted edge set all read the source ONCE; released
     // below once both derived tables are materialized
-    val input = edges.select($"src".cast("long"), $"dst".cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val shuffleP = kernelPartitions(confPartitions, input.count())
-    val shufflePartitions = shuffleP
+    val input = run.cache(edges.select($"src".cast("long"), $"dst".cast("long")))
+    val shufflePartitions = kernelPartitions(run.confWidth, input.count())
+    // persisted outside the run scope: the result's labels read it after
+    // the run returns
     val vertices = input.select($"src".as("id")).union(input.select($"dst".as("id")))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
     vertices.count()
@@ -678,7 +682,8 @@ object GraphOps {
     // ONE exchange builds the deduped src-partitioned start state:
     // repartition by src, then dedup in place (hashpartitioning(src)
     // satisfies the (src, dst) clustering — guide §2.4)
-    var e = startState.getOrElse(input.filter($"src" =!= $"dst"))
+    val resumed = run.restorePoint(maxIter)
+    var e = resumed.fold(input.filter($"src" =!= $"dst"))(_._2)
       .repartition(shufflePartitions, $"src")
       .dropDuplicates("src", "dst")
       .localCheckpoint(true) // eager: materializes from the input cache
@@ -686,7 +691,7 @@ object GraphOps {
     val edgePartitions = e.rdd.getNumPartitions
 
     val metrics = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetric]
-    var iter = startRound
+    var iter = resumed.fold(0)(_._1)
     var stoppedEarly = false
     // null = no snapshot yet (round 1 probes eagerly); None = probed, hub-free
     var hubsForRound: Option[DataFrame] = null
@@ -726,8 +731,8 @@ object GraphOps {
       // (zero extra jobs); kernelPartitions never EXCEEDS the configured
       // value, so at 100 TB the conf cap always wins and the plan is
       // unchanged — only the contracted tail narrows.
-      val roundP = kernelPartitions(confPartitions, nEdges)
-      spark.conf.set("spark.sql.shuffle.partitions", roundP)
+      val roundP = kernelPartitions(run.confWidth, nEdges)
+      run.width(roundP)
       val hubThreshold = math.max(1000L, 2L * nEdges / roundP / 4)
       // ONE explicit exchange of the symmetrized table serves BOTH consumers
       // (guide §2.4): the min/degree aggregation and the large-star join each
@@ -738,11 +743,10 @@ object GraphOps {
       val sym = e.filter($"src" =!= $"dst")
         .union(e.filter($"src" =!= $"dst").select($"dst".as("src"), $"src".as("dst")))
         .repartition(roundP, $"src")
-      val minsDeg = sym.groupBy($"src")
-        .agg(least(min($"dst"), first($"src")).as("m"), count(lit(1)).as("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val minsDeg = run.cache(sym.groupBy($"src")
+        .agg(least(min($"dst"), first($"src")).as("m"), count(lit(1)).as("deg")))
       val hubTable = minsDeg.filter($"deg" > hubThreshold)
-        .select($"src", least(lit(shuffleP.toLong), ($"deg" / hubThreshold) + 1L)
+        .select($"src", least(lit(shufflePartitions.toLong), ($"deg" / hubThreshold) + 1L)
           .cast("int").as("nsalt"))
       // Hub table freshness: round 1 probes eagerly (isEmpty materializes
       // minsDeg — the input graph's junit/lodash hubs must be salted from
@@ -751,7 +755,7 @@ object GraphOps {
       // salting is semantically NEUTRAL (any nsalt assignment yields the
       // same join rows), so only balance can lag, never results — and it
       // removes the per-round eager minsDeg-materialization job that was
-      // ~0.5 s/round of pure probe cost at sf0.1 (R6Probe).
+      // ~0.5 s/round of pure probe cost at sf0.1.
       val hubs =
         if (hubsForRound == null) { if (hubTable.isEmpty) None else Some(hubTable) }
         else hubsForRound
@@ -781,12 +785,7 @@ object GraphOps {
       dPrev = dNext
       e = next
       iter += 1
-      if (iter % checkpointEvery == 0 && !done) {
-        checkpointDir.foreach(dir => writeCheckpoint(spark, dir, "cc", iter, e))
-        // cooperative cancel at the (checkpointed, resumable) boundary —
-        // same watermark-raced marker semantics as pageRank
-        if (stopFlag.exists(f => fsModifiedSince(spark, f, stopAfterMs, stopSeqSeen))) stoppedEarly = true
-      }
+      if (iter % checkpointEvery == 0 && !done) stoppedEarly = run.boundary(iter, e)
       metrics += SuperstepMetric("cc", iter, (System.nanoTime() - t0) / 1000000L,
         dNext.getLong(0), edgePartitions, Double.NaN)
     }
@@ -798,12 +797,6 @@ object GraphOps {
       .join(e.select($"src".as("id"), $"dst".as("c")), Seq("id"), "left")
       .select($"id", coalesce($"c", $"id").as("component"))
     CcResult(components, metrics.toSeq, iter, stopped = stoppedEarly)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.join.preferSortMergeJoin", smjWas)
-      // per-round contraction-aware narrowing is kernel-internal state
-      spark.conf.set("spark.sql.shuffle.partitions", confPartitions)
-    }
   }
 
   // ------------------------------------------------------ label propagation
@@ -821,33 +814,19 @@ object GraphOps {
   def labelPropagation(spark: SparkSession, edges: DataFrame, iterations: Int): DataFrame =
     labelPropagationResult(spark, edges, iterations).labels
 
-  /** Resume a checkpointed LP run mid-convergence from the latest label
-    * snapshot in `dir` (north_rule: resumable, per-partition lineage + metrics). */
-  def resumeLabelPropagation(spark: SparkSession, edges: DataFrame, iterations: Int, dir: String,
-                             checkpointEvery: Int = 5,
-                             stopFlag: Option[String] = None, stopAfterMs: Long = 0L,
-               stopSeqSeen: Long = -1L): LpResult = {
-    val (step, labels) = readLatestCheckpoint(spark, dir, "lp")
-    labelPropagationResult(spark, edges, iterations, checkpointEvery, Some(dir),
-      startLabels = Some(labels), startSuperstep = step,
-      stopFlag = stopFlag, stopAfterMs = stopAfterMs, stopSeqSeen = stopSeqSeen)
-  }
-
-  /** @param stopFlag cooperative STOP marker (same watermark semantics as
+  /** @param checkpointDir resumable state, same contract as [[pageRank]]'s:
+    *                 a run whose dir holds a label snapshot at a superstep
+    *                 <= `iterations` continues from it.
+    * @param stopFlag cooperative STOP marker (same watermark semantics as
     *                 [[pageRank]]): the run ends at the next checkpoint
-    *                 boundary with `supersteps < iterations`, resumable via
-    *                 [[resumeLabelPropagation]]. */
+    *                 boundary with `supersteps < iterations`, resumable
+    *                 through the same `checkpointDir`. */
   def labelPropagationResult(spark: SparkSession, edges: DataFrame, iterations: Int,
                              checkpointEvery: Int = 5, checkpointDir: Option[String] = None,
-                             startLabels: Option[DataFrame] = None,
-                             startSuperstep: Int = 0,
                              stopFlag: Option[String] = None, stopAfterMs: Long = 0L,
-               stopSeqSeen: Long = -1L): LpResult = {
+                             stopSeqSeen: Long = -1L): LpResult =
+    inRun(spark, "lp", checkpointDir, stopFlag, stopAfterMs, stopSeqSeen) { run =>
     import spark.implicits._
-    val confPartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
     // sizing count + reserved-id guard in ONE job over the raw (pre-distinct)
     // union: the winner aggregate below negates labels
     // (max(struct(cnt, -label))), and negating Long.MinValue overflows — so
@@ -863,11 +842,11 @@ object GraphOps {
     require(eStats.isNullAt(1) || !eStats.getBoolean(1),
       s"labelPropagation reserves vertex id ${Long.MinValue} (label negation " +
         "in the tie-break aggregate would overflow); the input graph contains it")
-    val shufflePartitions = kernelPartitions(confPartitions, edgeCount)
-    // kernel-internal shuffle width: aggregation exchanges inside the loop
-    // must match the edge layout's width, or EnsureRequirements inserts an
-    // extra per-superstep exchange to reconcile them (restored in finally)
-    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
+    val shufflePartitions = kernelPartitions(run.confWidth, edgeCount)
+    // aggregation exchanges inside the loop must match the edge layout's
+    // width, or EnsureRequirements inserts an extra per-superstep exchange
+    // to reconcile them
+    run.width(shufflePartitions)
 
     // ONE exchange builds the deduped, src-partitioned, src-sorted layout:
     // repartition by src first, then dedup — hashpartitioning(src) satisfies
@@ -875,41 +854,39 @@ object GraphOps {
     // a pair share the src key), so the distinct runs in place with no
     // second exchange (guide §2.4: two operations keyed the same way share
     // one exchange).
-    val sym0 = symRaw
+    val sym0 = run.cache(symRaw
       .repartition(shufflePartitions, $"src")
       .dropDuplicates("src", "dst")
-      .sortWithinPartitions($"src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .sortWithinPartitions($"src"))
 
     // Hub salting, same scheme as pageRank: a symmetrized hub's adjacency
     // otherwise sits in ONE partition of every superstep's join. The degree
     // aggregation reads the already-partitioned sym0 layout (exchange
     // reuse: groupBy(src) over hashpartitioning(src) shuffles nothing).
     val hubThreshold = math.max(1000L, edgeCount / shufflePartitions / 4)
-    val lpHubs = sym0.groupBy($"src").agg(count(lit(1)).as("deg"))
+    val lpHubs = run.cache(sym0.groupBy($"src").agg(count(lit(1)).as("deg"))
       .filter($"deg" > hubThreshold)
       .select($"src", least(lit(shufflePartitions.toLong),
-        ($"deg" / hubThreshold) + 1L).cast("int").as("nsalt"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        ($"deg" / hubThreshold) + 1L).cast("int").as("nsalt")))
     val haveHubs = lpHubs.count() > 0
 
     // hub-free graphs reuse the sym0 layout as-is (no second shuffle+cache);
     // hubby graphs re-layout once with the salt key
     val sym = (if (!haveHubs) sym0.withColumn("salt", lit(0))
-    else sym0.join(broadcast(lpHubs), Seq("src"), "left")
+    else run.cache(sym0.join(broadcast(lpHubs), Seq("src"), "left")
       .select($"src", $"dst", pmod(hash($"dst"), coalesce($"nsalt", lit(1))).as("salt"))
       .repartition(shufflePartitions, $"src", $"salt")
-      .sortWithinPartitions($"src", $"salt")
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .sortWithinPartitions($"src", $"salt")))
     val edgePartitions = sym.rdd.getNumPartitions
     if (haveHubs) { sym.count(); sym0.unpersist(false) }
 
     val vertices = sym.select($"src".as("id")).distinct()
-    var labels = startLabels.getOrElse(vertices.withColumn("label", $"id"))
+    val resumed = run.restorePoint(iterations)
+    var labels = resumed.fold(vertices.withColumn("label", $"id"))(_._2)
       .localCheckpoint(true)
 
     val metrics = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetric]
-    var iter = startSuperstep
+    var iter = resumed.fold(0)(_._1)
     var stoppedEarly = false
     while (iter < iterations && !stoppedEarly) {
       val t0 = System.nanoTime()
@@ -948,20 +925,11 @@ object GraphOps {
       // at checkpoints — same fixed-cost reasoning as pageRank
       val atCheckpoint = iter % checkpointEvery == 0 || iter == iterations
       labels = if (atCheckpoint) winners.localCheckpoint(true) else winners
-      if (atCheckpoint && iter != iterations) {
-        checkpointDir.foreach(dir => writeCheckpoint(spark, dir, "lp", iter, labels))
-        // cooperative cancel at the (checkpointed, resumable) boundary
-        if (stopFlag.exists(f => fsModifiedSince(spark, f, stopAfterMs, stopSeqSeen))) stoppedEarly = true
-      }
+      if (atCheckpoint && iter != iterations) stoppedEarly = run.boundary(iter, labels)
       metrics += SuperstepMetric("lp", iter, (System.nanoTime() - t0) / 1000000L,
         edgeCount, edgePartitions, Double.NaN, boundary = atCheckpoint)
     }
-    sym.unpersist(false); sym0.unpersist(false); lpHubs.unpersist(false)
     LpResult(labels.select($"id", $"label"), metrics.toSeq, iter)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.shuffle.partitions", confPartitions)
-    }
   }
 
   // ------------------------------------------------------------- triangles
@@ -973,14 +941,11 @@ object GraphOps {
    * corner — hub vertices never explode quadratically (SURVEY §4.3-2).
    * Returns (total, perVertex(id, triangles)).
    */
-  def triangleCount(spark: SparkSession, edges: DataFrame): (Long, DataFrame) = {
-    import spark.implicits._
-    // two downstream actions (the total count + whatever consumes perVertex)
-    // would re-run the close, so materialize it once here
-    val triangles = trianglesPlan(spark, edges).persist(StorageLevel.MEMORY_AND_DISK)
-    val total = triangles.count()
-    (total, perVertexFrom(spark, triangles))
-  }
+  def triangleCount(spark: SparkSession, edges: DataFrame): (Long, DataFrame) =
+    // nothing is cached: a caller that also consumes the per-vertex frame
+    // re-runs the close, which beats leaving the close persisted for the
+    // session's lifetime
+    (trianglesPlan(spark, edges).count(), trianglesPerVertex(spark, edges))
 
   /** Per-vertex triangle counts WITHOUT the eager total — a lazy plan, no
     * job forced, so callers that only want the frame (q17) don't pay the
@@ -1083,11 +1048,10 @@ object GraphOps {
                     maxHops: Int): DataFrame = {
     import spark.implicits._
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val confPartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .filter($"src" =!= $"dst").distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val p = kernelPartitions(confPartitions, e.count())
+    val p = kernelPartitions(confPartitions(spark), e.count())
     val eP = e.repartition(p, $"src").persist(StorageLevel.MEMORY_AND_DISK)
 
     var settled = seeds.select(col("id").cast("long").as("id")).distinct()
@@ -1196,26 +1160,21 @@ object GraphOps {
    */
   def hits(spark: SparkSession, edges: DataFrame, iterations: Int,
            checkpointEvery: Int = 4): DataFrame = {
-    import spark.implicits._
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val confPartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val eRaw = edges.select($"src".cast("long"), $"dst".cast("long"))
-        .filter($"src" =!= $"dst").distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val p = kernelPartitions(confPartitions, eRaw.count())
+    inRun(spark, "hits") { run =>
+      import spark.implicits._
+      val eRaw = run.cache(edges.select($"src".cast("long"), $"dst".cast("long"))
+        .filter($"src" =!= $"dst").distinct())
+      val p = kernelPartitions(run.confWidth, eRaw.count())
       // kernel-width aggregation exchanges (AQE is off here, so nothing else
-      // narrows them); restored in the finally
-      spark.conf.set("spark.sql.shuffle.partitions", p)
-      val eBySrc = eRaw.repartition(p, $"src").persist(StorageLevel.MEMORY_AND_DISK)
-      val eByDst = eRaw.repartition(p, $"dst").persist(StorageLevel.MEMORY_AND_DISK)
+      // narrows them)
+      run.width(p)
+      val eBySrc = run.cache(eRaw.repartition(p, $"src"))
+      val eByDst = run.cache(eRaw.repartition(p, $"dst"))
       eBySrc.count(); eByDst.count()
       // derive verts from the materialized copy, then release the raw scan
-      val verts = eBySrc.select($"src".as("id")).union(eBySrc.select($"dst".as("id")))
-        .distinct().repartition(p, $"id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val verts = run.cache(eBySrc.select($"src".as("id")).union(eBySrc.select($"dst".as("id")))
+        .distinct().repartition(p, $"id"))
       require(verts.count() > 0, "hits: the edge table is empty")
       eRaw.unpersist(false)
 
@@ -1243,13 +1202,8 @@ object GraphOps {
       require(!normA.isInfinite && !normH.isInfinite,
         s"hits: magnitudes overflowed after $iterations iterations; normalize in blocks")
       require(normA > 0 && normH > 0, "hits: zero total authority/hub mass")
-      val out = a.join(h, Seq("id"))
+      a.join(h, Seq("id"))
         .select($"id", ($"h" / normH).as("hub"), ($"a" / normA).as("authority"))
-      eBySrc.unpersist(false); eByDst.unpersist(false); verts.unpersist(false)
-      out
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.shuffle.partitions", confPartitions)
     }
   }
 
@@ -1277,11 +1231,10 @@ object GraphOps {
     import spark.implicits._
     require(walkLen >= 1 && walksPerVertex >= 1,
       "walkLen and walksPerVertex must be >= 1")
-    val confPartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val e = edges.select($"src".cast("long"), $"dst".cast("long"))
       .filter($"src" =!= $"dst").distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val p = kernelPartitions(confPartitions, e.count())
+    val p = kernelPartitions(confPartitions(spark), e.count())
     val w = Window.partitionBy($"src").orderBy($"dst")
     val adj = e.select($"src", $"dst", (row_number().over(w) - 1).cast("long").as("idx"))
       .repartition(p, $"src").persist(StorageLevel.MEMORY_AND_DISK)
@@ -1403,17 +1356,13 @@ object GraphOps {
     import spark.implicits._
     var trimRounds = 0; var colorIters = 0; var backIters = 0
     var trimmedVerts = 0L; var coloredVerts = 0L
-    val confPartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    inRun(spark, "scc") { run =>
       var e = edges.select($"src".cast("long"), $"dst".cast("long"))
         .filter($"src" =!= $"dst").distinct()
         .localCheckpoint(true)
-      val p = kernelPartitions(confPartitions, e.count())
-      // kernel-width aggregation/join exchanges (AQE is off here); restored
-      // in the finally
-      spark.conf.set("spark.sql.shuffle.partitions", p)
+      val p = kernelPartitions(run.confWidth, e.count())
+      // kernel-width aggregation/join exchanges (AQE is off here)
+      run.width(p)
       e = e.repartition(p, $"src").localCheckpoint(true)
       var verts = e.select($"src".as("id")).union(e.select($"dst".as("id")))
         .distinct().localCheckpoint(true)
@@ -1528,19 +1477,15 @@ object GraphOps {
         outer += 1
       }
       require(nv == 0, s"scc: did not peel the graph in $maxOuter outer rounds")
-      if (assignedParts.isEmpty) {
-        // empty edge table (or self-loops only): no vertices, empty result
-        return (Seq.empty[(Long, Long)].toDF("id", "scc"),
-          SccStats(outer, trimRounds, colorIters, backIters, trimmedVerts, coloredVerts))
+      val stats = SccStats(outer, trimRounds, colorIters, backIters, trimmedVerts, coloredVerts)
+      // empty edge table (or self-loops only): no vertices, empty result
+      if (assignedParts.isEmpty) (Seq.empty[(Long, Long)].toDF("id", "scc"), stats)
+      else {
+        // canonicalize: min member id per component
+        val assigned = assignedParts.reduce(_.unionByName(_))
+        val relabel = assigned.groupBy($"scc").agg(min($"id").as("mid"))
+        (assigned.join(relabel, Seq("scc")).select($"id", $"mid".as("scc")), stats)
       }
-      // canonicalize: min member id per component
-      val assigned = assignedParts.reduce(_.unionByName(_))
-      val relabel = assigned.groupBy($"scc").agg(min($"id").as("mid"))
-      (assigned.join(relabel, Seq("scc")).select($"id", $"mid".as("scc")),
-        SccStats(outer, trimRounds, colorIters, backIters, trimmedVerts, coloredVerts))
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.shuffle.partitions", confPartitions)
     }
   }
 

@@ -67,7 +67,7 @@ object MineJob {
     // several independently-submitted jobs, and RDD block loading has no
     // cross-job compute lock — a cold cache let those jobs re-run the whole
     // generate+parse chain up to 5x inside the first consumer's action
-    // (measured ~1 s per rerun at sf0.1, R6Probe). Counting `parsed` warms
+    // (measured ~1 s per rerun at sf0.1). Counting `parsed` warms
     // BOTH caches in one job (results fills as the flatMap scans it); the
     // parse is work every consumer pays anyway, done exactly once.
     parsed.count()

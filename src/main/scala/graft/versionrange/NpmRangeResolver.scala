@@ -160,7 +160,13 @@ class NpmRangeResolver extends RangeResolver {
           return contains(Repr(Recursive, parts(0)), v) || contains(Repr(Recursive, parts(1)), v)
 
         case And =>
-          val parts = r.split(",")
+          // normalization drops the space of a space-separated AND
+          // (`>=1.2.3 <3.0.0` -> `>=1.2.3<3.0.0`), so a comma-less AND is
+          // split before its second comparator — re-classifying the unsplit
+          // string would recurse without bound
+          val parts =
+            if (r.contains(",")) r.split(",")
+            else r.split("(?<=[^\\^~<>=!])(?=[\\^~<>=!])", 2)
           return contains(Repr(Recursive, parts(0)), v) && contains(Repr(Recursive, parts(1)), v)
 
         case Recursive =>

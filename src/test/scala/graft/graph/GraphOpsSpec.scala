@@ -53,18 +53,19 @@ class GraphOpsSpec extends AnyFunSuite {
   test("PageRank kill-and-resume from checkpoint equals uninterrupted run") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val full = GraphOps.pageRank(spark, edgeDf, 12, checkpointEvery = 4, checkpointDir = Some(dir))
-    // "kill" after superstep 8 (a checkpoint boundary): resume from disk
-    val resumed = GraphOps.resumePageRank(spark, edgeDf, 12, dir, checkpointEvery = 4)
-    // resume re-reads the *latest* checkpoint (12) -> zero extra steps; so
-    // instead restart from the 8-checkpoint explicitly:
-    val ranks8 = spark.read.parquet(s"$dir/pagerank/superstep=8")
-    val cont = GraphOps.pageRank(spark, edgeDf, 12, checkpointEvery = 4,
-      startRanks = Some(ranks8), startSuperstep = 8)
     val a = full.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // a second call with the same dir resumes from the *latest* checkpoint
+    // (12) -> zero extra steps
+    val resumed = GraphOps.pageRank(spark, edgeDf, 12, checkpointEvery = 4, checkpointDir = Some(dir))
+    assert(resumed.supersteps == 12)
+    // "kill" after superstep 8 (a checkpoint boundary): a run killed there
+    // leaves LATEST at 8, and the next call with the dir continues from it
+    graft.util.Fs.write(spark, s"$dir/pagerank/LATEST", "8")
+    val cont = GraphOps.pageRank(spark, edgeDf, 12, checkpointEvery = 4, checkpointDir = Some(dir))
+    assert(cont.metrics.map(_.superstep) == Seq(9, 10, 11, 12))
     val b = cont.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(a.keySet == b.keySet)
     for ((v, r) <- a) assert(math.abs(b(v) - r) < 1e-12, s"resume drift at $v")
-    assert(resumed.supersteps == 12)
   }
 
   test("connected components exact") {
@@ -81,17 +82,17 @@ class GraphOpsSpec extends AnyFunSuite {
     val full = GraphOps.connectedComponentsResult(spark, edgeDf,
       checkpointEvery = 1, checkpointDir = Some(dir))
     assert(full.metrics.nonEmpty && full.metrics.forall(_.kernel == "cc"))
-    // "kill" after round 1: resume from the on-disk contracted edge set
-    val state1 = spark.read.parquet(s"$dir/cc/superstep=1")
-    val cont = GraphOps.connectedComponentsResult(spark, edgeDf,
-      startState = Some(state1), startRound = 1)
     val a = full.components.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(a == NaiveGraph.connectedComponents(allEdges, vertices))
+    // a second call with the same dir resumes through LATEST
+    val resumed = GraphOps.connectedComponentsResult(spark, edgeDf, checkpointDir = Some(dir))
+    assert(resumed.components.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == a)
+    // "kill" after round 1: resume from the on-disk contracted edge set
+    graft.util.Fs.write(spark, s"$dir/cc/LATEST", "1")
+    val cont = GraphOps.connectedComponentsResult(spark, edgeDf, checkpointDir = Some(dir))
+    assert(cont.metrics.head.superstep == 2)
     val b = cont.components.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a == b)
-    assert(a == NaiveGraph.connectedComponents(allEdges, vertices))
-    // resumeConnectedComponents wires the same path through LATEST
-    val resumed = GraphOps.resumeConnectedComponents(spark, edgeDf, dir)
-    assert(resumed.components.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == a)
   }
 
   test("label propagation kill-and-resume from checkpoint is exact") {
@@ -100,12 +101,15 @@ class GraphOpsSpec extends AnyFunSuite {
     val full = GraphOps.labelPropagationResult(spark, edgeDf, iters,
       checkpointEvery = 2, checkpointDir = Some(dir))
     assert(full.metrics.size == iters && full.metrics.forall(_.kernel == "lp"))
-    // "kill" after superstep 2: resume continues to the same fixed point
-    val resumed = GraphOps.resumeLabelPropagation(spark, edgeDf, iters, dir, checkpointEvery = 2)
+    // "kill" after superstep 2 (the last checkpoint written): a second call
+    // with the same dir continues to the same fixed point
+    val resumed = GraphOps.labelPropagationResult(spark, edgeDf, iters,
+      checkpointEvery = 2, checkpointDir = Some(dir))
     val a = full.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val b = resumed.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a == b)
     assert(resumed.supersteps == iters)
+    assert(resumed.metrics.map(_.superstep) == Seq(3, 4))
   }
 
   test("label propagation exact vs naive sync oracle") {
@@ -124,8 +128,8 @@ class GraphOpsSpec extends AnyFunSuite {
       checkpointDir = Some(s"$dir/ck"), stopFlag = Some(flag))
     assert(stopped.supersteps == 4) // ended at the first boundary, checkpointed
     graft.util.Fs.delete(spark, flag)
-    val resumed = GraphOps.resumePageRank(spark, edgeDf, 12, s"$dir/ck",
-      checkpointEvery = 4, stopFlag = Some(flag))
+    val resumed = GraphOps.pageRank(spark, edgeDf, 12, checkpointEvery = 4,
+      checkpointDir = Some(s"$dir/ck"), stopFlag = Some(flag))
     assert(resumed.supersteps == 12)
     val full = GraphOps.pageRank(spark, edgeDf, 12, checkpointEvery = 4)
     val a = full.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -143,8 +147,8 @@ class GraphOpsSpec extends AnyFunSuite {
       checkpointDir = Some(s"$dir/cc"), stopFlag = Some(flag))
     assert(ccStopped.stopped && ccStopped.rounds == 1)
     graft.util.Fs.delete(spark, flag)
-    val ccResumed = GraphOps.resumeConnectedComponents(spark, edgeDf, s"$dir/cc",
-      checkpointEvery = 1, stopFlag = Some(flag))
+    val ccResumed = GraphOps.connectedComponentsResult(spark, edgeDf, checkpointEvery = 1,
+      checkpointDir = Some(s"$dir/cc"), stopFlag = Some(flag))
     assert(!ccResumed.stopped)
     val direct = GraphOps.connectedComponents(spark, edgeDf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -157,8 +161,8 @@ class GraphOpsSpec extends AnyFunSuite {
       checkpointDir = Some(s"$dir/lp"), stopFlag = Some(flag))
     assert(lpStopped.supersteps == 2)
     graft.util.Fs.delete(spark, flag)
-    val lpResumed = GraphOps.resumeLabelPropagation(spark, edgeDf, 6, s"$dir/lp",
-      checkpointEvery = 2, stopFlag = Some(flag))
+    val lpResumed = GraphOps.labelPropagationResult(spark, edgeDf, 6, checkpointEvery = 2,
+      checkpointDir = Some(s"$dir/lp"), stopFlag = Some(flag))
     assert(lpResumed.supersteps == 6)
     val lpDirect = GraphOps.labelPropagation(spark, edgeDf, 6)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -190,6 +194,39 @@ class GraphOpsSpec extends AnyFunSuite {
       checkpointDir = Some(s"$dir/ck3"), stopFlag = Some(flag),
       stopAfterMs = 0L, stopSeqSeen = 5L)
     assert(legacy.supersteps == 4, "seq-less marker falls back to the timestamp channel")
+  }
+
+  test("kernels restore session conf and release their caches, on success and on failure") {
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
+      "spark.sql.join.preferSortMergeJoin")
+    def conf = keys.map(k => k -> spark.conf.getOption(k))
+    val widthWas = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "12")
+    try {
+      val before = conf
+      val runs: Seq[(String, () => Any)] = Seq(
+        "pagerank" -> (() => GraphOps.pageRank(spark, edgeDf, 6)),
+        "cc" -> (() => GraphOps.connectedComponentsResult(spark, edgeDf)),
+        "lp" -> (() => GraphOps.labelPropagationResult(spark, edgeDf, 3)),
+        "hits" -> (() => GraphOps.hits(spark, edgeDf, 3)),
+        "scc" -> (() => GraphOps.sccResult(spark, edgeDf)))
+      for ((name, run) <- runs) {
+        run()
+        assert(conf == before, s"$name changed the session conf")
+      }
+      // a failed require must not leave the run's persisted frames behind
+      val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+      val failing: Seq[(String, () => Any)] = Seq(
+        "pagerank" -> (() => GraphOps.pageRank(spark, empty, 3)),
+        "hits" -> (() => GraphOps.hits(spark, empty, 3)))
+      for ((name, run) <- failing) {
+        val cached = spark.sparkContext.getPersistentRDDs.keySet
+        intercept[IllegalArgumentException](run())
+        val left = spark.sparkContext.getPersistentRDDs.keySet -- cached
+        assert(left.isEmpty, s"failed $name left persisted RDDs $left")
+        assert(conf == before, s"failed $name changed the session conf")
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", widthWas)
   }
 
   test("PageRank with redistribution conserves probability mass") {

@@ -111,6 +111,17 @@ class VersionRangeSpec extends AnyFunSuite {
       Set("0.1.0", "0.2.0", "0.2.1", "0.2.2", "0.3.0", "0.3.1", "0.3.2", "4.17.21"))
   }
 
+  test("NPM: space-separated AND means both bounds") {
+    // normalization strips the space, leaving `>=1.2.3<3.0.0`: the AND arm
+    // must split it before the second comparator, not re-classify it forever
+    val spec = ">=1.2.3 <3.0.0"
+    assert(Resolvers.npm.versionInRange(spec, "2.0.0"))
+    assert(!Resolvers.npm.versionInRange(spec, "1.2.2"))
+    assert(!Resolvers.npm.versionInRange(spec, "3.0.0"))
+    val both = Resolvers.npm.findMatchingVersions(spec, lodash)
+    assert(both.nonEmpty && both == Resolvers.npm.findMatchingVersions(">=1.2.3,<3.0.0", lodash))
+  }
+
   test("NPM: non-three-part numbers") {
     npm("<0.3 || >4.17", Set("0.1.0", "0.2.0", "0.2.1", "0.2.2"))
     npm("<1", Set("0.1.0", "0.2.0", "0.2.1", "0.2.2", "0.3.0", "0.3.1", "0.3.2", "0.4.0", "0.4.1", "0.4.2",
