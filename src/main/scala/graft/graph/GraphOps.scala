@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
+import graft.util.Fs
 
 /** Per-superstep lineage/metrics row (north_rule: "checkpointed every k
   * supersteps with per-partition lineage and metrics").
@@ -398,16 +399,6 @@ object GraphOps {
     PageRankResult(ranks, metrics.toSeq, step)
   }
 
-  /** Small-file IO through the Hadoop FileSystem so checkpoints work on any
-    * FS the parquet snapshots land on (HDFS/S3A/local), not just the
-    * driver-local filesystem. */
-  private def fsWrite(spark: SparkSession, path: String, content: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
-
   /** Kernel partition count: the configured shuffle partitions, scaled DOWN
     * for SMALL graphs (~150k edges per partition, floor 8). Guide §2.2 sizes
     * partitions by work volume (100 MB–1 GB each), not core count; the old
@@ -430,7 +421,7 @@ object GraphOps {
     * a pure counter comparison with no wall-clock in it, which closes the
     * residual both-clocks-behind case of the timestamp watermark. */
   def stopMarkerSeq(spark: SparkSession, path: String): Option[Long] =
-    fsRead(spark, path).flatMap(parseMarkerSeq)
+    Fs.read(spark, path).flatMap(parseMarkerSeq)
 
   private def parseMarkerSeq(payload: String): Option[Long] =
     payload.trim.split("\\s+").collectFirst { case t if t.startsWith("seq=") => t.drop(4) }
@@ -460,7 +451,7 @@ object GraphOps {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.exists(p) && {
-        val payload = fsRead(spark, path).map(_.trim)
+        val payload = Fs.read(spark, path).map(_.trim)
         payload.flatMap(parseMarkerSeq) match {
           case Some(seq) if seqSeen >= 0L => seq > seqSeen
           case _ =>
@@ -475,25 +466,9 @@ object GraphOps {
       }
     } catch { case _: java.io.IOException => false }
 
-  private def fsRead(spark: SparkSession, path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
-    }
-  }
-
   /** Latest checkpointed superstep in `dir` for `kernel`, if any. */
   def latestCheckpoint(spark: SparkSession, dir: String, kernel: String = "pagerank"): Option[Int] =
-    fsRead(spark, s"$dir/$kernel/LATEST").map(_.trim.toInt)
-
-  def clearCheckpoints(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) { fs.delete(p, true); () }
-  }
+    Fs.read(spark, s"$dir/$kernel/LATEST").map(_.trim.toInt)
 
   private def writeCheckpoint(spark: SparkSession, dir: String, kernel: String,
                               step: Int, state: DataFrame): Unit = {
@@ -502,8 +477,8 @@ object GraphOps {
     val rows = state.count()
     val manifest =
       s"""{"kernel": "$kernel", "superstep": $step, "rows": $rows, "partitions": ${state.rdd.getNumPartitions}}"""
-    fsWrite(spark, s"$dir/$kernel/MANIFEST-$step.json", manifest)
-    fsWrite(spark, s"$dir/$kernel/LATEST", step.toString)
+    Fs.write(spark, s"$dir/$kernel/MANIFEST-$step.json", manifest)
+    Fs.write(spark, s"$dir/$kernel/LATEST", step.toString)
   }
 
   // ------------------------------------------------------------ run scope
@@ -704,7 +679,7 @@ object GraphOps {
     var dPrev = if (done) null else digest(e)
     // Each round materializes eagerly (localCheckpoint) before the next
     // starts. Lazily chaining CC rounds the way pageRank chains supersteps
-    // was MEASURED 3x slower at sf0.1 (48s -> 147s, CcTune): pageRank's
+    // was MEASURED 3x slower at sf0.1 (48s -> 147s): pageRank's
     // per-superstep plan is LINEAR (state enters exactly once), but a star
     // round references its input several times (sym feeds both the join and
     // the min-agg; dir feeds both sides of smallStar), so an unmaterialized
@@ -719,14 +694,14 @@ object GraphOps {
       // EMERGENT in CC: a giant component's root accumulates a neighborhood
       // proportional to |C| as contraction proceeds). A separate degree job
       // here was a full extra O(2E) shuffle per round — measured ~15% of
-      // round wall time at sf0.1 (CcTune).
+      // round wall time at sf0.1.
       val nEdges = dPrev.getLong(0)
       // CONTRACTION-AWARE partitioning (r4 ask #3): star contraction shrinks
       // the edge set geometrically (sf0.1: 590k -> 208k -> 50k in two
       // rounds), but a fixed 32-way layout keeps paying full per-stage
       // scheduling + shuffle-file overhead on the tiny tail rounds —
-      // measured ~40% of q15 wall time (CcTune: 15.9s at 32 partitions vs
-      // 9.9s at 8 for identical rounds). Each round re-sizes the shuffle
+      // measured ~40% of q15 wall time (15.9s at 32 partitions vs 9.9s at
+      // 8 for identical rounds). Each round re-sizes the shuffle
       // width from the edge count the convergence digest already computed
       // (zero extra jobs); kernelPartitions never EXCEEDS the configured
       // value, so at 100 TB the conf cap always wins and the plan is
@@ -1372,7 +1347,7 @@ object GraphOps {
       while (nv > 0 && outer < maxOuter) {
         // (1) trim TO FIXPOINT: no live out-edges OR no live in-edges ->
         // singleton SCC. On dependency-graph shapes the overwhelming
-        // majority of vertices leave here (SccProbe, sf0.01 face: 23,516
+        // majority of vertices leave here (sf0.01 face: 23,516
         // of 23,808 through 10 trim rounds; coloring then touches 292),
         // so iterating the cheap trim before any coloring collapses the
         // expensive phase onto the small cyclic core — 33 s vs ~8 min

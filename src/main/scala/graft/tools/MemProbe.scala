@@ -51,14 +51,19 @@ object MemProbe {
     (0 until threads).map(done.get).sum.toDouble / (millis / 1000.0)
   }
 
-  /** Ratio of hi-thread to lo-thread throughput, normalized by thread ratio:
-    * the max achievable scaling efficiency for memory-bound work. Best of 3
-    * per level (outside host load corrupts single shots). */
-  def ceiling(lo: Int, hi: Int, tableMB: Int = 32): Double = {
-    val source = Array.tabulate(32 << 20)(i => mix(i.toLong, 42L)) // 256 MB shared
+  /** Best-of-3 elements/sec at `lo` and then `hi` busy threads over one
+    * shared 256 MB source (outside host load corrupts single shots). */
+  private def bestOf3(lo: Int, hi: Int, tableMB: Int): (Double, Double) = {
+    val source = Array.tabulate(32 << 20)(i => mix(i.toLong, 42L))
     val entries = Integer.highestOneBit(tableMB) << 17 // MB -> 8-byte entries
-    val l = (0 until 3).map(_ => burn(lo, source, entries, 3000)).max
-    val h = (0 until 3).map(_ => burn(hi, source, entries, 3000)).max
+    def best(threads: Int) = (0 until 3).map(_ => burn(threads, source, entries, 3000)).max
+    (best(lo), best(hi))
+  }
+
+  /** Ratio of hi-thread to lo-thread throughput, normalized by thread ratio:
+    * the max achievable scaling efficiency for memory-bound work. */
+  def ceiling(lo: Int, hi: Int, tableMB: Int = 32): Double = {
+    val (l, h) = bestOf3(lo, hi, tableMB)
     math.min(1.0, (h / l) / (hi.toDouble / lo))
   }
 
@@ -66,10 +71,7 @@ object MemProbe {
     val lo = args.headOption.getOrElse("4").toInt
     val hi = if (args.length > 1) args(1).toInt else lo * 4
     val tableMB = if (args.length > 2) args(2).toInt else 32
-    val source = Array.tabulate(32 << 20)(i => mix(i.toLong, 42L))
-    val entries = Integer.highestOneBit(tableMB) << 17
-    val lops = (0 until 3).map(_ => burn(lo, source, entries, 3000)).max
-    val hops = (0 until 3).map(_ => burn(hi, source, entries, 3000)).max
+    val (lops, hops) = bestOf3(lo, hi, tableMB)
     println(f"MEMPROBE lo=$lo%d ${lops / 1e6}%.1f Melem/s  hi=$hi%d ${hops / 1e6}%.1f Melem/s  " +
       f"speedup=${hops / lops}%.2fx  ceilingEff=${(hops / lops) / (hi.toDouble / lo)}%.2f")
   }

@@ -21,6 +21,16 @@ object PlanAudit {
     val out = new StringBuilder
     out.append("# PLANS — physical-plan audit of load-bearing queries\n\n")
     out.append("Generated by `graft.tools.PlanAudit`; re-run after plan-affecting changes.\n")
+    out.append("""
+> The audits below are EXPLAIN dumps of query-catalog plans and of
+> hand-built single-round kernel shapes; they do not execute the kernels.
+> The EXECUTED PageRank boundary-block plan is
+> `plans/r06/kernel_pagerank_boundary_executed_after.txt`, dumped from
+> inside `GraphOps.pageRank` by the `GRAFT_KERNEL_EXPLAIN=1` hook. The
+> round-6 before/after snapshots of the headline queries are the other
+> files under `plans/r06/`; the changes behind them are logged in
+> `OPTIMIZATION_r06.md`.
+""")
 
     def audit(title: String, notes: String, execute: Boolean = false)(df: => org.apache.spark.sql.DataFrame): Unit = {
       out.append(s"\n## $title\n\n$notes\n\n```\n")
@@ -221,23 +231,6 @@ object PlanAudit {
         .select($"seed", $"walk", lit(1).as("step"), $"dst".as("vertex"))
     }
 
-    audit("SCC trim round (stronglyConnectedComponents trim shape)",
-      "Expect: two anti-joins of the vertex set against the live endpoint " +
-        "sets — vertex-keyed, map-side-combinable distincts, nothing keyed " +
-        "on anything component-sized. This round runs to FIXPOINT before " +
-        "any coloring: on dependency-graph shapes it drains ~99% of " +
-        "vertices (SccProbe), so the expensive phases only ever see the " +
-        "small cyclic core.") {
-      import spark.implicits._
-      val e = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 0L)).toDF("src", "dst").localCheckpoint(true)
-      val verts = Seq(0L, 1L, 2L, 3L).toDF("id").localCheckpoint(true)
-      val srcs = e.select($"src".as("id")).distinct()
-      val dsts = e.select($"dst".as("id")).distinct()
-      verts.join(srcs, Seq("id"), "left_anti")
-        .union(verts.join(dsts, Seq("id"), "left_anti")).distinct()
-        .select($"id", $"id".as("scc"))
-    }
-
     audit("q71 node similarity (shared-neighbor pairing)",
       "Expect (FINAL adaptive plan, query executed): the symmetric-adjacency " +
         "subtrees resolve to reused query stages (the q17/q61 mechanism); the " +
@@ -280,47 +273,6 @@ object PlanAudit {
       graft.resolve.ResolveJob.run(spark, m.apEdges, m.artifacts).aaEdges.toDF()
     }
 
-    // Probe evidence (runMain outputs, refreshed each round alongside the
-    // plan dumps — the numbers the skew/scale claims above rest on).
-    out.append("""
-## Probe evidence (round 4, this host, local[32], AQE off inside kernels)
-
-- `CcProbe 32 10` (10M edges, 1 giant component, 10% hub; round-4 kernel
-  with hub detection folded into the large-star min-agg): worst heavy-stage
-  max/median task **1.69 < 4**; wall 49.0s (was 57.3s round 3).
-- `CcProbe 32 50` (50M edges): worst heavy-stage max/median **2.47 < 4**
-  (round 3 measured 2.11 — same band, host-noise-level difference); wall
-  174.5s (was 208.8s); single component over 2.5M vertices.
-- `CcProbe 32 100` (100M edges, 5M vertices, one giant component): worst
-  heavy-stage max/median **1.81 < 4** at a 24g driver heap, wall 380.6s.
-  (A 48g-heap run of the same job showed a single 56s task in an
-  8.5s-median stage — max/median 6.60 — that disappears at 24g: a GC-pause
-  artifact of the oversized heap, not key skew; task-time probes on large
-  heaps need GC-sane sizing.)
-- `LpProbe 32 10` (same 10%-hub shape, 3 supersteps): worst heavy-stage
-  max/median **1.17 < 4** — the LP hub salting holds under a mega-hub.
-- `PrTune 32 100 false true` (PageRank, 100M-edge Zipf graph with dangling
-  redistribution, 6 supersteps, 24g heap): superstep loop 65.6s =
-  **9.1M edges-scanned/sec** at local[32] — 6.6x the per-edge throughput of
-  the 3.27M-edge AA graph in BENCH/BASELINE.md, i.e. the per-superstep
-  fixed costs amortize away as the graph grows; the kernel becomes
-  data-bound exactly as the 100 TB design intends.
-- `DedupProbe 32 1000 5` (1M docs, 0.5% planted near-dups, 10k true pairs):
-  largest observed shuffle 422MB vs the 1814MB a full-corpus shingle
-  materialization would write (ratio 0.23) — the MinHash verify stage's
-  shuffle tracks CANDIDATES; the corpus-proportional stages that remain are
-  the constant-width banded-signature exchanges the LSH design requires.
-  Exact dedup on the same corpus: 64.1MB total shuffle vs 233.4MB of
-  document text (ratio 0.275 at ~220-char docs; the digest key is constant
-  width, so the gap widens linearly with document size — KB-scale docs
-  shuffle ~30x less than raw-text grouping).
-- `CcTune` (sf0.1 derived graph, 590k edges): 4 rounds, 15-21s wall,
-  3-5s/round including the per-round hub-refresh agg. Negative result,
-  measured: lazily chaining 2 CC rounds per materialization (pageRank-style)
-  was 3x SLOWER (147s) — a star round references its input several times, so
-  an unmaterialized previous round re-executes per reference; CC rounds must
-  materialize eagerly. Recorded in GraphOps scaladoc.
-""")
     java.nio.file.Files.writeString(java.nio.file.Paths.get("PLANS.md"), out.toString)
     println(s"wrote PLANS.md (${out.length} chars)")
     spark.stop()

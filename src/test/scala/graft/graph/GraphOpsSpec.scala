@@ -303,7 +303,7 @@ class GraphOpsSpec extends AnyFunSuite {
 /**
  * Exactness of the SALTED kernel arms: the regular spec graphs stay under
  * the 1000-degree hub floor, so their runs never enter the hub-salting
- * branches (those are perf-probed by CcProbe/LpProbe but must also be
+ * branches (those are perf-probed on a hub graph but must also be
  * CORRECT). This graph has a 1500-out-degree hub (vertex 0), which exceeds
  * hubThreshold = max(1000, |E|/partitions/4) at the test harness's 8
  * shuffle partitions, so PageRank's salted fan-out, LP's salted adjacency,
