@@ -2,9 +2,13 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
 import graft.util.Fs
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Per-superstep lineage/metrics row (north_rule: "checkpointed every k
   * supersteps with per-partition lineage and metrics").
@@ -89,8 +93,9 @@ object GraphOps {
    *          x'(v) = (1-d)/n + d*agg(v) for real v, x'(S) = agg(S).
    *
    * One join + one aggregation per superstep, a strictly LINEAR lazy plan
-   * chain, zero broadcasts, zero driver round-trips between checkpoint
-   * boundaries — k supersteps plan once and run as one job.
+   * chain, no broadcast but the static edge table's (only when it is
+   * small), zero driver round-trips between checkpoint boundaries — k
+   * supersteps plan once and run as one job.
    *
    * Reserved id: `Long.MinValue` is the dangling supernode's sentinel and
    * must not appear as a real vertex id when `redistributeDangling` is on
@@ -127,33 +132,39 @@ object GraphOps {
     // Sentinel id for the dangling supernode (below any dense vertex id).
     val Sent = Long.MinValue
 
-    // cache the raw projection so the partition-sizing count and the
-    // repartition read the SOURCE once, not twice; released as soon as the
-    // partitioned edge table is materialized
-    val eRaw = run.cache(weightCol match {
+    // The edge table, read from the source once. It is laid out at the
+    // configured width: the kernel's own width is sized from the edge count,
+    // which the vertex statistics below deliver.
+    run.width(run.confWidth)
+    val e = run.cache((weightCol match {
       // weighted arm: transition probability becomes wt/sum(wt) per src —
       // duplicate (src, dst) rows are MULTI-EDGES and sum their weight
       case Some(wc) => edges.select($"src".cast("long"), $"dst".cast("long"),
         col(wc).cast("double").as("wt"))
       case None => edges.select($"src".cast("long"), $"dst".cast("long"))
-    })
-    val edgeCount = eRaw.count()
-    val shufflePartitions = kernelPartitions(run.confWidth, edgeCount)
-    // every aggregation exchange in the loop must match the static
-    // edge/state layout's width, or EnsureRequirements inserts an extra
-    // per-superstep exchange to reconcile the two (measured on the 48k-edge
-    // mined graph: agg at 32 vs layout at 8)
-    run.width(shufflePartitions)
-    val e = run.cache(eRaw.repartition(shufflePartitions, $"src"))
+    }).repartition(run.confWidth, $"src"))
 
-    val vertices = run.cache(e.select($"src".as("id")).union(e.select($"dst".as("id"))).distinct())
-    // count + reserved-id guard in ONE job — which also materializes the
-    // partitioned edge cache (vertices derive from e), so e needs no count
-    // action of its own. Long.MinValue is the dangling supernode's sentinel
+    // ONE aggregation over both endpoints gives every vertex with its
+    // out-degree (0 = dangling) and, weighted, its out-weight: the vertex
+    // set, the transition normalizer, the dangling set and the hub fan-out
+    // widths all read this table.
+    val isSrc = $"pos" === 0
+    val ends = e.select(Seq(posexplode(array($"src", $"dst")).as(Seq("pos", "id"))) ++
+      weightCol.map(_ => $"wt"): _*)
+    val vdeg = run.cache(weightCol match {
+      case Some(_) => ends.groupBy($"id").agg(sum(when(isSrc, 1L).otherwise(0L)).as("outDeg"),
+        sum(when(isSrc, $"wt")).as("wsum"))
+      case None => ends.groupBy($"id").agg(sum(when(isSrc, 1L).otherwise(0L)).as("outDeg"))
+    })
+    val vertices = vdeg.select($"id")
+    // ONE job — which also materializes the edge cache — for the vertex
+    // count, the reserved-id guard, the edge count (the sum of out-degrees),
+    // |{v : outDeg > 0}| (⇒ |D| = n − it) and the largest out-degree (are
+    // there real hubs). Long.MinValue is the dangling supernode's sentinel
     // id; a caller graph containing it as a REAL vertex would silently merge
     // with the supernode and corrupt every rank.
-    val vStats = vertices.agg(count(lit(1)), max($"id" === Sent)).first()
-    eRaw.unpersist(false)
+    val vStats = vdeg.agg(count(lit(1)), max($"id" === Sent), sum($"outDeg"),
+      sum(when($"outDeg" > 0, 1L).otherwise(0L)), max($"outDeg")).first()
     val n = vStats.getLong(0)
     // degenerate-input guard: an empty edge table would otherwise seed every
     // rank with 1.0/0 = Infinity/NaN — fail with a clear error instead
@@ -162,6 +173,16 @@ object GraphOps {
       require(vStats.isNullAt(1) || !vStats.getBoolean(1),
         s"pageRank(redistributeDangling=true) reserves vertex id ${Sent} " +
           "for the dangling supernode; the input graph contains it")
+    val edgeCount = vStats.getLong(2)
+    val nSrc = vStats.getLong(3)
+    val shufflePartitions = kernelPartitions(run.confWidth, edgeCount)
+    // every aggregation exchange in the loop must match the static
+    // edge/state layout's width, or EnsureRequirements inserts an extra
+    // per-superstep exchange to reconcile the two (measured on the 48k-edge
+    // mined graph: agg at 32 vs layout at 8)
+    run.width(shufflePartitions)
+    val hubThreshold = math.max(1000L, edgeCount / shufflePartitions / 4)
+    val haveRealHubs = vStats.getLong(4) > hubThreshold
 
     // Personalized restart: the (1-d) teleport mass concentrates on a seed
     // set (uniform over the seeds present in the graph) instead of 1/n
@@ -180,12 +201,26 @@ object GraphOps {
       sv.withColumn("p", lit(1.0 / ns))
     }
 
-    // Static weighted transition edges E' (see Scaladoc): built once,
-    // hash-partitioned by src once, reused by every superstep's join.
-    val outDeg = run.cache(weightCol match {
-      case Some(_) => e.groupBy($"src").agg(count(lit(1)).as("outDeg"), sum($"wt").as("wsum"))
-      case None    => e.groupBy($"src").agg(count(lit(1)).as("outDeg"))
-    })
+    // Explicit hub salting (north_star: "salted ... edge partitions with
+    // explicit skew handling for hub artifacts"). A single src key's edges
+    // all hash to ONE partition of the per-superstep join; the dangling
+    // supernode has ~|V| out-edges and a hub artifact (junit/lodash) can
+    // carry a constant fraction of all edges, so without salting one task
+    // owns them all — measured as a 7.2s-vs-0.78s-median straggler at
+    // build time on a 10M-edge graph. Srcs whose out-degree exceeds
+    // edges/partitions get a salt derived from dst, splitting their edges
+    // across up to `shufflePartitions` sub-keys (nsalt, 1 for non-hubs),
+    // and the state side replicates only hub rows. Hub degrees come
+    // straight from the degree table, so every edge carries its src's nsalt
+    // out of the join that gives it its weight; the sentinel's out-degree
+    // is ~|V|, bounded above by n.
+    val nsalt = when($"outDeg" > hubThreshold, least(lit(shufflePartitions.toLong),
+      ($"outDeg" / hubThreshold) + 1L).cast("int")).otherwise(1)
+    val sentSalt = math.min(shufflePartitions.toLong, n / hubThreshold + 1L).toInt
+    val haveHubs = haveRealHubs || (redistributeDangling && sentSalt > 1)
+    def withSalt(cols: Column*)(nsaltCol: Column): Seq[Column] =
+      if (haveHubs) cols :+ nsaltCol.as("nsalt") else cols
+
     if (weightCol.isDefined) {
       // zero/negative/NULL weights would silently corrupt the distribution
       // (wsum<=0 divides to Inf/negative mass; NULL rows drop their edge's
@@ -197,53 +232,23 @@ object GraphOps {
       require(!wRow.isNullAt(0) && wRow.getDouble(0) > 0,
         s"pageRank(weightCol): weights must be > 0, found ${wRow.get(0)}")
     }
-    val realEdges = weightCol match {
-      case Some(_) => e.join(outDeg, Seq("src"))
-        .select($"src", $"dst", ($"wt" / $"wsum").as("w"))
-      case None => e.join(outDeg, Seq("src"))
-        .select($"src", $"dst", (lit(1.0) / $"outDeg").as("w"))
-    }
-    // ONE scalar job over the (persisted, needed-anyway) outDeg table serves
-    // THREE former actions: |{src with outdeg}| (⇒ |D| = n − it, replacing
-    // the dangling anti-join count), the real-hub count (replacing
-    // hubs.count), and the cache warm-up for the joins below.
-    val hubThreshold = math.max(1000L, edgeCount / shufflePartitions / 4)
-    val degStats = outDeg.agg(count(lit(1)),
-      sum(when($"outDeg" > hubThreshold, 1L).otherwise(0L))).first()
-    val nSrc = degStats.getLong(0)
-    val nRealHubs = if (degStats.isNullAt(1)) 0L else degStats.getLong(1)
-
+    // Static weighted transition edges E' (see Scaladoc): built once,
+    // hash-partitioned by src once, reused by every superstep's join. The
+    // inner join keeps exactly the vertices with out-edges.
+    val w = weightCol.fold(lit(1.0) / $"outDeg")(_ => $"wt" / $"wsum")
+    val realEdges = e.join(vdeg.withColumnRenamed("id", "src"), Seq("src"))
+      .select(withSalt($"src", $"dst", w.as("w"))(nsalt): _*)
     val eW = (if (!redistributeDangling) realEdges else {
       val wIn = realEdges.groupBy($"dst").agg(sum($"w").as("win"))
-      val sentinelOut = wIn.select(lit(Sent).as("src"), $"dst",
-        (lit(damping) * $"win").as("w"))
-      val dangling = vertices.join(outDeg.withColumnRenamed("src", "id"), Seq("id"), "left_anti")
+      val sentinelOut = wIn.select(withSalt(lit(Sent).as("src"), $"dst",
+        (lit(damping) * $"win").as("w"))(lit(sentSalt)): _*)
       val nDangling = n - nSrc
-      val toSent = dangling.select($"id".as("src"), lit(Sent).as("dst"), lit(1.0 / n).as("w"))
-      val selfSent = Seq((Sent, Sent, damping * nDangling.toDouble / n)).toDF("src", "dst", "w")
+      val toSent = vdeg.filter($"outDeg" === 0)
+        .select(withSalt($"id".as("src"), lit(Sent).as("dst"), lit(1.0 / n).as("w"))(lit(1)): _*)
+      val selfSent = Seq((Sent, Sent, damping * nDangling.toDouble / n, sentSalt))
+        .toDF("src", "dst", "w", "nsalt").select(withSalt($"src", $"dst", $"w")($"nsalt"): _*)
       realEdges.unionByName(sentinelOut).unionByName(toSent).unionByName(selfSent)
     })
-
-    // Explicit hub salting (north_star: "salted ... edge partitions with
-    // explicit skew handling for hub artifacts"). A single src key's edges
-    // all hash to ONE partition of the per-superstep join; the dangling
-    // supernode has ~|V| out-edges and a hub artifact (junit/lodash) can
-    // carry a constant fraction of all edges, so without salting one task
-    // owns them all — measured as a 7.2s-vs-0.78s-median straggler at
-    // build time on a 10M-edge graph. Srcs whose out-degree exceeds
-    // edges/partitions get a salt derived from dst, splitting their edges
-    // across up to `shufflePartitions` sub-keys; the (tiny, static) hub
-    // table is broadcast and the state side replicates only hub rows.
-    // Hub degrees come straight from outDeg (no extra pass over E'); the
-    // sentinel's out-degree is ~|V|, bounded above by n.
-    val realHubs = outDeg.filter($"outDeg" > hubThreshold)
-      .select($"src", least(lit(shufflePartitions.toLong),
-        ($"outDeg" / hubThreshold) + 1L).cast("int").as("nsalt"))
-    val sentSalt = math.min(shufflePartitions.toLong, n / hubThreshold + 1L).toInt
-    val hubs = run.cache(if (redistributeDangling && sentSalt > 1)
-        realHubs.unionByName(Seq((Sent, sentSalt)).toDF("src", "nsalt"))
-      else realHubs)
-    val haveHubs = nRealHubs > 0 || (redistributeDangling && sentSalt > 1)
 
     // CSR-style adjacency: partitions hash-bucketed by (src[, salt]) and
     // SORTED once at build time. The cached sort order survives in
@@ -254,16 +259,24 @@ object GraphOps {
     // kept small by the caller-side checkpoint of mined inputs
     // (Queries.indexedPpEdges), so per-superstep analysis stays O(k).
     // Hub-free graphs skip the salt machinery entirely (no generator in the
-    // hot path).
+    // hot path). The salt is never NULL (nsalt >= 1), and saying so keeps
+    // a NULL filter off the table's side of every superstep's join.
     val eWS = run.cache(if (!haveHubs) eW.withColumn("salt", lit(0))
       .repartition(shufflePartitions, $"src")
       .sortWithinPartitions($"src")
-    else eW.join(broadcast(hubs), Seq("src"), "left")
-      .select($"src", $"dst", $"w",
-        pmod(hash($"dst"), coalesce($"nsalt", lit(1))).as("salt"))
+    else eW.select($"src", $"dst", $"w", notNull(pmod(hash($"dst"), $"nsalt")).as("salt"))
       .repartition(shufflePartitions, $"src", $"salt")
       .sortWithinPartitions($"src", $"salt"))
+    // Built before the loop, so its real size is known: every superstep
+    // joins it the same way, broadcast when it fits the session's broadcast
+    // threshold and left to the planner's sort-merge join otherwise. Left to
+    // per-superstep estimates, the first superstep of a block broadcast
+    // whichever side looked smaller and planned different code.
     eWS.count()
+    val eSide =
+      if (eWS.queryExecution.optimizedPlan.stats.sizeInBytes <= SQLConf.get.autoBroadcastJoinThreshold)
+        broadcast(eWS)
+      else eWS
 
     // Every id that owns a state row each superstep (sentinel included).
     // With a personalized restart the frame also carries p (the per-vertex
@@ -275,17 +288,15 @@ object GraphOps {
     // per-superstep broadcast(hubs) join + hint grew the chained plan's
     // analysis cost superlinearly (measured 144→438 ms of pure driver time
     // per lazily-chained superstep on the mined graph, vs 16-26 ms hub-free).
-    val allIdsBase = (if (redistributeDangling) vertices.union(Seq(Sent).toDF("id"))
-                      else vertices)
-    val allIdsP = (pFrame match {
+    val (ids, sentRow) =
+      if (!haveHubs) (vertices, Seq(Sent).toDF("id"))
+      else (vdeg.select($"id", nsalt.as("nsalt")), Seq((Sent, sentSalt)).toDF("id", "nsalt"))
+    val allIdsBase = if (redistributeDangling) ids.unionByName(sentRow) else ids
+    val allIds = run.cache((pFrame match {
       case Some(p) => allIdsBase.join(p, Seq("id"), "left")
-        .select($"id", coalesce($"p", lit(0.0)).as("p"))
+        .withColumn("p", coalesce($"p", lit(0.0)))
       case None => allIdsBase
-    })
-    val allIds = run.cache((if (!haveHubs) allIdsP
-      else allIdsP.join(broadcast(hubs.withColumnRenamed("src", "id")), Seq("id"), "left")
-        .withColumn("nsalt", coalesce($"nsalt", lit(1))))
-      .repartition(shufflePartitions, $"id")
+    }).repartition(shufflePartitions, $"id")
       .sortWithinPartitions($"id"))
     // no count action: the state-init localCheckpoint below scans every
     // allIds partition and materializes this cache in the same job
@@ -341,7 +352,7 @@ object GraphOps {
         else state.select($"id".as("src"), $"x",
           explode(sequence(lit(0), $"nsalt" - 1)).as("salt"))
       val agg = salted
-        .join(eWS, if (haveHubs) Seq("src", "salt") else Seq("src"))
+        .join(eSide, if (haveHubs) Seq("src", "salt") else Seq("src"))
         .select($"dst".as("id"), ($"x" * $"w").as("c"))
         .groupBy($"id").agg(sum($"c").as("c"))
       step += 1
@@ -358,12 +369,7 @@ object GraphOps {
       val chained = allIds
         .join(agg, Seq("id"), "left")
         .select(Seq($"id", xNext) ++ (if (haveHubs) Seq($"nsalt") else Nil): _*)
-      // debug/evidence hook: dump the first boundary block's physical plan
-      // (the real executed superstep shape) without touching the hot path
-      if (atCheckpoint && step <= checkpointEvery && sys.env.contains("GRAFT_KERNEL_EXPLAIN"))
-        Console.err.println("=== pagerank boundary block plan ===\n" +
-          chained.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+      if (atCheckpoint) run.explain("boundary block", chained)
       val newState = if (atCheckpoint) chained.localCheckpoint(true) else chained
       var maxDelta = Double.NaN
       if (atCheckpoint) {
@@ -388,16 +394,19 @@ object GraphOps {
         edgeCount, edgePartitions, maxDelta, boundary = atCheckpoint)
     }
 
-    // rank = x + d*m; m read off the materialized final state (one tiny job
-    // per RUN, not per superstep).
+    // rank = x + d*m; m is the materialized final state's sentinel row,
+    // joined onto every real row when the ranks are read (no job here)
     val ranks =
       if (!redistributeDangling) state.select($"id", $"x".as("rank"))
-      else {
-        val m = state.filter($"id" === Sent).select($"x").as[Double].head()
-        state.filter($"id" =!= Sent).select($"id", ($"x" + lit(damping * m)).as("rank"))
-      }
+      else state.filter($"id" =!= Sent)
+        .crossJoin(broadcast(state.filter($"id" === Sent).select($"x".as("m"))))
+        .select($"id", ($"x" + lit(damping) * $"m").as("rank"))
     PageRankResult(ranks, metrics.toSeq, step)
   }
+
+  /** `c`, declared never NULL, for a column the kernel knows holds no NULL:
+    * plans then carry no NULL checks or inferred NULL filters for it. */
+  private def notNull(c: Column): Column = Bridge.column(KnownNotNull(Bridge.expression(c)))
 
   /** Kernel partition count: the configured shuffle partitions, scaled DOWN
     * for SMALL graphs (~150k edges per partition, floor 8). Guide §2.2 sizes
@@ -485,21 +494,34 @@ object GraphOps {
 
   private val AqeKey = "spark.sql.adaptive.enabled"
   private val WidthKey = "spark.sql.shuffle.partitions"
-  private val SmjKey = "spark.sql.join.preferSortMergeJoin"
+  private val CodegenIdKey = "spark.sql.codegen.useIdInClassName"
+  private val TwoLevelAggKey = "spark.sql.codegen.aggregate.map.twolevel.enabled"
 
   /** The configured shuffle width that kernels size themselves against. */
   private def confPartitions(spark: SparkSession): Int = spark.conf.get(WidthKey, "32").toInt
 
   /**
    * One iterative-kernel run: the session conf it changes and the frames it
-   * caches, restored and released in ONE place. Opening the scope saves AQE,
-   * the shuffle width and the sort-merge-join preference and turns AQE off:
-   * AQE re-plans every superstep, and its partition coalescing breaks the
-   * co-partitioning reuse between the state and the static edge layout
-   * (measured 3x slower with it on). Closing restores all three and
-   * unpersists every frame registered through [[cache]], on success and on
-   * failure alike; a frame the returned result still reads is persisted
-   * outside the scope instead.
+   * caches, restored and released in ONE place. Opening the scope saves
+   * four keys and sets three of them:
+   *  - AQE off: AQE re-plans every superstep, and its partition coalescing
+   *    breaks the co-partitioning reuse between the state and the static
+   *    edge layout (measured 3x slower with it on);
+   *  - `spark.sql.codegen.useIdInClassName=false`: whole-stage classes are
+   *    named without their stage id, so an identical pipeline at another
+   *    stage position, superstep, round or run generates byte-identical
+   *    source and reuses one compiled class;
+   *  - `spark.sql.codegen.aggregate.map.twolevel.enabled=false`: no
+   *    fast-hash-map class is generated beside each hash aggregate.
+   * Spark caches at most 100 compiled classes (four LRU segments of 25;
+   * a whole-stage source takes one entry for the driver's class loader and
+   * one for the tasks'). With stage ids in the names one `kernels` benchmark
+   * cycle needed about 360 entries, so every cycle recompiled all of them
+   * and ran freshly loaded, still-interpreted classes.
+   * The kernel sets its shuffle width through [[width]]. Closing restores
+   * all four keys and unpersists every frame registered through [[cache]],
+   * on success and on failure alike; a frame the returned result still
+   * reads is persisted outside the scope instead.
    *
    * The resumable kernels (PageRank, CC, LP) also take their checkpoint and
    * STOP-marker settings from the scope: [[restorePoint]] is where a run
@@ -508,15 +530,16 @@ object GraphOps {
   private final class KernelRun(spark: SparkSession, kernel: String,
                                 checkpointDir: Option[String], stopFlag: Option[String],
                                 stopAfterMs: Long, stopSeqSeen: Long) {
-    private val saved = { val set = spark.conf.getAll; Seq(AqeKey, WidthKey, SmjKey).map(k => k -> set.get(k)) }
+    private val saved = {
+      val set = spark.conf.getAll
+      Seq(AqeKey, WidthKey, CodegenIdKey, TwoLevelAggKey).map(k => k -> set.get(k))
+    }
     private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val confWidth: Int = confPartitions(spark)
-    spark.conf.set(AqeKey, "false")
+    Seq(AqeKey, CodegenIdKey, TwoLevelAggKey).foreach(spark.conf.set(_, "false"))
 
     /** Kernel-internal shuffle width for every exchange the loop plans. */
     def width(p: Int): Unit = spark.conf.set(WidthKey, p.toLong)
-
-    def preferHashJoin(): Unit = spark.conf.set(SmjKey, "false")
 
     /** Persist `df` until the run ends. */
     def cache(df: DataFrame): DataFrame = {
@@ -528,6 +551,20 @@ object GraphOps {
     def restorePoint(target: Int): Option[(Int, DataFrame)] =
       for (dir <- checkpointDir; step <- latestCheckpoint(spark, dir, kernel) if step <= target)
         yield (step, spark.read.parquet(s"$dir/$kernel/superstep=$step"))
+
+    private var explained = false
+
+    /** With `GRAFT_KERNEL_EXPLAIN` set, prints the formatted physical plan of
+      * the first frame passed here — each kernel passes its boundary block
+      * or round — to stderr: the shape the kernel really executes, dumped
+      * from inside it without touching the hot path. Later calls print
+      * nothing. */
+    def explain(what: String, df: DataFrame): Unit =
+      if (!explained && sys.env.contains("GRAFT_KERNEL_EXPLAIN")) {
+        explained = true
+        Console.err.println(s"=== $kernel $what plan ===\n" +
+          df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+      }
 
     /** Checkpoint `state` (when a dir is set), then report whether a STOP
       * marker asks the run to end at this boundary — the reference's `stop`
@@ -594,22 +631,22 @@ object GraphOps {
                                 stopSeqSeen: Long = -1L): CcResult =
     inRun(spark, "cc", checkpointDir, stopFlag, stopAfterMs, stopSeqSeen) { run =>
     import spark.implicits._
-    // Shuffled-hash over sort-merge for the star-round joins (guide §3.1):
-    // the build sides (minsDeg / withMin) hold ONE row per src key, so a
-    // per-partition hash table always fits, and the streamed sym/dir side
-    // skips its per-round O(E log E) sort entirely.
-    run.preferHashJoin()
-    // cache the raw projection: the partition-sizing count, the vertex set
-    // and the initial contracted edge set all read the source ONCE; released
-    // below once both derived tables are materialized
+    // cache the raw projection: the vertex set and the start state both
+    // read the source ONCE; released below once both are materialized
     val input = run.cache(edges.select($"src".cast("long"), $"dst".cast("long")))
-    val shufflePartitions = kernelPartitions(run.confWidth, input.count())
     // persisted outside the run scope: the result's labels read it after
     // the run returns
-    val vertices = input.select($"src".as("id")).union(input.select($"dst".as("id")))
+    val vertices = input.select(explode(array($"src", $"dst")).as("id"))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
     vertices.count()
 
+    // The star-round equi-joins are hinted shuffled-hash (guide §3.1): the
+    // build sides (mins / withMin) hold ONE row per src key, so a
+    // per-partition hash table always fits, and the streamed sym/dir side
+    // skips its per-round O(E log E) sort entirely. The hint also pins the
+    // strategy: left to per-round size estimates, the same join switched
+    // among broadcast, shuffled-hash and sort-merge from round to round.
+    //
     // large-star: every neighbor v > u links to m = min(N(u) ∪ {u});
     // keeps (u, m) links implicit via the next small-star round.
     //
@@ -626,7 +663,7 @@ object GraphOps {
       // that always follows — saves a full edge-set shuffle per round
       hubs match {
         case None =>
-          sym.join(mins, Seq("src"))
+          sym.join(mins.hint("shuffle_hash"), Seq("src"))
             .filter($"dst" > $"src")
             .select($"dst".as("src"), $"m".as("dst"))
         case Some(h) =>
@@ -635,34 +672,53 @@ object GraphOps {
           val minsR = mins.join(broadcast(h), Seq("src"), "left")
             .select($"src", $"m",
               explode(sequence(lit(0), coalesce($"nsalt", lit(1)) - 1)).as("salt"))
-          symS.join(minsR, Seq("src", "salt"))
+          symS.join(minsR.hint("shuffle_hash"), Seq("src", "salt"))
             .filter($"dst" > $"src")
             .select($"dst".as("src"), $"m".as("dst"))
       }
     }
 
+    // A hub snapshot: a bounded collect of the round's hub degrees (#keys
+    // with deg > thr <= 2E/thr <= 8*roundP rows — partition-bounded at any
+    // scale, the IVF-centroid size class), then a local frame the per-round
+    // broadcast builds from with zero extra distributed jobs.
+    def hubSnapshot(hubTable: DataFrame): Option[DataFrame] = {
+      val rows = hubTable.as[(Long, Int)].collect()
+      if (rows.isEmpty) None else Some(rows.toSeq.toDF("src", "nsalt"))
+    }
+
     // small-star: orient every edge high->low; every low neighbor (and u
-    // itself) links to m = min(N(u) ∪ {u}).
+    // itself) links to m = min(N(u) ∪ {u}). Each joined row emits both of
+    // its links; u's own link repeats once per neighbor and collapses in
+    // the distinct's map-side aggregation (dir is clustered by u), so
+    // withMin is aggregated once and feeds only the join.
     def smallStar(e: DataFrame): DataFrame = {
       val dir = e.filter($"src" =!= $"dst")
         .select(greatest($"src", $"dst").as("src"), least($"src", $"dst").as("dst"))
       val withMin = dir.groupBy($"src").agg(min($"dst").as("m"))
-      dir.join(withMin, Seq("src"))
-        .filter($"dst" =!= $"m")
-        .select($"dst".as("src"), $"m".as("dst"))
-        .union(withMin.select($"src", $"m".as("dst")))
+      dir.join(withMin.hint("shuffle_hash"), Seq("src"))
+        .select(explode(array(struct($"dst".as("src"), $"m".as("dst")),
+          struct($"src", $"m".as("dst")))).as("l"))
+        .select($"l.src", $"l.dst")
+        .filter($"src" =!= $"dst")
         .distinct()
     }
 
-    // ONE exchange builds the deduped src-partitioned start state:
-    // repartition by src, then dedup in place (hashpartitioning(src)
-    // satisfies the (src, dst) clustering — guide §2.4)
+    // Every round reads the same kind of edge state, so every round plans
+    // the same filters and null checks and runs round 1's generated code:
+    // the state never holds a NULL (the input's `src =!= dst` drops them
+    // and a star round derives none), and the projection leaves behind the
+    // constraints of whatever plan built the state. Without it the first
+    // rounds' nullability and constraints drift with the input's.
+    def edgeState(df: DataFrame): DataFrame =
+      df.select(notNull($"src").as("src"), notNull($"dst").as("dst"))
+
+    // The start state is the loop-free input as it is: every round shuffles
+    // its input by src anyway, and round 1's distinct collapses repeated
+    // edges. Like every round's state it is materialized by its digest.
     val resumed = run.restorePoint(maxIter)
-    var e = resumed.fold(input.filter($"src" =!= $"dst"))(_._2)
-      .repartition(shufflePartitions, $"src")
-      .dropDuplicates("src", "dst")
-      .localCheckpoint(true) // eager: materializes from the input cache
-    input.unpersist(false)
+    var e = edgeState(resumed.fold(input.filter($"src" =!= $"dst"))(_._2))
+      .localCheckpoint(false)
     val edgePartitions = e.rdd.getNumPartitions
 
     val metrics = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetric]
@@ -670,13 +726,15 @@ object GraphOps {
     var stoppedEarly = false
     // null = no snapshot yet (round 1 probes eagerly); None = probed, hub-free
     var hubsForRound: Option[DataFrame] = null
-    var done = e.isEmpty
     // converged when the edge set is unchanged (order-independent,
     // overflow-free digest — ANSI mode forbids wrapping sums); the previous
-    // round's digest is remembered, not recomputed (one agg job per round)
+    // round's digest is remembered, not recomputed (one agg job per round),
+    // and its row count also tells an empty start state
     def digest(df: DataFrame) = df
       .agg(count(lit(1)), expr("coalesce(bit_xor(xxhash64(src, dst)), 0L)")).first()
-    var dPrev = if (done) null else digest(e)
+    var dPrev = digest(e)
+    var done = dPrev.getLong(0) == 0L
+    input.unpersist(false)
     // Each round materializes eagerly (localCheckpoint) before the next
     // starts. Lazily chaining CC rounds the way pageRank chains supersteps
     // was MEASURED 3x slower at sf0.1 (48s -> 147s): pageRank's
@@ -709,53 +767,49 @@ object GraphOps {
       val roundP = kernelPartitions(run.confWidth, nEdges)
       run.width(roundP)
       val hubThreshold = math.max(1000L, 2L * nEdges / roundP / 4)
-      // ONE explicit exchange of the symmetrized table serves BOTH consumers
-      // (guide §2.4): the min/degree aggregation and the large-star join each
-      // need sym clustered by src; without the repartition each planned its
-      // own exchange of the full 2E rows. The two references below share the
-      // identical exchange subtree, which ReuseExchange collapses to a
-      // single shuffle per round.
-      val sym = e.filter($"src" =!= $"dst")
-        .union(e.filter($"src" =!= $"dst").select($"dst".as("src"), $"src".as("dst")))
-        .repartition(roundP, $"src")
-      val minsDeg = run.cache(sym.groupBy($"src")
-        .agg(least(min($"dst"), first($"src")).as("m"), count(lit(1)).as("deg")))
+      // ONE exchange of the symmetrized table serves BOTH consumers (guide
+      // §2.4): the min/degree aggregation and the large-star join each need
+      // sym clustered by src. It is cached for the round, because the
+      // aggregation also feeds the hub snapshot's collect, a separate job:
+      // an uncached sym was shuffled once per job that read it.
+      val sym = run.cache(e.filter($"src" =!= $"dst")
+        .select(explode(array(struct($"src", $"dst"), struct($"dst".as("src"), $"src".as("dst")))).as("p"))
+        .select($"p.src", $"p.dst")
+        .repartition(roundP, $"src"))
+      val minsDeg = sym.groupBy($"src")
+        .agg(least(min($"dst"), first($"src")).as("m"), count(lit(1)).as("deg"))
       val hubTable = minsDeg.filter($"deg" > hubThreshold)
-        .select($"src", least(lit(shufflePartitions.toLong), ($"deg" / hubThreshold) + 1L)
+        .select($"src", least(lit(roundP.toLong), ($"deg" / hubThreshold) + 1L)
           .cast("int").as("nsalt"))
-      // Hub table freshness: round 1 probes eagerly (isEmpty materializes
-      // minsDeg — the input graph's junit/lodash hubs must be salted from
-      // the very first join); later rounds reuse the snapshot collected from
-      // the PREVIOUS round's cached minsDeg below. The lag is one round and
-      // salting is semantically NEUTRAL (any nsalt assignment yields the
-      // same join rows), so only balance can lag, never results — and it
-      // removes the per-round eager minsDeg-materialization job that was
-      // ~0.5 s/round of pure probe cost at sf0.1.
-      val hubs =
-        if (hubsForRound == null) { if (hubTable.isEmpty) None else Some(hubTable) }
-        else hubsForRound
+      // Hub table freshness: round 1 collects its snapshot eagerly (which
+      // materializes sym — the input graph's junit/lodash hubs must be
+      // salted from the very first join) and hands the same rows to round 2;
+      // later rounds use the snapshot collected from the PREVIOUS round's
+      // cached sym below. The lag is one round and salting is semantically
+      // NEUTRAL (any nsalt assignment yields the same join rows), so only
+      // balance can lag, never results — and it removes the per-round eager
+      // probe job that was ~0.5 s/round of pure probe cost at sf0.1. Every
+      // round's hub table is such a local snapshot, so rounds with the same
+      // hub state plan the same shape.
+      val firstRound = hubsForRound == null
+      val hubs = if (firstRound) hubSnapshot(hubTable) else hubsForRound
       // LAZY localCheckpoint + digest in ONE action (r4 ask #3): the digest
       // aggregation is the round's first action on `next`, so it both
       // CACHES the round's partitions (truncating lineage for the next
       // round) and computes the convergence digest in the same job — one
       // action per round instead of the former eager-materialize-then-
-      // digest pair (and it materializes minsDeg en route: the groupBy
-      // stage runs before the join stage inside the same job). The next
+      // digest pair (and it materializes sym en route: its exchange stage
+      // runs before the join stage inside the same job). The next
       // round's multiple references to `e` then read the cache exactly as
       // before (the round-3 eager-vs-lazy trap was about chaining
       // UNmaterialized rounds; here every round is still fully materialized
       // before the next starts, just by the digest job).
-      val next = smallStar(largeStar(sym, minsDeg.select($"src", $"m"), hubs))
-        .localCheckpoint(false)
+      val round = edgeState(smallStar(largeStar(sym, minsDeg.select($"src", $"m"), hubs)))
+      run.explain("round", round)
+      val next = round.localCheckpoint(false)
       val dNext = digest(next)
-      // next round's hub snapshot: a bounded collect off the cached minsDeg
-      // (#keys with deg > thr <= 2E/thr <= 8*roundP rows — partition-bounded
-      // at any scale, the IVF-centroid size class), then a local frame the
-      // per-round broadcast builds from with zero extra distributed jobs
-      val hubRows = hubTable.as[(Long, Int)].collect()
-      hubsForRound = if (hubRows.isEmpty) None
-        else Some(hubRows.toSeq.toDF("src", "nsalt"))
-      minsDeg.unpersist(false)
+      hubsForRound = if (firstRound) hubs else hubSnapshot(hubTable)
+      sym.unpersist(false)
       done = dNext == dPrev
       dPrev = dNext
       e = next
@@ -899,6 +953,7 @@ object GraphOps {
       // supersteps chained lazily between boundaries, cut+materialized only
       // at checkpoints — same fixed-cost reasoning as pageRank
       val atCheckpoint = iter % checkpointEvery == 0 || iter == iterations
+      if (atCheckpoint) run.explain("boundary block", winners)
       labels = if (atCheckpoint) winners.localCheckpoint(true) else winners
       if (atCheckpoint && iter != iterations) stoppedEarly = run.boundary(iter, labels)
       metrics += SuperstepMetric("lp", iter, (System.nanoTime() - t0) / 1000000L,
@@ -920,7 +975,7 @@ object GraphOps {
     // nothing is cached: a caller that also consumes the per-vertex frame
     // re-runs the close, which beats leaving the close persisted for the
     // session's lifetime
-    (trianglesPlan(spark, edges).count(), trianglesPerVertex(spark, edges))
+    (inRun(spark, "triangles")(_ => trianglesPlan(spark, edges).count()), trianglesPerVertex(spark, edges))
 
   /** Per-vertex triangle counts WITHOUT the eager total — a lazy plan, no
     * job forced, so callers that only want the frame (q17) don't pay the
@@ -1169,7 +1224,10 @@ object GraphOps {
           .groupBy($"src".as("id")).agg(sum($"a").as("s"))
         h = verts.join(contribH, Seq("id"), "left")
           .select($"id", coalesce($"s", lit(0.0)).as("h"))
-        if (i % checkpointEvery == 0 || i == iterations) h = h.localCheckpoint(true)
+        if (i % checkpointEvery == 0 || i == iterations) {
+          run.explain("boundary block", h)
+          h = h.localCheckpoint(true)
+        }
       }
       // single L1 normalization at the end; both sums in one tiny job each
       val normA = a.agg(sum($"a")).as[Double].head()
@@ -1370,12 +1428,13 @@ object GraphOps {
         // are the cheap tail anyway — guide §1.1's empirical loop.)
         var trimming = true
         while (trimming && nv > 0) {
-          val surv = e.select($"src".as("id"), lit(1).as("o"), lit(0).as("i"))
+          val survPlan = e.select($"src".as("id"), lit(1).as("o"), lit(0).as("i"))
             .union(e.select($"dst".as("id"), lit(0).as("o"), lit(1).as("i")))
             .groupBy($"id").agg(max($"o").as("o"), max($"i").as("i"))
             .filter($"o" === 1 && $"i" === 1)
             .select($"id")
-            .localCheckpoint(true)
+          run.explain("trim round", survPlan)
+          val surv = survPlan.localCheckpoint(true)
           val nSurv = surv.count()
           val nTrim = nv - nSurv
           if (nTrim == 0) trimming = false

@@ -675,9 +675,14 @@ object Queries {
       val e = derivedEdges(s, d)
       val out = e.groupBy(col("src")).agg(count(lit(1)).as("dout"))
       val in = e.groupBy(col("dst")).agg(count(lit(1)).as("din"))
-      e.join(out, Seq("src")).join(in, Seq("dst"))
-        .agg(round(corr(col("dout"), col("din")), 6).as("assortativity"),
-          count(lit(1)).as("n_edges"))
+      val pairs = e.join(out, Seq("src")).join(in, Seq("dst"))
+      // corr divides by both degree columns' deviations, which ANSI mode
+      // rejects when a column is constant; the statistic (and DuckDB) is
+      // NULL there, so such a column feeds corr no pairs at all
+      val varies = pairs.agg(min(col("dout")) < max(col("dout")) &&
+        min(col("din")) < max(col("din"))).scalar()
+      pairs.agg(round(corr(when(varies, col("dout")), col("din")), 6).as("assortativity"),
+        count(lit(1)).as("n_edges"))
     }),
     "q77_reciprocity" -> ((s, d) => {
       // fraction of directed edges whose reverse edge also exists.

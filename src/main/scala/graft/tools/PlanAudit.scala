@@ -26,7 +26,8 @@ object PlanAudit {
 > hand-built single-round kernel shapes; they do not execute the kernels.
 > The EXECUTED PageRank boundary-block plan is
 > `plans/r06/kernel_pagerank_boundary_executed_after.txt`, dumped from
-> inside `GraphOps.pageRank` by the `GRAFT_KERNEL_EXPLAIN=1` hook. The
+> inside `GraphOps.pageRank` by the `GRAFT_KERNEL_EXPLAIN=1` hook (CC, LP,
+> HITS and SCC print their first round through the same hook). The
 > round-6 before/after snapshots of the headline queries are the other
 > files under `plans/r06/`; the changes behind them are logged in
 > `OPTIMIZATION_r06.md`.

@@ -3,6 +3,7 @@ package graft.tools
 import graft.gen.SyntheticRepoFiles.mix
 import graft.graph.GraphOps
 import graft.model._
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -12,7 +13,8 @@ import scala.collection.mutable
  * Skew and scale probe for one engine target. Runs the target once under a
  * private job group and reports the group's structural work — jobs, stages,
  * tasks, shuffle write — plus per-stage task durations, whose max/median
- * within a heavy stage is the straggler measure ("no straggler" = < 4).
+ * within a heavy stage is the straggler measure ("no straggler" = < 4), and
+ * the number of classes Spark compiled for generated code during the run.
  * Identical input gives identical job/stage/task counts, so they can be
  * compared across runs where wall time on a shared host cannot.
  *
@@ -25,10 +27,11 @@ import scala.collection.mutable
 object Probe {
 
   /** One probe run: the job group's job count, each completed stage's
-    * shuffle write and each stage's task durations (sorted), and the
-    * target's own summary line. */
+    * shuffle write and each stage's task durations (sorted), the classes
+    * compiled for generated code (the whole JVM's count, so a concurrent
+    * query elsewhere adds to it), and the target's own summary line. */
   final case class Report(wallSec: Double, jobs: Int, stageShuffleBytes: Map[Int, Long],
-                          stageTaskMs: Map[Int, Vector[Long]], summary: String) {
+                          stageTaskMs: Map[Int, Vector[Long]], compiles: Long, summary: String) {
     def stages: Int = stageShuffleBytes.size
     def tasks: Int = stageTaskMs.valuesIterator.map(_.size).sum
     def shuffleWriteBytes: Long = stageShuffleBytes.values.sum
@@ -141,12 +144,14 @@ object Probe {
     sc.addSparkListener(work)
     try {
       sc.setJobGroup(work.group, "graft.tools.Probe")
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       val summarize = try body finally sc.clearJobGroup()
       val wall = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
       Bridge.drainListenerBus(sc)
       val r = Report(wall, work.jobs, work.stageShuffle.toMap,
-        work.taskMs.view.mapValues(_.sorted.toVector).toMap, "")
+        work.taskMs.view.mapValues(_.sorted.toVector).toMap, compiles, "")
       r.copy(summary = summarize(r))
     } finally sc.removeSparkListener(work)
   }
@@ -188,7 +193,7 @@ object Probe {
     try {
       val r = run(spark, target, size)
       println(f"PROBE $target cores=$cores size=$size wall=${r.wallSec}%.1fs jobs=${r.jobs} " +
-        f"stages=${r.stages} tasks=${r.tasks} shuffleMB=${r.shuffleWriteBytes / 1e6}%.1f")
+        f"stages=${r.stages} tasks=${r.tasks} shuffleMB=${r.shuffleWriteBytes / 1e6}%.1f compiles=${r.compiles}")
       var worst = 0.0
       r.heavy.foreach { case (stage, ds) =>
         val med = math.max(1L, ds(ds.length / 2))

@@ -198,7 +198,8 @@ class GraphOpsSpec extends AnyFunSuite {
 
   test("kernels restore session conf and release their caches, on success and on failure") {
     val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
-      "spark.sql.join.preferSortMergeJoin")
+      "spark.sql.join.preferSortMergeJoin", "spark.sql.codegen.useIdInClassName",
+      "spark.sql.codegen.aggregate.map.twolevel.enabled")
     def conf = keys.map(k => k -> spark.conf.getOption(k))
     val widthWas = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "12")
@@ -269,6 +270,30 @@ class GraphOpsSpec extends AnyFunSuite {
     val lazyGot = GraphOps.trianglesPerVertex(spark, edgeDf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(lazyGot == expPer)
+  }
+
+  test("a second run of each kernel on the same graph compiles no generated code") {
+    // 2,000 vertices, 16,000 sampled edges (self-loops and repeats kept, as
+    // in any input) with cubed-uniform targets: a hub at vertex 0, and CC
+    // contracts in several rounds
+    val n = 2000L
+    val g = (0 until 16000).map { i =>
+      val h = SyntheticGraph.mix(7L, i.toLong)
+      val u = (h >>> 11).toDouble / (1L << 53).toDouble
+      (Math.floorMod(h, n), math.min(n - 1, (u * u * u * n).toLong))
+    }.toDF("src", "dst")
+    def compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val runs: Seq[(String, () => Any)] = Seq(
+      "pagerank" -> (() => GraphOps.pageRank(spark, g, 10)),
+      "cc" -> (() => assert(GraphOps.connectedComponentsResult(spark, g).rounds >= 3)),
+      "lp" -> (() => GraphOps.labelPropagationResult(spark, g, 5)),
+      "triangles" -> (() => GraphOps.triangleCount(spark, g)))
+    for ((name, run) <- runs) {
+      run()
+      val before = compiled
+      run()
+      assert(compiled - before == 0, s"the second $name run compiled ${compiled - before} classes")
+    }
   }
 
   test("degenerate inputs: empty graph errors clearly or returns empty, never NaN") {

@@ -52,6 +52,8 @@ package graft.tools {
       val (a, b) = (runs(0), runs(1))
       assert(a.jobs > 0)
       assert((a.jobs, a.stages, a.tasks) == (b.jobs, b.stages, b.tasks))
+      // the repeat reuses the classes the first run compiled
+      assert(b.compiles <= a.compiles, s"second run compiled ${b.compiles}, first ${a.compiles}")
       assert(a.summary.startsWith("vertices=1000 components=1 "))
     }
 
