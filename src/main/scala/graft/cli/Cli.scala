@@ -22,8 +22,8 @@ object GraphStore {
     * the reference builds per-linkage (`Neo4jDatabaseController.java:103-131`:
     * PP mode creates only dependentOnPP edges; AP/AA modes create only
     * dependentOn edges). `linkage=None` (unconfigured) writes the superset.
-    * The Mined datasets are lazy, so a skipped table's plan never runs —
-    * pp-mode users don't pay the AP edge build. */
+    * A skipped table is simply not written (mining builds the AP and PP
+    * edges either way: the prototype stubs and resolve read them). */
   def write(spark: SparkSession, dir: String, mined: graft.mine.Mined,
             mode: SaveMode = SaveMode.Overwrite, linkage: Option[String] = None): Unit = {
     mined.packages.write.mode(mode).parquet(s"$dir/packages")
@@ -194,6 +194,7 @@ object Cli {
         GraphStore.write(spark, dir, mined, linkage = linkage)
         graft.Metrics.write(spark, dir, Seq(
           graft.Metrics.mineMetrics("start", mined, (System.nanoTime() - t0) / 1e9)))
+        mined.release()
         println(s"start: ${GraphStore.readPackages(spark, dir).count()} packages, " +
           s"${GraphStore.readArtifacts(spark, dir).count()} artifacts")
         // AA linkage auto-chains the resolution pass after mining completes
@@ -212,6 +213,7 @@ object Cli {
         GraphStore.write(spark, dir, mined, linkage = linkage2)
         graft.Metrics.write(spark, dir, Seq(
           graft.Metrics.mineMetrics("mine-from", mined, (System.nanoTime() - t0) / 1e9)))
+        mined.release()
         println(s"mine-from: ${GraphStore.readPackages(spark, dir).count()} packages from ${rest(0)}")
         if (linkage2.contains("aa"))
           run(spark, "parse", dir, Array.empty)
@@ -254,6 +256,7 @@ object Cli {
         // a STOPPED run's labels are partial — don't overwrite the published
         // table with them; the checkpoint carries the state for resume
         k.publish(r.components, "component", Option.unless(r.stopped)("components"), r.metrics)
+        r.release()
         println(if (r.stopped)
           s"components: stopped at round ${r.rounds} (checkpointed, resumable; table NOT updated)"
         else s"components: converged in ${r.rounds} rounds")
@@ -400,6 +403,7 @@ object Cli {
             .write.mode(SaveMode.Overwrite).parquet(s"$dir/pp_edges_next")
           Fs.swap(spark, s"$dir/pp_edges", s"$dir/pp_edges_next")
         }
+        incoming.release()
         println(s"update: $nNewArtifacts new artifacts, $nDeltaAa delta AA edges")
 
       case "export" =>

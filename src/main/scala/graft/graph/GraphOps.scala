@@ -6,8 +6,13 @@ import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
-import graft.util.Fs
+import graft.util.{BoundedCollect, CodegenPolicy, Fs}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.KnownNotNull
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Per-superstep lineage/metrics row (north_rule: "checkpointed every k
@@ -41,31 +46,40 @@ final case class SuperstepMetric(kernel: String, superstep: Int, millis: Long,
  */
 object GraphOps {
 
-  /** Deterministic dense Long ids for string vertices: sort + zipWithIndex
-    * (distributed, stable across partitionings). */
+  /** Deterministic dense Long ids for string vertices: the distinct ids in
+    * sorted order (a null id first, as SQL's ascending order puts it),
+    * numbered by zipWithIndex — distributed, stable across partitionings.
+    * The distinct, the sort and the numbering run on the ids' internal
+    * strings, compared by their bytes as Spark compares strings, so they
+    * generate no aggregate, sort or encoder code of their own. The frame is
+    * sized for the planner by one count of its rows. */
   def vertexDictionary(spark: SparkSession, ids: DataFrame): DataFrame = {
-    import spark.implicits._
-    val sorted = ids.select(col(ids.columns.head).cast("string").as("vid"))
-      .distinct().orderBy("vid")
-    val indexed = sorted.as[String].rdd.zipWithIndex().map { case (v, i) => (v, i) }
-    spark.createDataFrame(indexed).toDF("vid", "id")
+    implicit val byBytes: Ordering[UTF8String] = (a, b) => a.compareTo(b)
+    val indexed = ids.select(col(ids.columns.head).cast("string")).queryExecution.toRdd
+      .map(r => Option(r.getUTF8String(0)).map(_.clone()))
+      .distinct()
+      .sortBy(identity)
+      .zipWithIndex()
+      .map { case (v, i) => InternalRow(v.orNull, i) }
+    Bridge.dataFrame(spark, indexed,
+      StructType(Seq(StructField("vid", StringType), StructField("id", LongType, nullable = false))),
+      Some(BigInt(indexed.count())))
   }
 
-  /** Map a string edge table to Long ids using one dictionary for both ends. */
-  def indexEdges(spark: SparkSession, edges: DataFrame, srcCol: String, dstCol: String): (DataFrame, DataFrame) = {
-    val dict = vertexDictionary(spark,
-      edges.select(col(srcCol).as("v")).union(edges.select(col(dstCol).as("v"))))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // sequence the dictionary's materialization: the two dict joins below
-    // spawn independently-submitted broadcast builds, and a cold cache lets
-    // each re-run the sort+zipWithIndex chain (no cross-job compute lock)
-    dict.count()
-    val e = edges
-      .join(dict.withColumnRenamed("vid", srcCol).withColumnRenamed("id", "src"), srcCol)
-      .join(dict.withColumnRenamed("vid", dstCol).withColumnRenamed("id", "dst"), dstCol)
-      .select("src", "dst")
-    (e, dict)
-  }
+  /** Map a string edge table to Long ids using one dictionary for both ends.
+    * The dictionary is built from one explode of both ends, under the
+    * [[CodegenPolicy]], and caches nothing: a later read of it re-reads the
+    * sorted ids from the sort's shuffle output. */
+  def indexEdges(spark: SparkSession, edges: DataFrame, srcCol: String, dstCol: String): (DataFrame, DataFrame) =
+    CodegenPolicy(spark) {
+      val dict = vertexDictionary(spark, edges.select(explode(array(col(srcCol), col(dstCol))).as("v")))
+      val (s, d) = (dict.as("s"), dict.as("d"))
+      val e = edges
+        .join(s, edges(srcCol) === col("s.vid"))
+        .join(d, edges(dstCol) === col("d.vid"))
+        .select(col("s.id").as("src"), col("d.id").as("dst"))
+      (e, dict)
+    }
 
   // ------------------------------------------------------------------ PageRank
 
@@ -494,8 +508,6 @@ object GraphOps {
 
   private val AqeKey = "spark.sql.adaptive.enabled"
   private val WidthKey = "spark.sql.shuffle.partitions"
-  private val CodegenIdKey = "spark.sql.codegen.useIdInClassName"
-  private val TwoLevelAggKey = "spark.sql.codegen.aggregate.map.twolevel.enabled"
 
   /** The configured shuffle width that kernels size themselves against. */
   private def confPartitions(spark: SparkSession): Int = spark.conf.get(WidthKey, "32").toInt
@@ -507,17 +519,10 @@ object GraphOps {
    *  - AQE off: AQE re-plans every superstep, and its partition coalescing
    *    breaks the co-partitioning reuse between the state and the static
    *    edge layout (measured 3x slower with it on);
-   *  - `spark.sql.codegen.useIdInClassName=false`: whole-stage classes are
-   *    named without their stage id, so an identical pipeline at another
-   *    stage position, superstep, round or run generates byte-identical
-   *    source and reuses one compiled class;
-   *  - `spark.sql.codegen.aggregate.map.twolevel.enabled=false`: no
-   *    fast-hash-map class is generated beside each hash aggregate.
-   * Spark caches at most 100 compiled classes (four LRU segments of 25;
-   * a whole-stage source takes one entry for the driver's class loader and
-   * one for the tasks'). With stage ids in the names one `kernels` benchmark
-   * cycle needed about 360 entries, so every cycle recompiled all of them
-   * and ran freshly loaded, still-interpreted classes.
+   *  - the two keys of [[CodegenPolicy]]: with stage ids in class names one
+   *    `kernels` benchmark cycle needed about 360 codegen cache entries, so
+   *    every cycle recompiled all of them and ran freshly loaded,
+   *    still-interpreted classes.
    * The kernel sets its shuffle width through [[width]]. Closing restores
    * all four keys and unpersists every frame registered through [[cache]],
    * on success and on failure alike; a frame the returned result still
@@ -530,13 +535,10 @@ object GraphOps {
   private final class KernelRun(spark: SparkSession, kernel: String,
                                 checkpointDir: Option[String], stopFlag: Option[String],
                                 stopAfterMs: Long, stopSeqSeen: Long) {
-    private val saved = {
-      val set = spark.conf.getAll
-      Seq(AqeKey, WidthKey, CodegenIdKey, TwoLevelAggKey).map(k => k -> set.get(k))
-    }
+    private val restoreConf = CodegenPolicy.save(spark, Seq(AqeKey, WidthKey) ++ CodegenPolicy.Keys)
     private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val confWidth: Int = confPartitions(spark)
-    Seq(AqeKey, CodegenIdKey, TwoLevelAggKey).foreach(spark.conf.set(_, "false"))
+    (AqeKey +: CodegenPolicy.Keys).foreach(spark.conf.set(_, "false"))
 
     /** Kernel-internal shuffle width for every exchange the loop plans. */
     def width(p: Int): Unit = spark.conf.set(WidthKey, p.toLong)
@@ -580,7 +582,7 @@ object GraphOps {
       // newest first: uncaching a frame re-plans every still-registered,
       // never-built cache derived from it
       frames.reverseIterator.foreach(_.unpersist(false))
-      saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      restoreConf()
     }
   }
 
@@ -610,9 +612,21 @@ object GraphOps {
    */
   /** `stopped = true` means a cooperative STOP ended the run BEFORE
     * convergence: `components` is the partially-contracted state (valid to
-    * resume from, NOT final component assignments). */
+    * resume from, NOT final component assignments). `components` reads the
+    * vertex set and the last round's edge state, both kept by the run: the
+    * caller frees them with [[release]] once it has consumed the labels;
+    * until then they live for the session. */
   final case class CcResult(components: DataFrame, metrics: Seq[SuperstepMetric], rounds: Int,
-                            stopped: Boolean = false)
+                            stopped: Boolean = false)(unpersistKept: () => Unit) {
+    /** Unpersists what this run kept. `components` must not be used
+      * afterwards. */
+    def release(): Unit = unpersistKept()
+  }
+
+  /** The rows behind a locally checkpointed or persisted-row frame. */
+  private def keptRows(df: DataFrame): RDD[_] =
+    df.queryExecution.logical.collectFirst { case l: LogicalRDD => l.rdd }
+      .getOrElse(throw new IllegalArgumentException("not a frame over kept rows"))
 
   def connectedComponents(spark: SparkSession, edges: DataFrame, maxIter: Int = 50): DataFrame =
     connectedComponentsResult(spark, edges, maxIter).components
@@ -635,7 +649,7 @@ object GraphOps {
     // read the source ONCE; released below once both are materialized
     val input = run.cache(edges.select($"src".cast("long"), $"dst".cast("long")))
     // persisted outside the run scope: the result's labels read it after
-    // the run returns
+    // the run returns, until the caller releases the result
     val vertices = input.select(explode(array($"src", $"dst")).as("id"))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
     vertices.count()
@@ -678,12 +692,14 @@ object GraphOps {
       }
     }
 
-    // A hub snapshot: a bounded collect of the round's hub degrees (#keys
-    // with deg > thr <= 2E/thr <= 8*roundP rows — partition-bounded at any
-    // scale, the IVF-centroid size class), then a local frame the per-round
-    // broadcast builds from with zero extra distributed jobs.
-    def hubSnapshot(hubTable: DataFrame): Option[DataFrame] = {
-      val rows = hubTable.as[(Long, Int)].collect()
+    // A hub snapshot: a bounded collect of the round's hub degrees (they sum
+    // to 2E, so #keys with deg > thr <= 2E/thr, at most 4*roundP rows since
+    // thr >= E/(2*roundP) — partition-bounded at any scale, the IVF-centroid
+    // size class), then a local frame the per-round broadcast builds from
+    // with zero extra distributed jobs.
+    def hubSnapshot(hubTable: DataFrame, nEdges: Long, thr: Long): Option[DataFrame] = {
+      val rows = BoundedCollect(hubTable.as[(Long, Int)], 2L * nEdges / thr,
+        s"2E / hubThreshold (2 * $nEdges / $thr)")
       if (rows.isEmpty) None else Some(rows.toSeq.toDF("src", "nsalt"))
     }
 
@@ -792,7 +808,7 @@ object GraphOps {
       // round's hub table is such a local snapshot, so rounds with the same
       // hub state plan the same shape.
       val firstRound = hubsForRound == null
-      val hubs = if (firstRound) hubSnapshot(hubTable) else hubsForRound
+      val hubs = if (firstRound) hubSnapshot(hubTable, nEdges, hubThreshold) else hubsForRound
       // LAZY localCheckpoint + digest in ONE action (r4 ask #3): the digest
       // aggregation is the round's first action on `next`, so it both
       // CACHES the round's partitions (truncating lineage for the next
@@ -808,8 +824,10 @@ object GraphOps {
       run.explain("round", round)
       val next = round.localCheckpoint(false)
       val dNext = digest(next)
-      hubsForRound = if (firstRound) hubs else hubSnapshot(hubTable)
+      hubsForRound = if (firstRound) hubs else hubSnapshot(hubTable, nEdges, hubThreshold)
       sym.unpersist(false)
+      // the superseded state: nothing reads it once the next round is built
+      Bridge.free(keptRows(e))
       done = dNext == dPrev
       dPrev = dNext
       e = next
@@ -825,7 +843,11 @@ object GraphOps {
     val components = vertices
       .join(e.select($"src".as("id"), $"dst".as("c")), Seq("id"), "left")
       .select($"id", coalesce($"c", $"id").as("component"))
-    CcResult(components, metrics.toSeq, iter, stopped = stoppedEarly)
+    val lastState = keptRows(e)
+    CcResult(components, metrics.toSeq, iter, stopped = stoppedEarly) { () =>
+      vertices.unpersist(false)
+      Bridge.free(lastState)
+    }
   }
 
   // ------------------------------------------------------ label propagation

@@ -716,9 +716,9 @@ object Queries {
     minedCache.computeIfAbsent(dir + "@" + spark.sparkContext.applicationId + "@" + spark.sparkContext.startTime, _ => {
       val cfg = SyntheticRepoFiles.configForSf(SyntheticRepoFiles.sfOfDir(dir))
       val m = MineJob.run(spark, SyntheticRepoFiles.generate(spark, cfg))
-      (spark, graft.mine.Mined(
-        m.packages.persist(), m.artifacts.persist(), m.apEdges.persist(),
-        m.ppEdges.persist(), m.quarantine.persist(), m.parsed))
+      // the other tables are cached by MineJob already; all of them stay
+      // for the session
+      (spark, m.copy(packages = m.packages.persist(), quarantine = m.quarantine.persist()))
     })._2
   }
 

@@ -1,21 +1,17 @@
 package graft.resolve
 
 import graft.model._
+import graft.util.{BoundedCollect, CodegenPolicy}
 import graft.versionrange.Resolvers
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
 /** Outputs of AP->AA resolution (the reference's `parse` lifecycle, SURVEY §3.2). */
 final case class Resolved(aaEdges: Dataset[AaEdge], apEdges: Dataset[ApEdge])
-
-/**
- * (dstPackageId, versionRange, dstArtifactId) matches for unresolved specs.
- * Top-level (not nested in the companion object) so Janino's whole-stage
- * codegen can reference its constructor — a nested private case class forces
- * a silent fallback to interpreted execution for the hottest typed stage of
- * the resolve join.
- */
-final case class SpecMatch(dstPackageId: String, versionRange: String, dstArtifactId: String)
 
 /**
  * ResolveJob: the AP->AA resolution join (J1) — the heart of the reference
@@ -28,7 +24,7 @@ final case class SpecMatch(dstPackageId: String, versionRange: String, dstArtifa
  *     the reference's range-representation cache (each spec is classified
  *     once per package instead of once per edge);
  *  3. equi-join those pairs against per-package version lists
- *     (collect_list = the reference's per-package version->artifactId map,
+ *     (= the reference's per-package version->artifactId map,
  *     `:108-114`), resolve with the range library, explode matches;
  *  4. join matches back to the full AP edge set on (package, spec) to emit
  *     (srcArtifact, dstArtifact), deduplicated — the reference MERGEs AA
@@ -40,15 +36,33 @@ final case class SpecMatch(dstPackageId: String, versionRange: String, dstArtifa
  * Skew: hub packages (junit/lodash analogues) fan out on the (package, spec)
  * join in step 4. The matches side is tiny relative to the edge table, so we
  * broadcast it when it fits; AQE skew-join splitting covers the rest.
+ *
+ * Why the pipelines have this shape: `aaEdges` is returned lazy and runs
+ * in its caller's action, under the caller's conf; the one action resolve
+ * runs itself, the hot-key histogram, runs under the [[CodegenPolicy]].
+ * What keeps the caller's query small is the plan: the resolution is a
+ * UDF and an explode inside the join pipeline (a typed mapPartitions cut
+ * it in two, with an object deserializer and serializer around it), and
+ * the version lists are grouped on internal rows (a `collect_list` is an
+ * object hash aggregate with about eight generated projections). The
+ * mined inputs are kept rows, so scanning them recomputes nothing.
  */
 object ResolveJob {
 
-  /** Per-package version dictionary: one groupBy of the artifact table. */
+  /** Per-package version dictionary, (packageId, versions, artifactIds)
+    * with the two arrays in step: one grouping of the artifact table, done
+    * on Spark's internal rows because a `collect_list` aggregate runs as an
+    * object hash aggregate with about eight generated projections of its
+    * own (its sort-based fallback included). */
   private def versionDict(spark: SparkSession, artifacts: Dataset[ArtifactRow]): DataFrame = {
-    import spark.implicits._
-    artifacts
-      .groupBy($"packageId")
-      .agg(collect_list(struct($"version", $"id".as("artifactId"))).as("versions"))
+    val rows = artifacts.select(col("packageId"), col("version"), col("id")).queryExecution.toRdd
+      .map { r => val c = r.copy(); (c.getUTF8String(0), (c.getUTF8String(1), c.getUTF8String(2))) }
+      .groupByKey()
+      .map { case (pkg, vs) =>
+        InternalRow(pkg, new GenericArrayData(vs.map(_._1).toArray[Any]), new GenericArrayData(vs.map(_._2).toArray[Any]))
+      }
+    Bridge.dataFrame(spark, rows, StructType(Seq(StructField("packageId", StringType),
+      StructField("versions", ArrayType(StringType)), StructField("artifactIds", ArrayType(StringType)))))
   }
 
   /** Distinct (package, repo, spec) triples — the structural replacement for
@@ -63,30 +77,33 @@ object ResolveJob {
     edges.select($"dstPackageId", $"repo", $"versionRange").distinct()
   }
 
+  /** The artifact ids of `versions` that `spec` matches, by the range
+    * library. Errors thrown by pathological specs are isolated per spec
+    * (the reference loses the whole package on a throw,
+    * `Neo4jLinkageParser.java:143-151`; we keep the package and drop just
+    * the spec — documented divergence, safer at scale). */
+  private val matchingArtifacts = udf { (repo: String, spec: String, versions: Seq[String], ids: Seq[String]) =>
+    val byVersion = versions.zip(ids).toMap
+    val matched =
+      try Resolvers.findMatchingVersions(repo, spec, byVersion.keys)
+      catch { case _: Exception => Set.empty[String] }
+    matched.toSeq.map(byVersion)
+  }
+
   /**
    * Shared core of J1/J3: spec triples equi-joined against per-package
-   * version dictionaries, resolved with the range library. Errors thrown by
-   * pathological specs are isolated per spec (the reference loses the whole
-   * package on a throw, `Neo4jLinkageParser.java:143-151`; we keep the
-   * package and drop just the spec — documented divergence, safer at scale).
+   * version dictionaries, resolved with the range library, one
+   * (dstPackageId, versionRange, dstArtifactId) row per match. A UDF and an
+   * explode, not a typed mapPartitions: the join, the resolution and the
+   * fan-out join after it stay one generated pipeline, with no object
+   * deserializer and serializer pair around the resolution.
    */
-  private def matchSpecs(spark: SparkSession, specs: DataFrame,
-                         versionsByPkg: DataFrame): Dataset[SpecMatch] = {
-    import spark.implicits._
+  private def matchSpecs(specs: DataFrame, versionsByPkg: DataFrame): DataFrame =
     specs
-      .join(versionsByPkg, $"dstPackageId" === versionsByPkg("packageId"))
-      .select($"dstPackageId", $"repo", $"versionRange", $"versions")
-      .as[(String, String, String, Seq[(String, String)])]
-      .mapPartitions { it =>
-        it.flatMap { case (pkgId, repo, spec, versions) =>
-          val byVersion = versions.toMap
-          val matched =
-            try Resolvers.findMatchingVersions(repo, spec, byVersion.keys)
-            catch { case _: Exception => Set.empty[String] }
-          matched.iterator.map(v => SpecMatch(pkgId, spec, byVersion(v)))
-        }
-      }
-  }
+      .join(versionsByPkg, specs("dstPackageId") === versionsByPkg("packageId"))
+      .select(specs("dstPackageId"), specs("versionRange"),
+        explode(matchingArtifacts(specs("repo"), specs("versionRange"),
+          versionsByPkg("versions"), versionsByPkg("artifactIds"))).as("dstArtifactId"))
 
   /** Edge-count threshold above which a (package, spec) key is salted in the
     * fan-out join. Sized so an unsalted key's rows stay within one healthy
@@ -108,7 +125,7 @@ object ResolveJob {
    * skew splitting this also works inside AQE-off contexts and never relies
    * on runtime stats being fresh.
    */
-  private def saltedFanout(spark: SparkSession, edges: DataFrame,
+  private def saltedFanout(spark: SparkSession, edges: DataFrame, edgeBound: Long,
                            matches: DataFrame): Dataset[AaEdge] = {
     import spark.implicits._
     val keys = Seq("dstPackageId", "versionRange")
@@ -120,10 +137,12 @@ object ResolveJob {
     // histogram over the edge table, and — the common case — when NO key is
     // hot the whole salt machinery (two broadcast joins, a salt column on
     // every row, a wider join key) drops out of the plan entirely.
-    val hotRows = edges.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
-      .filter($"n" > HotKeyThreshold)
-      .select(keys.map(col): _*)
-      .as[(String, String)].collect()
+    val hotRows = BoundedCollect(
+      edges.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
+        .filter($"n" > HotKeyThreshold)
+        .select(keys.map(col): _*)
+        .as[(String, String)],
+      edgeBound / HotKeyThreshold, s"edges / HotKeyThreshold ($edgeBound / $HotKeyThreshold)")
     if (hotRows.isEmpty) {
       edges.join(matches, keys)
         .select($"srcArtifactId", $"dstArtifactId")
@@ -149,7 +168,14 @@ object ResolveJob {
     }
   }
 
-  def run(spark: SparkSession, apEdges: Dataset[ApEdge], artifacts: Dataset[ArtifactRow]): Resolved = {
+  /** Rows of an edge table: from its plan statistics when it was counted
+    * (the mined tables are), else one count. The hot-key bound is stated in
+    * it. */
+  private def rowCount(edges: Dataset[ApEdge]): Long =
+    edges.queryExecution.optimizedPlan.stats.rowCount.fold(edges.count())(_.toLong)
+
+  def run(spark: SparkSession, apEdges: Dataset[ApEdge], artifacts: Dataset[ArtifactRow]): Resolved =
+    CodegenPolicy(spark) {
     import spark.implicits._
 
     // Column predicate, not a typed lambda: `filter(!_.resolved)`
@@ -157,16 +183,15 @@ object ResolveJob {
     // blocked codegen + filter pushdown on the resolve path's widest input.
     val unresolved = apEdges.filter(!col("resolved"))
 
-    val matches: Dataset[SpecMatch] =
-      matchSpecs(spark, distinctSpecs(spark, unresolved), versionDict(spark, artifacts))
+    val matches = matchSpecs(distinctSpecs(spark, unresolved), versionDict(spark, artifacts))
 
     // Fan matches back out to every unresolved edge with that (package,
     // spec), hub keys salted explicitly. MERGE semantics -> distinct.
-    val aa = saltedFanout(spark, unresolved.toDF(), matches.toDF())
+    val aa = saltedFanout(spark, unresolved.toDF(), rowCount(apEdges), matches)
 
     // Candidates actually processed: unresolved incoming edges AND >=1
-    // artifact. Needs only the package-id sets — no collect_list aggregation
-    // (the dictionary built for matchSpecs is not recomputed here).
+    // artifact. Needs only the package-id sets — no version lists (the
+    // dictionary built for matchSpecs is not recomputed here).
     val processedPkgs = unresolved.select($"dstPackageId").distinct()
       .join(artifacts.select($"packageId").distinct(),
         $"dstPackageId" === $"packageId", "left_semi")
@@ -191,11 +216,10 @@ object ResolveJob {
    * (`Neo4jDatabaseController.java:154-184`).
    */
   def resolveDelta(spark: SparkSession, resolvedApEdges: Dataset[ApEdge],
-                   newArtifacts: Dataset[ArtifactRow]): Dataset[AaEdge] = {
-    import spark.implicits._
+                   newArtifacts: Dataset[ArtifactRow]): Dataset[AaEdge] = CodegenPolicy(spark) {
     // column predicate (codegen), same reasoning as `run`'s unresolved filter
     val resolved = resolvedApEdges.filter(col("resolved"))
-    val matches = matchSpecs(spark, distinctSpecs(spark, resolved), versionDict(spark, newArtifacts))
-    saltedFanout(spark, resolved.toDF(), matches.toDF())
+    val matches = matchSpecs(distinctSpecs(spark, resolved), versionDict(spark, newArtifacts))
+    saltedFanout(spark, resolved.toDF(), rowCount(resolvedApEdges), matches)
   }
 }

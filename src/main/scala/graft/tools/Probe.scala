@@ -67,6 +67,7 @@ object Probe {
         val r = GraphOps.connectedComponentsResult(spark, graph)
         val n = r.components.count()
         val c = r.components.select($"component").distinct().count()
+        r.release()
         _ => s"vertices=$n components=$c rounds=${r.rounds}"
       case "lp" =>
         val labels = GraphOps.labelPropagation(spark, graph, 3)

@@ -77,6 +77,40 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(got(301L) == 300L && got(302L) == 300L)
   }
 
+  /** The messages `logger` emits while `body` runs. */
+  private def logOf(logger: String)(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "capture", null, null, true, Array.empty) {
+      override def append(e: LogEvent): Unit = lines.synchronized { lines += e.getMessage.getFormattedMessage }
+    }
+    capture.start()
+    val l = org.apache.logging.log4j.LogManager.getLogger(logger).asInstanceOf[Logger]
+    l.addAppender(capture)
+    try body finally { l.removeAppender(capture); capture.stop() }
+    lines.toSeq
+  }
+
+  test("a released CC result keeps nothing persisted, and a repeat call caches afresh") {
+    // edges no other test uses: an unreleased result elsewhere keeps its
+    // own vertex set cached
+    val g = Seq((7001L, 7002L), (7002L, 7003L), (7010L, 7011L)).toDF("src", "dst")
+    val expected = Map(7001L -> 7001L, 7002L -> 7001L, 7003L -> 7001L, 7010L -> 7010L, 7011L -> 7010L)
+    val sc = spark.sparkContext
+    def run(): Unit = {
+      val before = sc.getPersistentRDDs.keySet
+      val r = GraphOps.connectedComponentsResult(spark, g)
+      assert(r.components.collect().map(row => row.getLong(0) -> row.getLong(1)).toMap == expected)
+      r.release()
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"the released run left RDDs $left persisted")
+    }
+    run()
+    val log = logOf("org.apache.spark.sql.execution.CacheManager")(run())
+    assert(!log.exists(_.contains("already cached")), log.mkString("; "))
+  }
+
   test("connected components kill-and-resume from checkpoint is exact") {
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
     val full = GraphOps.connectedComponentsResult(spark, edgeDf,

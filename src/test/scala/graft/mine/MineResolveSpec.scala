@@ -1,11 +1,32 @@
-package graft.mine
+package org.apache.spark {
+  import org.apache.spark.metrics.source.CodegenMetrics
+  import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
+  /** The codegen class cache (`CodeGenerator`'s private cache of
+    * `private[spark]` type) and its compile counter. */
+  object CodegenCache {
+    def invalidate(): Unit = {
+      val cache = CodeGenerator.getClass.getDeclaredMethod("cache")
+      cache.setAccessible(true)
+      cache.invoke(CodeGenerator).asInstanceOf[org.apache.spark.util.NonFateSharingCache[_, _]].invalidateAll()
+    }
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  }
+}
+
+package graft.mine {
 
 import graft.SparkTestHarness
 import graft.gen.SyntheticRepoFiles
+import graft.graph.GraphOps
 import graft.manifest.ManifestParser
 import graft.model._
 import graft.resolve.ResolveJob
 import graft.versionrange.Resolvers
+import org.apache.spark.CodegenCache
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MapType
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -32,6 +53,38 @@ class MineResolveSpec extends AnyFunSuite {
   lazy val oracleParsed: Seq[RawPackage] =
     files.filter(f => ManifestParser.isManifestPath(f.path))
       .flatMap(f => ManifestParser.parse(f).toOption)
+
+  /** A digest of every column, so a table is computed whole. */
+  private def digest(df: DataFrame): Long = {
+    val cols = df.schema.fields.toSeq.map { f =>
+      f.dataType match {
+        case _: MapType => sort_array(map_entries(col(f.name)))
+        case _          => col(f.name)
+      }
+    }
+    df.select(xxhash64(cols: _*).as("h")).agg(coalesce(bit_xor(col("h")), lit(0L))).first().getLong(0)
+  }
+
+  test("one ingest pass fits the codegen class cache") {
+    // Spark keeps at most 100 compiled classes, and a whole-stage class takes
+    // two entries (driver and task class loaders). A pass that needs more
+    // recompiles on every run. This pass compiled 150 classes when mining
+    // ran typed flatMaps and sort aggregates, and 67 after.
+    //
+    // The input is an RDD scan, as a file source would be: the optimizer
+    // folds work into a local relation's rows on the driver.
+    val input = filesDs.toDF().localCheckpoint(true).as[RepoFile]
+    CodegenCache.invalidate()
+    val before = CodegenCache.compiles
+    val m = MineJob.run(spark, input)
+    Seq(m.packages.toDF(), m.artifacts.toDF(), m.apEdges.toDF(), m.ppEdges.toDF(), m.quarantine.toDF())
+      .foreach(digest)
+    digest(ResolveJob.run(spark, m.apEdges, m.artifacts).aaEdges.toDF())
+    digest(GraphOps.indexEdges(spark, m.ppEdges.toDF(), "srcPackageId", "dstPackageId")._1)
+    val compiled = CodegenCache.compiles - before
+    m.release()
+    assert(compiled <= 90, s"one ingest pass compiled $compiled classes")
+  }
 
   test("generator is deterministic and partition-independent") {
     val local = files.map(f => (f.repo, f.path, f.commit)).toSet
@@ -244,4 +297,5 @@ class MineResolveSpec extends AnyFunSuite {
     }
     assert(checked > 500, s"matrix unexpectedly small: $checked")
   }
+}
 }
