@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.expressions.Window
@@ -22,7 +22,11 @@ import org.apache.spark.sql.graftbridge.Bridge
   * so a non-boundary row's `millis` measures only driver-side plan
   * construction (~ms) while the boundary row (`boundary=true`) absorbs its
   * whole block's execution. Per-row times are therefore meaningful only at
-  * boundaries; their SUM over a run is always the true loop time. */
+  * boundaries; their SUM over a run is always the true loop time.
+  *
+  * The superstep loop of the iterative kernels (`KernelRun.loop`) writes
+  * every row: one per superstep of PageRank, LP and HITS, one per round of
+  * CC. */
 final case class SuperstepMetric(kernel: String, superstep: Int, millis: Long,
                                  edgesScanned: Long, partitions: Int, maxDelta: Double,
                                  boundary: Boolean = true)
@@ -41,8 +45,10 @@ final case class SuperstepMetric(kernel: String, superstep: Int, millis: Long,
  *  - lineage is cut every `checkpointEvery` supersteps via localCheckpoint
  *    (plan-size blowup, SURVEY §4.3-1) and optionally persisted to a
  *    checkpoint dir with a manifest for mid-convergence resume;
- *  - AQE handles residual skew; triangle counting uses degree-ordered
- *    orientation so hub vertices don't quadratically explode wedges.
+ *  - skew is handled explicitly, not by AQE (the iterative kernels run with
+ *    AQE off): hub keys are salted over sub-keys (`HubSalt`), and triangle
+ *    counting uses degree-ordered orientation so hub vertices don't
+ *    quadratically explode wedges.
  */
 object GraphOps {
 
@@ -195,8 +201,8 @@ object GraphOps {
     // per-superstep exchange to reconcile the two (measured on the 48k-edge
     // mined graph: agg at 32 vs layout at 8)
     run.width(shufflePartitions)
-    val hubThreshold = math.max(1000L, edgeCount / shufflePartitions / 4)
-    val haveRealHubs = vStats.getLong(4) > hubThreshold
+    val salt = HubSalt(shufflePartitions, edgeCount)
+    val haveRealHubs = vStats.getLong(4) > salt.threshold
 
     // Personalized restart: the (1-d) teleport mass concentrates on a seed
     // set (uniform over the seeds present in the graph) instead of 1/n
@@ -228,9 +234,8 @@ object GraphOps {
     // straight from the degree table, so every edge carries its src's nsalt
     // out of the join that gives it its weight; the sentinel's out-degree
     // is ~|V|, bounded above by n.
-    val nsalt = when($"outDeg" > hubThreshold, least(lit(shufflePartitions.toLong),
-      ($"outDeg" / hubThreshold) + 1L).cast("int")).otherwise(1)
-    val sentSalt = math.min(shufflePartitions.toLong, n / hubThreshold + 1L).toInt
+    val nsalt = when($"outDeg" > salt.threshold, salt.nsalt($"outDeg")).otherwise(1)
+    val sentSalt = salt.nsalt(n)
     val haveHubs = haveRealHubs || (redistributeDangling && sentSalt > 1)
     def withSalt(cols: Column*)(nsaltCol: Column): Seq[Column] =
       if (haveHubs) cols :+ nsaltCol.as("nsalt") else cols
@@ -278,7 +283,7 @@ object GraphOps {
     val eWS = run.cache(if (!haveHubs) eW.withColumn("salt", lit(0))
       .repartition(shufflePartitions, $"src")
       .sortWithinPartitions($"src")
-    else eW.select($"src", $"dst", $"w", notNull(pmod(hash($"dst"), $"nsalt")).as("salt"))
+    else eW.select($"src", $"dst", $"w", notNull(HubSalt.key($"nsalt")).as("salt"))
       .repartition(shufflePartitions, $"src", $"salt")
       .sortWithinPartitions($"src", $"salt"))
     // Built before the loop, so its real size is known: every superstep
@@ -315,98 +320,77 @@ object GraphOps {
     // no count action: the state-init localCheckpoint below scans every
     // allIds partition and materializes this cache in the same job
 
-    // State: x(v) per vertex plus x(Sent) = m; rank_t = x_t + d*m_t.
-    // Checkpoints carry column "x" (sentinel row included) and may also
-    // carry nsalt, which a resumed run drops and re-derives.
-    val resumed = run.restorePoint(iterations)
-    var state = (resumed match {
-      case Some((_, s)) =>
+    // State: x(v) per vertex plus x(Sent) = m; rank_t = x_t + d*m_t, and on
+    // hubby graphs the vertex's nsalt. Checkpoints carry column "x"
+    // (sentinel row included) and may also carry nsalt, which a resumed run
+    // drops and re-derives.
+    val stateSalt = if (haveHubs) Seq($"nsalt") else Nil
+    def start(restored: Option[DataFrame]) = (restored match {
+      case Some(s) =>
         if (!haveHubs) s.select($"id", $"x")
         else s.select($"id", $"x").join(allIds.select($"id", $"nsalt"), Seq("id"))
-      case None => pFrame match {
+      case None =>
         // PPR starts AT the restart distribution (the walk's stationary
         // point under d=0); uniform starts at 1/n as before
-        case Some(_) =>
-          if (haveHubs) allIds.select($"id", $"p".as("x"), $"nsalt")
-          else allIds.select($"id", $"p".as("x"))
-        case None =>
-          val x0 = when($"id" === Sent, lit(0.0)).otherwise(lit(1.0 / n))
-          if (haveHubs) allIds.select($"id", x0.as("x"), $"nsalt")
-          else allIds.select($"id", x0.as("x"))
-      }
+        val x0 = if (pFrame.isDefined) $"p" else when($"id" === Sent, lit(0.0)).otherwise(lit(1.0 / n))
+        allIds.select(Seq($"id", x0.as("x")) ++ stateSalt: _*)
     }).repartition(shufflePartitions, $"id")
       .localCheckpoint(true)
-    var prevBoundary = state
 
-    val metrics = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetric]
-    val edgePartitions = eWS.rdd.getNumPartitions
-    var step = resumed.fold(0)(_._1)
-    var converged = false
+    // One join + one aggregation; supersteps between checkpoint boundaries
+    // chain LAZILY (no localCheckpoint, no toRdd, no action — each of those
+    // costs 0.3-1.3s of serial driver time per superstep, measured). The
+    // chain is strictly linear: state enters exactly once, so a k-step block
+    // is a size-O(k) logical plan that Catalyst analyzes once, and the
+    // boundary's eager localCheckpoint runs it as ONE job while still
+    // guarding the cross-block lineage blowup fixed in 8d12bfb.
+    // Hub rows fan out to their nsalt sub-keys (non-hubs emit salt 0 only);
+    // nsalt is a STATE column (inherited from the allIds leaf), so the
+    // fan-out is a plain generator — no per-superstep broadcast join, the
+    // chain stays linear and its plans stay O(k).
+    // restart term: uniform keeps the EXACT op sequence rounds 1-4 shipped
+    // ((1-d)/n as one literal); personalized reads p off the allIds leaf
+    val restartTerm = pFrame match {
+      case Some(_) => lit(1.0 - damping) * $"p"
+      case None    => lit((1.0 - damping) / n)
+    }
+    def step(state: DataFrame) = {
+      val agg = state
+        .select(Seq($"id".as("src"), $"x") ++ stateSalt.map(HubSalt.fanOut): _*)
+        .join(eSide, if (haveHubs) Seq("src", "salt") else Seq("src"))
+        .select($"dst".as("id"), ($"x" * $"w").as("c"))
+        .groupBy($"id").agg(sum($"c").as("c"))
+      val xNext = when($"id" === Sent, coalesce($"c", lit(0.0)))
+        .otherwise(restartTerm + lit(damping) * coalesce($"c", lit(0.0)))
+        .as("x")
+      allIds
+        .join(agg, Seq("id"), "left")
+        .select(Seq($"id", xNext) ++ stateSalt: _*)
+    }
+
+    // With tol > 0: a conservative bound on the block's max |rank delta|,
+    // max|Δrank| <= max|Δx| + d*|Δm|, ends the run once it is below tol.
+    var maxDelta = Double.NaN
+    def converged(prev: Option[DataFrame], state: DataFrame) = tol > 0 && prev.exists { p =>
+      val d = state.join(p.withColumnRenamed("x", "px"), Seq("id"))
+        .agg(max(when($"id" =!= Sent, abs($"x" - $"px"))).as("dx"),
+          max(when($"id" === Sent, abs($"x" - $"px"))).as("dm"))
+        .first()
+      // max() over zero matching rows is null — treat as a zero delta
+      // (e.g. a sentinel-free graph has no id===Sent rows)
+      val dx = if (d.isNullAt(0)) 0.0 else d.getDouble(0)
+      val dm = if (d.isNullAt(1)) 0.0 else d.getDouble(1)
+      maxDelta = dx + (if (redistributeDangling) damping * dm else 0.0)
+      maxDelta < tol
+    }
 
     // Block width stays at checkpointEvery even when no tol/checkpoint/stop
     // is requested: running q14's 8 (or q36's 10) supersteps as ONE deep job
     // was MEASURED ~10% slower than 5-step blocks (3 runs each) — the
     // mid-chain materialization buys better stage scheduling than the
     // saved job costs.
-    while (step < iterations && !converged) {
-      val t0 = System.nanoTime()
-      // One join + one aggregation; supersteps between checkpoint boundaries
-      // chain LAZILY (no localCheckpoint, no toRdd, no action — each of
-      // those costs 0.3-1.3s of serial driver time per superstep, measured).
-      // The chain is strictly linear: state enters exactly once, so a k-step
-      // block is a size-O(k) logical plan that Catalyst analyzes once, and
-      // the boundary's eager localCheckpoint runs it as ONE job while still
-      // guarding the cross-block lineage blowup fixed in 8d12bfb.
-      // Hub rows fan out to their nsalt sub-keys (non-hubs emit salt 0 only);
-      // nsalt is a STATE column (inherited from the allIds leaf), so the
-      // fan-out is a plain generator — no per-superstep broadcast join, the
-      // chain stays linear and its plans stay O(k).
-      val salted =
-        if (!haveHubs) state.select($"id".as("src"), $"x")
-        else state.select($"id".as("src"), $"x",
-          explode(sequence(lit(0), $"nsalt" - 1)).as("salt"))
-      val agg = salted
-        .join(eSide, if (haveHubs) Seq("src", "salt") else Seq("src"))
-        .select($"dst".as("id"), ($"x" * $"w").as("c"))
-        .groupBy($"id").agg(sum($"c").as("c"))
-      step += 1
-      val atCheckpoint = step % checkpointEvery == 0 || step == iterations
-      // restart term: uniform keeps the EXACT op sequence rounds 1-4 shipped
-      // ((1-d)/n as one literal); personalized reads p off the allIds leaf
-      val restartTerm = pFrame match {
-        case Some(_) => lit(1.0 - damping) * $"p"
-        case None    => lit((1.0 - damping) / n)
-      }
-      val xNext = when($"id" === Sent, coalesce($"c", lit(0.0)))
-        .otherwise(restartTerm + lit(damping) * coalesce($"c", lit(0.0)))
-        .as("x")
-      val chained = allIds
-        .join(agg, Seq("id"), "left")
-        .select(Seq($"id", xNext) ++ (if (haveHubs) Seq($"nsalt") else Nil): _*)
-      if (atCheckpoint) run.explain("boundary block", chained)
-      val newState = if (atCheckpoint) chained.localCheckpoint(true) else chained
-      var maxDelta = Double.NaN
-      if (atCheckpoint) {
-        if (tol > 0) {
-          // conservative bound across the whole block: max|Δrank| <= max|Δx| + d*|Δm|
-          val d = newState.join(prevBoundary.withColumnRenamed("x", "px"), Seq("id"))
-            .agg(max(when($"id" =!= Sent, abs($"x" - $"px"))).as("dx"),
-              max(when($"id" === Sent, abs($"x" - $"px"))).as("dm"))
-            .first()
-          // max() over zero matching rows is null — treat as a zero delta
-          // (e.g. a sentinel-free graph has no id===Sent rows)
-          val dx = if (d.isNullAt(0)) 0.0 else d.getDouble(0)
-          val dm = if (d.isNullAt(1)) 0.0 else d.getDouble(1)
-          maxDelta = dx + (if (redistributeDangling) damping * dm else 0.0)
-          if (maxDelta < tol) converged = true
-        }
-        prevBoundary = newState
-        if (run.boundary(step, newState)) converged = true
-      }
-      state = newState
-      metrics += SuperstepMetric("pagerank", step, (System.nanoTime() - t0) / 1000000L,
-        edgeCount, edgePartitions, maxDelta, boundary = atCheckpoint)
-    }
+    val Steps(state, metrics, steps, _) = run.loop(iterations, checkpointEvery, edgeCount,
+      eWS.rdd.getNumPartitions, start, step, converged, maxDelta)
 
     // rank = x + d*m; m is the materialized final state's sentinel row,
     // joined onto every real row when the ranks are read (no job here)
@@ -415,12 +399,31 @@ object GraphOps {
       else state.filter($"id" =!= Sent)
         .crossJoin(broadcast(state.filter($"id" === Sent).select($"x".as("m"))))
         .select($"id", ($"x" + lit(damping) * $"m").as("rank"))
-    PageRankResult(ranks, metrics.toSeq, step)
+    PageRankResult(ranks, metrics, steps)
   }
 
   /** `c`, declared never NULL, for a column the kernel knows holds no NULL:
     * plans then carry no NULL checks or inferred NULL filters for it. */
   private def notNull(c: Column): Column = Bridge.column(KnownNotNull(Bridge.expression(c)))
+
+  /** The hub-salting policy of PageRank, CC and LP. A key whose degree is
+    * over `threshold` = max(1000, rows/P/4) for `rows` join rows at width P
+    * is a hub: its rows split over nsalt = least(P, deg/threshold + 1)
+    * sub-keys. The many-rows side of the join takes the sub-key
+    * pmod(hash(dst), nsalt), and the one-row-per-key side is replicated
+    * over 0 .. nsalt-1. Non-hubs have nsalt 1. */
+  private final case class HubSalt(partitions: Int, rows: Long) {
+    val threshold: Long = math.max(1000L, rows / partitions / 4)
+    def nsalt(deg: Column): Column = least(lit(partitions.toLong), (deg / threshold) + 1L).cast("int")
+    def nsalt(deg: Long): Int = math.min(partitions.toLong, deg / threshold + 1L).toInt
+    /** `(src, nsalt)` for the hubs of a `(src, deg)` table. */
+    def hubs(degrees: DataFrame): DataFrame =
+      degrees.filter(col("deg") > threshold).select(col("src"), nsalt(col("deg")).as("nsalt"))
+  }
+  private object HubSalt {
+    def key(nsalt: Column): Column = pmod(hash(col("dst")), nsalt)
+    def fanOut(nsalt: Column): Column = explode(sequence(lit(0), nsalt - 1)).as("salt")
+  }
 
   /** Kernel partition count: the configured shuffle partitions, scaled DOWN
     * for SMALL graphs (~150k edges per partition, floor 8). Guide §2.2 sizes
@@ -493,17 +496,6 @@ object GraphOps {
   def latestCheckpoint(spark: SparkSession, dir: String, kernel: String = "pagerank"): Option[Int] =
     Fs.read(spark, s"$dir/$kernel/LATEST").map(_.trim.toInt)
 
-  private def writeCheckpoint(spark: SparkSession, dir: String, kernel: String,
-                              step: Int, state: DataFrame): Unit = {
-    val path = s"$dir/$kernel/superstep=$step"
-    state.write.mode("overwrite").parquet(path)
-    val rows = state.count()
-    val manifest =
-      s"""{"kernel": "$kernel", "superstep": $step, "rows": $rows, "partitions": ${state.rdd.getNumPartitions}}"""
-    Fs.write(spark, s"$dir/$kernel/MANIFEST-$step.json", manifest)
-    Fs.write(spark, s"$dir/$kernel/LATEST", step.toString)
-  }
-
   // ------------------------------------------------------------ run scope
 
   private val AqeKey = "spark.sql.adaptive.enabled"
@@ -526,41 +518,29 @@ object GraphOps {
    * The kernel sets its shuffle width through [[width]]. Closing restores
    * all four keys and unpersists every frame registered through [[cache]],
    * on success and on failure alike; a frame the returned result still
-   * reads is persisted outside the scope instead.
+   * reads is kept as local-checkpoint rows instead.
    *
-   * The resumable kernels (PageRank, CC, LP) also take their checkpoint and
-   * STOP-marker settings from the scope: [[restorePoint]] is where a run
-   * continues from, [[boundary]] is their shared checkpoint-then-stop step.
+   * The iterative kernels (PageRank, CC, LP, HITS) run their supersteps
+   * through [[loop]], which also takes the checkpoint and STOP-marker
+   * settings of the resumable ones (PageRank, CC, LP) from the scope.
    */
   private final class KernelRun(spark: SparkSession, kernel: String,
                                 checkpointDir: Option[String], stopFlag: Option[String],
-                                stopAfterMs: Long, stopSeqSeen: Long) {
+                                stopAfterMs: Long, stopSeqSeen: Long) extends Cached {
     private val restoreConf = CodegenPolicy.save(spark, Seq(AqeKey, WidthKey) ++ CodegenPolicy.Keys)
-    private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val confWidth: Int = confPartitions(spark)
     (AqeKey +: CodegenPolicy.Keys).foreach(spark.conf.set(_, "false"))
 
     /** Kernel-internal shuffle width for every exchange the loop plans. */
     def width(p: Int): Unit = spark.conf.set(WidthKey, p.toLong)
 
-    /** Persist `df` until the run ends. */
-    def cache(df: DataFrame): DataFrame = {
-      frames += df
-      df.persist(StorageLevel.MEMORY_AND_DISK)
-    }
-
-    /** The latest checkpoint in `checkpointDir` at a step <= `target`. */
-    def restorePoint(target: Int): Option[(Int, DataFrame)] =
-      for (dir <- checkpointDir; step <- latestCheckpoint(spark, dir, kernel) if step <= target)
-        yield (step, spark.read.parquet(s"$dir/$kernel/superstep=$step"))
-
     private var explained = false
 
     /** With `GRAFT_KERNEL_EXPLAIN` set, prints the formatted physical plan of
-      * the first frame passed here — each kernel passes its boundary block
-      * or round — to stderr: the shape the kernel really executes, dumped
-      * from inside it without touching the hot path. Later calls print
-      * nothing. */
+      * the first frame passed here — the loop passes its first boundary
+      * block, SCC its first trim round — to stderr: the shape the kernel
+      * really executes, dumped from inside it without touching the hot
+      * path. Later calls print nothing. */
     def explain(what: String, df: DataFrame): Unit =
       if (!explained && sys.env.contains("GRAFT_KERNEL_EXPLAIN")) {
         explained = true
@@ -568,23 +548,94 @@ object GraphOps {
           df.queryExecution.explainString(ExplainMode.fromString("formatted")))
       }
 
-    /** Checkpoint `state` (when a dir is set), then report whether a STOP
-      * marker asks the run to end at this boundary — the reference's `stop`
-      * (Task.java:207-217) as a cooperative cancel that leaves the run
-      * resumable from any node sharing the FS; markers older than the
-      * caller's watermark are stale and ignored. */
-    def boundary(step: Int, state: DataFrame): Boolean = {
-      checkpointDir.foreach(dir => writeCheckpoint(spark, dir, kernel, step, state))
-      stopFlag.exists(f => fsModifiedSince(spark, f, stopAfterMs, stopSeqSeen))
+    /**
+     * The one superstep loop of the iterative kernels. The kernel supplies
+     * its start state (`start`: fresh, or built from the restored
+     * checkpoint), one superstep (`step`, a lazy frame) and, where it has
+     * one, a convergence test; the loop owns the rest:
+     *  - steps are numbered on from the latest checkpoint in
+     *    `checkpointDir` at a step <= `target`;
+     *  - with `chain`, supersteps chain lazily and a boundary falls every
+     *    `every` steps and at `target`. Without it (CC: a round reads its
+     *    input several times, so an unmaterialized round would re-run once
+     *    per read) every step is a boundary, cut lazily so that the test's
+     *    first action materializes it;
+     *  - a boundary cuts the lineage (eager localCheckpoint with `chain`),
+     *    explains the run's first block, runs `converged` on the previous
+     *    boundary's state and the new one, and then, unless the boundary
+     *    ends the run because `target` is reached or the run converged,
+     *    every `every` steps writes the checkpoint and checks the STOP
+     *    marker — the reference's `stop` (Task.java:207-217) as a
+     *    cooperative cancel that leaves the run resumable from any node
+     *    sharing the FS; markers older than the caller's watermark are
+     *    stale and ignored;
+     *  - every step writes one [[SuperstepMetric]] row, with `edges`,
+     *    `partitions` and, at a boundary, `delta` read as the row is
+     *    written (by name: CC's edge count changes every round).
+     * `converged` also judges the start state, with no previous state.
+     */
+    def loop(target: Int, every: Int, edges: => Long, partitions: => Int,
+             start: Option[DataFrame] => DataFrame, step: DataFrame => DataFrame,
+             converged: (Option[DataFrame], DataFrame) => Boolean = (_, _) => false,
+             delta: => Double = Double.NaN, chain: Boolean = true): Steps = {
+      val restored = for (dir <- checkpointDir; n <- latestCheckpoint(spark, dir, kernel) if n <= target)
+        yield (n, spark.read.parquet(s"$dir/$kernel/superstep=$n"))
+      var n = restored.fold(0)(_._1)
+      var state = start(restored.map(_._2))
+      var last = state
+      var ended = converged(None, state)
+      var stopped = false
+      val metrics = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetric]
+      while (n < target && !ended && !stopped) {
+        val t0 = System.nanoTime()
+        val block = step(state)
+        n += 1
+        val boundary = !chain || n % every == 0 || n == target
+        state = if (boundary) block.localCheckpoint(chain) else block
+        if (boundary) {
+          explain("boundary block", block)
+          ended = converged(Some(last), state) || n == target
+          if (!ended && n % every == 0) {
+            // the state's rows, a manifest, then LATEST: a run killed mid-write
+            // resumes from the previous checkpoint
+            checkpointDir.foreach { dir =>
+              state.write.mode("overwrite").parquet(s"$dir/$kernel/superstep=$n")
+              Fs.write(spark, s"$dir/$kernel/MANIFEST-$n.json", s"""{"kernel": "$kernel", "superstep": $n, """ +
+                s""""rows": ${state.count()}, "partitions": ${state.rdd.getNumPartitions}}""")
+              Fs.write(spark, s"$dir/$kernel/LATEST", n.toString)
+            }
+            stopped = stopFlag.exists(f => fsModifiedSince(spark, f, stopAfterMs, stopSeqSeen))
+          }
+          last = state
+        }
+        metrics += SuperstepMetric(kernel, n, (System.nanoTime() - t0) / 1000000L, edges, partitions,
+          if (boundary) delta else Double.NaN, boundary)
+      }
+      Steps(state, metrics.toSeq, n, stopped)
     }
 
     def close(): Unit = {
-      // newest first: uncaching a frame re-plans every still-registered,
-      // never-built cache derived from it
-      frames.reverseIterator.foreach(_.unpersist(false))
+      release()
       restoreConf()
     }
   }
+
+  /** What [[KernelRun.loop]] ends with: the last state, one metric row per
+    * step it ran, the step reached and whether a STOP marker ended it. */
+  private final case class Steps(state: DataFrame, metrics: Seq[SuperstepMetric], step: Int, stopped: Boolean)
+
+  /** Frames persisted until [[release]], which unpersists them newest
+    * first: uncaching a frame re-plans every still-registered, never-built
+    * cache derived from it. */
+  private class Cached {
+    private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def cache(df: DataFrame): DataFrame = { frames += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
+    def release(): Unit = frames.reverseIterator.foreach(_.unpersist(false))
+  }
+
+  /** `body` with a [[Cached]] released when it returns or fails: the
+    * intermediates of the kernels that run outside a [[KernelRun]]. */
+  private def cached[T](body: Cached => T): T = { val c = new Cached; try body(c) finally c.release() }
 
   private def inRun[T](spark: SparkSession, kernel: String,
                        checkpointDir: Option[String] = None, stopFlag: Option[String] = None,
@@ -613,9 +664,10 @@ object GraphOps {
   /** `stopped = true` means a cooperative STOP ended the run BEFORE
     * convergence: `components` is the partially-contracted state (valid to
     * resume from, NOT final component assignments). `components` reads the
-    * vertex set and the last round's edge state, both kept by the run: the
-    * caller frees them with [[release]] once it has consumed the labels;
-    * until then they live for the session. */
+    * vertex set and the last round's edge state, both kept by the run as
+    * local-checkpoint rows: the caller frees them with [[release]] once it
+    * has consumed the labels; a caller that drops the result leaves them to
+    * the context cleaner. */
   final case class CcResult(components: DataFrame, metrics: Seq[SuperstepMetric], rounds: Int,
                             stopped: Boolean = false)(unpersistKept: () => Unit) {
     /** Unpersists what this run kept. `components` must not be used
@@ -648,10 +700,12 @@ object GraphOps {
     // cache the raw projection: the vertex set and the start state both
     // read the source ONCE; released below once both are materialized
     val input = run.cache(edges.select($"src".cast("long"), $"dst".cast("long")))
-    // persisted outside the run scope: the result's labels read it after
-    // the run returns, until the caller releases the result
+    // kept rows, materialized by their count: the result's labels read them
+    // after the run returns, and nothing the result reads is registered in
+    // the session's cache, so a caller that drops the result (the
+    // `connectedComponents` facade) leaves them to the context cleaner
     val vertices = input.select(explode(array($"src", $"dst")).as("id"))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct().localCheckpoint(false)
     vertices.count()
 
     // The star-round equi-joins are hinted shuffled-hash (guide §3.1): the
@@ -682,10 +736,9 @@ object GraphOps {
             .select($"dst".as("src"), $"m".as("dst"))
         case Some(h) =>
           val symS = sym.join(broadcast(h), Seq("src"), "left")
-            .select($"src", $"dst", pmod(hash($"dst"), coalesce($"nsalt", lit(1))).as("salt"))
+            .select($"src", $"dst", HubSalt.key(coalesce($"nsalt", lit(1))).as("salt"))
           val minsR = mins.join(broadcast(h), Seq("src"), "left")
-            .select($"src", $"m",
-              explode(sequence(lit(0), coalesce($"nsalt", lit(1)) - 1)).as("salt"))
+            .select($"src", $"m", HubSalt.fanOut(coalesce($"nsalt", lit(1))))
           symS.join(minsR.hint("shuffle_hash"), Seq("src", "salt"))
             .filter($"dst" > $"src")
             .select($"dst".as("src"), $"m".as("dst"))
@@ -729,38 +782,44 @@ object GraphOps {
     def edgeState(df: DataFrame): DataFrame =
       df.select(notNull($"src").as("src"), notNull($"dst").as("dst"))
 
+    // Each round's state is cut LAZILY and its convergence digest is the
+    // round's first action on it (r4 ask #3): that one job both CACHES the
+    // round's partitions (truncating lineage for the next round) and
+    // computes the digest (and it materializes sym en route: its exchange
+    // stage runs before the join stage inside the same job). Lazily
+    // chaining CC rounds the way pageRank chains supersteps was MEASURED 3x
+    // slower at sf0.1 (48s -> 147s): pageRank's per-superstep plan is
+    // LINEAR (state enters exactly once), but a star round references its
+    // input several times (sym feeds both the join and the min-agg; dir
+    // feeds both sides of smallStar), so an unmaterialized previous round
+    // re-executes once per reference — a multiplicative blowup per chained
+    // round that ReuseExchange only partly collapses.
+    //
+    // Converged when the edge set is unchanged (order-independent,
+    // overflow-free digest — ANSI mode forbids wrapping sums); the previous
+    // round's digest is remembered, not recomputed (one agg job per round).
+    // An empty start state digests as (0, 0), so it converges at once.
+    def digest(df: DataFrame) = df
+      .agg(count(lit(1)), expr("coalesce(bit_xor(xxhash64(src, dst)), 0L)")).first()
+    var dPrev = Row(0L, 0L)
+
     // The start state is the loop-free input as it is: every round shuffles
     // its input by src anyway, and round 1's distinct collapses repeated
     // edges. Like every round's state it is materialized by its digest.
-    val resumed = run.restorePoint(maxIter)
-    var e = edgeState(resumed.fold(input.filter($"src" =!= $"dst"))(_._2))
-      .localCheckpoint(false)
-    val edgePartitions = e.rdd.getNumPartitions
+    var edgePartitions = 0
+    def start(restored: Option[DataFrame]) = {
+      val e = edgeState(restored.getOrElse(input.filter($"src" =!= $"dst"))).localCheckpoint(false)
+      edgePartitions = e.rdd.getNumPartitions
+      e
+    }
 
-    val metrics = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetric]
-    var iter = resumed.fold(0)(_._1)
-    var stoppedEarly = false
     // null = no snapshot yet (round 1 probes eagerly); None = probed, hub-free
     var hubsForRound: Option[DataFrame] = null
-    // converged when the edge set is unchanged (order-independent,
-    // overflow-free digest — ANSI mode forbids wrapping sums); the previous
-    // round's digest is remembered, not recomputed (one agg job per round),
-    // and its row count also tells an empty start state
-    def digest(df: DataFrame) = df
-      .agg(count(lit(1)), expr("coalesce(bit_xor(xxhash64(src, dst)), 0L)")).first()
-    var dPrev = digest(e)
-    var done = dPrev.getLong(0) == 0L
-    input.unpersist(false)
-    // Each round materializes eagerly (localCheckpoint) before the next
-    // starts. Lazily chaining CC rounds the way pageRank chains supersteps
-    // was MEASURED 3x slower at sf0.1 (48s -> 147s): pageRank's
-    // per-superstep plan is LINEAR (state enters exactly once), but a star
-    // round references its input several times (sym feeds both the join and
-    // the min-agg; dir feeds both sides of smallStar), so an unmaterialized
-    // previous round re-executes once per reference — a multiplicative
-    // blowup per chained round that ReuseExchange only partly collapses.
-    while (iter < maxIter && !done && !stoppedEarly) {
-      val t0 = System.nanoTime()
+    // what follows once a state is built: the start state's input is
+    // released; a round takes the next round's hub snapshot and releases
+    // its sym
+    var afterBuilt: () => Unit = () => input.unpersist(false)
+    def step(e: DataFrame) = {
       // ONE combinable aggregation per round serves BOTH large-star's min
       // table and the hub detector: sym.groupBy(src) yields m = min(N(u) ∪
       // {u}) and the symmetric degree in the same pass (the hub table must
@@ -782,7 +841,7 @@ object GraphOps {
       // unchanged — only the contracted tail narrows.
       val roundP = kernelPartitions(run.confWidth, nEdges)
       run.width(roundP)
-      val hubThreshold = math.max(1000L, 2L * nEdges / roundP / 4)
+      val salt = HubSalt(roundP, 2L * nEdges)
       // ONE exchange of the symmetrized table serves BOTH consumers (guide
       // §2.4): the min/degree aggregation and the large-star join each need
       // sym clustered by src. It is cached for the round, because the
@@ -794,48 +853,38 @@ object GraphOps {
         .repartition(roundP, $"src"))
       val minsDeg = sym.groupBy($"src")
         .agg(least(min($"dst"), first($"src")).as("m"), count(lit(1)).as("deg"))
-      val hubTable = minsDeg.filter($"deg" > hubThreshold)
-        .select($"src", least(lit(roundP.toLong), ($"deg" / hubThreshold) + 1L)
-          .cast("int").as("nsalt"))
+      val hubTable = salt.hubs(minsDeg)
       // Hub table freshness: round 1 collects its snapshot eagerly (which
       // materializes sym — the input graph's junit/lodash hubs must be
       // salted from the very first join) and hands the same rows to round 2;
       // later rounds use the snapshot collected from the PREVIOUS round's
-      // cached sym below. The lag is one round and salting is semantically
-      // NEUTRAL (any nsalt assignment yields the same join rows), so only
-      // balance can lag, never results — and it removes the per-round eager
-      // probe job that was ~0.5 s/round of pure probe cost at sf0.1. Every
-      // round's hub table is such a local snapshot, so rounds with the same
-      // hub state plan the same shape.
+      // cached sym once the round's state is built. The lag is one round and
+      // salting is semantically NEUTRAL (any nsalt assignment yields the
+      // same join rows), so only balance can lag, never results — and it
+      // removes the per-round eager probe job that was ~0.5 s/round of pure
+      // probe cost at sf0.1. Every round's hub table is such a local
+      // snapshot, so rounds with the same hub state plan the same shape.
       val firstRound = hubsForRound == null
-      val hubs = if (firstRound) hubSnapshot(hubTable, nEdges, hubThreshold) else hubsForRound
-      // LAZY localCheckpoint + digest in ONE action (r4 ask #3): the digest
-      // aggregation is the round's first action on `next`, so it both
-      // CACHES the round's partitions (truncating lineage for the next
-      // round) and computes the convergence digest in the same job — one
-      // action per round instead of the former eager-materialize-then-
-      // digest pair (and it materializes sym en route: its exchange stage
-      // runs before the join stage inside the same job). The next
-      // round's multiple references to `e` then read the cache exactly as
-      // before (the round-3 eager-vs-lazy trap was about chaining
-      // UNmaterialized rounds; here every round is still fully materialized
-      // before the next starts, just by the digest job).
-      val round = edgeState(smallStar(largeStar(sym, minsDeg.select($"src", $"m"), hubs)))
-      run.explain("round", round)
-      val next = round.localCheckpoint(false)
-      val dNext = digest(next)
-      hubsForRound = if (firstRound) hubs else hubSnapshot(hubTable, nEdges, hubThreshold)
-      sym.unpersist(false)
-      // the superseded state: nothing reads it once the next round is built
-      Bridge.free(keptRows(e))
-      done = dNext == dPrev
-      dPrev = dNext
-      e = next
-      iter += 1
-      if (iter % checkpointEvery == 0 && !done) stoppedEarly = run.boundary(iter, e)
-      metrics += SuperstepMetric("cc", iter, (System.nanoTime() - t0) / 1000000L,
-        dNext.getLong(0), edgePartitions, Double.NaN)
+      val hubs = if (firstRound) hubSnapshot(hubTable, nEdges, salt.threshold) else hubsForRound
+      afterBuilt = () => {
+        hubsForRound = if (firstRound) hubs else hubSnapshot(hubTable, nEdges, salt.threshold)
+        sym.unpersist(false)
+      }
+      edgeState(smallStar(largeStar(sym, minsDeg.select($"src", $"m"), hubs)))
     }
+
+    def converged(prev: Option[DataFrame], e: DataFrame) = {
+      val d = digest(e)
+      afterBuilt()
+      // the superseded state: nothing reads it once the next round is built
+      prev.foreach(p => Bridge.free(keptRows(p)))
+      val same = d == dPrev
+      dPrev = d
+      same
+    }
+
+    val Steps(e, metrics, rounds, stopped) = run.loop(maxIter, checkpointEvery, dPrev.getLong(0),
+      edgePartitions, start, step, converged, chain = false)
 
     // At the fixpoint every edge points v -> root(min id of v's component);
     // roots and isolated vertices label themselves. (A stopped run's labels
@@ -843,11 +892,8 @@ object GraphOps {
     val components = vertices
       .join(e.select($"src".as("id"), $"dst".as("c")), Seq("id"), "left")
       .select($"id", coalesce($"c", $"id").as("component"))
-    val lastState = keptRows(e)
-    CcResult(components, metrics.toSeq, iter, stopped = stoppedEarly) { () =>
-      vertices.unpersist(false)
-      Bridge.free(lastState)
-    }
+    val kept = Seq(vertices, e).map(keptRows)
+    CcResult(components, metrics, rounds, stopped)(() => kept.foreach(Bridge.free))
   }
 
   // ------------------------------------------------------ label propagation
@@ -914,38 +960,28 @@ object GraphOps {
     // otherwise sits in ONE partition of every superstep's join. The degree
     // aggregation reads the already-partitioned sym0 layout (exchange
     // reuse: groupBy(src) over hashpartitioning(src) shuffles nothing).
-    val hubThreshold = math.max(1000L, edgeCount / shufflePartitions / 4)
-    val lpHubs = run.cache(sym0.groupBy($"src").agg(count(lit(1)).as("deg"))
-      .filter($"deg" > hubThreshold)
-      .select($"src", least(lit(shufflePartitions.toLong),
-        ($"deg" / hubThreshold) + 1L).cast("int").as("nsalt")))
+    val lpHubs = run.cache(HubSalt(shufflePartitions, edgeCount)
+      .hubs(sym0.groupBy($"src").agg(count(lit(1)).as("deg"))))
     val haveHubs = lpHubs.count() > 0
 
     // hub-free graphs reuse the sym0 layout as-is (no second shuffle+cache);
     // hubby graphs re-layout once with the salt key
     val sym = (if (!haveHubs) sym0.withColumn("salt", lit(0))
     else run.cache(sym0.join(broadcast(lpHubs), Seq("src"), "left")
-      .select($"src", $"dst", pmod(hash($"dst"), coalesce($"nsalt", lit(1))).as("salt"))
+      .select($"src", $"dst", HubSalt.key(coalesce($"nsalt", lit(1))).as("salt"))
       .repartition(shufflePartitions, $"src", $"salt")
       .sortWithinPartitions($"src", $"salt")))
-    val edgePartitions = sym.rdd.getNumPartitions
     if (haveHubs) { sym.count(); sym0.unpersist(false) }
 
     val vertices = sym.select($"src".as("id")).distinct()
-    val resumed = run.restorePoint(iterations)
-    var labels = resumed.fold(vertices.withColumn("label", $"id"))(_._2)
-      .localCheckpoint(true)
 
-    val metrics = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetric]
-    var iter = resumed.fold(0)(_._1)
-    var stoppedEarly = false
-    while (iter < iterations && !stoppedEarly) {
-      val t0 = System.nanoTime()
+    // supersteps chain lazily between boundaries, cut+materialized only at
+    // checkpoints — same fixed-cost reasoning as pageRank
+    def step(labels: DataFrame) = {
       val saltedLabels =
         if (!haveHubs) labels.withColumnRenamed("id", "src")
         else labels.join(broadcast(lpHubs.withColumnRenamed("src", "id")), Seq("id"), "left")
-          .select($"id".as("src"), $"label",
-            explode(sequence(lit(0), coalesce($"nsalt", lit(1)) - 1)).as("salt"))
+          .select($"id".as("src"), $"label", HubSalt.fanOut(coalesce($"nsalt", lit(1))))
       // ONE exchange serves both aggregation levels: repartition the message
       // stream by id, then groupBy(id, label) AND groupBy(id) both run
       // in place (hashpartitioning(id) satisfies either clustering) — the
@@ -968,20 +1004,13 @@ object GraphOps {
       // superstep, turning the lazily-chained block into a 2^k-subtree plan
       // (measured: the 3-superstep q18 block job alone was 7-8.5 s at
       // sf0.1; linear chaining is the pageRank lesson, guide §1.2-1).
-      val winners = counts.groupBy($"id")
+      counts.groupBy($"id")
         .agg(max(struct($"cnt", (-$"label").as("nl"))).as("m"))
         .select($"id", (-$"m.nl").as("label"))
-      iter += 1
-      // supersteps chained lazily between boundaries, cut+materialized only
-      // at checkpoints — same fixed-cost reasoning as pageRank
-      val atCheckpoint = iter % checkpointEvery == 0 || iter == iterations
-      if (atCheckpoint) run.explain("boundary block", winners)
-      labels = if (atCheckpoint) winners.localCheckpoint(true) else winners
-      if (atCheckpoint && iter != iterations) stoppedEarly = run.boundary(iter, labels)
-      metrics += SuperstepMetric("lp", iter, (System.nanoTime() - t0) / 1000000L,
-        edgeCount, edgePartitions, Double.NaN, boundary = atCheckpoint)
     }
-    LpResult(labels.select($"id", $"label"), metrics.toSeq, iter)
+    val Steps(labels, metrics, steps, _) = run.loop(iterations, checkpointEvery, edgeCount,
+      sym.rdd.getNumPartitions, _.getOrElse(vertices.withColumn("label", $"id")).localCheckpoint(true), step)
+    LpResult(labels.select($"id", $"label"), metrics, steps)
   }
 
   // ------------------------------------------------------------- triangles
@@ -1094,21 +1123,23 @@ object GraphOps {
    * hard-bounds the loop.
    *
    * Returns `(id: long, dist: int)` for every vertex within `maxHops` of a
-   * seed; the frame is left persisted (it IS the result, O(V) rows).
+   * seed, as kept rows (local-checkpoint blocks, O(V) rows) that are not
+   * registered in the session's cache: each hop's table is kept so, and
+   * the one it supersedes is freed once the next is built. The edge
+   * layouts are unpersisted when the call returns or fails.
    */
   def shortestPaths(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
-                    maxHops: Int): DataFrame = {
+                    maxHops: Int): DataFrame = cached { c =>
     import spark.implicits._
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter($"src" =!= $"dst").distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = c.cache(edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      .filter($"src" =!= $"dst").distinct())
     val p = kernelPartitions(confPartitions(spark), e.count())
-    val eP = e.repartition(p, $"src").persist(StorageLevel.MEMORY_AND_DISK)
+    val eP = c.cache(e.repartition(p, $"src"))
 
     var settled = seeds.select(col("id").cast("long").as("id")).distinct()
       .withColumn("dist", lit(0))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
     var settledCount = settled.count()
     var frontier = settled.select($"id")
     var hop = 1
@@ -1121,20 +1152,18 @@ object GraphOps {
         .select(col("dst").as("id")).distinct()
         .join(settled, Seq("id"), "left_anti")
         .withColumn("dist", lit(hop))
-      val grown = settled.union(next).persist(StorageLevel.MEMORY_AND_DISK)
+      val grown = settled.union(next).localCheckpoint(false)
       val n = grown.count()
-      settled.unpersist()
+      Bridge.free(keptRows(settled))
       settled = grown
       if (n == settledCount) done = true
       else {
         settledCount = n
-        // read the persisted grown table, not the join plan, for the next hop
+        // read the kept grown table, not the join plan, for the next hop
         frontier = grown.filter($"dist" === lit(hop)).select($"id")
       }
       hop += 1
     }
-    eP.unpersist()
-    e.unpersist()
     settled
   }
 
@@ -1152,7 +1181,8 @@ object GraphOps {
    * probe). Peel depth tracks the graph's degeneracy ordering width and is
    * small on real link graphs (3 rounds on the sf0.01 mined-shape graph);
    * `maxRounds` is a backstop bound, mirroring connectedComponents'
-   * maxIter.
+   * maxIter. The core is returned as kept rows, not registered in the
+   * session's cache.
    */
   def kCore(spark: SparkSession, edges: DataFrame, k: Int, maxRounds: Int = 50): DataFrame =
     kCoreResult(spark, edges, k, maxRounds)._1
@@ -1164,32 +1194,35 @@ object GraphOps {
                   maxRounds: Int = 50): (DataFrame, Int) = {
     import spark.implicits._
     require(k >= 1, s"k must be >= 1, got $k")
-    var und = undirected(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    var nEdges = und.count()
-    var rounds = 0
-    var converged = nEdges == 0L
-    while (!converged && rounds < maxRounds) {
-      val deg = und.select($"u".as("x")).union(und.select($"v".as("x")))
-        .groupBy($"x").agg(count(lit(1)).as("c"))
-      val surv = deg.filter($"c" >= k).select($"x")
-      val next = und
-        .join(surv.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
-        .join(surv.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val n = next.count()
-      und.unpersist()
-      und = next
-      rounds += 1
-      if (n == nEdges) converged = true
-      nEdges = n
-    }
-    val core = und.select($"u".as("id")).union(und.select($"v".as("id")))
-      .groupBy($"id").agg(count(lit(1)).as("core_degree"))
-      .filter($"core_degree" >= k)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    core.count()
-    und.unpersist()
-    (core, rounds)
+    // each round's edge set is kept rows, freed once the next is built; the
+    // last is freed once the core is built, or when the call fails
+    var und = undirected(edges).localCheckpoint(false)
+    try {
+      var nEdges = und.count()
+      var rounds = 0
+      var converged = nEdges == 0L
+      while (!converged && rounds < maxRounds) {
+        val deg = und.select($"u".as("x")).union(und.select($"v".as("x")))
+          .groupBy($"x").agg(count(lit(1)).as("c"))
+        val surv = deg.filter($"c" >= k).select($"x")
+        val next = und
+          .join(surv.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
+          .join(surv.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
+          .localCheckpoint(false)
+        val n = next.count()
+        Bridge.free(keptRows(und))
+        und = next
+        rounds += 1
+        if (n == nEdges) converged = true
+        nEdges = n
+      }
+      val core = und.select($"u".as("id")).union(und.select($"v".as("id")))
+        .groupBy($"id").agg(count(lit(1)).as("core_degree"))
+        .filter($"core_degree" >= k)
+        .localCheckpoint(false)
+      core.count()
+      (core, rounds)
+    } finally Bridge.free(keptRows(und))
   }
 
   /**
@@ -1207,7 +1240,10 @@ object GraphOps {
    * Scale shape: TWO static edge copies, partitioned by dst (the a-step's
    * join key) and by src (the h-step's), each paid once; every half-step
    * is then one co-partitioned join + one map-side-combined sum keyed on a
-   * vertex id. Lineage cut every `checkpointEvery` full steps.
+   * vertex id. The loop's state is the authority vector, so it enters each
+   * superstep exactly once: the start state is a_1 = Aᵀ·1, superstep i
+   * takes a_i to a_{i+1} through h_i, and h is the one half-step after the
+   * last. Lineage cut every `checkpointEvery` supersteps and at the last.
    * Returns `(id, hub, authority)` unrounded (query faces round).
    */
   def hits(spark: SparkSession, edges: DataFrame, iterations: Int,
@@ -1217,7 +1253,8 @@ object GraphOps {
       import spark.implicits._
       val eRaw = run.cache(edges.select($"src".cast("long"), $"dst".cast("long"))
         .filter($"src" =!= $"dst").distinct())
-      val p = kernelPartitions(run.confWidth, eRaw.count())
+      val nEdges = eRaw.count()
+      val p = kernelPartitions(run.confWidth, nEdges)
       // kernel-width aggregation exchanges (AQE is off here, so nothing else
       // narrows them)
       run.width(p)
@@ -1230,27 +1267,19 @@ object GraphOps {
       require(verts.count() > 0, "hits: the edge table is empty")
       eRaw.unpersist(false)
 
-      var h = verts.withColumn("h", lit(1.0))
-      var a: DataFrame = null
-      for (i <- 1 to iterations) {
-        // a-step: h flows src→dst (join keyed src, agg keyed dst)
-        val contribA = h.select($"id".as("src"), $"h")
-          .join(eBySrc, Seq("src"))
-          .groupBy($"dst".as("id")).agg(sum($"h").as("s"))
-        a = verts.join(contribA, Seq("id"), "left")
-          .select($"id", coalesce($"s", lit(0.0)).as("a"))
-        if (i % checkpointEvery == 0 || i == iterations) a = a.localCheckpoint(true)
-        // h-step: a flows dst→src (join keyed dst, agg keyed src)
-        val contribH = a.select($"id".as("dst"), $"a")
-          .join(eByDst, Seq("dst"))
-          .groupBy($"src".as("id")).agg(sum($"a").as("s"))
-        h = verts.join(contribH, Seq("id"), "left")
-          .select($"id", coalesce($"s", lit(0.0)).as("h"))
-        if (i % checkpointEvery == 0 || i == iterations) {
-          run.explain("boundary block", h)
-          h = h.localCheckpoint(true)
-        }
-      }
+      // a-step: h flows src→dst (join keyed src, agg keyed dst)
+      def authority(h: DataFrame) = verts
+        .join(h.select($"id".as("src"), $"h").join(eBySrc, Seq("src"))
+          .groupBy($"dst".as("id")).agg(sum($"h").as("s")), Seq("id"), "left")
+        .select($"id", coalesce($"s", lit(0.0)).as("a"))
+      // h-step: a flows dst→src (join keyed dst, agg keyed src)
+      def hub(a: DataFrame) = verts
+        .join(a.select($"id".as("dst"), $"a").join(eByDst, Seq("dst"))
+          .groupBy($"src".as("id")).agg(sum($"a").as("s")), Seq("id"), "left")
+        .select($"id", coalesce($"s", lit(0.0)).as("h"))
+      val a = run.loop(iterations - 1, checkpointEvery, nEdges, p,
+        _ => authority(verts.withColumn("h", lit(1.0))), a => authority(hub(a))).state
+      val h = hub(a).localCheckpoint(true)
       // single L1 normalization at the end; both sums in one tiny job each
       val normA = a.agg(sum($"a")).as[Double].head()
       val normH = h.agg(sum($"h")).as[Double].head()
@@ -1278,7 +1307,9 @@ object GraphOps {
    * CURRENT vertex id (degree lookup + positional lookup), emitting one
    * row per live walk. Hub vertices hold many walks at once but each walk
    * is one probe row — fan-IN, not fan-out. Steps materialize per level
-   * (each level feeds both the next step and the output union).
+   * (each level feeds both the next step and the output union) as kept
+   * rows, not registered in the session's cache; the lookup tables are
+   * unpersisted when the call returns or fails.
    * Returns `(seed, walk, step, vertex)`.
    */
   def randomWalks(spark: SparkSession, edges: DataFrame, walkLen: Int,
@@ -1286,49 +1317,48 @@ object GraphOps {
     import spark.implicits._
     require(walkLen >= 1 && walksPerVertex >= 1,
       "walkLen and walksPerVertex must be >= 1")
-    val e = edges.select($"src".cast("long"), $"dst".cast("long"))
-      .filter($"src" =!= $"dst").distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val p = kernelPartitions(confPartitions(spark), e.count())
-    val w = Window.partitionBy($"src").orderBy($"dst")
-    val adj = e.select($"src", $"dst", (row_number().over(w) - 1).cast("long").as("idx"))
-      .repartition(p, $"src").persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = e.groupBy($"src").agg(count(lit(1)).as("outdeg"))
-      .repartition(p, $"src").persist(StorageLevel.MEMORY_AND_DISK)
-    adj.count(); deg.count()
+    cached { c =>
+      val e = c.cache(edges.select($"src".cast("long"), $"dst".cast("long"))
+        .filter($"src" =!= $"dst").distinct())
+      val p = kernelPartitions(confPartitions(spark), e.count())
+      val w = Window.partitionBy($"src").orderBy($"dst")
+      val adj = c.cache(e.select($"src", $"dst", (row_number().over(w) - 1).cast("long").as("idx"))
+        .repartition(p, $"src"))
+      val deg = c.cache(e.groupBy($"src").agg(count(lit(1)).as("outdeg"))
+        .repartition(p, $"src"))
+      adj.count(); deg.count()
 
-    val verts = e.select($"src".as("id")).union(e.select($"dst".as("id"))).distinct()
-    val start = verts
-      .crossJoin(spark.range(walksPerVertex.toLong).select($"id".cast("int").as("walk")))
-      .select($"id".as("seed"), $"walk", lit(0).as("step"), $"id".as("vertex"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    start.count()
+      val verts = e.select($"src".as("id")).union(e.select($"dst".as("id"))).distinct()
+      val start = verts
+        .crossJoin(spark.range(walksPerVertex.toLong).select($"id".cast("int").as("walk")))
+        .select($"id".as("seed"), $"walk", lit(0).as("step"), $"id".as("vertex"))
+        .localCheckpoint(false)
+      start.count()
 
-    def stepHash(seed: Column, walk: Column, step: Int): Column =
-      conv(substring(md5(concat(seed.cast("string"), lit(":"),
-        walk.cast("string"), lit(":"), lit(step.toString)).cast("binary")), 1, 15), 16, 10)
-        .cast("long")
+      def stepHash(seed: Column, walk: Column, step: Int): Column =
+        conv(substring(md5(concat(seed.cast("string"), lit(":"),
+          walk.cast("string"), lit(":"), lit(step.toString)).cast("binary")), 1, 15), 16, 10)
+          .cast("long")
 
-    val levels = scala.collection.mutable.ArrayBuffer[DataFrame](start)
-    var cur = start
-    var t = 1
-    var drained = false
-    while (t <= walkLen && !drained) {
-      val next = cur.select($"seed", $"walk", $"vertex".as("src"))
-        .join(deg, Seq("src"))
-        .withColumn("idx", pmod(stepHash($"seed", $"walk", t), $"outdeg"))
-        .join(adj, Seq("src", "idx"))
-        .select($"seed", $"walk", lit(t).as("step"), $"dst".as("vertex"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if (next.count() == 0L) { next.unpersist(); drained = true }
-      else { levels += next; cur = next }
-      t += 1
+      val levels = scala.collection.mutable.ArrayBuffer[DataFrame](start)
+      var cur = start
+      var t = 1
+      var drained = false
+      while (t <= walkLen && !drained) {
+        val next = cur.select($"seed", $"walk", $"vertex".as("src"))
+          .join(deg, Seq("src"))
+          .withColumn("idx", pmod(stepHash($"seed", $"walk", t), $"outdeg"))
+          .join(adj, Seq("src", "idx"))
+          .select($"seed", $"walk", lit(t).as("step"), $"dst".as("vertex"))
+          .localCheckpoint(false)
+        if (next.count() == 0L) { Bridge.free(keptRows(next)); drained = true }
+        else { levels += next; cur = next }
+        t += 1
+      }
+      // every level is kept rows (they ARE the result); the lookup tables
+      // go when this returns
+      levels.reduce(_.unionByName(_))
     }
-    // every level is materialized, so the lookup tables can go now; the
-    // level frames themselves stay persisted (they ARE the result)
-    val out = levels.reduce(_.unionByName(_))
-    e.unpersist(false); adj.unpersist(false); deg.unpersist(false)
-    out
   }
 
   /**

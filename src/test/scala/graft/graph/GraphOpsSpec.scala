@@ -1,6 +1,7 @@
 package graft.graph
 
 import graft.SparkTestHarness
+import graft.graph.TestLogs.{CacheManager, logOf}
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -54,10 +55,12 @@ class GraphOpsSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val full = GraphOps.pageRank(spark, edgeDf, 12, checkpointEvery = 4, checkpointDir = Some(dir))
     val a = full.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    // a second call with the same dir resumes from the *latest* checkpoint
-    // (12) -> zero extra steps
+    // a second call with the same dir resumes from the *latest* checkpoint:
+    // the boundary that ends a run writes none, so that is 8, and the
+    // resumed run redoes the last block
     val resumed = GraphOps.pageRank(spark, edgeDf, 12, checkpointEvery = 4, checkpointDir = Some(dir))
     assert(resumed.supersteps == 12)
+    assert(resumed.metrics.map(_.superstep) == Seq(9, 10, 11, 12))
     // "kill" after superstep 8 (a checkpoint boundary): a run killed there
     // leaves LATEST at 8, and the next call with the dir continues from it
     graft.util.Fs.write(spark, s"$dir/pagerank/LATEST", "8")
@@ -68,6 +71,22 @@ class GraphOpsSpec extends AnyFunSuite {
     for ((v, r) <- a) assert(math.abs(b(v) - r) < 1e-12, s"resume drift at $v")
   }
 
+  test("PageRank's tol ends the run at the first boundary whose block moved the ranks less") {
+    val loose = GraphOps.pageRank(spark, edgeDf, 12, checkpointEvery = 4, tol = 10.0)
+    assert(loose.supersteps == 4)
+    val row = loose.metrics.last
+    assert(row.superstep == 4 && row.boundary)
+    assert(!row.maxDelta.isNaN && !row.maxDelta.isInfinite && row.maxDelta < 10.0, s"maxDelta ${row.maxDelta}")
+    // a tol no block reaches runs the full count, to the fixed-count ranks
+    val tight = GraphOps.pageRank(spark, edgeDf, 12, checkpointEvery = 4, tol = 1e-300)
+    assert(tight.supersteps == 12)
+    val fixed = GraphOps.pageRank(spark, edgeDf, 12, checkpointEvery = 4)
+      .ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val got = tight.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(got.keySet == fixed.keySet)
+    for ((v, r) <- fixed) assert(math.abs(got(v) - r) < 1e-12, s"vertex $v: ${got(v)} vs $r")
+  }
+
   test("connected components exact") {
     val got = GraphOps.connectedComponents(spark, edgeDf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -75,21 +94,6 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(got == expected)
     // the isolated 3-cycle is its own component
     assert(got(301L) == 300L && got(302L) == 300L)
-  }
-
-  /** The messages `logger` emits while `body` runs. */
-  private def logOf(logger: String)(body: => Unit): Seq[String] = {
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
-        "capture", null, null, true, Array.empty) {
-      override def append(e: LogEvent): Unit = lines.synchronized { lines += e.getMessage.getFormattedMessage }
-    }
-    capture.start()
-    val l = org.apache.logging.log4j.LogManager.getLogger(logger).asInstanceOf[Logger]
-    l.addAppender(capture)
-    try body finally { l.removeAppender(capture); capture.stop() }
-    lines.toSeq
   }
 
   test("a released CC result keeps nothing persisted, and a repeat call caches afresh") {
@@ -107,8 +111,16 @@ class GraphOpsSpec extends AnyFunSuite {
       assert(left.isEmpty, s"the released run left RDDs $left persisted")
     }
     run()
-    val log = logOf("org.apache.spark.sql.execution.CacheManager")(run())
+    val log = logOf(CacheManager)(run())
     assert(!log.exists(_.contains("already cached")), log.mkString("; "))
+    // the facade drops the result, so nothing it returns may stay registered
+    // in the session's cache: a repeat call on the same edges caches afresh
+    val g2 = Seq((7101L, 7102L), (7103L, 7102L)).toDF("src", "dst")
+    val facadeLog = logOf(CacheManager)(for (_ <- 1 to 2) {
+      val got = GraphOps.connectedComponents(spark, g2).collect().map(row => row.getLong(0) -> row.getLong(1)).toMap
+      assert(got == Map(7101L -> 7101L, 7102L -> 7101L, 7103L -> 7101L))
+    })
+    assert(!facadeLog.exists(_.contains("already cached")), facadeLog.mkString("; "))
   }
 
   test("connected components kill-and-resume from checkpoint is exact") {
@@ -430,11 +442,14 @@ class FrontierKernelSpec extends AnyFunSuite {
   test("bounded-hop BFS exact vs naive frontier expansion") {
     val seeds = vertices.filter(_ % 5 == 0)
     val seedDf = seeds.toDF("id")
-    for (h <- Seq(0, 1, 3)) {
+    // the repeat calls on the same seeds find nothing an earlier call left
+    // registered in the session's cache
+    val log = logOf(CacheManager)(for (h <- Seq(0, 1, 3)) {
       val got = GraphOps.shortestPaths(spark, edgeDf, seedDf, maxHops = h)
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       assert(got == NaiveGraph.bfs(allEdges, seeds, h), s"maxHops=$h")
-    }
+    })
+    assert(!log.exists(_.contains("already cached")), log.mkString("; "))
   }
 
   test("BFS early-exits once the frontier drains; unreachable vertices absent") {
@@ -631,6 +646,25 @@ class FrontierKernelSpec extends AnyFunSuite {
       GraphOps.pageRank(spark, edgeDf, 2, redistributeDangling = false,
         restart = Some(Seq(999999L).toDF("id"))) // not a graph vertex
     }
+  }
+}
+
+object TestLogs {
+  val CacheManager = "org.apache.spark.sql.execution.CacheManager"
+
+  /** The messages `logger` emits while `body` runs. */
+  def logOf(logger: String)(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "capture", null, null, true, Array.empty) {
+      override def append(e: LogEvent): Unit = lines.synchronized { lines += e.getMessage.getFormattedMessage }
+    }
+    capture.start()
+    val l = org.apache.logging.log4j.LogManager.getLogger(logger).asInstanceOf[Logger]
+    l.addAppender(capture)
+    try body finally { l.removeAppender(capture); capture.stop() }
+    lines.toSeq
   }
 }
 
