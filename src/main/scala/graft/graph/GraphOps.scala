@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.expressions.Window
@@ -10,8 +10,11 @@ import graft.util.{BoundedCollect, CodegenPolicy, Fs}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.KnownNotNull
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, KnownNotNull, XXH64}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.Partitioner
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -152,49 +155,51 @@ object GraphOps {
     // Sentinel id for the dangling supernode (below any dense vertex id).
     val Sent = Long.MinValue
 
-    // The edge table, read from the source once. It is laid out at the
-    // configured width: the kernel's own width is sized from the edge count,
-    // which the vertex statistics below deliver.
-    run.width(run.confWidth)
-    val e = run.cache((weightCol match {
-      // weighted arm: transition probability becomes wt/sum(wt) per src —
-      // duplicate (src, dst) rows are MULTI-EDGES and sum their weight
-      case Some(wc) => edges.select($"src".cast("long"), $"dst".cast("long"),
-        col(wc).cast("double").as("wt"))
-      case None => edges.select($"src".cast("long"), $"dst".cast("long"))
-    }).repartition(run.confWidth, $"src"))
+    // The edge table is read from the source once and laid out by src in
+    // ONE exchange, kept as internal rows; the rest of the set-up is RDD
+    // operations over them, which generate no code of their own. Every
+    // src's edges share a partition, so each partition counts its own srcs'
+    // out-degrees and weighs their edges without a join. A row with a NULL
+    // end is no edge, and a NULL end no vertex.
+    val bySrc = run.keep(edges.select(Seq($"src".cast("long"), $"dst".cast("long")) ++
+      weightCol.map(col(_).cast("double")): _*)
+      .repartition(run.confWidth, $"src").queryExecution.toRdd.map(_.copy()))
+    def wt(r: InternalRow) = if (weightCol.isEmpty) 1.0 else r.getDouble(2)
+    def isEdge(r: InternalRow) = !r.isNullAt(0) && !r.isNullAt(1)
+    // every end of one partition's rows, with the out-degree and out-weight
+    // of its srcs (exact, as each src's edges share the partition)
+    def degrees(rows: Iterator[InternalRow]) = {
+      val deg = scala.collection.mutable.LongMap.empty[(Long, Double)]
+      rows.foreach { r =>
+        if (!r.isNullAt(0)) {
+          val (n, w) = deg.getOrElse(r.getLong(0), (0L, 0.0))
+          deg(r.getLong(0)) = if (isEdge(r)) (n + 1, w + wt(r)) else (n, w)
+        }
+        if (!r.isNullAt(1) && !deg.contains(r.getLong(1))) deg(r.getLong(1)) = (0L, 0.0)
+      }
+      deg
+    }
 
-    // ONE aggregation over both endpoints gives every vertex with its
-    // out-degree (0 = dangling) and, weighted, its out-weight: the vertex
-    // set, the transition normalizer, the dangling set and the hub fan-out
-    // widths all read this table.
-    val isSrc = $"pos" === 0
-    val ends = e.select(Seq(posexplode(array($"src", $"dst")).as(Seq("pos", "id"))) ++
-      weightCol.map(_ => $"wt"): _*)
-    val vdeg = run.cache(weightCol match {
-      case Some(_) => ends.groupBy($"id").agg(sum(when(isSrc, 1L).otherwise(0L)).as("outDeg"),
-        sum(when(isSrc, $"wt")).as("wsum"))
-      case None => ends.groupBy($"id").agg(sum(when(isSrc, 1L).otherwise(0L)).as("outDeg"))
-    })
-    val vertices = vdeg.select($"id")
-    // ONE job — which also materializes the edge cache — for the vertex
-    // count, the reserved-id guard, the edge count (the sum of out-degrees),
-    // |{v : outDeg > 0}| (⇒ |D| = n − it) and the largest out-degree (are
-    // there real hubs). Long.MinValue is the dangling supernode's sentinel
-    // id; a caller graph containing it as a REAL vertex would silently merge
-    // with the supernode and corrupt every rank.
-    val vStats = vdeg.agg(count(lit(1)), max($"id" === Sent), sum($"outDeg"),
-      sum(when($"outDeg" > 0, 1L).otherwise(0L)), max($"outDeg")).first()
-    val n = vStats.getLong(0)
+    // ONE reduction gives every vertex with its out-degree (0 = dangling)
+    // and out-weight: the vertex set, the transition normalizer, the
+    // dangling set and the hub fan-out widths all read this table.
+    val vdeg = run.keep(bySrc.mapPartitions(degrees(_).iterator)
+      .reduceByKey((a, b) => (a._1 + b._1, a._2 + b._2), run.confWidth))
+    // ONE job for the vertex count, the reserved-id guard, the edge count
+    // (the sum of out-degrees), |{v : outDeg > 0}| (⇒ |D| = n − it) and the
+    // largest out-degree (are there real hubs). Long.MinValue is the
+    // dangling supernode's sentinel id; a caller graph containing it as a
+    // REAL vertex would silently merge with the supernode and corrupt every
+    // rank.
+    val (n, hasSent, edgeCount, nSrc, maxOutDeg) = vdeg.aggregate((0L, false, 0L, 0L, 0L))(
+      { case ((n, s, e, k, m), (id, (out, _))) => (n + 1, s || id == Sent, e + out, k + math.min(out, 1L), math.max(m, out)) },
+      { case (a, b) => (a._1 + b._1, a._2 || b._2, a._3 + b._3, a._4 + b._4, math.max(a._5, b._5)) })
     // degenerate-input guard: an empty edge table would otherwise seed every
     // rank with 1.0/0 = Infinity/NaN — fail with a clear error instead
     require(n > 0, "pageRank: the edge table is empty (no vertices)")
     if (redistributeDangling)
-      require(vStats.isNullAt(1) || !vStats.getBoolean(1),
-        s"pageRank(redistributeDangling=true) reserves vertex id ${Sent} " +
-          "for the dangling supernode; the input graph contains it")
-    val edgeCount = vStats.getLong(2)
-    val nSrc = vStats.getLong(3)
+      require(!hasSent, s"pageRank(redistributeDangling=true) reserves vertex id ${Sent} " +
+        "for the dangling supernode; the input graph contains it")
     val shufflePartitions = kernelPartitions(run.confWidth, edgeCount)
     // every aggregation exchange in the loop must match the static
     // edge/state layout's width, or EnsureRequirements inserts an extra
@@ -202,7 +207,7 @@ object GraphOps {
     // mined graph: agg at 32 vs layout at 8)
     run.width(shufflePartitions)
     val salt = HubSalt(shufflePartitions, edgeCount)
-    val haveRealHubs = vStats.getLong(4) > salt.threshold
+    val haveRealHubs = maxOutDeg > salt.threshold
 
     // Personalized restart: the (1-d) teleport mass concentrates on a seed
     // set (uniform over the seeds present in the graph) instead of 1/n
@@ -214,6 +219,7 @@ object GraphOps {
     require(restart.isEmpty || !redistributeDangling,
       "personalized restart requires redistributeDangling=false")
     val pFrame = restart.map { s =>
+      val vertices = Bridge.dataFrame(spark, vdeg.map(v => InternalRow(v._1)), idSchema)
       val sv = run.cache(s.select(col("id").cast("long").as("id")).distinct()
         .join(vertices, Seq("id"), "left_semi"))
       val ns = sv.count()
@@ -230,112 +236,110 @@ object GraphOps {
     // build time on a 10M-edge graph. Srcs whose out-degree exceeds
     // edges/partitions get a salt derived from dst, splitting their edges
     // across up to `shufflePartitions` sub-keys (nsalt, 1 for non-hubs),
-    // and the state side replicates only hub rows. Hub degrees come
-    // straight from the degree table, so every edge carries its src's nsalt
-    // out of the join that gives it its weight; the sentinel's out-degree
-    // is ~|V|, bounded above by n.
-    val nsalt = when($"outDeg" > salt.threshold, salt.nsalt($"outDeg")).otherwise(1)
+    // and the state side replicates only hub rows. Every edge takes its
+    // src's nsalt where it takes its weight; the sentinel's out-degree is
+    // ~|V|, bounded above by n.
+    def nsalt(outDeg: Long) = if (outDeg > salt.threshold) salt.nsalt(outDeg) else 1
     val sentSalt = salt.nsalt(n)
     val haveHubs = haveRealHubs || (redistributeDangling && sentSalt > 1)
-    def withSalt(cols: Column*)(nsaltCol: Column): Seq[Column] =
-      if (haveHubs) cols :+ nsaltCol.as("nsalt") else cols
 
     if (weightCol.isDefined) {
       // zero/negative/NULL weights would silently corrupt the distribution
       // (wsum<=0 divides to Inf/negative mass; NULL rows drop their edge's
-      // mass from both w and wsum) — fail with a clear error. min() skips
-      // NULLs, so count them explicitly in the same job.
-      val wRow = e.agg(min($"wt"), sum(when($"wt".isNull, 1L).otherwise(0L))).first()
-      val nNull = wRow.getLong(1)
+      // mass from both w and wsum) — fail with a clear error. Counts the
+      // NULLs and takes the least other weight in one job.
+      val (nNull, minW) = bySrc.aggregate((0L, Double.PositiveInfinity))(
+        (a, r) => if (r.isNullAt(2)) (a._1 + 1, a._2) else (a._1, math.min(a._2, r.getDouble(2))),
+        (a, b) => (a._1 + b._1, math.min(a._2, b._2)))
       require(nNull == 0, s"pageRank(weightCol): $nNull edges have NULL weight")
-      require(!wRow.isNullAt(0) && wRow.getDouble(0) > 0,
-        s"pageRank(weightCol): weights must be > 0, found ${wRow.get(0)}")
+      require(minW > 0, s"pageRank(weightCol): weights must be > 0, found $minW")
     }
-    // Static weighted transition edges E' (see Scaladoc): built once,
-    // hash-partitioned by src once, reused by every superstep's join. The
-    // inner join keeps exactly the vertices with out-edges.
-    val w = weightCol.fold(lit(1.0) / $"outDeg")(_ => $"wt" / $"wsum")
-    val realEdges = e.join(vdeg.withColumnRenamed("id", "src"), Seq("src"))
-      .select(withSalt($"src", $"dst", w.as("w"))(nsalt): _*)
-    val eW = (if (!redistributeDangling) realEdges else {
-      val wIn = realEdges.groupBy($"dst").agg(sum($"w").as("win"))
-      val sentinelOut = wIn.select(withSalt(lit(Sent).as("src"), $"dst",
-        (lit(damping) * $"win").as("w"))(lit(sentSalt)): _*)
+    // Static weighted transition edges E' (see Scaladoc): (src, dst, w,
+    // nsalt) rows, each edge weighed by its src's out-degree or out-weight
+    // from its own partition of the kept edges, a pass each read repeats.
+    // The sentinel's in-edges sum their weights by dst.
+    val realEdges = bySrc.mapPartitions { it =>
+      val rows = it.toArray
+      val deg = degrees(rows.iterator)
+      rows.iterator.filter(isEdge).map { r =>
+        val (outDeg, wsum) = deg(r.getLong(0))
+        (r.getLong(0), r.getLong(1), if (weightCol.isEmpty) 1.0 / outDeg else wt(r) / wsum, nsalt(outDeg))
+      }
+    }
+    val eW = if (!redistributeDangling) realEdges else {
+      val sentinelOut = realEdges.map(e => (e._2, e._3)).reduceByKey(_ + _)
+        .map { case (dst, win) => (Sent, dst, damping * win, sentSalt) }
       val nDangling = n - nSrc
-      val toSent = vdeg.filter($"outDeg" === 0)
-        .select(withSalt($"id".as("src"), lit(Sent).as("dst"), lit(1.0 / n).as("w"))(lit(1)): _*)
-      val selfSent = Seq((Sent, Sent, damping * nDangling.toDouble / n, sentSalt))
-        .toDF("src", "dst", "w", "nsalt").select(withSalt($"src", $"dst", $"w")($"nsalt"): _*)
-      realEdges.unionByName(sentinelOut).unionByName(toSent).unionByName(selfSent)
-    })
+      val toSent = vdeg.filter(_._2._1 == 0).map(v => (v._1, Sent, 1.0 / n, 1))
+      val selfSent = spark.sparkContext.parallelize(Seq((Sent, Sent, damping * nDangling.toDouble / n, sentSalt)), 1)
+      realEdges.union(sentinelOut).union(toSent).union(selfSent)
+    }
 
-    // CSR-style adjacency: partitions hash-bucketed by (src[, salt]) and
-    // SORTED once at build time. The cached sort order survives in
-    // InMemoryTableScan, so each superstep's sort-merge join re-sorts only
-    // the (|V|-sized) state side, never the edge table. Columnar persist
-    // (not localCheckpoint — a row-format RDD scan of the edge leaf was
-    // measured ~1 s/block slower at sf0.1); the LINEAGE under this cache is
-    // kept small by the caller-side checkpoint of mined inputs
-    // (Queries.indexedPpEdges), so per-superstep analysis stays O(k).
     // Hub-free graphs skip the salt machinery entirely (no generator in the
-    // hot path). The salt is never NULL (nsalt >= 1), and saying so keeps
-    // a NULL filter off the table's side of every superstep's join.
-    val eWS = run.cache(if (!haveHubs) eW.withColumn("salt", lit(0))
-      .repartition(shufflePartitions, $"src")
-      .sortWithinPartitions($"src")
-    else eW.select($"src", $"dst", $"w", notNull(HubSalt.key($"nsalt")).as("salt"))
-      .repartition(shufflePartitions, $"src", $"salt")
-      .sortWithinPartitions($"src", $"salt"))
-    // Built before the loop, so its real size is known: every superstep
-    // joins it the same way, broadcast when it fits the session's broadcast
-    // threshold and left to the planner's sort-merge join otherwise. Left to
-    // per-superstep estimates, the first superstep of a block broadcast
-    // whichever side looked smaller and planned different code.
-    eWS.count()
-    val eSide =
-      if (eWS.queryExecution.optimizedPlan.stats.sizeInBytes <= SQLConf.get.autoBroadcastJoinThreshold)
-        broadcast(eWS)
-      else eWS
+    // hot path).
+    val eRows = eW.map { case (s, d, w, ns) =>
+      if (!haveHubs) InternalRow(s, d, w) else InternalRow(s, d, w, HubSalt.key(d, ns))
+    }
+    val eWS = Bridge.dataFrame(spark, eRows,
+      StructType(Seq("src", "dst").map(StructField(_, LongType, nullable = false)) ++
+        Seq(StructField("w", DoubleType, nullable = false)) ++
+        (if (haveHubs) Seq(StructField("salt", IntegerType, nullable = false)) else Nil)),
+      Some(BigInt(eRows.count())))
+    val eSide = run.joinSide(eWS, shufflePartitions, if (haveHubs) Seq("src", "salt") else Seq("src"))
 
-    // Every id that owns a state row each superstep (sentinel included).
+    // Every id that owns a state row each superstep (sentinel included),
+    // laid out by id: the streamed side of every superstep's hash join with
+    // the aggregated contributions.
     // With a personalized restart the frame also carries p (the per-vertex
     // teleport mass, 0 off-seed) so each superstep's update reads it from
-    // this static sorted leaf — no extra join in the loop. On hubby graphs
+    // this static leaf — no extra join in the loop. On hubby graphs
     // it ALSO carries nsalt (the hub fan-out width, 1 for non-hubs): the
     // state inherits it through each superstep's update, so the loop's hub
     // fan-out is a plain generator over a state column — the former
     // per-superstep broadcast(hubs) join + hint grew the chained plan's
     // analysis cost superlinearly (measured 144→438 ms of pure driver time
     // per lazily-chained superstep on the mined graph, vs 16-26 ms hub-free).
-    val (ids, sentRow) =
-      if (!haveHubs) (vertices, Seq(Sent).toDF("id"))
-      else (vdeg.select($"id", nsalt.as("nsalt")), Seq((Sent, sentSalt)).toDF("id", "nsalt"))
-    val allIdsBase = if (redistributeDangling) ids.unionByName(sentRow) else ids
-    val allIds = run.cache((pFrame match {
-      case Some(p) => allIdsBase.join(p, Seq("id"), "left")
-        .withColumn("p", coalesce($"p", lit(0.0)))
-      case None => allIdsBase
-    }).repartition(shufflePartitions, $"id")
-      .sortWithinPartitions($"id"))
+    val idRows = laidOutBy(vdeg.map { case (id, (outDeg, _)) => (id, nsalt(outDeg)) }
+      .union(spark.sparkContext.parallelize(if (redistributeDangling) Seq((Sent, sentSalt)) else Nil, 1))
+      .map { case (id, ns) => (id, if (haveHubs) InternalRow(id, ns) else InternalRow(id)) }, shufflePartitions)
+    val ids = Bridge.dataFrame(spark, run.keep(idRows), StructType(idSchema ++
+      (if (haveHubs) Seq(StructField("nsalt", IntegerType, nullable = false)) else Nil)), hashedBy = Seq("id"))
     // no count action: the state-init localCheckpoint below scans every
-    // allIds partition and materializes this cache in the same job
+    // allIds partition and materializes its rows in the same job
+    val allIds = pFrame match {
+      case Some(p) => run.cache(ids.join(p, Seq("id"), "left")
+        .withColumn("p", coalesce($"p", lit(0.0)))
+        .repartition(shufflePartitions, $"id"))
+      case None => ids
+    }
 
     // State: x(v) per vertex plus x(Sent) = m; rank_t = x_t + d*m_t, and on
     // hubby graphs the vertex's nsalt. Checkpoints carry column "x"
     // (sentinel row included) and may also carry nsalt, which a resumed run
     // drops and re-derives.
     val stateSalt = if (haveHubs) Seq($"nsalt") else Nil
-    def start(restored: Option[DataFrame]) = (restored match {
-      case Some(s) =>
-        if (!haveHubs) s.select($"id", $"x")
-        else s.select($"id", $"x").join(allIds.select($"id", $"nsalt"), Seq("id"))
-      case None =>
-        // PPR starts AT the restart distribution (the walk's stationary
-        // point under d=0); uniform starts at 1/n as before
-        val x0 = if (pFrame.isDefined) $"p" else when($"id" === Sent, lit(0.0)).otherwise(lit(1.0 / n))
-        allIds.select(Seq($"id", x0.as("x")) ++ stateSalt: _*)
-    }).repartition(shufflePartitions, $"id")
-      .localCheckpoint(true)
+    def start(restored: Option[DataFrame]) = restored match {
+      case None if pFrame.isEmpty =>
+        // uniform starts at 1/n (the sentinel at 0): kept rows over the
+        // allIds rows, laid out as they are, materialized by their count
+        val x0 = idRows.map { r =>
+          val x = if (r.getLong(0) == Sent) 0.0 else 1.0 / n
+          if (haveHubs) InternalRow(r.getLong(0), x, r.getInt(1)) else InternalRow(r.getLong(0), x)
+        }.localCheckpoint()
+        x0.count()
+        Bridge.dataFrame(spark, x0, StructType(Seq(idSchema.head, StructField("x", DoubleType, nullable = false)) ++
+          ids.schema.drop(1)), hashedBy = Seq("id"))
+      case _ => (restored match {
+        case Some(s) =>
+          if (!haveHubs) s.select($"id", $"x")
+          else s.select($"id", $"x").join(allIds.select($"id", $"nsalt"), Seq("id"))
+        case None =>
+          // PPR starts AT the restart distribution (the walk's stationary
+          // point under d=0)
+          allIds.select(Seq($"id", $"p".as("x")) ++ stateSalt: _*)
+      }).repartition(shufflePartitions, $"id")
+        .localCheckpoint(true)
+    }
 
     // One join + one aggregation; supersteps between checkpoint boundaries
     // chain LAZILY (no localCheckpoint, no toRdd, no action — each of those
@@ -363,8 +367,10 @@ object GraphOps {
       val xNext = when($"id" === Sent, coalesce($"c", lit(0.0)))
         .otherwise(restartTerm + lit(damping) * coalesce($"c", lit(0.0)))
         .as("x")
+      // hash-joined, the agg side as the build: both sides are laid out by
+      // id, so neither is shuffled or sorted
       allIds
-        .join(agg, Seq("id"), "left")
+        .join(agg.hint("shuffle_hash"), Seq("id"), "left")
         .select(Seq($"id", xNext) ++ stateSalt: _*)
     }
 
@@ -390,17 +396,50 @@ object GraphOps {
     // mid-chain materialization buys better stage scheduling than the
     // saved job costs.
     val Steps(state, metrics, steps, _) = run.loop(iterations, checkpointEvery, edgeCount,
-      eWS.rdd.getNumPartitions, start, step, converged, maxDelta)
+      shufflePartitions, start, step, converged, maxDelta)
 
-    // rank = x + d*m; m is the materialized final state's sentinel row,
-    // joined onto every real row when the ranks are read (no job here)
+    // rank = x + d*m; m is the final state's sentinel row, read off its kept
+    // rows, and a UDF carries it into the ranks' plan, so that plan
+    // generates the same code whatever m is
     val ranks =
       if (!redistributeDangling) state.select($"id", $"x".as("rank"))
-      else state.filter($"id" =!= Sent)
-        .crossJoin(broadcast(state.filter($"id" === Sent).select($"x".as("m"))))
-        .select($"id", ($"x" + lit(damping) * $"m").as("rank"))
+      else {
+        val m = keptRows(state).get.filter(_.getLong(0) == Sent).map(_.getDouble(1)).first()
+        state.filter($"id" =!= Sent).select($"id", ($"x" + lit(damping) * udf(() => m).apply()).as("rank"))
+      }
     PageRankResult(ranks, metrics, steps)
   }
+
+  /** The internal rows of an edge table's `src` and `dst` cast to Long,
+    * then `extra`: what a kernel's set-up reduces as RDD operations, which
+    * generate no code beyond this scan. The rows are the plan's reused
+    * buffers: read their fields, do not keep them. */
+  private def edgeRows(edges: DataFrame, extra: Column*): RDD[InternalRow] =
+    edges.select(Seq(col("src").cast("long"), col("dst").cast("long")) ++ extra: _*).queryExecution.toRdd
+
+  /** `rows` keyed by a never-NULL Long, laid out as an exchange by that
+    * key at width `p` leaves them: each row in the partition Spark's hash
+    * partitioning gives its key. A frame over them declares that layout
+    * (`Bridge.dataFrame`'s `hashedBy`), so a join or aggregation by the key
+    * plans no exchange, and the layout generates no code. */
+  private def laidOutBy(keyed: RDD[(Long, InternalRow)], p: Int): RDD[InternalRow] = {
+    val partitionId = HashPartitioning(Seq(BoundReference(0, LongType, nullable = false)), p).partitionIdExpression
+    keyed.partitionBy(new Partitioner {
+      def numPartitions: Int = p
+      def getPartition(key: Any): Int = partitionId.eval(InternalRow(key)).asInstanceOf[Int]
+    }).values
+  }
+
+  /** A local `(src, nsalt)` frame of collected hubs. */
+  private def hubFrame(spark: SparkSession, hubs: Seq[(Long, Int)]): DataFrame =
+    Bridge.localFrame(spark, hubs.map { case (v, n) => InternalRow(v, n) },
+      StructType(Seq(StructField("src", LongType, nullable = false), StructField("nsalt", IntegerType, nullable = false))))
+
+  /** A never-NULL Long `id` column. */
+  private val idSchema = StructType(Seq(StructField("id", LongType, nullable = false)))
+
+  /** Never-NULL Long `src` and `dst` columns. */
+  private val edgeSchema = StructType(Seq("src", "dst").map(StructField(_, LongType, nullable = false)))
 
   /** `c`, declared never NULL, for a column the kernel knows holds no NULL:
     * plans then carry no NULL checks or inferred NULL filters for it. */
@@ -414,14 +453,13 @@ object GraphOps {
     * over 0 .. nsalt-1. Non-hubs have nsalt 1. */
   private final case class HubSalt(partitions: Int, rows: Long) {
     val threshold: Long = math.max(1000L, rows / partitions / 4)
-    def nsalt(deg: Column): Column = least(lit(partitions.toLong), (deg / threshold) + 1L).cast("int")
     def nsalt(deg: Long): Int = math.min(partitions.toLong, deg / threshold + 1L).toInt
-    /** `(src, nsalt)` for the hubs of a `(src, deg)` table. */
-    def hubs(degrees: DataFrame): DataFrame =
-      degrees.filter(col("deg") > threshold).select(col("src"), nsalt(col("deg")).as("nsalt"))
   }
   private object HubSalt {
     def key(nsalt: Column): Column = pmod(hash(col("dst")), nsalt)
+    /** The same sub-key for a row's `dst` (Spark's `hash` is Murmur3 with
+      * seed 42). */
+    def key(dst: Long, nsalt: Int): Int = Math.floorMod(Murmur3_x86_32.hashLong(dst, 42), nsalt)
     def fanOut(nsalt: Column): Column = explode(sequence(lit(0), nsalt - 1)).as("salt")
   }
 
@@ -514,7 +552,10 @@ object GraphOps {
    *  - the two keys of [[CodegenPolicy]]: with stage ids in class names one
    *    `kernels` benchmark cycle needed about 360 codegen cache entries, so
    *    every cycle recompiled all of them and ran freshly loaded,
-   *    still-interpreted classes.
+   *    still-interpreted classes. Without them it needed 182, as the
+   *    kernels built their set-up tables as generated pipelines; built as
+   *    RDD reductions over internal rows, once each, it needs 99 of the
+   *    100 Spark keeps.
    * The kernel sets its shuffle width through [[width]]. Closing restores
    * all four keys and unpersists every frame registered through [[cache]],
    * on success and on failure alike; a frame the returned result still
@@ -533,6 +574,31 @@ object GraphOps {
 
     /** Kernel-internal shuffle width for every exchange the loop plans. */
     def width(p: Int): Unit = spark.conf.set(WidthKey, p.toLong)
+
+    /**
+     * `table`, a static table every superstep joins on `keys`, as that join
+     * reads it: broadcast when its size (known, as it is built before the
+     * loop) fits the session's broadcast threshold, else laid out once at
+     * width `p` by `keys` and sorted, so each superstep's sort-merge join
+     * re-sorts only the state side. Left to per-superstep estimates, the
+     * first superstep of a block broadcast whichever side looked smaller and
+     * planned other code than the rest. The layout is a columnar cache, not
+     * kept rows: a row-format scan of PageRank's edge leaf was measured
+     * ~1 s/block slower at sf0.1. `laidOut`, when given, is the same table
+     * over rows already laid out by `keys` at width `p` and declared so,
+     * which spares the layout its exchange; the broadcast reads the
+     * undeclared `table`, as a declared layout keeps a block's later
+     * supersteps from reusing its first superstep's broadcast.
+     */
+    def joinSide(table: DataFrame, p: Int, keys: Seq[String], laidOut: => Option[DataFrame] = None): DataFrame =
+      if (table.queryExecution.optimizedPlan.stats.sizeInBytes <= SQLConf.get.autoBroadcastJoinThreshold)
+        broadcast(table)
+      else {
+        val byKeys = laidOut.getOrElse(table.repartition(p, keys.map(col): _*))
+        val laid = cache(byKeys.sortWithinPartitions(keys.map(col): _*))
+        laid.count()
+        laid
+      }
 
     private var explained = false
 
@@ -568,7 +634,9 @@ object GraphOps {
      *    marker — the reference's `stop` (Task.java:207-217) as a
      *    cooperative cancel that leaves the run resumable from any node
      *    sharing the FS; markers older than the caller's watermark are
-     *    stale and ignored;
+     *    stale and ignored. Last, it frees the state the boundary
+     *    supersedes, when that state is kept rows of its own (a start
+     *    state that is a plan over other tables, as HITS's, is not);
      *  - every step writes one [[SuperstepMetric]] row, with `edges`,
      *    `partitions` and, at a boundary, `delta` read as the row is
      *    written (by name: CC's edge count changes every round).
@@ -606,6 +674,8 @@ object GraphOps {
             }
             stopped = stopFlag.exists(f => fsModifiedSince(spark, f, stopAfterMs, stopSeqSeen))
           }
+          // nothing reads the superseded state once this one is built
+          free(last)
           last = state
         }
         metrics += SuperstepMetric(kernel, n, (System.nanoTime() - t0) / 1000000L, edges, partitions,
@@ -624,13 +694,20 @@ object GraphOps {
     * step it ran, the step reached and whether a STOP marker ended it. */
   private final case class Steps(state: DataFrame, metrics: Seq[SuperstepMetric], step: Int, stopped: Boolean)
 
-  /** Frames persisted until [[release]], which unpersists them newest
-    * first: uncaching a frame re-plans every still-registered, never-built
-    * cache derived from it. */
+  /** Frames persisted and rows kept until [[release]], which unpersists
+    * the frames newest first (uncaching a frame re-plans every
+    * still-registered, never-built cache derived from it) and frees the
+    * rows. */
   private class Cached {
     private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    private val rows = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
     def cache(df: DataFrame): DataFrame = { frames += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
-    def release(): Unit = frames.reverseIterator.foreach(_.unpersist(false))
+    /** `r` persisted until [[release]]. */
+    def keep[T](r: RDD[T]): RDD[T] = { rows += r; r.persist(StorageLevel.MEMORY_AND_DISK) }
+    def release(): Unit = {
+      frames.reverseIterator.foreach(_.unpersist(false))
+      rows.foreach(Bridge.free)
+    }
   }
 
   /** `body` with a [[Cached]] released when it returns or fails: the
@@ -663,11 +740,10 @@ object GraphOps {
    */
   /** `stopped = true` means a cooperative STOP ended the run BEFORE
     * convergence: `components` is the partially-contracted state (valid to
-    * resume from, NOT final component assignments). `components` reads the
-    * vertex set and the last round's edge state, both kept by the run as
-    * local-checkpoint rows: the caller frees them with [[release]] once it
-    * has consumed the labels; a caller that drops the result leaves them to
-    * the context cleaner. */
+    * resume from, NOT final component assignments). `components` is kept by
+    * the run as local-checkpoint rows: the caller frees them with
+    * [[release]] once it has consumed the labels; a caller that drops the
+    * result leaves them to the context cleaner. */
   final case class CcResult(components: DataFrame, metrics: Seq[SuperstepMetric], rounds: Int,
                             stopped: Boolean = false)(unpersistKept: () => Unit) {
     /** Unpersists what this run kept. `components` must not be used
@@ -675,10 +751,15 @@ object GraphOps {
     def release(): Unit = unpersistKept()
   }
 
-  /** The rows behind a locally checkpointed or persisted-row frame. */
-  private def keptRows(df: DataFrame): RDD[_] =
-    df.queryExecution.logical.collectFirst { case l: LogicalRDD => l.rdd }
-      .getOrElse(throw new IllegalArgumentException("not a frame over kept rows"))
+  /** The rows behind `df` when it is a local checkpoint or a frame over
+    * kept rows; a frame that is a plan over such rows has none of its own. */
+  private def keptRows(df: DataFrame): Option[RDD[InternalRow]] = df.queryExecution.logical match {
+    case l: LogicalRDD => Some(l.rdd)
+    case _             => None
+  }
+
+  /** Frees the rows behind `df` ([[keptRows]]), if it has its own. */
+  private def free(df: DataFrame): Unit = keptRows(df).foreach(Bridge.free)
 
   def connectedComponents(spark: SparkSession, edges: DataFrame, maxIter: Int = 50): DataFrame =
     connectedComponentsResult(spark, edges, maxIter).components
@@ -697,16 +778,10 @@ object GraphOps {
                                 stopSeqSeen: Long = -1L): CcResult =
     inRun(spark, "cc", checkpointDir, stopFlag, stopAfterMs, stopSeqSeen) { run =>
     import spark.implicits._
-    // cache the raw projection: the vertex set and the start state both
-    // read the source ONCE; released below once both are materialized
-    val input = run.cache(edges.select($"src".cast("long"), $"dst".cast("long")))
-    // kept rows, materialized by their count: the result's labels read them
-    // after the run returns, and nothing the result reads is registered in
-    // the session's cache, so a caller that drops the result (the
-    // `connectedComponents` facade) leaves them to the context cleaner
-    val vertices = input.select(explode(array($"src", $"dst")).as("id"))
-      .distinct().localCheckpoint(false)
-    vertices.count()
+    // The loop-free start edges and the vertex set the labels are read
+    // over are RDD operations over the edges' internal rows, which generate
+    // no code beyond the scan.
+    val rows = edgeRows(edges)
 
     // The star-round equi-joins are hinted shuffled-hash (guide §3.1): the
     // build sides (mins / withMin) hold ONE row per src key, so a
@@ -749,11 +824,18 @@ object GraphOps {
     // to 2E, so #keys with deg > thr <= 2E/thr, at most 4*roundP rows since
     // thr >= E/(2*roundP) — partition-bounded at any scale, the IVF-centroid
     // size class), then a local frame the per-round broadcast builds from
-    // with zero extra distributed jobs.
-    def hubSnapshot(hubTable: DataFrame, nEdges: Long, thr: Long): Option[DataFrame] = {
-      val rows = BoundedCollect(hubTable.as[(Long, Int)], 2L * nEdges / thr,
-        s"2E / hubThreshold (2 * $nEdges / $thr)")
-      if (rows.isEmpty) None else Some(rows.toSeq.toDF("src", "nsalt"))
+    // with zero extra distributed jobs. sym's kept rows are laid out by src,
+    // so each partition counts its own srcs' degrees: no shuffle, and no
+    // generated code, whatever the round's threshold.
+    def hubSnapshot(sym: DataFrame, salt: HubSalt, nEdges: Long): Option[DataFrame] = {
+      val thr = salt.threshold
+      val hubs = keptRows(sym).get.mapPartitions { it =>
+        val deg = scala.collection.mutable.HashMap.empty[Long, Long]
+        it.foreach(r => deg(r.getLong(0)) = deg.getOrElse(r.getLong(0), 0L) + 1L)
+        deg.iterator.collect { case (v, d) if d > thr => (v, salt.nsalt(d)) }
+      }
+      val rows = BoundedCollect(hubs, 2L * nEdges / thr, s"2E / hubThreshold (2 * $nEdges / $thr)")
+      if (rows.isEmpty) None else Some(hubFrame(spark, rows.toSeq))
     }
 
     // small-star: orient every edge high->low; every low neighbor (and u
@@ -795,40 +877,44 @@ object GraphOps {
     // re-executes once per reference — a multiplicative blowup per chained
     // round that ReuseExchange only partly collapses.
     //
-    // Converged when the edge set is unchanged (order-independent,
-    // overflow-free digest — ANSI mode forbids wrapping sums); the previous
-    // round's digest is remembered, not recomputed (one agg job per round).
-    // An empty start state digests as (0, 0), so it converges at once.
-    def digest(df: DataFrame) = df
-      .agg(count(lit(1)), expr("coalesce(bit_xor(xxhash64(src, dst)), 0L)")).first()
-    var dPrev = Row(0L, 0L)
+    // Converged when the edge set is unchanged: the digest is the row count
+    // and the xor of xxhash64(src, dst) over the state's kept rows
+    // (order-independent and overflow-free), reduced without generated
+    // code; the previous round's digest is remembered, not recomputed (one
+    // job per round). An empty start state digests as (0, 0), so it
+    // converges at once.
+    def digest(e: DataFrame) = keptRows(e).get.aggregate((0L, 0L))(
+      (a, r) => (a._1 + 1L, a._2 ^ XXH64.hashLong(r.getLong(1), XXH64.hashLong(r.getLong(0), 42L))),
+      (a, b) => (a._1 + b._1, a._2 ^ b._2))
+    var dPrev = (0L, 0L)
 
     // The start state is the loop-free input as it is: every round shuffles
     // its input by src anyway, and round 1's distinct collapses repeated
     // edges. Like every round's state it is materialized by its digest.
     var edgePartitions = 0
     def start(restored: Option[DataFrame]) = {
-      val e = edgeState(restored.getOrElse(input.filter($"src" =!= $"dst"))).localCheckpoint(false)
-      edgePartitions = e.rdd.getNumPartitions
+      val e = restored.fold(Bridge.dataFrame(spark, rows.flatMap(r =>
+        if (r.isNullAt(0) || r.isNullAt(1) || r.getLong(0) == r.getLong(1)) None
+        else Some(InternalRow(r.getLong(0), r.getLong(1)))).localCheckpoint(), edgeSchema))(
+        edgeState(_).localCheckpoint(false))
+      edgePartitions = keptRows(e).fold(0)(_.getNumPartitions)
       e
     }
 
     // null = no snapshot yet (round 1 probes eagerly); None = probed, hub-free
     var hubsForRound: Option[DataFrame] = null
-    // what follows once a state is built: the start state's input is
-    // released; a round takes the next round's hub snapshot and releases
-    // its sym
-    var afterBuilt: () => Unit = () => input.unpersist(false)
+    // what follows once a round's state is built: it takes the next round's
+    // hub snapshot and releases its sym
+    var afterBuilt: () => Unit = () => ()
     def step(e: DataFrame) = {
-      // ONE combinable aggregation per round serves BOTH large-star's min
-      // table and the hub detector: sym.groupBy(src) yields m = min(N(u) ∪
-      // {u}) and the symmetric degree in the same pass (the hub table must
-      // be refreshed from the CURRENT state each round — hot roots are
-      // EMERGENT in CC: a giant component's root accumulates a neighborhood
-      // proportional to |C| as contraction proceeds). A separate degree job
-      // here was a full extra O(2E) shuffle per round — measured ~15% of
-      // round wall time at sf0.1.
-      val nEdges = dPrev.getLong(0)
+      // The hub table must be refreshed from the CURRENT state each round —
+      // hot roots are EMERGENT in CC: a giant component's root accumulates a
+      // neighborhood proportional to |C| as contraction proceeds. Degrees
+      // are counted over sym's kept rows, partition by partition
+      // ([[hubSnapshot]]): a degree aggregation with its own exchange was a
+      // full extra O(2E) shuffle per round — measured ~15% of round wall
+      // time at sf0.1.
+      val nEdges = dPrev._1
       // CONTRACTION-AWARE partitioning (r4 ask #3): star contraction shrinks
       // the edge set geometrically (sf0.1: 590k -> 208k -> 50k in two
       // rounds), but a fixed 32-way layout keeps paying full per-stage
@@ -843,57 +929,65 @@ object GraphOps {
       run.width(roundP)
       val salt = HubSalt(roundP, 2L * nEdges)
       // ONE exchange of the symmetrized table serves BOTH consumers (guide
-      // §2.4): the min/degree aggregation and the large-star join each need
-      // sym clustered by src. It is cached for the round, because the
-      // aggregation also feeds the hub snapshot's collect, a separate job:
-      // an uncached sym was shuffled once per job that read it.
-      val sym = run.cache(e.filter($"src" =!= $"dst")
+      // §2.4): the min aggregation and the large-star join each need sym
+      // clustered by src. It is kept for the round, because the hub
+      // snapshot's collect, a separate job, also reads it: an unkept sym was
+      // shuffled once per job that read it. Its rows keep the exchange's
+      // layout.
+      val sym = e.filter($"src" =!= $"dst")
         .select(explode(array(struct($"src", $"dst"), struct($"dst".as("src"), $"src".as("dst")))).as("p"))
         .select($"p.src", $"p.dst")
-        .repartition(roundP, $"src"))
-      val minsDeg = sym.groupBy($"src")
-        .agg(least(min($"dst"), first($"src")).as("m"), count(lit(1)).as("deg"))
-      val hubTable = salt.hubs(minsDeg)
+        .repartition(roundP, $"src")
+        .localCheckpoint(false)
+      val mins = sym.groupBy($"src").agg(least(min($"dst"), first($"src")).as("m"))
       // Hub table freshness: round 1 collects its snapshot eagerly (which
       // materializes sym — the input graph's junit/lodash hubs must be
       // salted from the very first join) and hands the same rows to round 2;
       // later rounds use the snapshot collected from the PREVIOUS round's
-      // cached sym once the round's state is built. The lag is one round and
+      // kept sym once the round's state is built. The lag is one round and
       // salting is semantically NEUTRAL (any nsalt assignment yields the
       // same join rows), so only balance can lag, never results — and it
       // removes the per-round eager probe job that was ~0.5 s/round of pure
       // probe cost at sf0.1. Every round's hub table is such a local
       // snapshot, so rounds with the same hub state plan the same shape.
       val firstRound = hubsForRound == null
-      val hubs = if (firstRound) hubSnapshot(hubTable, nEdges, salt.threshold) else hubsForRound
+      val hubs = if (firstRound) hubSnapshot(sym, salt, nEdges) else hubsForRound
       afterBuilt = () => {
-        hubsForRound = if (firstRound) hubs else hubSnapshot(hubTable, nEdges, salt.threshold)
-        sym.unpersist(false)
+        hubsForRound = if (firstRound) hubs else hubSnapshot(sym, salt, nEdges)
+        free(sym)
       }
-      edgeState(smallStar(largeStar(sym, minsDeg.select($"src", $"m"), hubs)))
+      edgeState(smallStar(largeStar(sym, mins, hubs)))
     }
 
     def converged(prev: Option[DataFrame], e: DataFrame) = {
       val d = digest(e)
       afterBuilt()
-      // the superseded state: nothing reads it once the next round is built
-      prev.foreach(p => Bridge.free(keptRows(p)))
       val same = d == dPrev
       dPrev = d
       same
     }
 
-    val Steps(e, metrics, rounds, stopped) = run.loop(maxIter, checkpointEvery, dPrev.getLong(0),
+    val Steps(e, metrics, rounds, stopped) = run.loop(maxIter, checkpointEvery, dPrev._1,
       edgePartitions, start, step, converged, chain = false)
 
     // At the fixpoint every edge points v -> root(min id of v's component);
     // roots and isolated vertices label themselves. (A stopped run's labels
-    // are the PARTIAL contraction — flagged via `stopped`.)
-    val components = vertices
-      .join(e.select($"src".as("id"), $"dst".as("c")), Seq("id"), "left")
-      .select($"id", coalesce($"c", $"id").as("component"))
-    val kept = Seq(vertices, e).map(keptRows)
-    CcResult(components, metrics, rounds, stopped)(() => kept.foreach(Bridge.free))
+    // are the PARTIAL contraction — flagged via `stopped`.) The labels are
+    // one RDD join of the vertex set (every non-NULL end of the input) with
+    // the last state's rows, kept rows materialized by their count; nothing
+    // the result reads is registered in the session's cache, so a caller
+    // that drops the result (the `connectedComponents` facade) leaves them
+    // to the context cleaner.
+    val labels = rows.flatMap(r => Seq(0, 1).collect { case i if !r.isNullAt(i) => (r.getLong(i), ()) })
+      .distinct()
+      .leftOuterJoin(keptRows(e).get.map(r => (r.getLong(0), r.getLong(1))))
+      .map { case (id, (_, c)) => InternalRow(id, c.getOrElse(id)) }
+      .localCheckpoint()
+    labels.count()
+    free(e)
+    val components = Bridge.dataFrame(spark, labels,
+      StructType(Seq("id", "component").map(StructField(_, LongType, nullable = false))))
+    CcResult(components, metrics, rounds, stopped)(() => Bridge.free(labels))
   }
 
   // ------------------------------------------------------ label propagation
@@ -924,56 +1018,82 @@ object GraphOps {
                              stopSeqSeen: Long = -1L): LpResult =
     inRun(spark, "lp", checkpointDir, stopFlag, stopAfterMs, stopSeqSeen) { run =>
     import spark.implicits._
+    // The set-up is RDD operations over the edges' internal rows, which
+    // generate no code of their own, and ONE exchange that lays out the
+    // deduplicated, symmetrized edges by src. A row with a NULL end is no
+    // edge.
+    val pairs = edgeRows(edges).flatMap(r =>
+      if (r.isNullAt(0) || r.isNullAt(1)) None else Some((r.getLong(0), r.getLong(1))))
     // sizing count + reserved-id guard in ONE job over the raw (pre-distinct)
-    // union: the winner aggregate below negates labels
+    // edges: the winner aggregate below negates labels
     // (max(struct(cnt, -label))), and negating Long.MinValue overflows — so
     // that id (never a legitimate dense vertex id) is rejected up front
-    // rather than silently mis-ranked. The raw count only SIZES partitions
-    // (kernelPartitions), so the pre-dedup figure is fine — and it avoids
-    // materializing a separate distinct-ed table just to count it.
-    val symRaw = edges.select($"src".cast("long"), $"dst".cast("long"))
-      .union(edges.select($"dst".cast("long").as("src"), $"src".cast("long").as("dst")))
-    val eStats = symRaw.agg(count(lit(1)),
-      max($"src" === Long.MinValue || $"dst" === Long.MinValue)).first()
-    val edgeCount = eStats.getLong(0)
-    require(eStats.isNullAt(1) || !eStats.getBoolean(1),
-      s"labelPropagation reserves vertex id ${Long.MinValue} (label negation " +
-        "in the tie-break aggregate would overflow); the input graph contains it")
+    // rather than silently mis-ranked. The raw count of the symmetrized
+    // edges (two per edge) only SIZES partitions (kernelPartitions), so the
+    // pre-dedup figure is fine — and it needs no deduped table first.
+    val (rawEdges, hasMin) = pairs.aggregate((0L, false))(
+      { case ((n, m), (s, d)) => (n + 1, m || s == Long.MinValue || d == Long.MinValue) },
+      { case (a, b) => (a._1 + b._1, a._2 || b._2) })
+    val edgeCount = 2 * rawEdges
+    require(!hasMin, s"labelPropagation reserves vertex id ${Long.MinValue} (label negation " +
+      "in the tie-break aggregate would overflow); the input graph contains it")
     val shufflePartitions = kernelPartitions(run.confWidth, edgeCount)
     // aggregation exchanges inside the loop must match the edge layout's
     // width, or EnsureRequirements inserts an extra per-superstep exchange
     // to reconcile them
     run.width(shufflePartitions)
 
-    // ONE exchange builds the deduped, src-partitioned, src-sorted layout:
-    // repartition by src first, then dedup — hashpartitioning(src) satisfies
-    // the (src, dst) clustering the dedup aggregate needs (all duplicates of
-    // a pair share the src key), so the distinct runs in place with no
-    // second exchange (guide §2.4: two operations keyed the same way share
-    // one exchange).
-    val sym0 = run.cache(symRaw
-      .repartition(shufflePartitions, $"src")
-      .dropDuplicates("src", "dst")
-      .sortWithinPartitions($"src"))
+    // Repartition by src first, then dedup: all duplicates of a pair share
+    // the src key, so each partition drops its own repeats, with no second
+    // exchange (guide §2.4: two operations keyed the same way share one
+    // exchange). The rows are kept in that layout, so every vertex's edges
+    // (= every distinct sym src = every distinct sym dst) share a partition.
+    val sym = run.keep(Bridge.dataFrame(spark, pairs.flatMap { case (s, d) => Iterator(InternalRow(s, d), InternalRow(d, s)) },
+      edgeSchema).repartition(shufflePartitions, $"src").queryExecution.toRdd.mapPartitions { it =>
+      val adjacency = scala.collection.mutable.LongMap.empty[scala.collection.mutable.LongMap[Unit]]
+      it.foreach(r => adjacency.getOrElseUpdate(r.getLong(0), scala.collection.mutable.LongMap.empty[Unit])(r.getLong(1)) = ())
+      adjacency.iterator.flatMap { case (s, ds) => ds.keysIterator.map(InternalRow(s, _)) }
+    })
+    // each src of one partition's rows with its degree
+    def degrees(rows: Iterator[InternalRow]) = {
+      val deg = scala.collection.mutable.LongMap.empty[Long]
+      rows.foreach(r => deg(r.getLong(0)) = deg.getOrElse(r.getLong(0), 0L) + 1L)
+      deg
+    }
 
     // Hub salting, same scheme as pageRank: a symmetrized hub's adjacency
-    // otherwise sits in ONE partition of every superstep's join. The degree
-    // aggregation reads the already-partitioned sym0 layout (exchange
-    // reuse: groupBy(src) over hashpartitioning(src) shuffles nothing).
-    val lpHubs = run.cache(HubSalt(shufflePartitions, edgeCount)
-      .hubs(sym0.groupBy($"src").agg(count(lit(1)).as("deg"))))
-    val haveHubs = lpHubs.count() > 0
+    // otherwise sits in ONE partition of every superstep's join. ONE job
+    // over the kept rows gives the table's size and its hubs (their degrees
+    // sum to at most E, so #hubs <= E/threshold).
+    val salt = HubSalt(shufflePartitions, edgeCount)
+    val (symCount, hubList) = sym.mapPartitions { it =>
+      val deg = degrees(it)
+      Iterator((deg.valuesIterator.sum, deg.iterator.collect { case (v, d) if d > salt.threshold => (v, salt.nsalt(d)) }.toList))
+    }.reduce((a, b) => (a._1 + b._1, a._2 ++ b._2))
+    require(hubList.size <= edgeCount / salt.threshold,
+      s"${hubList.size} hubs exceed their bound E / hubThreshold ($edgeCount / ${salt.threshold})")
+    val haveHubs = hubList.nonEmpty
+    val lpHubs = hubFrame(spark, hubList)
 
-    // hub-free graphs reuse the sym0 layout as-is (no second shuffle+cache);
-    // hubby graphs re-layout once with the salt key
-    val sym = (if (!haveHubs) sym0.withColumn("salt", lit(0))
-    else run.cache(sym0.join(broadcast(lpHubs), Seq("src"), "left")
-      .select($"src", $"dst", HubSalt.key(coalesce($"nsalt", lit(1))).as("salt"))
-      .repartition(shufflePartitions, $"src", $"salt")
-      .sortWithinPartitions($"src", $"salt")))
-    if (haveHubs) { sym.count(); sym0.unpersist(false) }
+    // The adjacency every superstep joins: on hubby graphs each edge also
+    // carries its salt (0 for a non-hub's edges).
+    val hubSalt = hubList.toMap
+    val keys = if (haveHubs) Seq("src", "salt") else Seq("src")
+    def symTable(hashedBy: Seq[String]) = Bridge.dataFrame(spark, sym, edgeSchema, Some(BigInt(symCount)), hashedBy)
+    val symSide =
+      if (!haveHubs) run.joinSide(symTable(Nil), shufflePartitions, keys, Some(symTable(keys)))
+      else run.joinSide(Bridge.dataFrame(spark, sym.map(r => InternalRow(r.getLong(0), r.getLong(1),
+          HubSalt.key(r.getLong(1), hubSalt.getOrElse(r.getLong(0), 1)))),
+        StructType(edgeSchema :+ StructField("salt", IntegerType, nullable = false)), Some(BigInt(symCount))),
+        shufflePartitions, keys)
 
-    val vertices = sym.select($"src".as("id")).distinct()
+    // The start state, every vertex labeled with itself, kept rows
+    // materialized by their count.
+    def start(restored: Option[DataFrame]) = restored.fold {
+      val labels = sym.mapPartitions(degrees(_).keysIterator.map(id => InternalRow(id, id))).localCheckpoint()
+      labels.count()
+      Bridge.dataFrame(spark, labels, StructType(Seq("id", "label").map(StructField(_, LongType, nullable = false))))
+    }(_.localCheckpoint(true))
 
     // supersteps chain lazily between boundaries, cut+materialized only at
     // checkpoints — same fixed-cost reasoning as pageRank
@@ -988,7 +1108,7 @@ object GraphOps {
       // direct groupBy(id, label) route paid a second full exchange to get
       // from (id, label) hash space to id hash space (guide §2.4).
       val msgs = saltedLabels
-        .join(sym, if (haveHubs) Seq("src", "salt") else Seq("src"))
+        .join(symSide, keys)
         .select($"dst".as("id"), $"label")
         .repartition(shufflePartitions, $"id")
       val counts = msgs.groupBy($"id", $"label").agg(count(lit(1)).as("cnt"))
@@ -1004,12 +1124,15 @@ object GraphOps {
       // superstep, turning the lazily-chained block into a 2^k-subtree plan
       // (measured: the 3-superstep q18 block job alone was 7-8.5 s at
       // sf0.1; linear chaining is the pageRank lesson, guide §1.2-1).
+      //
+      // Every id's winner exists, so its label is never NULL, and saying so
+      // keeps NULL checks out of the next superstep's code.
       counts.groupBy($"id")
         .agg(max(struct($"cnt", (-$"label").as("nl"))).as("m"))
-        .select($"id", (-$"m.nl").as("label"))
+        .select($"id", notNull(-$"m.nl").as("label"))
     }
     val Steps(labels, metrics, steps, _) = run.loop(iterations, checkpointEvery, edgeCount,
-      sym.rdd.getNumPartitions, _.getOrElse(vertices.withColumn("label", $"id")).localCheckpoint(true), step)
+      shufflePartitions, start, step)
     LpResult(labels.select($"id", $"label"), metrics, steps)
   }
 
@@ -1025,8 +1148,10 @@ object GraphOps {
   def triangleCount(spark: SparkSession, edges: DataFrame): (Long, DataFrame) =
     // nothing is cached: a caller that also consumes the per-vertex frame
     // re-runs the close, which beats leaving the close persisted for the
-    // session's lifetime
-    (inRun(spark, "triangles")(_ => trianglesPlan(spark, edges).count()), trianglesPerVertex(spark, edges))
+    // session's lifetime. The total counts the close's rows as an RDD, so
+    // no count aggregate is planned or generated after the close.
+    (inRun(spark, "triangles")(_ => trianglesPlan(spark, edges).queryExecution.toRdd.count()),
+      trianglesPerVertex(spark, edges))
 
   /** Per-vertex triangle counts WITHOUT the eager total — a lazy plan, no
     * job forced, so callers that only want the frame (q17) don't pay the
@@ -1043,11 +1168,15 @@ object GraphOps {
   }
 
   /** Value-canonical undirected simple edge set `(u < v)`, deduped. Shared
-    * by the triangle close, clustering coefficient, and k-core peeling. */
+    * by the triangle close, clustering coefficient, and k-core peeling.
+    * Both ends are declared never NULL (the `src =!= dst` filter drops a
+    * row with a NULL end): a plan that reads the set several times then
+    * infers no NULL filter on one read that another lacks, so every read is
+    * the same plan and shares one exchange. */
   private[graph] def undirected(edges: DataFrame): DataFrame =
     edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
+      .select(notNull(least(col("src"), col("dst"))).as("u"), notNull(greatest(col("src"), col("dst"))).as("v"))
       .distinct()
 
   /** The oriented-wedge triangle close as a pure lazy plan of rows
@@ -1056,7 +1185,7 @@ object GraphOps {
     import spark.implicits._
     val und = undirected(edges)
 
-    val deg = und.select($"u".as("id")).union(und.select($"v".as("id")))
+    val deg = und.select(explode(array($"u", $"v")).as("id"))
       .groupBy($"id").agg(count(lit(1)).as("deg"))
 
     // Orient by (degree, id).
@@ -1154,7 +1283,7 @@ object GraphOps {
         .withColumn("dist", lit(hop))
       val grown = settled.union(next).localCheckpoint(false)
       val n = grown.count()
-      Bridge.free(keptRows(settled))
+      free(settled)
       settled = grown
       if (n == settledCount) done = true
       else {
@@ -1210,7 +1339,7 @@ object GraphOps {
           .join(surv.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
           .localCheckpoint(false)
         val n = next.count()
-        Bridge.free(keptRows(und))
+        free(und)
         und = next
         rounds += 1
         if (n == nEdges) converged = true
@@ -1222,7 +1351,7 @@ object GraphOps {
         .localCheckpoint(false)
       core.count()
       (core, rounds)
-    } finally Bridge.free(keptRows(und))
+    } finally free(und)
   }
 
   /**
@@ -1351,7 +1480,7 @@ object GraphOps {
           .join(adj, Seq("src", "idx"))
           .select($"seed", $"walk", lit(t).as("step"), $"dst".as("vertex"))
           .localCheckpoint(false)
-        if (next.count() == 0L) { Bridge.free(keptRows(next)); drained = true }
+        if (next.count() == 0L) { free(next); drained = true }
         else { levels += next; cur = next }
         t += 1
       }

@@ -14,9 +14,13 @@ import scala.collection.mutable
  * private job group and reports the group's structural work — jobs, stages,
  * tasks, shuffle write — plus per-stage task durations, whose max/median
  * within a heavy stage is the straggler measure ("no straggler" = < 4), and
- * the number of classes Spark compiled for generated code during the run.
- * Identical input gives identical job/stage/task counts, so they can be
- * compared across runs where wall time on a shared host cannot.
+ * its generated code: the run starts from an empty codegen cache, so
+ * `compiles` is every class it compiled and `entries` the classes the
+ * cache holds after it. The two are equal when the run's working set fits
+ * the cache (`spark.sql.codegen.cache.maxEntries`, 100 by default); fewer
+ * entries than compiles means the run evicted classes and compiled them
+ * again. Identical input gives identical job/stage/task counts, so they can
+ * be compared across runs where wall time on a shared host cannot.
  *
  * Usage: runMain graft.tools.Probe <target> <cores> <size>
  *   target  pagerank | cc | lp | scc | resolve | dedup
@@ -28,10 +32,12 @@ object Probe {
 
   /** One probe run: the job group's job count, each completed stage's
     * shuffle write and each stage's task durations (sorted), the classes
-    * compiled for generated code (the whole JVM's count, so a concurrent
-    * query elsewhere adds to it), and the target's own summary line. */
+    * compiled for generated code from an empty cache and the cache's entries
+    * after the run (the whole JVM's counts, so a concurrent query elsewhere
+    * adds to them), and the target's own summary line. */
   final case class Report(wallSec: Double, jobs: Int, stageShuffleBytes: Map[Int, Long],
-                          stageTaskMs: Map[Int, Vector[Long]], compiles: Long, summary: String) {
+                          stageTaskMs: Map[Int, Vector[Long]], compiles: Long, entries: Long,
+                          summary: String) {
     def stages: Int = stageShuffleBytes.size
     def tasks: Int = stageTaskMs.valuesIterator.map(_.size).sum
     def shuffleWriteBytes: Long = stageShuffleBytes.values.sum
@@ -136,23 +142,26 @@ object Probe {
     } finally corpus.unpersist()
   }
 
-  /** Runs `body` under a fresh job group with a [[Work]] listener attached,
-    * drains the listener bus, then reads the listener and removes it.
-    * `body` returns its summary as a function of the finished report. */
+  /** Runs `body` under a fresh job group with a [[Work]] listener attached
+    * and an empty codegen cache, drains the listener bus, then reads the
+    * listener and removes it. `body` returns its summary as a function of
+    * the finished report. */
   private def measure(spark: SparkSession)(body: => Report => String): Report = {
     val sc = spark.sparkContext
     val work = new Work(s"graft-probe-${java.util.UUID.randomUUID}")
     sc.addSparkListener(work)
     try {
       sc.setJobGroup(work.group, "graft.tools.Probe")
+      Bridge.invalidateCodegenCache()
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       val summarize = try body finally sc.clearJobGroup()
       val wall = (System.nanoTime() - t0) / 1e9
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      val entries = Bridge.codegenCacheEntries
       Bridge.drainListenerBus(sc)
       val r = Report(wall, work.jobs, work.stageShuffle.toMap,
-        work.taskMs.view.mapValues(_.sorted.toVector).toMap, compiles, "")
+        work.taskMs.view.mapValues(_.sorted.toVector).toMap, compiles, entries, "")
       r.copy(summary = summarize(r))
     } finally sc.removeSparkListener(work)
   }
@@ -194,7 +203,7 @@ object Probe {
     try {
       val r = run(spark, target, size)
       println(f"PROBE $target cores=$cores size=$size wall=${r.wallSec}%.1fs jobs=${r.jobs} " +
-        f"stages=${r.stages} tasks=${r.tasks} shuffleMB=${r.shuffleWriteBytes / 1e6}%.1f compiles=${r.compiles}")
+        f"stages=${r.stages} tasks=${r.tasks} shuffleMB=${r.shuffleWriteBytes / 1e6}%.1f compiles=${r.compiles} entries=${r.entries}")
       var worst = 0.0
       r.heavy.foreach { case (stage, ds) =>
         val med = math.max(1L, ds(ds.length / 2))

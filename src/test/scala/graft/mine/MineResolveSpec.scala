@@ -1,29 +1,12 @@
-package org.apache.spark {
-  import org.apache.spark.metrics.source.CodegenMetrics
-  import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+package graft.mine
 
-  /** The codegen class cache (`CodeGenerator`'s private cache of
-    * `private[spark]` type) and its compile counter. */
-  object CodegenCache {
-    def invalidate(): Unit = {
-      val cache = CodeGenerator.getClass.getDeclaredMethod("cache")
-      cache.setAccessible(true)
-      cache.invoke(CodeGenerator).asInstanceOf[org.apache.spark.util.NonFateSharingCache[_, _]].invalidateAll()
-    }
-    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-  }
-}
-
-package graft.mine {
-
-import graft.SparkTestHarness
+import graft.{CodegenCache, SparkTestHarness}
 import graft.gen.SyntheticRepoFiles
 import graft.graph.GraphOps
 import graft.manifest.ManifestParser
 import graft.model._
 import graft.resolve.ResolveJob
 import graft.versionrange.Resolvers
-import org.apache.spark.CodegenCache
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MapType
@@ -74,15 +57,14 @@ class MineResolveSpec extends AnyFunSuite {
     // The input is an RDD scan, as a file source would be: the optimizer
     // folds work into a local relation's rows on the driver.
     val input = filesDs.toDF().localCheckpoint(true).as[RepoFile]
-    CodegenCache.invalidate()
-    val before = CodegenCache.compiles
-    val m = MineJob.run(spark, input)
-    Seq(m.packages.toDF(), m.artifacts.toDF(), m.apEdges.toDF(), m.ppEdges.toDF(), m.quarantine.toDF())
-      .foreach(digest)
-    digest(ResolveJob.run(spark, m.apEdges, m.artifacts).aaEdges.toDF())
-    digest(GraphOps.indexEdges(spark, m.ppEdges.toDF(), "srcPackageId", "dstPackageId")._1)
-    val compiled = CodegenCache.compiles - before
-    m.release()
+    val compiled = CodegenCache.compiledFromEmpty {
+      val m = MineJob.run(spark, input)
+      Seq(m.packages.toDF(), m.artifacts.toDF(), m.apEdges.toDF(), m.ppEdges.toDF(), m.quarantine.toDF())
+        .foreach(digest)
+      digest(ResolveJob.run(spark, m.apEdges, m.artifacts).aaEdges.toDF())
+      digest(GraphOps.indexEdges(spark, m.ppEdges.toDF(), "srcPackageId", "dstPackageId")._1)
+      m.release()
+    }
     assert(compiled <= 90, s"one ingest pass compiled $compiled classes")
   }
 
@@ -297,5 +279,4 @@ class MineResolveSpec extends AnyFunSuite {
     }
     assert(checked > 500, s"matrix unexpectedly small: $checked")
   }
-}
 }

@@ -52,8 +52,11 @@ package graft.tools {
       val (a, b) = (runs(0), runs(1))
       assert(a.jobs > 0)
       assert((a.jobs, a.stages, a.tasks) == (b.jobs, b.stages, b.tasks))
-      // the repeat reuses the classes the first run compiled
+      // each run starts from an empty codegen cache, so the repeat compiles
+      // no more than the first, and the cache holds at most what a run
+      // compiled
       assert(b.compiles <= a.compiles, s"second run compiled ${b.compiles}, first ${a.compiles}")
+      assert(a.entries > 0 && a.entries <= a.compiles, s"${a.entries} entries, ${a.compiles} compiles")
       assert(a.summary.startsWith("vertices=1000 components=1 "))
     }
 
