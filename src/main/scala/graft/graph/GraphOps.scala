@@ -27,9 +27,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   * whole block's execution. Per-row times are therefore meaningful only at
   * boundaries; their SUM over a run is always the true loop time.
   *
-  * The superstep loop of the iterative kernels (`KernelRun.loop`) writes
-  * every row: one per superstep of PageRank, LP and HITS, one per round of
-  * CC. */
+  * The loop of the iterative kernels (`KernelRun.loop`) writes every row:
+  * one per superstep, round, hop or iteration. */
 final case class SuperstepMetric(kernel: String, superstep: Int, millis: Long,
                                  edgesScanned: Long, partitions: Int, maxDelta: Double,
                                  boundary: Boolean = true)
@@ -430,6 +429,14 @@ object GraphOps {
     }).values
   }
 
+  /** One partition's `(src, dst)` rows, each pair once: every repeat of a
+    * pair shares its partition when the rows are laid out by src. */
+  private def distinctPairs(rows: Iterator[InternalRow]): Iterator[InternalRow] = {
+    val adjacency = scala.collection.mutable.LongMap.empty[scala.collection.mutable.LongMap[Unit]]
+    rows.foreach(r => adjacency.getOrElseUpdate(r.getLong(0), scala.collection.mutable.LongMap.empty[Unit])(r.getLong(1)) = ())
+    adjacency.iterator.flatMap { case (s, ds) => ds.keysIterator.map(InternalRow(s, _)) }
+  }
+
   /** A local `(src, nsalt)` frame of collected hubs. */
   private def hubFrame(spark: SparkSession, hubs: Seq[(Long, Int)]): DataFrame =
     Bridge.localFrame(spark, hubs.map { case (v, n) => InternalRow(v, n) },
@@ -539,9 +546,6 @@ object GraphOps {
   private val AqeKey = "spark.sql.adaptive.enabled"
   private val WidthKey = "spark.sql.shuffle.partitions"
 
-  /** The configured shuffle width that kernels size themselves against. */
-  private def confPartitions(spark: SparkSession): Int = spark.conf.get(WidthKey, "32").toInt
-
   /**
    * One iterative-kernel run: the session conf it changes and the frames it
    * caches, restored and released in ONE place. Opening the scope saves
@@ -556,24 +560,70 @@ object GraphOps {
    *    kernels built their set-up tables as generated pipelines; built as
    *    RDD reductions over internal rows, once each, it needs 99 of the
    *    100 Spark keeps.
-   * The kernel sets its shuffle width through [[width]]. Closing restores
-   * all four keys and unpersists every frame registered through [[cache]],
-   * on success and on failure alike; a frame the returned result still
-   * reads is kept as local-checkpoint rows instead.
+   * The kernel sets its shuffle width through [[width]] or [[edgeTable]].
+   * Closing restores all four keys, unpersists the frames registered
+   * through [[cache]] (newest first: uncaching a frame re-plans every
+   * still-registered, never-built cache derived from it) and frees the rows
+   * registered through [[keep]] or [[own]], on success and on failure; a
+   * frame the returned result still reads is kept as local-checkpoint rows.
    *
-   * The iterative kernels (PageRank, CC, LP, HITS) run their supersteps
-   * through [[loop]], which also takes the checkpoint and STOP-marker
-   * settings of the resumable ones (PageRank, CC, LP) from the scope.
+   * Every multi-action kernel runs in one. PageRank, CC, LP, HITS, SCC,
+   * BFS and k-core run their steps through [[loop]], which also takes the
+   * checkpoint and STOP-marker settings of the resumable ones (PageRank,
+   * CC, LP) from the scope; random walks and the triangle count do not.
    */
   private final class KernelRun(spark: SparkSession, kernel: String,
                                 checkpointDir: Option[String], stopFlag: Option[String],
-                                stopAfterMs: Long, stopSeqSeen: Long) extends Cached {
+                                stopAfterMs: Long, stopSeqSeen: Long) {
     private val restoreConf = CodegenPolicy.save(spark, Seq(AqeKey, WidthKey) ++ CodegenPolicy.Keys)
-    val confWidth: Int = confPartitions(spark)
+    /** The configured shuffle width that the kernel sizes itself against. */
+    val confWidth: Int = spark.conf.get(WidthKey, "32").toInt
     (AqeKey +: CodegenPolicy.Keys).foreach(spark.conf.set(_, "false"))
 
     /** Kernel-internal shuffle width for every exchange the loop plans. */
     def width(p: Int): Unit = spark.conf.set(WidthKey, p.toLong)
+
+    private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    private val rows = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    def cache(df: DataFrame): DataFrame = { frames += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
+    /** `r` persisted until the run closes. */
+    def keep[T](r: RDD[T]): RDD[T] = { rows += r; r.persist(StorageLevel.MEMORY_AND_DISK) }
+    /** `df`, whose kept rows ([[keptRows]]) the run frees when it closes. */
+    def own(df: DataFrame): DataFrame = { keptRows(df).foreach(rows += _); df }
+
+    /** The loop-free, deduplicated Long edge table of HITS, SCC, BFS and
+      * random walks. One count of the loop-free input rows (repeats
+      * included, as LP sizes) sets the kernel width; ONE exchange lays them
+      * out by src at it, and each partition drops its repeats. The rows are
+      * kept until the run closes and counted, which sizes them for the
+      * planner; RDD work, it generates no code. A NULL end is no edge. */
+    def edgeTable(edges: DataFrame): EdgeTable = {
+      val pairs = edgeRows(edges).flatMap(r =>
+        if (r.isNullAt(0) || r.isNullAt(1) || r.getLong(0) == r.getLong(1)) None else Some((r.getLong(0), r.getLong(1))))
+      val p = kernelPartitions(confWidth, pairs.count())
+      width(p)
+      val laid = keep(laidOutBy(pairs.map { case (s, d) => (s, InternalRow(s, d)) }, p).mapPartitions(distinctPairs))
+      new EdgeTable(laid, laid.count())
+    }
+
+    /** `count` loop-free edges ([[edgeTable]]) as `rows` laid out by src
+      * at the kernel width `partitions`. */
+    final class EdgeTable(rows: RDD[InternalRow], val count: Long) {
+      def partitions: Int = rows.getNumPartitions
+      /** The rows, sized for the planner: what a broadcast of them reads. */
+      val table: DataFrame = Bridge.dataFrame(spark, rows, edgeSchema, Some(BigInt(count)))
+      /** The same rows declared laid out by src: a join or aggregation by
+        * src plans no exchange. */
+      val bySrc: DataFrame = Bridge.dataFrame(spark, rows, edgeSchema, Some(BigInt(count)), Seq("src"))
+      /** Every end once, with their count: rows persisted until the run
+        * closes (a lazy result recomputes them), laid out by id by a distinct. */
+      def vertices: (DataFrame, Long) = {
+        val ids = table.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
+        val rows = keep(ids.queryExecution.toRdd.map(_.copy()))
+        val n = rows.count()
+        (Bridge.dataFrame(spark, rows, ids.schema, Some(BigInt(n)), Seq("id")), n)
+      }
+    }
 
     /**
      * `table`, a static table every superstep joins on `keys`, as that join
@@ -600,16 +650,16 @@ object GraphOps {
         laid
       }
 
-    private var explained = false
+    private var explained = Set.empty[String]
 
     /** With `GRAFT_KERNEL_EXPLAIN` set, prints the formatted physical plan of
-      * the first frame passed here — the loop passes its first boundary
-      * block, SCC its first trim round — to stderr: the shape the kernel
-      * really executes, dumped from inside it without touching the hot
-      * path. Later calls print nothing. */
+      * the first frame passed here as `what` — the loop passes its first
+      * boundary block, SCC also its first trim round — to stderr: the shape
+      * the kernel really executes, dumped from inside it without touching
+      * the hot path. Later calls with the same `what` print nothing. */
     def explain(what: String, df: DataFrame): Unit =
-      if (!explained && sys.env.contains("GRAFT_KERNEL_EXPLAIN")) {
-        explained = true
+      if (!explained(what) && sys.env.contains("GRAFT_KERNEL_EXPLAIN")) {
+        explained += what
         Console.err.println(s"=== $kernel $what plan ===\n" +
           df.queryExecution.explainString(ExplainMode.fromString("formatted")))
       }
@@ -685,7 +735,8 @@ object GraphOps {
     }
 
     def close(): Unit = {
-      release()
+      frames.reverseIterator.foreach(_.unpersist(false))
+      rows.foreach(Bridge.free)
       restoreConf()
     }
   }
@@ -694,25 +745,18 @@ object GraphOps {
     * step it ran, the step reached and whether a STOP marker ended it. */
   private final case class Steps(state: DataFrame, metrics: Seq[SuperstepMetric], step: Int, stopped: Boolean)
 
-  /** Frames persisted and rows kept until [[release]], which unpersists
-    * the frames newest first (uncaching a frame re-plans every
-    * still-registered, never-built cache derived from it) and frees the
-    * rows. */
-  private class Cached {
-    private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    private val rows = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
-    def cache(df: DataFrame): DataFrame = { frames += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
-    /** `r` persisted until [[release]]. */
-    def keep[T](r: RDD[T]): RDD[T] = { rows += r; r.persist(StorageLevel.MEMORY_AND_DISK) }
-    def release(): Unit = {
-      frames.reverseIterator.foreach(_.unpersist(false))
-      rows.foreach(Bridge.free)
+  /** [[KernelRun.loop]]'s convergence test for a state that only grows
+    * (BFS, SCC's members) or only shrinks (k-core): its row count, the
+    * first action on the lazily cut state, which materializes it, is
+    * unchanged. `rows` is the last count; an empty start has converged. */
+  private final class SameCount extends ((Option[DataFrame], DataFrame) => Boolean) {
+    var rows = 0L
+    def apply(prev: Option[DataFrame], state: DataFrame): Boolean = {
+      val last = rows
+      rows = keptRows(state).get.count()
+      rows == last
     }
   }
-
-  /** `body` with a [[Cached]] released when it returns or fails: the
-    * intermediates of the kernels that run outside a [[KernelRun]]. */
-  private def cached[T](body: Cached => T): T = { val c = new Cached; try body(c) finally c.release() }
 
   private def inRun[T](spark: SparkSession, kernel: String,
                        checkpointDir: Option[String] = None, stopFlag: Option[String] = None,
@@ -1049,11 +1093,7 @@ object GraphOps {
     // exchange). The rows are kept in that layout, so every vertex's edges
     // (= every distinct sym src = every distinct sym dst) share a partition.
     val sym = run.keep(Bridge.dataFrame(spark, pairs.flatMap { case (s, d) => Iterator(InternalRow(s, d), InternalRow(d, s)) },
-      edgeSchema).repartition(shufflePartitions, $"src").queryExecution.toRdd.mapPartitions { it =>
-      val adjacency = scala.collection.mutable.LongMap.empty[scala.collection.mutable.LongMap[Unit]]
-      it.foreach(r => adjacency.getOrElseUpdate(r.getLong(0), scala.collection.mutable.LongMap.empty[Unit])(r.getLong(1)) = ())
-      adjacency.iterator.flatMap { case (s, ds) => ds.keysIterator.map(InternalRow(s, _)) }
-    })
+      edgeSchema).repartition(shufflePartitions, $"src").queryExecution.toRdd.mapPartitions(distinctPairs))
     // each src of one partition's rows with its degree
     def degrees(rows: Iterator[InternalRow]) = {
       val deg = scala.collection.mutable.LongMap.empty[Long]
@@ -1241,59 +1281,43 @@ object GraphOps {
    * `maxHops` (frontier BFS). The reference runs reachability traversals in
    * Neo4j after export (SURVEY §2.9); here the frontier expansion is native.
    *
-   * Scale shape: the edge table is hash-partitioned by `src` once and
-   * persisted; each hop is then ONE join against that fixed layout (the
-   * frontier — the small side — moves to the edges), a distinct, and an
-   * anti-join against the settled-distance table, all keyed on vertex id.
-   * The settled table holds exactly `(id, dist)` — no adjacency — so its
-   * footprint is O(V) independent of edge count, and each hop issues
-   * exactly one action (the count that both materializes the grown table
-   * and detects an empty frontier — no separate isEmpty probe). `maxHops`
-   * hard-bounds the loop.
+   * Scale shape: the loop-free edges are laid out by `src` once
+   * ([[KernelRun.edgeTable]]); each hop is then ONE join against that
+   * layout (the frontier — the small side — moves to the edges), a
+   * distinct, and an anti-join against the settled table, all keyed on
+   * vertex id. The settled `(id, dist)` table — O(V), no adjacency — is
+   * the loop's state, cut lazily every hop; its count is the hop's one
+   * action, which materializes it and detects an empty frontier (an
+   * unchanged count). `maxHops` hard-bounds the loop.
    *
    * Returns `(id: long, dist: int)` for every vertex within `maxHops` of a
    * seed, as kept rows (local-checkpoint blocks, O(V) rows) that are not
-   * registered in the session's cache: each hop's table is kept so, and
-   * the one it supersedes is freed once the next is built. The edge
-   * layouts are unpersisted when the call returns or fails.
+   * registered in the session's cache; the loop frees each hop's table
+   * once the next is built, and the run frees the edge table.
    */
   def shortestPaths(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
-                    maxHops: Int): DataFrame = cached { c =>
-    import spark.implicits._
+                    maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val e = c.cache(edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter($"src" =!= $"dst").distinct())
-    val p = kernelPartitions(confPartitions(spark), e.count())
-    val eP = c.cache(e.repartition(p, $"src"))
-
-    var settled = seeds.select(col("id").cast("long").as("id")).distinct()
-      .withColumn("dist", lit(0))
-      .localCheckpoint(false)
-    var settledCount = settled.count()
-    var frontier = settled.select($"id")
-    var hop = 1
-    var done = settledCount == 0L
-    while (hop <= maxHops && !done) {
+    inRun(spark, "bfs") { run =>
+      import spark.implicits._
+      val e = run.edgeTable(edges)
+      val settled = new SameCount
+      var hop = 0
       // by-name semi-join (the frontier — small side — moves to the fixed
       // edge layout); df("col") references would trip ambiguous-self-join
-      // detection at hop 2, where the frontier's lineage includes eP
-      val next = eP.join(frontier.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-        .select(col("dst").as("id")).distinct()
-        .join(settled, Seq("id"), "left_anti")
-        .withColumn("dist", lit(hop))
-      val grown = settled.union(next).localCheckpoint(false)
-      val n = grown.count()
-      free(settled)
-      settled = grown
-      if (n == settledCount) done = true
-      else {
-        settledCount = n
-        // read the kept grown table, not the join plan, for the next hop
-        frontier = grown.filter($"dist" === lit(hop)).select($"id")
+      // detection at hop 2, where the frontier's lineage includes the edges.
+      // Coalesced: a union has all its inputs' partitions.
+      def expand(s: DataFrame) = {
+        hop += 1
+        s.union(e.bySrc.join(s.filter($"dist" === hop - 1).select($"id".as("src")), Seq("src"), "left_semi")
+          .select($"dst".as("id")).distinct()
+          .join(s, Seq("id"), "left_anti")
+          .withColumn("dist", lit(hop))).coalesce(e.partitions)
       }
-      hop += 1
+      run.loop(maxHops, 1, e.count, e.partitions,
+        _ => seeds.select(col("id").cast("long").as("id")).distinct().withColumn("dist", lit(0)).localCheckpoint(false),
+        expand, settled, chain = false).state
     }
-    settled
   }
 
   /**
@@ -1304,9 +1328,10 @@ object GraphOps {
    * Scale shape: each peel round is one map-side-combined degree
    * aggregation plus two semi-joins keyed on the endpoint ids; the edge
    * set only ever SHRINKS, so round cost decreases monotonically.
-   * Convergence is read off the edge count from the SAME action that
-   * materializes the round — every vertex present in `und` has >= 1 edge,
-   * so an unchanged edge count implies an unchanged vertex set (no second
+   * The edge set is the loop's state, cut lazily every round, and its
+   * count is the round's one action: it materializes the round and is the
+   * convergence test — every vertex present in `und` has >= 1 edge, so an
+   * unchanged edge count implies an unchanged vertex set (no second
    * probe). Peel depth tracks the graph's degeneracy ordering width and is
    * small on real link graphs (3 rounds on the sf0.01 mined-shape graph);
    * `maxRounds` is a backstop bound, mirroring connectedComponents'
@@ -1321,37 +1346,33 @@ object GraphOps {
     * convergence within it). */
   def kCoreResult(spark: SparkSession, edges: DataFrame, k: Int,
                   maxRounds: Int = 50): (DataFrame, Int) = {
-    import spark.implicits._
     require(k >= 1, s"k must be >= 1, got $k")
-    // each round's edge set is kept rows, freed once the next is built; the
-    // last is freed once the core is built, or when the call fails
-    var und = undirected(edges).localCheckpoint(false)
-    try {
-      var nEdges = und.count()
-      var rounds = 0
-      var converged = nEdges == 0L
-      while (!converged && rounds < maxRounds) {
-        val deg = und.select($"u".as("x")).union(und.select($"v".as("x")))
+    inRun(spark, "kcore") { run =>
+      import spark.implicits._
+      val nEdges = new SameCount
+      // the edge set only shrinks: each round is sized from the last count
+      def roundWidth = kernelPartitions(run.confWidth, nEdges.rows)
+      def peel(state: DataFrame) = {
+        // with no declared layout: over the checkpoint's, the two joins' same
+        // survivor subtree was not reused (two aggregations and broadcasts)
+        val und = Bridge.dataFrame(spark, keptRows(state).get, state.schema, Some(BigInt(nEdges.rows)))
+        run.width(roundWidth)
+        val surv = und.select($"u".as("x")).union(und.select($"v".as("x")))
           .groupBy($"x").agg(count(lit(1)).as("c"))
-        val surv = deg.filter($"c" >= k).select($"x")
-        val next = und
-          .join(surv.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
+          .filter($"c" >= k).select($"x")
+        und.join(surv.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
           .join(surv.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
-          .localCheckpoint(false)
-        val n = next.count()
-        free(und)
-        und = next
-        rounds += 1
-        if (n == nEdges) converged = true
-        nEdges = n
       }
+      val peeled = run.loop(maxRounds, 1, nEdges.rows, roundWidth,
+        _ => undirected(edges).localCheckpoint(false), peel, nEdges, chain = false)
+      val und = run.own(peeled.state)
       val core = und.select($"u".as("id")).union(und.select($"v".as("id")))
         .groupBy($"id").agg(count(lit(1)).as("core_degree"))
         .filter($"core_degree" >= k)
         .localCheckpoint(false)
       core.count()
-      (core, rounds)
-    } finally free(und)
+      (core, peeled.step)
+    }
   }
 
   /**
@@ -1366,11 +1387,12 @@ object GraphOps {
    * (1e308) that bounds ~150 iterations even on a degree-10^4 graph, far
    * past HITS convergence (~10) — asserted finite at the end.
    *
-   * Scale shape: TWO static edge copies, partitioned by dst (the a-step's
-   * join key) and by src (the h-step's), each paid once; every half-step
-   * is then one co-partitioned join + one map-side-combined sum keyed on a
-   * vertex id. The loop's state is the authority vector, so it enters each
-   * superstep exactly once: the start state is a_1 = Aᵀ·1, superstep i
+   * Scale shape: the loop-free edge table ([[KernelRun.edgeTable]]) is the
+   * join side of both half-steps, pinned once ([[KernelRun.joinSide]]) by
+   * src (the a-step's key and the table's own layout) and by dst (the
+   * h-step's); every half-step is one join + one map-side-combined sum
+   * keyed on a vertex id. The loop's state is the authority vector, so it
+   * enters each superstep once: the start state is a_1 = Aᵀ·1, superstep i
    * takes a_i to a_{i+1} through h_i, and h is the one half-step after the
    * last. Lineage cut every `checkpointEvery` supersteps and at the last.
    * Returns `(id, hub, authority)` unrounded (query faces round).
@@ -1380,21 +1402,11 @@ object GraphOps {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     inRun(spark, "hits") { run =>
       import spark.implicits._
-      val eRaw = run.cache(edges.select($"src".cast("long"), $"dst".cast("long"))
-        .filter($"src" =!= $"dst").distinct())
-      val nEdges = eRaw.count()
-      val p = kernelPartitions(run.confWidth, nEdges)
-      // kernel-width aggregation exchanges (AQE is off here, so nothing else
-      // narrows them)
-      run.width(p)
-      val eBySrc = run.cache(eRaw.repartition(p, $"src"))
-      val eByDst = run.cache(eRaw.repartition(p, $"dst"))
-      eBySrc.count(); eByDst.count()
-      // derive verts from the materialized copy, then release the raw scan
-      val verts = run.cache(eBySrc.select($"src".as("id")).union(eBySrc.select($"dst".as("id")))
-        .distinct().repartition(p, $"id"))
-      require(verts.count() > 0, "hits: the edge table is empty")
-      eRaw.unpersist(false)
+      val e = run.edgeTable(edges)
+      require(e.count > 0, "hits: the edge table is empty")
+      val eBySrc = run.joinSide(e.table, e.partitions, Seq("src"), Some(e.bySrc))
+      val eByDst = run.joinSide(e.table, e.partitions, Seq("dst"))
+      val (verts, _) = e.vertices
 
       // a-step: h flows src→dst (join keyed src, agg keyed dst)
       def authority(h: DataFrame) = verts
@@ -1406,7 +1418,7 @@ object GraphOps {
         .join(a.select($"id".as("dst"), $"a").join(eByDst, Seq("dst"))
           .groupBy($"src".as("id")).agg(sum($"a").as("s")), Seq("id"), "left")
         .select($"id", coalesce($"s", lit(0.0)).as("h"))
-      val a = run.loop(iterations - 1, checkpointEvery, nEdges, p,
+      val a = run.loop(iterations - 1, checkpointEvery, e.count, e.partitions,
         _ => authority(verts.withColumn("h", lit(1.0))), a => authority(hub(a))).state
       val h = hub(a).localCheckpoint(true)
       // single L1 normalization at the end; both sums in one tiny job each
@@ -1431,30 +1443,26 @@ object GraphOps {
    * Walks stop early at a vertex with no out-edges.
    *
    * Scale shape: the positional adjacency `(src, idx, dst)` is built once
-   * (one windowed sort per src partition — per-vertex width, not global)
-   * and partitioned by src; each step is then two joins keyed on the
-   * CURRENT vertex id (degree lookup + positional lookup), emitting one
-   * row per live walk. Hub vertices hold many walks at once but each walk
-   * is one probe row — fan-IN, not fan-out. Steps materialize per level
-   * (each level feeds both the next step and the output union) as kept
-   * rows, not registered in the session's cache; the lookup tables are
-   * unpersisted when the call returns or fails.
-   * Returns `(seed, walk, step, vertex)`.
+   * over the loop-free edges' src layout ([[KernelRun.edgeTable]]: one
+   * windowed sort per src partition, no exchange); each step is then two
+   * joins keyed on the CURRENT vertex id (degree lookup + positional
+   * lookup), emitting one row per live walk. Hub vertices hold many walks
+   * at once but each walk is one probe row — fan-IN, not fan-out. Steps
+   * materialize per level as kept rows, not registered in the session's
+   * cache: the levels are the result, so they run in a loop of their own
+   * ([[KernelRun.loop]] frees each state it supersedes). Returns
+   * `(seed, walk, step, vertex)`.
    */
   def randomWalks(spark: SparkSession, edges: DataFrame, walkLen: Int,
                   walksPerVertex: Int = 1): DataFrame = {
-    import spark.implicits._
     require(walkLen >= 1 && walksPerVertex >= 1,
       "walkLen and walksPerVertex must be >= 1")
-    cached { c =>
-      val e = c.cache(edges.select($"src".cast("long"), $"dst".cast("long"))
-        .filter($"src" =!= $"dst").distinct())
-      val p = kernelPartitions(confPartitions(spark), e.count())
+    inRun(spark, "walks") { run =>
+      import spark.implicits._
+      val e = run.edgeTable(edges).bySrc
       val w = Window.partitionBy($"src").orderBy($"dst")
-      val adj = c.cache(e.select($"src", $"dst", (row_number().over(w) - 1).cast("long").as("idx"))
-        .repartition(p, $"src"))
-      val deg = c.cache(e.groupBy($"src").agg(count(lit(1)).as("outdeg"))
-        .repartition(p, $"src"))
+      val adj = run.cache(e.select($"src", $"dst", (row_number().over(w) - 1).cast("long").as("idx")))
+      val deg = run.cache(e.groupBy($"src").agg(count(lit(1)).as("outdeg")))
       adj.count(); deg.count()
 
       val verts = e.select($"src".as("id")).union(e.select($"dst".as("id"))).distinct()
@@ -1484,8 +1492,6 @@ object GraphOps {
         else { levels += next; cur = next }
         t += 1
       }
-      // every level is kept rows (they ARE the result); the lookup tables
-      // go when this returns
       levels.reduce(_.unionByName(_))
     }
   }
@@ -1549,11 +1555,15 @@ object GraphOps {
    * (on dependency-graph shapes most vertices leave through trim, not
    * coloring). Inner loops materialize per round with lineage cuts — the
    * CC lesson: star/propagation rounds reference their input more than
-   * once, so lazy chaining re-executes. Outer rounds are bounded by the
+   * once, so lazy chaining re-executes. The color and backward loops run
+   * on [[KernelRun.loop]] without `chain` (each state cut lazily, its count
+   * the iteration's one action), joining edge sides pinned once per outer
+   * round ([[KernelRun.joinSide]]). Outer rounds are bounded by the
    * condensation's longest root-blocked chain; real link graphs peel in a
    * handful because every color class with its root inside resolves each
    * round. Cycle detection (`scc size > 1`) is the dependency-graph use
-   * case this serves.
+   * case this serves. The result is kept rows, materialized once; the run
+   * frees every intermediate table, on success and on failure.
    */
   /** Per-phase iteration counts of an SCC run (probe/evidence surface). */
   final case class SccStats(outerRounds: Int, trimRounds: Int, colorIters: Int,
@@ -1571,16 +1581,16 @@ object GraphOps {
     var trimRounds = 0; var colorIters = 0; var backIters = 0
     var trimmedVerts = 0L; var coloredVerts = 0L
     inRun(spark, "scc") { run =>
-      var e = edges.select($"src".cast("long"), $"dst".cast("long"))
-        .filter($"src" =!= $"dst").distinct()
-        .localCheckpoint(true)
-      val p = kernelPartitions(run.confWidth, e.count())
-      // kernel-width aggregation/join exchanges (AQE is off here)
-      run.width(p)
-      e = e.repartition(p, $"src").localCheckpoint(true)
-      var verts = e.select($"src".as("id")).union(e.select($"dst".as("id")))
-        .distinct().localCheckpoint(true)
-      var nv = verts.count()
+      val edgeTable = run.edgeTable(edges)
+      val p = edgeTable.partitions
+      // the live edges by src; a superseded set is freed once the next is built
+      var e = edgeTable.bySrc
+      def peelEdges(next: DataFrame): Unit = {
+        val built = run.own(next.select($"src", $"dst").repartition(p, $"src").localCheckpoint(true))
+        free(e)
+        e = built
+      }
+      var (verts, nv) = edgeTable.vertices
       val assignedParts = scala.collection.mutable.ListBuffer.empty[DataFrame]
       var outer = 0
       while (nv > 0 && outer < maxOuter) {
@@ -1598,11 +1608,8 @@ object GraphOps {
         // previous peel left edge-less) is a singleton SCC. The survivor
         // table IS the next vertex set (endpoints of e are always a subset
         // of verts) and the trimmed part is a lazy anti-join of two
-        // checkpointed frames, scanned once in the final assemble. Replaces
-        // the old two-distincts + double-anti-join round: one map-side-
-        // combined tag exchange instead of two distinct exchanges over e's
-        // endpoints, no per-round verts materialization, and the src-side
-        // peel join rides e's checkpointed hash(src) layout exchange-free.
+        // checkpointed frames, scanned once in the final assemble. The
+        // src-side peel join rides e's hash(src) layout exchange-free.
         // (A driver-known-size broadcast peel was tried here and REJECTED:
         // two per-round broadcast builds added ~0.3 s/round of driver
         // latency at probe scale, and the rounds small enough to qualify
@@ -1615,7 +1622,7 @@ object GraphOps {
             .filter($"o" === 1 && $"i" === 1)
             .select($"id")
           run.explain("trim round", survPlan)
-          val surv = survPlan.localCheckpoint(true)
+          val surv = run.own(survPlan.localCheckpoint(true))
           val nSurv = surv.count()
           val nTrim = nv - nSurv
           if (nTrim == 0) trimming = false
@@ -1625,69 +1632,61 @@ object GraphOps {
               .select($"id", $"id".as("scc"))
             verts = surv
             nv = nSurv
-            e = e.join(surv.select($"id".as("src")), Seq("src"), "left_semi")
-              .join(surv.select($"id".as("dst")), Seq("dst"), "left_semi")
-              .select($"src", $"dst")
-              .repartition(p, $"src").localCheckpoint(true)
+            peelEdges(e.join(surv.select($"id".as("src")), Seq("src"), "left_semi")
+              .join(surv.select($"id".as("dst")), Seq("dst"), "left_semi"))
           }
         }
         if (nv > 0) {
-          // (2) forward max-ancestor coloring to fixpoint
-          var colors = verts.select($"id", $"id".as("color")).localCheckpoint(true)
-          var changed = 1L
-          var it = 0
-          while (changed > 0 && it < maxColorIters) {
-            val contrib = colors.select($"id".as("src"), $"color")
-              .join(e, Seq("src"))
+          val colorSide = run.joinSide(e, p, Seq("src"), Some(e))
+          val backSide = run.joinSide(e, p, Seq("dst"))
+          // (2) forward max-ancestor coloring to fixpoint; a state row is
+          // (id, color, whether the step that made it raised the color)
+          def color(c: DataFrame) = {
+            val contrib = c.select($"id".as("src"), $"color")
+              .join(colorSide, Seq("src"))
               .groupBy($"dst".as("id")).agg(max($"color").as("mc"))
-            val nc = colors.join(contrib, Seq("id"), "left")
+            c.join(contrib, Seq("id"), "left")
               .select($"id",
                 greatest($"color", coalesce($"mc", $"color")).as("color"),
                 (coalesce($"mc", $"color") > $"color").as("ch"))
-              .localCheckpoint(true)
-            changed = nc.filter($"ch").count()
-            colors = nc.select($"id", $"color")
-            it += 1; colorIters += 1
           }
+          var changed = 0L
+          val colored = run.loop(maxColorIters, 1, edgeTable.count, p,
+            _ => verts.select($"id", $"id".as("color"), lit(true).as("ch")).localCheckpoint(false), color,
+            (_, c) => { changed = keptRows(c).get.filter(_.getBoolean(2)).count(); changed == 0 }, chain = false)
+          val colors = run.own(colored.state).select($"id", $"color")
+          colorIters += colored.step
           require(changed == 0, s"scc: color propagation did not converge in $maxColorIters rounds")
           // (3) backward collection inside color classes, from the roots.
-          // `members` stays a LAZY union over the checkpointed frontier
-          // parts (r6): every part is already materialized, so the per-
-          // iteration union job and the final count job both drop out —
-          // the visited-set anti-join re-shuffles the union either way,
-          // and the colored total is the sum of driver-known frontier
-          // counts.
-          val roots = colors.filter($"id" === $"color")
-            .select($"id", $"color".as("scc")).localCheckpoint(true)
-          var members = roots
-          var frontier = roots
-          var live = frontier.count()
-          var nColored = live
-          while (live > 0) {
-            val next = frontier.select($"id".as("dst"), $"scc")
-              .join(e, Seq("dst"))
+          // The state is the cumulative member table, each row tagged with
+          // the step that reached it, so a step expands the last step's
+          // rows (coalesced as BFS's); the loop ends at the first step that
+          // reaches no vertex.
+          var k = 0
+          def collect(m: DataFrame) = {
+            k += 1
+            m.union(m.filter($"it" === k - 1).select($"id".as("dst"), $"scc")
+              .join(backSide, Seq("dst"))
               .select($"src".as("id"), $"scc").distinct()
               .join(colors, Seq("id"))
               .filter($"color" === $"scc")
               .select($"id", $"scc")
-              .join(members, Seq("id"), "left_anti")
-              .localCheckpoint(true)
-            live = next.count()
-            if (live > 0) {
-              backIters += 1
-              nColored += live
-              members = members.union(next)
-              frontier = next
-            }
+              .join(m, Seq("id"), "left_anti")
+              .withColumn("it", lit(k))).coalesce(p)
           }
-          coloredVerts += nColored
+          val reached = new SameCount
+          val collected = run.loop(Int.MaxValue, 1, edgeTable.count, p,
+            _ => colors.filter($"id" === $"color").select($"id", $"color".as("scc"), lit(0).as("it"))
+              .localCheckpoint(false), collect, reached, chain = false)
+          val members = run.own(collected.state).select($"id", $"scc")
+          backIters += collected.step - 1
+          coloredVerts += reached.rows
           assignedParts += members
-          verts = verts.join(members, Seq("id"), "left_anti").localCheckpoint(true)
-          nv -= nColored // members is a subset of verts and distinct
-          e = e.join(members.select($"id".as("src")), Seq("src"), "left_anti")
-            .join(members.select($"id".as("dst")), Seq("dst"), "left_anti")
-            .select($"src", $"dst")
-            .repartition(p, $"src").localCheckpoint(true)
+          verts = run.own(verts.join(members, Seq("id"), "left_anti").localCheckpoint(true))
+          nv -= reached.rows // members is a subset of verts and distinct
+          peelEdges(e.join(members.select($"id".as("src")), Seq("src"), "left_anti")
+            .join(members.select($"id".as("dst")), Seq("dst"), "left_anti"))
+          Seq(colorSide, backSide).foreach(_.unpersist(false))
         }
         outer += 1
       }
@@ -1699,7 +1698,7 @@ object GraphOps {
         // canonicalize: min member id per component
         val assigned = assignedParts.reduce(_.unionByName(_))
         val relabel = assigned.groupBy($"scc").agg(min($"id").as("mid"))
-        (assigned.join(relabel, Seq("scc")).select($"id", $"mid".as("scc")), stats)
+        (assigned.join(relabel, Seq("scc")).select($"id", $"mid".as("scc")).localCheckpoint(true), stats)
       }
     }
   }

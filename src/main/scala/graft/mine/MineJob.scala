@@ -96,6 +96,30 @@ object MineJob {
     case Left(q)    => ParseOutcome(q.repo, q.path, q.commit, q.contentSha, null, q.errorClass, q.message)
   }
 
+  /** The manifests of a repo-file table, each parsed into one
+    * [[ParseOutcome]]: the parse of [[run]] and of the streaming mine. */
+  private[graft] def parseManifests(repoFiles: Dataset[RepoFile]): Dataset[ParseOutcome] = {
+    import repoFiles.sparkSession.implicits._
+    repoFiles.filter(manifestFilter(col("path"))).mapPartitions(_.map(parseOne))
+  }
+
+  /** One row per (manifest, release) of parsed outcomes. */
+  private[graft] def releasesOf(parsed: DataFrame): DataFrame =
+    parsed.select(col("pkg.eco").as("eco"), col("pkg.name").as("pname"), explode(col("pkg.artifacts")).as("a"))
+
+  private val pkgId = concat(col("eco"), lit(":"), col("pname"))
+
+  /** One [[ArtifactRow]]-shaped row per release, repeats included; ids are
+    * the same concat the Ids helpers produce, and the version key is the
+    * SAME function — VersionCompareKey.of codegens a direct call to
+    * VersionCompare.key. */
+  private[graft] def artifactsOf(releases: DataFrame): DataFrame = releases.select(
+    concat(pkgId, lit(":"), col("a.version")).as("id"),
+    pkgId.as("packageId"),
+    col("a.version").as("version"),
+    graft.functions.VersionCompareKey.of(col("a.version")).as("versionCompare"),
+    col("a.attrs").as("attrs"))
+
   /** `df`'s rows in Spark's internal format, copied out of the plan's
     * reused row buffers. */
   private def rowsOf(df: Dataset[_]): RDD[InternalRow] = df.queryExecution.toRdd.map(_.copy())
@@ -132,19 +156,14 @@ object MineJob {
       Bridge.dataFrame(spark, rows, schema, Some(BigInt(rows.count())))
     }
 
-    val parse = repoFiles.filter(manifestFilter(col("path"))).mapPartitions(_.map(parseOne))
+    val parse = parseManifests(repoFiles)
     val outcomes = keep(rowsOf(parse), parse.schema)
     val pm = outcomes.filter(col("pkg").isNotNull)
     val parsed = pm.select($"repo", $"path", $"commit", $"contentSha", $"pkg").as[ParsedManifest]
     val quarantine = outcomes.filter(col("pkg").isNull)
       .select($"repo", $"path", $"commit", $"errorClass", $"message", $"contentSha").as[QuarantineRow]
 
-    // One row per (manifest, release); ids are the same concat the Ids
-    // helpers produce, and the version key is the SAME function —
-    // VersionCompareKey.of codegens a direct call to VersionCompare.key.
-    val releases = pm.select(col("pkg.eco").as("eco"), col("pkg.name").as("pname"),
-      explode(col("pkg.artifacts")).as("a"))
-    val pkgId = concat(col("eco"), lit(":"), col("pname"))
+    val releases = releasesOf(pm)
 
     // AP edges: duplicates allowed by design (reference CREATE-not-MERGE,
     // `Neo4jDatabaseController.java:129`). `resolved=false` matches the
@@ -163,12 +182,7 @@ object MineJob {
     // Artifacts: one row per (package, version); MERGE-on-id semantics, the
     // first row kept per id (duplicate versions can only come from
     // identical rows).
-    val art = releases.select(
-      concat(pkgId, lit(":"), col("a.version")).as("id"),
-      pkgId.as("packageId"),
-      col("a.version").as("version"),
-      graft.functions.VersionCompareKey.of(col("a.version")).as("versionCompare"),
-      col("a.attrs").as("attrs"))
+    val art = artifactsOf(releases)
     val artifacts = keep(onePerKey(art)((_, _) => false), art.schema).as[ArtifactRow]
 
     // PP edges: one edge per package pair across all versions

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.manifest.ManifestParser
+import graft.mine.MineJob
 import graft.model._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,19 +28,14 @@ final case class SessionState(start: Long, last: Long, events: Long, totalValue:
 object StreamingOps {
 
   /** Streaming mine: stateless parse of a manifest stream into artifact rows —
-    * the incremental-update (T7) façade; exactly the batch parser, so batch
-    * and streaming results agree by construction. */
+    * the incremental-update (T7) façade. It is the batch mine's manifest
+    * filter, parse and artifact projection ([[MineJob]]), so batch and
+    * streaming results agree by construction; a quarantined manifest
+    * yields no row, and a repeated release is not deduplicated. */
   def mineStream(spark: SparkSession, files: Dataset[RepoFile]): Dataset[ArtifactRow] = {
     import spark.implicits._
-    files.filter(f => ManifestParser.isManifestPath(f.path))
-      .flatMap { f =>
-        ManifestParser.parse(f) match {
-          case Right(pkg) => pkg.artifacts.map(a =>
-            ArtifactRow(Ids.artifactId(pkg.eco, pkg.name, a.version),
-              Ids.packageId(pkg.eco, pkg.name), a.version, VersionCompare.key(a.version), a.attrs))
-          case Left(_) => Seq.empty
-        }
-      }
+    MineJob.artifactsOf(MineJob.releasesOf(MineJob.parseManifests(files).filter(col("pkg").isNotNull).toDF()))
+      .as[ArtifactRow]
   }
 
   /** Watermarked sliding-window event counts: 10-minute watermark over a

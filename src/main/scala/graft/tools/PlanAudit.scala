@@ -22,15 +22,13 @@ object PlanAudit {
     out.append("# PLANS — physical-plan audit of load-bearing queries\n\n")
     out.append("Generated by `graft.tools.PlanAudit`; re-run after plan-affecting changes.\n")
     out.append("""
-> The audits below are EXPLAIN dumps of query-catalog plans and of
-> hand-built single-round kernel shapes; they do not execute the kernels.
-> The EXECUTED PageRank boundary-block plan is
-> `plans/r06/kernel_pagerank_boundary_executed_after.txt`, dumped from
-> inside `GraphOps.pageRank` by the `GRAFT_KERNEL_EXPLAIN=1` hook (CC, LP,
-> HITS and SCC print their first round through the same hook). The
-> round-6 before/after snapshots of the headline queries are the other
-> files under `plans/r06/`; the changes behind them are logged in
-> `OPTIMIZATION_r06.md`.
+> The audits below are EXPLAIN dumps of query-catalog plans. The graph
+> kernels' plans are not rebuilt here: with `GRAFT_KERNEL_EXPLAIN` set,
+> each loop kernel (PageRank, CC, LP, HITS, SCC, BFS, k-core) prints the
+> executed physical plan of its first boundary block to stderr from inside
+> its run, and SCC also its first trim round. The round-6 before/after
+> snapshots of the headline queries are the files under `plans/r06/`; the
+> changes behind them are logged in `OPTIMIZATION_r06.md`.
 """)
 
     def audit(title: String, notes: String, execute: Boolean = false)(df: => org.apache.spark.sql.DataFrame): Unit = {
@@ -66,63 +64,6 @@ object PlanAudit {
       graft.queries.Queries.queries("q03_join_agg")(spark, sfDir)
     }
 
-    // reproduce the kernel's execution conf: AQE off, no size-based
-    // broadcasts (at scale neither side of the superstep join is broadcastable)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    audit("PageRank single superstep (dangling supernode + pre-sorted cached edges)",
-      "Expect (kernel conf: AQE off, no auto-broadcast): the edge side is an InMemoryTableScan with NO per-superstep Exchange and NO Sort (cached pre-sorted partitions feed the SortMergeJoin directly — only the state side re-sorts); ONE Exchange for the contribution groupBy with partial_sum before it; NO broadcast of any chain-derived scalar — the dangling mass rides in the state as the sentinel supernode row (GraphOps.pageRank scaladoc).") {
-      import spark.implicits._
-      val Sent = Long.MinValue
-      val eW = Seq((0L, 1L, 1.0), (1L, 2L, 0.5), (1L, 0L, 0.5),
-          (2L, Sent, 1.0 / 3), (Sent, Sent, 0.85 / 3), (Sent, 0L, 0.85))
-        .toDF("src", "dst", "w").withColumn("salt", lit(0))
-        .repartition(4, $"src").sortWithinPartitions($"src").persist()
-      eW.count()
-      val allIds = Seq(0L, 1L, 2L, Sent).toDF("id")
-        .repartition(4, $"id").sortWithinPartitions($"id").persist()
-      allIds.count()
-      val state = allIds.withColumn("x",
-        when($"id" === Sent, lit(0.0)).otherwise(lit(1.0 / 3))).localCheckpoint(true)
-      val agg = state.withColumnRenamed("id", "src").join(eW, Seq("src"))
-        .select($"dst".as("id"), ($"x" * $"w").as("c"))
-        .groupBy($"id").agg(sum($"c").as("c"))
-      allIds.join(agg, Seq("id"), "left")
-        .select($"id", when($"id" === Sent, coalesce($"c", lit(0.0)))
-          .otherwise(lit(0.05) + lit(0.85) * coalesce($"c", lit(0.0))).as("x"))
-    }
-
-    audit("connected components: one large-star round",
-      "Expect: every Exchange is hashpartitioning on src (vertex id) — never on a component label; partial_min before the exchange (map-side combine), so per-task work is bounded by vertex degree, not component size.") {
-      import spark.implicits._
-      val e = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 0L)).toDF("src", "dst").localCheckpoint(true)
-      val sym = e.filter($"src" =!= $"dst")
-        .union(e.filter($"src" =!= $"dst").select($"dst".as("src"), $"src".as("dst")))
-      val mins = sym.groupBy($"src").agg(least(min($"dst"), first($"src")).as("m"))
-      sym.join(mins, Seq("src")).filter($"dst" > $"src")
-        .select($"dst".as("src"), $"m".as("dst"))
-    }
-    audit("connected components: large-star round with an emergent hot root (salted arm)",
-      "Expect: sym gains salt = pmod(hash(dst), nsalt) through a BroadcastHashJoin against the (tiny, per-round) hub table; the mins side replicates ONLY hub rows via explode(sequence); the star join keys (src, salt) so a giant root's join fan-out spreads over nsalt tasks; the min-agg itself stays keyed on src alone with partial_min (map-side combine already skew-safe). Mirrors GraphOps.largeStar's hubs arm.") {
-      import spark.implicits._
-      val e = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 0L), (4L, 0L)).toDF("src", "dst").localCheckpoint(true)
-      val sym = e.filter($"src" =!= $"dst")
-        .union(e.filter($"src" =!= $"dst").select($"dst".as("src"), $"src".as("dst")))
-      val mins = sym.groupBy($"src").agg(least(min($"dst"), first($"src")).as("m"))
-      val hubs = Seq((0L, 4)).toDF("src", "nsalt") // vertex 0 = the emergent giant root
-      val symS = sym.join(broadcast(hubs), Seq("src"), "left")
-        .select($"src", $"dst", pmod(hash($"dst"), coalesce($"nsalt", lit(1))).as("salt"))
-      val minsR = mins.join(broadcast(hubs), Seq("src"), "left")
-        .select($"src", $"m", explode(sequence(lit(0), coalesce($"nsalt", lit(1)) - 1)).as("salt"))
-      symS.join(minsR, Seq("src", "salt"))
-        .filter($"dst" > $"src")
-        .select($"dst".as("src"), $"m".as("dst"))
-    }
-    // restore the relational defaults (AQE + auto-broadcast) for the
-    // query-catalog audits below
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-
     audit("q17 lazy per-vertex triangles (trianglesPerVertex)",
       "Expect (FINAL adaptive plan, query executed): the whole close runs as ONE " +
         "query — no eager total-count job (that was q17's round-3 defect: it paid " +
@@ -143,58 +84,12 @@ object PlanAudit {
       graft.queries.Queries.queries("q61_clustering_coefficient")(spark, sfDir)
     }
 
-    audit("BFS single hop (shortestPaths round shape)",
-      "Expect: the frontier reaches the edge table through a semi-join keyed " +
-        "on src (the big side's fixed hash layout — at scale the frontier, the " +
-        "small side, moves to the edges, whose exchange is the persisted one " +
-        "paid once before the loop); the settled-distance anti-join keys on id. " +
-        "No exchange keys on anything frontier-size-correlated.") {
-      import spark.implicits._
-      val e = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 0L)).toDF("src", "dst")
-        .repartition(4, col("src")).localCheckpoint(true)
-      val settled = Seq((0L, 0)).toDF("id", "dist").localCheckpoint(true)
-      e.join(settled.select($"id".as("src")), Seq("src"), "left_semi")
-        .select($"dst".as("id")).distinct()
-        .join(settled, Seq("id"), "left_anti")
-        .withColumn("dist", lit(1))
-    }
-
-    audit("k-core single peel round (kCore round shape)",
-      "Expect: one degree aggregation with partial_count before its exchange " +
-        "(map-side combine — per-task work bounded by partition size, not by " +
-        "any vertex's degree), then two semi-joins keyed on the endpoint ids. " +
-        "The edge set only shrinks round over round, so this is the most " +
-        "expensive round's plan.") {
-      import spark.implicits._
-      val und = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 3L)).toDF("u", "v")
-        .localCheckpoint(true)
-      val deg = und.select($"u".as("x")).union(und.select($"v".as("x")))
-        .groupBy($"x").agg(count(lit(1)).as("c"))
-      val surv = deg.filter($"c" >= 3).select($"x")
-      und.join(surv.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
-        .join(surv.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
-    }
-
     audit("q63 composed quality filter (zero-shuffle scan)",
       "Expect: NO Exchange anywhere — token count and both repetition signals " +
         "are inlined into one Project over the documents scan (the composed " +
         "filter is a single embarrassingly-parallel pass; subexpression " +
         "elimination shares the signal expressions between `reason` and `keep`).") {
       graft.queries.Queries.queries("q63_quality_filter")(spark, sfDir)
-    }
-
-    audit("HITS half-step (a-step: h flows src->dst)",
-      "Expect: the state (small side) joins the static src-partitioned edge " +
-        "table, then ONE aggregation keyed on dst with partial_sum before the " +
-        "exchange — per half-step cost is a vertex-state shuffle plus a " +
-        "map-side-combined sum, never an edge re-shuffle (the edge exchange " +
-        "is paid once before the loop, here represented by the checkpoint).") {
-      import spark.implicits._
-      val e = Seq((0L, 1L), (1L, 2L), (2L, 0L)).toDF("src", "dst")
-        .repartition(4, col("src")).localCheckpoint(true)
-      val h = Seq((0L, 1.0), (1L, 1.0), (2L, 1.0)).toDF("id", "h").localCheckpoint(true)
-      h.select($"id".as("src"), $"h").join(e, Seq("src"))
-        .groupBy($"dst".as("id")).agg(sum($"h").as("s"))
     }
 
     audit("q66 sequence packing (shard-partitioned window)",
@@ -211,25 +106,6 @@ object PlanAudit {
         "token with the vocabulary-sized model side, then a combinable avg " +
         "per document.") {
       graft.queries.Queries.queries("q68_perplexity")(spark, sfDir)
-    }
-
-    audit("random-walk single step (randomWalks level shape)",
-      "Expect: the live-walk state reaches the degree table and the " +
-        "positional adjacency through joins keyed on the CURRENT vertex id " +
-        "(src) — the md5 step-choice is a pure projection between them; one " +
-        "row out per live walk (hub fan-IN, no fan-out).") {
-      import spark.implicits._
-      val adj = Seq((0L, 1L, 0L), (0L, 2L, 1L), (1L, 2L, 0L)).toDF("src", "dst", "idx")
-        .repartition(4, col("src")).localCheckpoint(true)
-      val deg = Seq((0L, 2L), (1L, 1L)).toDF("src", "outdeg")
-        .repartition(4, col("src")).localCheckpoint(true)
-      val cur = Seq((0L, 0, 0L), (1L, 0, 1L)).toDF("seed", "walk", "vertex").localCheckpoint(true)
-      cur.select($"seed", $"walk", $"vertex".as("src"))
-        .join(deg, Seq("src"))
-        .withColumn("idx", pmod(conv(substring(md5(concat($"seed".cast("string"), lit(":"),
-          $"walk".cast("string"), lit(":1")).cast("binary")), 1, 15), 16, 10).cast("long"), $"outdeg"))
-        .join(adj, Seq("src", "idx"))
-        .select($"seed", $"walk", lit(1).as("step"), $"dst".as("vertex"))
     }
 
     audit("q71 node similarity (shared-neighbor pairing)",

@@ -256,7 +256,10 @@ class GraphOpsSpec extends AnyFunSuite {
         "cc" -> (() => GraphOps.connectedComponentsResult(spark, edgeDf)),
         "lp" -> (() => GraphOps.labelPropagationResult(spark, edgeDf, 3)),
         "hits" -> (() => GraphOps.hits(spark, edgeDf, 3)),
-        "scc" -> (() => GraphOps.sccResult(spark, edgeDf)))
+        "scc" -> (() => GraphOps.sccResult(spark, edgeDf)),
+        "bfs" -> (() => GraphOps.shortestPaths(spark, edgeDf, Seq(0L).toDF("id"), 3)),
+        "kcore" -> (() => GraphOps.kCoreResult(spark, edgeDf, 2)),
+        "walks" -> (() => GraphOps.randomWalks(spark, edgeDf, 2)))
       for ((name, run) <- runs) {
         run()
         assert(conf == before, s"$name changed the session conf")
@@ -265,7 +268,11 @@ class GraphOpsSpec extends AnyFunSuite {
       val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
       val failing: Seq[(String, () => Any)] = Seq(
         "pagerank" -> (() => GraphOps.pageRank(spark, empty, 3)),
-        "hits" -> (() => GraphOps.hits(spark, empty, 3)))
+        "hits" -> (() => GraphOps.hits(spark, empty, 3)),
+        // the 300 -> 301 -> 302 cycle survives the trim, and one color step
+        // cannot settle it: the run fails after it has built its edge,
+        // vertex, survivor and color tables
+        "scc" -> (() => GraphOps.sccResult(spark, edgeDf, maxColorIters = 1)))
       for ((name, run) <- failing) {
         val cached = spark.sparkContext.getPersistentRDDs.keySet
         intercept[IllegalArgumentException](run())
@@ -274,6 +281,42 @@ class GraphOpsSpec extends AnyFunSuite {
         assert(conf == before, s"failed $name changed the session conf")
       }
     } finally spark.conf.set("spark.sql.shuffle.partitions", widthWas)
+  }
+
+  test("BFS, k-core, HITS and SCC agree with their references on adversarial graphs") {
+    def rows(es: (Long, Long)*) = es.map { case (s, d) => (Option(s), Option(d)) }
+    val graphs: Seq[(String, Seq[(Option[Long], Option[Long])])] = Seq(
+      "empty" -> Nil,
+      "self-loops only" -> rows((1L, 1L), (2L, 2L)),
+      "duplicate edges" -> rows((1L, 2L), (1L, 2L), (2L, 3L), (3L, 1L), (3L, 1L), (3L, 4L), (3L, 4L)),
+      "a row with a NULL end" -> (rows((1L, 2L), (2L, 1L), (2L, 3L)) ++ Seq((Some(3L), None), (None, Some(1L)))),
+      "star" -> rows((2L to 9L).map(v => (1L, v)): _*),
+      "6-clique" -> rows((for (a <- 1L to 6L; b <- 1L to 6L if a != b) yield (a, b)): _*),
+      "pendant chain into a cycle" -> rows((1L to 6L).sliding(2).map(s => (s(0), s(1))).toSeq ++
+        Seq((6L, 7L), (7L, 8L), (8L, 6L), (4L, 4L)): _*))
+    for ((name, g) <- graphs) {
+      val df = g.toDF("src", "dst")
+      val es = g.collect { case (Some(s), Some(d)) => (s, d) }
+      val vs = es.filter(e => e._1 != e._2).flatMap(e => Seq(e._1, e._2)).distinct.sorted
+      val bfs = GraphOps.shortestPaths(spark, df, Seq(1L).toDF("id"), maxHops = 3)
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      assert(bfs == NaiveGraph.bfs(es, Seq(1L), 3), s"$name: BFS")
+      val core = GraphOps.kCore(spark, df, k = 2).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(core == NaiveGraph.kCore(es, 2), s"$name: 2-core")
+      val scc = GraphOps.stronglyConnectedComponents(spark, df).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(scc == NaiveGraph.tarjanScc(es), s"$name: SCC")
+      if (vs.isEmpty) {
+        val e = intercept[IllegalArgumentException](GraphOps.hits(spark, df, 5))
+        assert(e.getMessage.contains("empty"), s"$name: ${e.getMessage}")
+      } else for (iters <- Seq(1, 5)) {
+        // one iteration runs no loop step: the result reads the start state
+        val got = GraphOps.hits(spark, df, iters).collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+        val expected = NaiveGraph.hits(es, vs, iters)
+        assert(got.keySet == expected.keySet, s"$name: HITS($iters) vertices")
+        for ((v, (h, a)) <- expected)
+          assert(math.abs(got(v)._1 - h) < 1e-9 && math.abs(got(v)._2 - a) < 1e-9, s"$name: HITS($iters) $v ${got(v)} vs ($h, $a)")
+      }
+    }
   }
 
   test("PageRank with redistribution conserves probability mass") {
