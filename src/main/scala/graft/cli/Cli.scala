@@ -247,6 +247,7 @@ object Cli {
         val r = GraphOps.pageRank(spark, k.edges, iters, checkpointDir = Some(k.checkpointDir),
           stopFlag = Some(k.stopFlag), stopAfterMs = k.stopAfterMs, stopSeqSeen = k.stopSeqSeen)
         k.publish(r.ranks, "rank", Some("pagerank"), r.metrics)
+        r.release()
         println(s"pagerank: ${r.supersteps} supersteps (resumed=$resumed, stopped=${r.supersteps < iters})")
 
       case "components" =>
@@ -269,6 +270,7 @@ object Cli {
         // a k-superstep LP label set is valid in its own right — publish it
         // even when stopped early (unlike CC's partial contraction)
         k.publish(r.labels, "label", Some("labels"), r.metrics)
+        r.release()
         println(s"labelprop: ${r.supersteps} supersteps (stopped=${r.supersteps < iters})")
 
       case "stop" =>

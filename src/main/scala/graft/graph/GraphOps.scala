@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
+import graft.functions.MaxCountMinLabel
 import graft.util.{BoundedCollect, CodegenPolicy, Fs}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.execution.LogicalRDD
@@ -91,7 +92,14 @@ object GraphOps {
 
   // ------------------------------------------------------------------ PageRank
 
-  final case class PageRankResult(ranks: DataFrame, metrics: Seq[SuperstepMetric], supersteps: Int)
+  /** `ranks` reads the run's last state, kept as local-checkpoint rows: the
+    * caller frees them with [[release]] once it has consumed the ranks; a
+    * caller that drops the result leaves them to the context cleaner. */
+  final case class PageRankResult(ranks: DataFrame, metrics: Seq[SuperstepMetric], supersteps: Int)(
+      unpersistKept: () => Unit) {
+    /** Unpersists what this run kept. `ranks` must not be used afterwards. */
+    def release(): Unit = unpersistKept()
+  }
 
   /**
    * Iterative PageRank: rank = (1-d)/N + d * (sum of contributions
@@ -110,7 +118,8 @@ object GraphOps {
    *   state: x(v) per vertex plus x(S) = m, with rank_t = x_t + d*m_t;
    *   edges: u->v weight 1/deg(u); S->v weight d*w(v) where
    *          w(v) = sum_{u->v} 1/deg(u); u->S weight 1/n for dangling u;
-   *          S->S weight |D|*d/n;
+   *          S->S weight |D|*d/n; v->v weight 0 for every v (S included),
+   *          so every state row receives a contribution;
    *   step:  agg(v) = sum_{(u,v) in E'} x(u)*weight;
    *          x'(v) = (1-d)/n + d*agg(v) for real v, x'(S) = agg(S).
    *
@@ -217,13 +226,13 @@ object GraphOps {
     // redistributeDangling=false semantic).
     require(restart.isEmpty || !redistributeDangling,
       "personalized restart requires redistributeDangling=false")
-    val pFrame = restart.map { s =>
+    val seeds = restart.map { s =>
       val vertices = Bridge.dataFrame(spark, vdeg.map(v => InternalRow(v._1)), idSchema)
       val sv = run.cache(s.select(col("id").cast("long").as("id")).distinct()
         .join(vertices, Seq("id"), "left_semi"))
       val ns = sv.count()
       require(ns > 0, "pageRank restart: no seed id is present in the graph")
-      sv.withColumn("p", lit(1.0 / ns))
+      (sv, 1.0 / ns)
     }
 
     // Explicit hub salting (north_star: "salted ... edge partitions with
@@ -274,53 +283,63 @@ object GraphOps {
       realEdges.union(sentinelOut).union(toSent).union(selfSent)
     }
 
+    // Every id that owns a state row (sentinel included) with its nsalt.
+    val vertexSalt = vdeg.map { case (id, (outDeg, _)) => (id, nsalt(outDeg)) }
+      .union(spark.sparkContext.parallelize(if (redistributeDangling) Seq((Sent, sentSalt)) else Nil, 1))
+
+    // Each of those ids also gets a self-edge of weight 0, so every id
+    // receives a contribution each superstep, and one superstep's
+    // aggregation IS the next state: no join with the vertex set, so no
+    // shuffled join with its two input pipelines and its build. What the
+    // state carries beside x rides on the self-edge as the id's own value:
+    // on hubby graphs its nsalt (`dnsalt`, the loop's fan-out width), with a
+    // personalized restart its teleport mass p (`dp`, 0 off-seed). Other
+    // edges carry the neutral 1 and 0, and the aggregation takes the max.
     // Hub-free graphs skip the salt machinery entirely (no generator in the
     // hot path).
-    val eRows = eW.map { case (s, d, w, ns) =>
-      if (!haveHubs) InternalRow(s, d, w) else InternalRow(s, d, w, HubSalt.key(d, ns))
+    val selfEdges = seeds match {
+      case None          => vertexSalt.map { case (id, ns) => (id, ns, 0.0) }
+      case Some((sv, p)) => vertexSalt.leftOuterJoin(sv.queryExecution.toRdd.map(r => (r.getLong(0), p)))
+        .map { case (id, (ns, pv)) => (id, ns, pv.getOrElse(0.0)) }
     }
+    val eRows = eW.map { case (s, d, w, ns) => (s, d, w, ns, 1, 0.0) }
+      .union(selfEdges.map { case (id, ns, p) => (id, id, 0.0, ns, ns, p) })
+      .map { case (s, d, w, ns, dns, dp) =>
+        InternalRow.fromSeq(Seq[Any](s, d, w) ++ (if (haveHubs) Seq(HubSalt.key(d, ns), dns) else Nil) ++
+          (if (seeds.isDefined) Seq(dp) else Nil))
+      }
     val eWS = Bridge.dataFrame(spark, eRows,
       StructType(Seq("src", "dst").map(StructField(_, LongType, nullable = false)) ++
         Seq(StructField("w", DoubleType, nullable = false)) ++
-        (if (haveHubs) Seq(StructField("salt", IntegerType, nullable = false)) else Nil)),
+        (if (haveHubs) Seq("salt", "dnsalt").map(StructField(_, IntegerType, nullable = false)) else Nil) ++
+        (if (seeds.isDefined) Seq(StructField("dp", DoubleType, nullable = false)) else Nil)),
       Some(BigInt(eRows.count())))
     val eSide = run.joinSide(eWS, shufflePartitions, if (haveHubs) Seq("src", "salt") else Seq("src"))
 
-    // Every id that owns a state row each superstep (sentinel included),
-    // laid out by id: the streamed side of every superstep's hash join with
-    // the aggregated contributions.
-    // With a personalized restart the frame also carries p (the per-vertex
-    // teleport mass, 0 off-seed) so each superstep's update reads it from
-    // this static leaf — no extra join in the loop. On hubby graphs
-    // it ALSO carries nsalt (the hub fan-out width, 1 for non-hubs): the
-    // state inherits it through each superstep's update, so the loop's hub
-    // fan-out is a plain generator over a state column — the former
-    // per-superstep broadcast(hubs) join + hint grew the chained plan's
-    // analysis cost superlinearly (measured 144→438 ms of pure driver time
-    // per lazily-chained superstep on the mined graph, vs 16-26 ms hub-free).
-    val idRows = laidOutBy(vdeg.map { case (id, (outDeg, _)) => (id, nsalt(outDeg)) }
-      .union(spark.sparkContext.parallelize(if (redistributeDangling) Seq((Sent, sentSalt)) else Nil, 1))
-      .map { case (id, ns) => (id, if (haveHubs) InternalRow(id, ns) else InternalRow(id)) }, shufflePartitions)
-    val ids = Bridge.dataFrame(spark, run.keep(idRows), StructType(idSchema ++
-      (if (haveHubs) Seq(StructField("nsalt", IntegerType, nullable = false)) else Nil)), hashedBy = Seq("id"))
-    // no count action: the state-init localCheckpoint below scans every
-    // allIds partition and materializes its rows in the same job
-    val allIds = pFrame match {
-      case Some(p) => run.cache(ids.join(p, Seq("id"), "left")
-        .withColumn("p", coalesce($"p", lit(0.0)))
-        .repartition(shufflePartitions, $"id"))
-      case None => ids
-    }
-
     // State: x(v) per vertex plus x(Sent) = m; rank_t = x_t + d*m_t, and on
-    // hubby graphs the vertex's nsalt. Checkpoints carry column "x"
-    // (sentinel row included) and may also carry nsalt, which a resumed run
-    // drops and re-derives.
-    val stateSalt = if (haveHubs) Seq($"nsalt") else Nil
+    // hubby graphs the vertex's nsalt (the hub fan-out width, 1 for
+    // non-hubs), with a personalized restart its p: the loop's hub fan-out
+    // is a plain generator over a state column, and the update reads p off
+    // the state — the former per-superstep broadcast(hubs) join + hint grew
+    // the chained plan's analysis cost superlinearly (measured 144→438 ms of
+    // pure driver time per lazily-chained superstep on the mined graph, vs
+    // 16-26 ms hub-free). Every column is declared never NULL, so every
+    // block's first superstep reads the same kind of state. Checkpoints
+    // carry column "x" (sentinel row included) and may also carry nsalt and
+    // p, which a resumed run drops and re-derives.
+    val carried = (if (haveHubs) Seq("dnsalt" -> "nsalt") else Nil) ++ (if (seeds.isDefined) Seq("dp" -> "p") else Nil)
+    val stateExtra = carried.map(c => col(c._2))
+    // Every id that owns a state row, laid out by id, with its nsalt on
+    // hubby graphs: what the start state is built over.
+    val idRows = run.keep(laidOutBy(vertexSalt.map { case (id, ns) =>
+      (id, if (haveHubs) InternalRow(id, ns) else InternalRow(id))
+    }, shufflePartitions))
+    val ids = Bridge.dataFrame(spark, idRows, StructType(idSchema ++
+      (if (haveHubs) Seq(StructField("nsalt", IntegerType, nullable = false)) else Nil)), hashedBy = Seq("id"))
     def start(restored: Option[DataFrame]) = restored match {
-      case None if pFrame.isEmpty =>
-        // uniform starts at 1/n (the sentinel at 0): kept rows over the
-        // allIds rows, laid out as they are, materialized by their count
+      case None if seeds.isEmpty =>
+        // uniform starts at 1/n (the sentinel at 0): kept rows over the id
+        // rows, laid out as they are, materialized by their count
         val x0 = idRows.map { r =>
           val x = if (r.getLong(0) == Sent) 0.0 else 1.0 / n
           if (haveHubs) InternalRow(r.getLong(0), x, r.getInt(1)) else InternalRow(r.getLong(0), x)
@@ -328,16 +347,19 @@ object GraphOps {
         x0.count()
         Bridge.dataFrame(spark, x0, StructType(Seq(idSchema.head, StructField("x", DoubleType, nullable = false)) ++
           ids.schema.drop(1)), hashedBy = Seq("id"))
-      case _ => (restored match {
-        case Some(s) =>
-          if (!haveHubs) s.select($"id", $"x")
-          else s.select($"id", $"x").join(allIds.select($"id", $"nsalt"), Seq("id"))
-        case None =>
+      case _ =>
+        val allIds = seeds.fold(ids) { case (sv, p) =>
+          ids.join(sv.withColumn("p", lit(p)), Seq("id"), "left").withColumn("p", coalesce($"p", lit(0.0)))
+        }
+        (restored match {
+          case Some(s) if carried.isEmpty => s.select($"id", $"x")
+          case Some(s) => s.select($"id", $"x").join(allIds.select($"id" +: stateExtra: _*), Seq("id"))
           // PPR starts AT the restart distribution (the walk's stationary
           // point under d=0)
-          allIds.select(Seq($"id", $"p".as("x")) ++ stateSalt: _*)
-      }).repartition(shufflePartitions, $"id")
-        .localCheckpoint(true)
+          case None => allIds.select(Seq($"id", $"p".as("x")) ++ stateExtra: _*)
+        }).select(($"id" +: $"x" +: stateExtra).map(c => notNull(c).as(c.toString)): _*)
+          .repartition(shufflePartitions, $"id")
+          .localCheckpoint(true)
     }
 
     // One join + one aggregation; supersteps between checkpoint boundaries
@@ -347,31 +369,18 @@ object GraphOps {
     // is a size-O(k) logical plan that Catalyst analyzes once, and the
     // boundary's eager localCheckpoint runs it as ONE job while still
     // guarding the cross-block lineage blowup fixed in 8d12bfb.
-    // Hub rows fan out to their nsalt sub-keys (non-hubs emit salt 0 only);
-    // nsalt is a STATE column (inherited from the allIds leaf), so the
-    // fan-out is a plain generator — no per-superstep broadcast join, the
-    // chain stays linear and its plans stay O(k).
+    // Hub rows fan out to their nsalt sub-keys (non-hubs emit salt 0 only).
     // restart term: uniform keeps the EXACT op sequence rounds 1-4 shipped
-    // ((1-d)/n as one literal); personalized reads p off the allIds leaf
-    val restartTerm = pFrame match {
-      case Some(_) => lit(1.0 - damping) * $"p"
-      case None    => lit((1.0 - damping) / n)
-    }
-    def step(state: DataFrame) = {
-      val agg = state
-        .select(Seq($"id".as("src"), $"x") ++ stateSalt.map(HubSalt.fanOut): _*)
+    // ((1-d)/n as one literal); personalized reads p off the state
+    val restartTerm = if (seeds.isDefined) lit(1.0 - damping) * $"p" else lit((1.0 - damping) / n)
+    def step(state: DataFrame) =
+      state
+        .select(Seq($"id".as("src"), $"x") ++ (if (haveHubs) Seq(HubSalt.fanOut($"nsalt")) else Nil): _*)
         .join(eSide, if (haveHubs) Seq("src", "salt") else Seq("src"))
-        .select($"dst".as("id"), ($"x" * $"w").as("c"))
-        .groupBy($"id").agg(sum($"c").as("c"))
-      val xNext = when($"id" === Sent, coalesce($"c", lit(0.0)))
-        .otherwise(restartTerm + lit(damping) * coalesce($"c", lit(0.0)))
-        .as("x")
-      // hash-joined, the agg side as the build: both sides are laid out by
-      // id, so neither is shuffled or sorted
-      allIds
-        .join(agg.hint("shuffle_hash"), Seq("id"), "left")
-        .select(Seq($"id", xNext) ++ stateSalt: _*)
-    }
+        .groupBy($"dst".as("id"))
+        .agg(sum($"x" * $"w").as("c"), carried.map { case (e, c) => max(col(e)).as(c) }: _*)
+        .select(Seq($"id", notNull(when($"id" === Sent, $"c").otherwise(restartTerm + lit(damping) * $"c")).as("x")) ++
+          carried.map { case (_, c) => notNull(col(c)).as(c) }: _*)
 
     // With tol > 0: a conservative bound on the block's max |rank delta|,
     // max|Δrank| <= max|Δx| + d*|Δm|, ends the run once it is below tol.
@@ -406,7 +415,7 @@ object GraphOps {
         val m = keptRows(state).get.filter(_.getLong(0) == Sent).map(_.getDouble(1)).first()
         state.filter($"id" =!= Sent).select($"id", ($"x" + lit(damping) * udf(() => m).apply()).as("rank"))
       }
-    PageRankResult(ranks, metrics, steps)
+    PageRankResult(ranks, metrics, steps)(() => free(state))
   }
 
   /** The internal rows of an edge table's `src` and `dst` cast to Long,
@@ -452,14 +461,18 @@ object GraphOps {
     * plans then carry no NULL checks or inferred NULL filters for it. */
   private def notNull(c: Column): Column = Bridge.column(KnownNotNull(Bridge.expression(c)))
 
-  /** The hub-salting policy of PageRank, CC and LP. A key whose degree is
-    * over `threshold` = max(1000, rows/P/4) for `rows` join rows at width P
-    * is a hub: its rows split over nsalt = least(P, deg/threshold + 1)
-    * sub-keys. The many-rows side of the join takes the sub-key
-    * pmod(hash(dst), nsalt), and the one-row-per-key side is replicated
-    * over 0 .. nsalt-1. Non-hubs have nsalt 1. */
+  /** The hub-salting policy of PageRank, CC and LP. A join of at most
+    * [[EdgesPerPartition]] rows, one partition's budget, has no hubs: no key
+    * of it can hold more work than a partition is sized for, so it plans
+    * the hub-free shape whatever its degrees are. In a larger join, a key
+    * whose degree is over `threshold` = max(1000, rows/P/4) for `rows` join
+    * rows at width P is a hub: its rows split over nsalt = least(P,
+    * deg/threshold + 1) sub-keys. The many-rows side of the join takes the
+    * sub-key pmod(hash(dst), nsalt), and the one-row-per-key side is
+    * replicated over 0 .. nsalt-1. Non-hubs have nsalt 1. */
   private final case class HubSalt(partitions: Int, rows: Long) {
-    val threshold: Long = math.max(1000L, rows / partitions / 4)
+    val salts: Boolean = rows > EdgesPerPartition
+    val threshold: Long = if (salts) math.max(1000L, rows / partitions / 4) else Long.MaxValue
     def nsalt(deg: Long): Int = math.min(partitions.toLong, deg / threshold + 1L).toInt
   }
   private object HubSalt {
@@ -484,7 +497,10 @@ object GraphOps {
   private[graph] def kernelPartitions(conf: Int, edgeCount: Long): Int =
     // never EXCEED the configured value (a 4-core box configured to 4 stays
     // at 4); below it, floor at 8 so tiny graphs keep some parallelism
-    math.min(conf.toLong, math.max(8L, edgeCount / 150000L + 1L)).toInt
+    math.min(conf.toLong, math.max(8L, edgeCount / EdgesPerPartition + 1L)).toInt
+
+  /** The edges [[kernelPartitions]] budgets for one partition. */
+  private val EdgesPerPartition = 150000L
 
   /** Monotonic sequence number recorded in a STOP marker payload
     * (`"<epochMs> seq=<n>"`), if present. Kernel launchers capture it at
@@ -558,8 +574,11 @@ object GraphOps {
    *    every cycle recompiled all of them and ran freshly loaded,
    *    still-interpreted classes. Without them it needed 182, as the
    *    kernels built their set-up tables as generated pipelines; built as
-   *    RDD reductions over internal rows, once each, it needs 99 of the
-   *    100 Spark keeps.
+   *    RDD reductions over internal rows, once each, it needed 99 of the
+   *    100 Spark keeps, and it needs 60, the budget [[CodegenPolicy]]
+   *    states, with LP's winner a hash aggregate, PageRank's superstep
+   *    free of the vertex-set join, small joins unsalted ([[HubSalt]]) and
+   *    the triangle set-up out of the plan.
    * The kernel sets its shuffle width through [[width]] or [[edgeTable]].
    * Closing restores all four keys, unpersists the frames registered
    * through [[cache]] (newest first: uncaching a frame re-plans every
@@ -870,8 +889,9 @@ object GraphOps {
     // size class), then a local frame the per-round broadcast builds from
     // with zero extra distributed jobs. sym's kept rows are laid out by src,
     // so each partition counts its own srcs' degrees: no shuffle, and no
-    // generated code, whatever the round's threshold.
-    def hubSnapshot(sym: DataFrame, salt: HubSalt, nEdges: Long): Option[DataFrame] = {
+    // generated code, whatever the round's threshold. A round too small to
+    // salt ([[HubSalt]]) takes no snapshot and runs no job for it.
+    def hubSnapshot(sym: DataFrame, salt: HubSalt, nEdges: Long): Option[DataFrame] = if (!salt.salts) None else {
       val thr = salt.threshold
       val hubs = keptRows(sym).get.mapPartitions { it =>
         val deg = scala.collection.mutable.HashMap.empty[Long, Long]
@@ -887,9 +907,13 @@ object GraphOps {
     // its links; u's own link repeats once per neighbor and collapses in
     // the distinct's map-side aggregation (dir is clustered by u), so
     // withMin is aggregated once and feeds only the join.
-    def smallStar(e: DataFrame): DataFrame = {
+    def smallStar(e: DataFrame, width: Int): DataFrame = {
+      // ONE exchange lays out dir by src for both its readers, the min
+      // aggregation and the join: two exchanges (the aggregation's own,
+      // after a map-side partial) computed the large-star join twice
       val dir = e.filter($"src" =!= $"dst")
         .select(greatest($"src", $"dst").as("src"), least($"src", $"dst").as("dst"))
+        .repartition(width, $"src")
       val withMin = dir.groupBy($"src").agg(min($"dst").as("m"))
       dir.join(withMin.hint("shuffle_hash"), Seq("src"))
         .select(explode(array(struct($"dst".as("src"), $"m".as("dst")),
@@ -1000,7 +1024,7 @@ object GraphOps {
         hubsForRound = if (firstRound) hubs else hubSnapshot(sym, salt, nEdges)
         free(sym)
       }
-      edgeState(smallStar(largeStar(sym, mins, hubs)))
+      edgeState(smallStar(largeStar(sym, mins, hubs), roundP))
     }
 
     def converged(prev: Option[DataFrame], e: DataFrame) = {
@@ -1041,10 +1065,18 @@ object GraphOps {
    * vertex adopts the most frequent label among its in-neighbors on the
    * symmetrized graph, ties broken deterministically by (count desc, label
    * asc) — SURVEY §7.4-6. Fixed iteration count => exactly reproducible.
+   * Every Long is a valid vertex id: the winner aggregate
+   * ([[MaxCountMinLabel]]) compares labels and never negates them.
    */
   /** `supersteps < iterations` after a cooperative STOP: `labels` is the
-    * valid k-superstep result, resumable to the full target. */
-  final case class LpResult(labels: DataFrame, metrics: Seq[SuperstepMetric], supersteps: Int)
+    * valid k-superstep result, resumable to the full target. `labels` reads
+    * the run's last state, kept as local-checkpoint rows, freed by
+    * [[release]] as [[PageRankResult]]'s are. */
+  final case class LpResult(labels: DataFrame, metrics: Seq[SuperstepMetric], supersteps: Int)(
+      unpersistKept: () => Unit) {
+    /** Unpersists what this run kept. `labels` must not be used afterwards. */
+    def release(): Unit = unpersistKept()
+  }
 
   def labelPropagation(spark: SparkSession, edges: DataFrame, iterations: Int): DataFrame =
     labelPropagationResult(spark, edges, iterations).labels
@@ -1068,19 +1100,10 @@ object GraphOps {
     // edge.
     val pairs = edgeRows(edges).flatMap(r =>
       if (r.isNullAt(0) || r.isNullAt(1)) None else Some((r.getLong(0), r.getLong(1))))
-    // sizing count + reserved-id guard in ONE job over the raw (pre-distinct)
-    // edges: the winner aggregate below negates labels
-    // (max(struct(cnt, -label))), and negating Long.MinValue overflows — so
-    // that id (never a legitimate dense vertex id) is rejected up front
-    // rather than silently mis-ranked. The raw count of the symmetrized
-    // edges (two per edge) only SIZES partitions (kernelPartitions), so the
-    // pre-dedup figure is fine — and it needs no deduped table first.
-    val (rawEdges, hasMin) = pairs.aggregate((0L, false))(
-      { case ((n, m), (s, d)) => (n + 1, m || s == Long.MinValue || d == Long.MinValue) },
-      { case (a, b) => (a._1 + b._1, a._2 || b._2) })
-    val edgeCount = 2 * rawEdges
-    require(!hasMin, s"labelPropagation reserves vertex id ${Long.MinValue} (label negation " +
-      "in the tie-break aggregate would overflow); the input graph contains it")
+    // The raw count of the symmetrized edges (two per edge) only SIZES
+    // partitions (kernelPartitions), so the pre-dedup figure is fine — and
+    // it needs no deduped table first.
+    val edgeCount = 2 * pairs.count()
     val shufflePartitions = kernelPartitions(run.confWidth, edgeCount)
     // aggregation exchanges inside the loop must match the edge layout's
     // width, or EnsureRequirements inserts an extra per-superstep exchange
@@ -1152,9 +1175,9 @@ object GraphOps {
         .select($"dst".as("id"), $"label")
         .repartition(shufflePartitions, $"id")
       val counts = msgs.groupBy($"id", $"label").agg(count(lit(1)).as("cnt"))
-      // winner = (count desc, label asc): a combinable max-of-struct
-      // aggregate (map-side partial agg, no per-superstep window sort);
-      // -label flips the tie-break to ascending under lexicographic max.
+      // winner = (count desc, label asc): a combinable aggregate over a
+      // two-Long buffer (map-side partial agg, no per-superstep sort), so it
+      // is a hash aggregate inside the superstep's pipeline.
       //
       // The winners table IS the next label state: sym is symmetrized, so
       // every vertex (= every distinct sym.src = every distinct sym.dst)
@@ -1165,15 +1188,13 @@ object GraphOps {
       // (measured: the 3-superstep q18 block job alone was 7-8.5 s at
       // sf0.1; linear chaining is the pageRank lesson, guide §1.2-1).
       //
-      // Every id's winner exists, so its label is never NULL, and saying so
-      // keeps NULL checks out of the next superstep's code.
-      counts.groupBy($"id")
-        .agg(max(struct($"cnt", (-$"label").as("nl"))).as("m"))
-        .select($"id", notNull(-$"m.nl").as("label"))
+      // The winner is never NULL, and saying so keeps NULL checks out of the
+      // next superstep's code.
+      counts.groupBy($"id").agg(MaxCountMinLabel.of($"cnt", $"label").as("label"))
     }
     val Steps(labels, metrics, steps, _) = run.loop(iterations, checkpointEvery, edgeCount,
       shufflePartitions, start, step)
-    LpResult(labels.select($"id", $"label"), metrics, steps)
+    LpResult(labels.select($"id", $"label"), metrics, steps)(() => free(labels))
   }
 
   // ------------------------------------------------------------- triangles
@@ -1185,21 +1206,24 @@ object GraphOps {
    * corner — hub vertices never explode quadratically (SURVEY §4.3-2).
    * Returns (total, perVertex(id, triangles)).
    */
-  def triangleCount(spark: SparkSession, edges: DataFrame): (Long, DataFrame) =
+  def triangleCount(spark: SparkSession, edges: DataFrame): (Long, DataFrame) = {
     // nothing is cached: a caller that also consumes the per-vertex frame
-    // re-runs the close, which beats leaving the close persisted for the
-    // session's lifetime. The total counts the close's rows as an RDD, so
-    // no count aggregate is planned or generated after the close.
-    (inRun(spark, "triangles")(_ => trianglesPlan(spark, edges).queryExecution.toRdd.count()),
-      trianglesPerVertex(spark, edges))
+    // re-runs the close over the same set-up, which beats leaving the close
+    // persisted for the session's lifetime. The total counts the close's
+    // rows as an RDD, so no count aggregate is planned or generated after
+    // the close.
+    val (total, close) = inRun(spark, "triangles") { _ =>
+      val close = trianglesPlan(spark, edges, sized = true)
+      (close.queryExecution.toRdd.count(), close)
+    }
+    (total, perVertexFrom(spark, close))
+  }
 
   /** Per-vertex triangle counts WITHOUT the eager total — a lazy plan, no
     * job forced, so callers that only want the frame (q17) don't pay the
-    * count action. Identical subtrees (the `und` distinct, the oriented
-    * join) are deduplicated by Catalyst's ReuseExchange within the single
-    * consuming action, so no persist is needed on this path. */
+    * count action. */
   def trianglesPerVertex(spark: SparkSession, edges: DataFrame): DataFrame =
-    perVertexFrom(spark, trianglesPlan(spark, edges))
+    perVertexFrom(spark, trianglesPlan(spark, edges, sized = false))
 
   private def perVertexFrom(spark: SparkSession, triangles: DataFrame): DataFrame = {
     import spark.implicits._
@@ -1208,45 +1232,69 @@ object GraphOps {
   }
 
   /** Value-canonical undirected simple edge set `(u < v)`, deduped. Shared
-    * by the triangle close, clustering coefficient, and k-core peeling.
-    * Both ends are declared never NULL (the `src =!= dst` filter drops a
-    * row with a NULL end): a plan that reads the set several times then
-    * infers no NULL filter on one read that another lacks, so every read is
-    * the same plan and shares one exchange. */
+    * by the clustering coefficient and k-core peeling. Both ends are
+    * declared never NULL (the `src =!= dst` filter drops a row with a NULL
+    * end): a plan that reads the set several times then infers no NULL
+    * filter on one read that another lacks, so every read is the same plan
+    * and shares one exchange. */
   private[graph] def undirected(edges: DataFrame): DataFrame =
     edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
       .select(notNull(least(col("src"), col("dst"))).as("u"), notNull(greatest(col("src"), col("dst"))).as("v"))
       .distinct()
 
-  /** The oriented-wedge triangle close as a pure lazy plan of rows
-    * (a, x, y) — one row per triangle, corner-canonical. */
-  private def trianglesPlan(spark: SparkSession, edges: DataFrame): DataFrame = {
-    import spark.implicits._
-    val und = undirected(edges)
-
-    val deg = und.select(explode(array($"u", $"v")).as("id"))
-      .groupBy($"id").agg(count(lit(1)).as("deg"))
-
-    // Orient by (degree, id).
-    val oriented = und
-      .join(deg.withColumnRenamed("id", "u").withColumnRenamed("deg", "du"), "u")
-      .join(deg.withColumnRenamed("id", "v").withColumnRenamed("deg", "dv"), "v")
-      .select(
-        when($"du" < $"dv" || ($"du" === $"dv" && $"u" < $"v"), $"u").otherwise($"v").as("a"),
-        when($"du" < $"dv" || ($"du" === $"dv" && $"u" < $"v"), $"v").otherwise($"u").as("b"))
-
-    // Wedges from the low-(degree,id) corner, pair canonicalized by value so
-    // the close is a pure equi-join against the value-canonical undirected
-    // set — an OR-of-orientations predicate here would degrade to a nested-
-    // loop join (O(wedges x edges)); the equi-join is O(wedges).
-    val e1 = oriented.select($"a", $"b".as("x"))
-    val e2 = oriented.select($"a".as("aa"), $"b".as("y"))
-    val wedges = e1.join(e2, e1("a") === e2("aa") && e1("x") < e2("y"))
-      .select($"a", $"x", $"y")
-    val closing = und.select($"u".as("x"), $"v".as("y"))
-    wedges.join(closing, Seq("x", "y"))
-      .select($"a", $"x", $"y")
+  /**
+   * The oriented-wedge triangle close as a lazy plan of rows (a, x, y) —
+   * one row per triangle, corner-canonical. Only the close is planned: the
+   * set-up is RDD operations over the edges' internal rows, which generate
+   * no code, in two exchanges at the session's width:
+   *  - both directions of every loop-free edge, laid out by their first
+   *    end: each vertex's distinct neighbors, and so its degree, are in one
+   *    partition, and so are the undirected pairs `(u < v)` it is the low
+   *    end of;
+   *  - each vertex's degree sent to its neighbors: a vertex w receives one
+   *    message per neighbor, so it knows its own degree too, and orients
+   *    each of its edges from the lower (degree, id) end to the higher. Its
+   *    out-neighbors x < y pair into the wedges (w, x, y) it is the low
+   *    corner of.
+   * The close joins the wedges with the pairs on (x, y). With `sized`, the
+   * pairs are counted (one job), and the close broadcasts them when they
+   * fit the broadcast threshold; otherwise, and always without `sized`, it
+   * is a shuffled hash join that builds on the pairs.
+   */
+  private def trianglesPlan(spark: SparkSession, edges: DataFrame, sized: Boolean): DataFrame = {
+    val part = new org.apache.spark.HashPartitioner(spark.conf.get(WidthKey, "32").toInt)
+    val neighbors = edgeRows(edges)
+      .flatMap(r => if (r.isNullAt(0) || r.isNullAt(1) || r.getLong(0) == r.getLong(1)) Iterator.empty
+        else Iterator((r.getLong(0), r.getLong(1)), (r.getLong(1), r.getLong(0))))
+      .partitionBy(part)
+      .mapPartitions { it =>
+        val adj = scala.collection.mutable.LongMap.empty[scala.collection.mutable.LongMap[Unit]]
+        it.foreach { case (v, w) => adj.getOrElseUpdate(v, scala.collection.mutable.LongMap.empty[Unit])(w) = () }
+        adj.iterator.map { case (v, ws) => (v, ws.keys.toArray) }
+      }
+    val pairs = neighbors.flatMap { case (v, ws) => ws.iterator.filter(_ > v).map(w => InternalRow(v, w)) }
+    val wedges = neighbors.flatMap { case (v, ws) => ws.iterator.map(w => (w, (v, ws.length))) }
+      .partitionBy(part)
+      .mapPartitions { it =>
+        val in = scala.collection.mutable.LongMap.empty[scala.collection.mutable.ArrayBuffer[(Long, Int)]]
+        it.foreach { case (w, m) => in.getOrElseUpdate(w, scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]) += m }
+        in.iterator.flatMap { case (w, ms) =>
+          val dw = ms.length
+          val out = ms.iterator.collect { case (v, dv) if dw < dv || (dw == dv && w < v) => v }.toArray.sorted
+          for (i <- out.indices.iterator; j <- (i + 1 until out.length).iterator) yield InternalRow(w, out(i), out(j))
+        }
+      }
+    val pairCount = if (sized) Some(BigInt(pairs.count())) else None
+    val closing = Bridge.dataFrame(spark, pairs,
+      StructType(Seq("x", "y").map(StructField(_, LongType, nullable = false))), pairCount)
+    val close =
+      if (pairCount.isDefined && closing.queryExecution.optimizedPlan.stats.sizeInBytes <= SQLConf.get.autoBroadcastJoinThreshold)
+        broadcast(closing)
+      else closing.hint("shuffle_hash")
+    Bridge.dataFrame(spark, wedges, StructType(Seq("a", "x", "y").map(StructField(_, LongType, nullable = false))))
+      .join(close, Seq("x", "y"))
+      .select(col("a"), col("x"), col("y"))
   }
 
   /**
@@ -1255,9 +1303,8 @@ object GraphOps {
    * oriented triangle close (so hubs don't enumerate quadratic wedge sets)
    * and `d` the undirected distinct degree. Vertices with `d < 2` get 0.
    *
-   * The degree aggregation is one extra map-side-combined pass over the
-   * same `und` subtree the triangle plan builds; within the single
-   * consuming action Catalyst's ReuseExchange dedups the shared scan. The
+   * The degree aggregation is one map-side-combined pass over the
+   * undirected edge set ([[undirected]]) beside the triangle close. The
    * per-vertex join keys on `id` — never on anything degree-correlated —
    * so the 100 TB shape is the triangle close's (its cost dominates).
    * Returns `(id, degree, triangles, lcc)` with `lcc` unrounded (query

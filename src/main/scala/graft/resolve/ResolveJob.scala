@@ -136,8 +136,10 @@ object ResolveJob {
     // whose independently-submitted build jobs each re-ran the full groupBy
     // histogram over the edge table, and — the common case — when NO key is
     // hot the whole salt machinery (two broadcast joins, a salt column on
-    // every row, a wider join key) drops out of the plan entirely.
-    val hotRows = BoundedCollect(
+    // every row, a wider join key) drops out of the plan entirely. A table
+    // of at most HotKeyThreshold edges has no hot key, so it runs no
+    // histogram at all.
+    val hotRows = if (edgeBound <= HotKeyThreshold) Array.empty[(String, String)] else BoundedCollect(
       edges.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
         .filter($"n" > HotKeyThreshold)
         .select(keys.map(col): _*)

@@ -68,6 +68,7 @@ object Probe {
       case "pagerank" =>
         val r = GraphOps.pageRank(spark, graph, iterations = 6)
         val n = r.ranks.count()
+        r.release()
         _ => s"vertices=$n supersteps=${r.supersteps} perStepMs=${r.metrics.map(_.millis).mkString(",")}"
       case "cc" =>
         val r = GraphOps.connectedComponentsResult(spark, graph)
@@ -76,9 +77,10 @@ object Probe {
         r.release()
         _ => s"vertices=$n components=$c rounds=${r.rounds}"
       case "lp" =>
-        val labels = GraphOps.labelPropagation(spark, graph, 3)
-        val n = labels.count()
-        val l = labels.select($"label").distinct().count()
+        val r = GraphOps.labelPropagationResult(spark, graph, 3)
+        val n = r.labels.count()
+        val l = r.labels.select($"label").distinct().count()
+        r.release()
         _ => s"vertices=$n labels=$l supersteps=3"
       case "scc" =>
         val (scc, s) = GraphOps.sccResult(spark, graph)
