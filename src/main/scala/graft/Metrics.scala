@@ -1,6 +1,6 @@
 package graft
 
-import graft.graph.SuperstepMetric
+import graft.util.SuperstepMetric
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /**

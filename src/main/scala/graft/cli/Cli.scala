@@ -1,11 +1,11 @@
 package graft.cli
 
 import graft.gen.SyntheticRepoFiles
-import graft.graph.{GraphOps, SuperstepMetric}
+import graft.graph.GraphOps
 import graft.mine.MineJob
 import graft.model._
 import graft.resolve.ResolveJob
-import graft.util.Fs
+import graft.util.{Fs, KernelRun, SuperstepMetric}
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -170,11 +170,11 @@ object Cli {
    * before the fingerprint and indexing jobs, so a stop issued during that
    * set-up counts as "after launch": the entry time, and the seq of any
    * marker present now — only a HIGHER seq written later is honored, a
-   * clock-free comparison (GraphOps.fsModifiedSince channel 1).
+   * clock-free comparison (KernelRun.fsModifiedSince channel 1).
    */
   private def launch(spark: SparkSession, dir: String, ckptName: Long => String): KernelLaunch = {
     val invokedAtMs = System.currentTimeMillis()
-    val seqSeen = GraphOps.stopMarkerSeq(spark, s"$dir/STOP").getOrElse(0L)
+    val seqSeen = KernelRun.stopMarkerSeq(spark, s"$dir/STOP").getOrElse(0L)
     val (edgeTable, srcCol, dstCol) = graphTable(spark, dir)
     val g = spark.read.parquet(s"$dir/$edgeTable")
     val fp = g.select(xxhash64(col(srcCol), col(dstCol)).as("h"))
@@ -243,7 +243,7 @@ object Cli {
       case "pagerank" =>
         val iters = rest.headOption.map(_.toInt).getOrElse(20)
         val k = launch(spark, dir, fp => f"pr-$fp%016x-i$iters")
-        val resumed = GraphOps.latestCheckpoint(spark, k.checkpointDir).isDefined
+        val resumed = KernelRun.latestCheckpoint(spark, k.checkpointDir).isDefined
         val r = GraphOps.pageRank(spark, k.edges, iters, checkpointDir = Some(k.checkpointDir),
           stopFlag = Some(k.stopFlag), stopAfterMs = k.stopAfterMs, stopSeqSeen = k.stopSeqSeen)
         k.publish(r.ranks, "rank", Some("pagerank"), r.metrics)
@@ -281,9 +281,9 @@ object Cli {
         // number (previous marker's seq + 1): runners compare the seq they
         // saw at launch, so honoring a stop needs NO clock agreement at all;
         // the epoch-ms keeps the timestamp fallback working for runners that
-        // didn't capture a seq (GraphOps.fsModifiedSince documents both
+        // didn't capture a seq (KernelRun.fsModifiedSince documents both
         // channels).
-        val nextSeq = GraphOps.stopMarkerSeq(spark, s"$dir/STOP").getOrElse(0L) + 1L
+        val nextSeq = KernelRun.stopMarkerSeq(spark, s"$dir/STOP").getOrElse(0L) + 1L
         Fs.write(spark, s"$dir/STOP", s"${System.currentTimeMillis()} seq=$nextSeq")
         println("stop: requested (takes effect at the next checkpoint boundary)")
 

@@ -2,14 +2,12 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.storage.StorageLevel
 import graft.functions.MaxCountMinLabel
-import graft.util.{BoundedCollect, CodegenPolicy, Fs}
+import graft.util.{BoundedCollect, KernelRun, Releasable, SameCount, Steps, SuperstepMetric}
+import graft.util.KernelRun.{inRun, keptRows, CodegenConf, KernelConf, WidthKey}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, KnownNotNull, XXH64}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -18,21 +16,6 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.graftbridge.Bridge
-
-/** Per-superstep lineage/metrics row (north_rule: "checkpointed every k
-  * supersteps with per-partition lineage and metrics").
-  *
-  * Block attribution: supersteps between checkpoint boundaries chain lazily,
-  * so a non-boundary row's `millis` measures only driver-side plan
-  * construction (~ms) while the boundary row (`boundary=true`) absorbs its
-  * whole block's execution. Per-row times are therefore meaningful only at
-  * boundaries; their SUM over a run is always the true loop time.
-  *
-  * The loop of the iterative kernels (`KernelRun.loop`) writes every row:
-  * one per superstep, round, hop or iteration. */
-final case class SuperstepMetric(kernel: String, superstep: Int, millis: Long,
-                                 edgesScanned: Long, partitions: Int, maxDelta: Double,
-                                 boundary: Boolean = true)
 
 /**
  * Link-graph kernels over a generic Long-id edge table `(src, dst)`,
@@ -51,7 +34,13 @@ final case class SuperstepMetric(kernel: String, superstep: Int, millis: Long,
  *  - skew is handled explicitly, not by AQE (the iterative kernels run with
  *    AQE off): hub keys are salted over sub-keys (`HubSalt`), and triangle
  *    counting uses degree-ordered orientation so hub vertices don't
- *    quadratically explode wedges.
+ *    quadratically explode wedges;
+ *  - every kernel runs in one [[KernelRun]] (`graft.util`), which sets the
+ *    kernels' conf ([[KernelRun.KernelConf]]), frees what the kernel kept
+ *    and runs the supersteps of PageRank, CC, LP, HITS, BFS, k-core and
+ *    SCC's color and backward phases ([[KernelRun.loop]]). The rows a
+ *    result reads are handed to it: PageRank's, CC's and LP's `release()`
+ *    frees them; the other results leave them to the context cleaner.
  */
 object GraphOps {
 
@@ -77,10 +66,10 @@ object GraphOps {
 
   /** Map a string edge table to Long ids using one dictionary for both ends.
     * The dictionary is built from one explode of both ends, under the
-    * [[CodegenPolicy]], and caches nothing: a later read of it re-reads the
+    * [[graft.util.CodegenPolicy]], and caches nothing: a later read of it re-reads the
     * sorted ids from the sort's shuffle output. */
   def indexEdges(spark: SparkSession, edges: DataFrame, srcCol: String, dstCol: String): (DataFrame, DataFrame) =
-    CodegenPolicy(spark) {
+    inRun(spark, "index", CodegenConf) { _ =>
       val dict = vertexDictionary(spark, edges.select(explode(array(col(srcCol), col(dstCol))).as("v")))
       val (s, d) = (dict.as("s"), dict.as("d"))
       val e = edges
@@ -92,14 +81,10 @@ object GraphOps {
 
   // ------------------------------------------------------------------ PageRank
 
-  /** `ranks` reads the run's last state, kept as local-checkpoint rows: the
-    * caller frees them with [[release]] once it has consumed the ranks; a
-    * caller that drops the result leaves them to the context cleaner. */
+  /** `ranks` reads the run's last state, local-checkpoint rows the result
+    * frees with `release()`. */
   final case class PageRankResult(ranks: DataFrame, metrics: Seq[SuperstepMetric], supersteps: Int)(
-      unpersistKept: () => Unit) {
-    /** Unpersists what this run kept. `ranks` must not be used afterwards. */
-    def release(): Unit = unpersistKept()
-  }
+      free: () => Unit) extends Releasable(free)
 
   /**
    * Iterative PageRank: rank = (1-d)/N + d * (sum of contributions
@@ -157,7 +142,7 @@ object GraphOps {
                stopSeqSeen: Long = -1L,
                restart: Option[DataFrame] = None,
                weightCol: Option[String] = None): PageRankResult =
-    inRun(spark, "pagerank", checkpointDir, stopFlag, stopAfterMs, stopSeqSeen) { run =>
+    inRun(spark, "pagerank", KernelConf, checkpointDir, stopFlag, stopAfterMs, stopSeqSeen) { run =>
     import spark.implicits._
 
     // Sentinel id for the dangling supernode (below any dense vertex id).
@@ -340,10 +325,10 @@ object GraphOps {
       case None if seeds.isEmpty =>
         // uniform starts at 1/n (the sentinel at 0): kept rows over the id
         // rows, laid out as they are, materialized by their count
-        val x0 = idRows.map { r =>
+        val x0 = run.handOff(idRows.map { r =>
           val x = if (r.getLong(0) == Sent) 0.0 else 1.0 / n
           if (haveHubs) InternalRow(r.getLong(0), x, r.getInt(1)) else InternalRow(r.getLong(0), x)
-        }.localCheckpoint()
+        }.localCheckpoint())
         x0.count()
         Bridge.dataFrame(spark, x0, StructType(Seq(idSchema.head, StructField("x", DoubleType, nullable = false)) ++
           ids.schema.drop(1)), hashedBy = Seq("id"))
@@ -415,7 +400,7 @@ object GraphOps {
         val m = keptRows(state).get.filter(_.getLong(0) == Sent).map(_.getDouble(1)).first()
         state.filter($"id" =!= Sent).select($"id", ($"x" + lit(damping) * udf(() => m).apply()).as("rank"))
       }
-    PageRankResult(ranks, metrics, steps)(() => free(state))
+    PageRankResult(ranks, metrics, steps)(run.release)
   }
 
   /** The internal rows of an edge table's `src` and `dst` cast to Long,
@@ -502,286 +487,38 @@ object GraphOps {
   /** The edges [[kernelPartitions]] budgets for one partition. */
   private val EdgesPerPartition = 150000L
 
-  /** Monotonic sequence number recorded in a STOP marker payload
-    * (`"<epochMs> seq=<n>"`), if present. Kernel launchers capture it at
-    * command entry; a later marker is then honored iff its seq is HIGHER —
-    * a pure counter comparison with no wall-clock in it, which closes the
-    * residual both-clocks-behind case of the timestamp watermark. */
-  def stopMarkerSeq(spark: SparkSession, path: String): Option[Long] =
-    Fs.read(spark, path).flatMap(parseMarkerSeq)
-
-  private def parseMarkerSeq(payload: String): Option[Long] =
-    payload.trim.split("\\s+").collectFirst { case t if t.startsWith("seq=") => t.drop(4) }
-      .flatMap(t => scala.util.Try(t.toLong).toOption)
-
-  /** True iff `path` exists and records a STOP request newer than the
-    * launch watermark. Two freshness channels, most-robust first:
-    *
-    *  1. SEQUENCE: if the payload carries `seq=<n>` AND the launcher
-    *     captured the seq it saw at entry (`seqSeen >= 0`), the stop is
-    *     honored iff `n > seqSeen` — a monotonic counter comparison with no
-    *     clock dependency at all (closes the both-clocks-behind residual of
-    *     the timestamp scheme).
-    *  2. TIMESTAMP (fallback for seq-less markers or legacy callers):
-    *     freshness is the MAX of the payload timestamp (epoch-ms or ISO
-    *     instant, written by the stopping node) and the FS mtime — the max
-    *     means a stop survives EITHER a coarse/fileserver-stamped mtime
-    *     (payload rescues it) or a lagging stopping-node clock (mtime
-    *     rescues it).
-    *
-    * Any races with a concurrent marker delete (exists/read/stat TOCTOU)
-    * read as "no stop" — a vanished marker means the request was withdrawn,
-    * never a crash. */
-  private def fsModifiedSince(spark: SparkSession, path: String, sinceMs: Long,
-                              seqSeen: Long = -1L): Boolean =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(p) && {
-        val payload = Fs.read(spark, path).map(_.trim)
-        payload.flatMap(parseMarkerSeq) match {
-          case Some(seq) if seqSeen >= 0L => seq > seqSeen
-          case _ =>
-            val payloadMs = payload.flatMap { s =>
-              val head = s.split("\\s+").headOption.getOrElse(s)
-              scala.util.Try(head.toLong).toOption
-                .orElse(scala.util.Try(java.time.Instant.parse(head).toEpochMilli).toOption)
-            }
-            math.max(payloadMs.getOrElse(Long.MinValue),
-              fs.getFileStatus(p).getModificationTime) >= sinceMs
-        }
-      }
-    } catch { case _: java.io.IOException => false }
-
-  /** Latest checkpointed superstep in `dir` for `kernel`, if any. */
-  def latestCheckpoint(spark: SparkSession, dir: String, kernel: String = "pagerank"): Option[Int] =
-    Fs.read(spark, s"$dir/$kernel/LATEST").map(_.trim.toInt)
-
-  // ------------------------------------------------------------ run scope
-
-  private val AqeKey = "spark.sql.adaptive.enabled"
-  private val WidthKey = "spark.sql.shuffle.partitions"
-
-  /**
-   * One iterative-kernel run: the session conf it changes and the frames it
-   * caches, restored and released in ONE place. Opening the scope saves
-   * four keys and sets three of them:
-   *  - AQE off: AQE re-plans every superstep, and its partition coalescing
-   *    breaks the co-partitioning reuse between the state and the static
-   *    edge layout (measured 3x slower with it on);
-   *  - the two keys of [[CodegenPolicy]]: with stage ids in class names one
-   *    `kernels` benchmark cycle needed about 360 codegen cache entries, so
-   *    every cycle recompiled all of them and ran freshly loaded,
-   *    still-interpreted classes. Without them it needed 182, as the
-   *    kernels built their set-up tables as generated pipelines; built as
-   *    RDD reductions over internal rows, once each, it needed 99 of the
-   *    100 Spark keeps, and it needs 60, the budget [[CodegenPolicy]]
-   *    states, with LP's winner a hash aggregate, PageRank's superstep
-   *    free of the vertex-set join, small joins unsalted ([[HubSalt]]) and
-   *    the triangle set-up out of the plan.
-   * The kernel sets its shuffle width through [[width]] or [[edgeTable]].
-   * Closing restores all four keys, unpersists the frames registered
-   * through [[cache]] (newest first: uncaching a frame re-plans every
-   * still-registered, never-built cache derived from it) and frees the rows
-   * registered through [[keep]] or [[own]], on success and on failure; a
-   * frame the returned result still reads is kept as local-checkpoint rows.
-   *
-   * Every multi-action kernel runs in one. PageRank, CC, LP, HITS, SCC,
-   * BFS and k-core run their steps through [[loop]], which also takes the
-   * checkpoint and STOP-marker settings of the resumable ones (PageRank,
-   * CC, LP) from the scope; random walks and the triangle count do not.
-   */
-  private final class KernelRun(spark: SparkSession, kernel: String,
-                                checkpointDir: Option[String], stopFlag: Option[String],
-                                stopAfterMs: Long, stopSeqSeen: Long) {
-    private val restoreConf = CodegenPolicy.save(spark, Seq(AqeKey, WidthKey) ++ CodegenPolicy.Keys)
-    /** The configured shuffle width that the kernel sizes itself against. */
-    val confWidth: Int = spark.conf.get(WidthKey, "32").toInt
-    (AqeKey +: CodegenPolicy.Keys).foreach(spark.conf.set(_, "false"))
-
-    /** Kernel-internal shuffle width for every exchange the loop plans. */
-    def width(p: Int): Unit = spark.conf.set(WidthKey, p.toLong)
-
-    private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    private val rows = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
-    def cache(df: DataFrame): DataFrame = { frames += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
-    /** `r` persisted until the run closes. */
-    def keep[T](r: RDD[T]): RDD[T] = { rows += r; r.persist(StorageLevel.MEMORY_AND_DISK) }
-    /** `df`, whose kept rows ([[keptRows]]) the run frees when it closes. */
-    def own(df: DataFrame): DataFrame = { keptRows(df).foreach(rows += _); df }
-
-    /** The loop-free, deduplicated Long edge table of HITS, SCC, BFS and
-      * random walks. One count of the loop-free input rows (repeats
-      * included, as LP sizes) sets the kernel width; ONE exchange lays them
-      * out by src at it, and each partition drops its repeats. The rows are
-      * kept until the run closes and counted, which sizes them for the
-      * planner; RDD work, it generates no code. A NULL end is no edge. */
-    def edgeTable(edges: DataFrame): EdgeTable = {
-      val pairs = edgeRows(edges).flatMap(r =>
-        if (r.isNullAt(0) || r.isNullAt(1) || r.getLong(0) == r.getLong(1)) None else Some((r.getLong(0), r.getLong(1))))
-      val p = kernelPartitions(confWidth, pairs.count())
-      width(p)
-      val laid = keep(laidOutBy(pairs.map { case (s, d) => (s, InternalRow(s, d)) }, p).mapPartitions(distinctPairs))
-      new EdgeTable(laid, laid.count())
-    }
-
-    /** `count` loop-free edges ([[edgeTable]]) as `rows` laid out by src
-      * at the kernel width `partitions`. */
-    final class EdgeTable(rows: RDD[InternalRow], val count: Long) {
-      def partitions: Int = rows.getNumPartitions
-      /** The rows, sized for the planner: what a broadcast of them reads. */
-      val table: DataFrame = Bridge.dataFrame(spark, rows, edgeSchema, Some(BigInt(count)))
-      /** The same rows declared laid out by src: a join or aggregation by
-        * src plans no exchange. */
-      val bySrc: DataFrame = Bridge.dataFrame(spark, rows, edgeSchema, Some(BigInt(count)), Seq("src"))
-      /** Every end once, with their count: rows persisted until the run
-        * closes (a lazy result recomputes them), laid out by id by a distinct. */
-      def vertices: (DataFrame, Long) = {
-        val ids = table.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
-        val rows = keep(ids.queryExecution.toRdd.map(_.copy()))
-        val n = rows.count()
-        (Bridge.dataFrame(spark, rows, ids.schema, Some(BigInt(n)), Seq("id")), n)
-      }
-    }
-
-    /**
-     * `table`, a static table every superstep joins on `keys`, as that join
-     * reads it: broadcast when its size (known, as it is built before the
-     * loop) fits the session's broadcast threshold, else laid out once at
-     * width `p` by `keys` and sorted, so each superstep's sort-merge join
-     * re-sorts only the state side. Left to per-superstep estimates, the
-     * first superstep of a block broadcast whichever side looked smaller and
-     * planned other code than the rest. The layout is a columnar cache, not
-     * kept rows: a row-format scan of PageRank's edge leaf was measured
-     * ~1 s/block slower at sf0.1. `laidOut`, when given, is the same table
-     * over rows already laid out by `keys` at width `p` and declared so,
-     * which spares the layout its exchange; the broadcast reads the
-     * undeclared `table`, as a declared layout keeps a block's later
-     * supersteps from reusing its first superstep's broadcast.
-     */
-    def joinSide(table: DataFrame, p: Int, keys: Seq[String], laidOut: => Option[DataFrame] = None): DataFrame =
-      if (table.queryExecution.optimizedPlan.stats.sizeInBytes <= SQLConf.get.autoBroadcastJoinThreshold)
-        broadcast(table)
-      else {
-        val byKeys = laidOut.getOrElse(table.repartition(p, keys.map(col): _*))
-        val laid = cache(byKeys.sortWithinPartitions(keys.map(col): _*))
-        laid.count()
-        laid
-      }
-
-    private var explained = Set.empty[String]
-
-    /** With `GRAFT_KERNEL_EXPLAIN` set, prints the formatted physical plan of
-      * the first frame passed here as `what` — the loop passes its first
-      * boundary block, SCC also its first trim round — to stderr: the shape
-      * the kernel really executes, dumped from inside it without touching
-      * the hot path. Later calls with the same `what` print nothing. */
-    def explain(what: String, df: DataFrame): Unit =
-      if (!explained(what) && sys.env.contains("GRAFT_KERNEL_EXPLAIN")) {
-        explained += what
-        Console.err.println(s"=== $kernel $what plan ===\n" +
-          df.queryExecution.explainString(ExplainMode.fromString("formatted")))
-      }
-
-    /**
-     * The one superstep loop of the iterative kernels. The kernel supplies
-     * its start state (`start`: fresh, or built from the restored
-     * checkpoint), one superstep (`step`, a lazy frame) and, where it has
-     * one, a convergence test; the loop owns the rest:
-     *  - steps are numbered on from the latest checkpoint in
-     *    `checkpointDir` at a step <= `target`;
-     *  - with `chain`, supersteps chain lazily and a boundary falls every
-     *    `every` steps and at `target`. Without it (CC: a round reads its
-     *    input several times, so an unmaterialized round would re-run once
-     *    per read) every step is a boundary, cut lazily so that the test's
-     *    first action materializes it;
-     *  - a boundary cuts the lineage (eager localCheckpoint with `chain`),
-     *    explains the run's first block, runs `converged` on the previous
-     *    boundary's state and the new one, and then, unless the boundary
-     *    ends the run because `target` is reached or the run converged,
-     *    every `every` steps writes the checkpoint and checks the STOP
-     *    marker — the reference's `stop` (Task.java:207-217) as a
-     *    cooperative cancel that leaves the run resumable from any node
-     *    sharing the FS; markers older than the caller's watermark are
-     *    stale and ignored. Last, it frees the state the boundary
-     *    supersedes, when that state is kept rows of its own (a start
-     *    state that is a plan over other tables, as HITS's, is not);
-     *  - every step writes one [[SuperstepMetric]] row, with `edges`,
-     *    `partitions` and, at a boundary, `delta` read as the row is
-     *    written (by name: CC's edge count changes every round).
-     * `converged` also judges the start state, with no previous state.
-     */
-    def loop(target: Int, every: Int, edges: => Long, partitions: => Int,
-             start: Option[DataFrame] => DataFrame, step: DataFrame => DataFrame,
-             converged: (Option[DataFrame], DataFrame) => Boolean = (_, _) => false,
-             delta: => Double = Double.NaN, chain: Boolean = true): Steps = {
-      val restored = for (dir <- checkpointDir; n <- latestCheckpoint(spark, dir, kernel) if n <= target)
-        yield (n, spark.read.parquet(s"$dir/$kernel/superstep=$n"))
-      var n = restored.fold(0)(_._1)
-      var state = start(restored.map(_._2))
-      var last = state
-      var ended = converged(None, state)
-      var stopped = false
-      val metrics = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetric]
-      while (n < target && !ended && !stopped) {
-        val t0 = System.nanoTime()
-        val block = step(state)
-        n += 1
-        val boundary = !chain || n % every == 0 || n == target
-        state = if (boundary) block.localCheckpoint(chain) else block
-        if (boundary) {
-          explain("boundary block", block)
-          ended = converged(Some(last), state) || n == target
-          if (!ended && n % every == 0) {
-            // the state's rows, a manifest, then LATEST: a run killed mid-write
-            // resumes from the previous checkpoint
-            checkpointDir.foreach { dir =>
-              state.write.mode("overwrite").parquet(s"$dir/$kernel/superstep=$n")
-              Fs.write(spark, s"$dir/$kernel/MANIFEST-$n.json", s"""{"kernel": "$kernel", "superstep": $n, """ +
-                s""""rows": ${state.count()}, "partitions": ${state.rdd.getNumPartitions}}""")
-              Fs.write(spark, s"$dir/$kernel/LATEST", n.toString)
-            }
-            stopped = stopFlag.exists(f => fsModifiedSince(spark, f, stopAfterMs, stopSeqSeen))
-          }
-          // nothing reads the superseded state once this one is built
-          free(last)
-          last = state
-        }
-        metrics += SuperstepMetric(kernel, n, (System.nanoTime() - t0) / 1000000L, edges, partitions,
-          if (boundary) delta else Double.NaN, boundary)
-      }
-      Steps(state, metrics.toSeq, n, stopped)
-    }
-
-    def close(): Unit = {
-      frames.reverseIterator.foreach(_.unpersist(false))
-      rows.foreach(Bridge.free)
-      restoreConf()
-    }
+  /** The loop-free, deduplicated Long edge table of HITS, SCC, BFS and
+    * random walks. One count of the loop-free input rows (repeats
+    * included, as LP sizes) sets the kernel width; ONE exchange lays them
+    * out by src at it, and each partition drops its repeats. The rows are
+    * kept until the run closes and counted, which sizes them for the
+    * planner; RDD work, it generates no code. A NULL end is no edge. */
+  private def edgeTable(run: KernelRun, edges: DataFrame): EdgeTable = {
+    val pairs = edgeRows(edges).flatMap(r =>
+      if (r.isNullAt(0) || r.isNullAt(1) || r.getLong(0) == r.getLong(1)) None else Some((r.getLong(0), r.getLong(1))))
+    val p = kernelPartitions(run.confWidth, pairs.count())
+    run.width(p)
+    val laid = run.keep(laidOutBy(pairs.map { case (s, d) => (s, InternalRow(s, d)) }, p).mapPartitions(distinctPairs))
+    new EdgeTable(run, laid, laid.count())
   }
 
-  /** What [[KernelRun.loop]] ends with: the last state, one metric row per
-    * step it ran, the step reached and whether a STOP marker ended it. */
-  private final case class Steps(state: DataFrame, metrics: Seq[SuperstepMetric], step: Int, stopped: Boolean)
-
-  /** [[KernelRun.loop]]'s convergence test for a state that only grows
-    * (BFS, SCC's members) or only shrinks (k-core): its row count, the
-    * first action on the lazily cut state, which materializes it, is
-    * unchanged. `rows` is the last count; an empty start has converged. */
-  private final class SameCount extends ((Option[DataFrame], DataFrame) => Boolean) {
-    var rows = 0L
-    def apply(prev: Option[DataFrame], state: DataFrame): Boolean = {
-      val last = rows
-      rows = keptRows(state).get.count()
-      rows == last
+  /** `count` loop-free edges ([[edgeTable]]) as `rows` laid out by src
+    * at the kernel width `partitions`. */
+  private final class EdgeTable(run: KernelRun, rows: RDD[InternalRow], val count: Long) {
+    def partitions: Int = rows.getNumPartitions
+    /** The rows, sized for the planner: what a broadcast of them reads. */
+    val table: DataFrame = Bridge.dataFrame(run.spark, rows, edgeSchema, Some(BigInt(count)))
+    /** The same rows declared laid out by src: a join or aggregation by
+      * src plans no exchange. */
+    val bySrc: DataFrame = Bridge.dataFrame(run.spark, rows, edgeSchema, Some(BigInt(count)), Seq("src"))
+    /** Every end once, with their count: rows persisted until the run
+      * closes (a lazy result recomputes them), laid out by id by a distinct. */
+    def vertices: (DataFrame, Long) = {
+      val ids = table.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
+      val rows = run.keep(ids.queryExecution.toRdd.map(_.copy()))
+      val n = rows.count()
+      (Bridge.dataFrame(run.spark, rows, ids.schema, Some(BigInt(n)), Seq("id")), n)
     }
-  }
-
-  private def inRun[T](spark: SparkSession, kernel: String,
-                       checkpointDir: Option[String] = None, stopFlag: Option[String] = None,
-                       stopAfterMs: Long = 0L, stopSeqSeen: Long = -1L)(body: KernelRun => T): T = {
-    val run = new KernelRun(spark, kernel, checkpointDir, stopFlag, stopAfterMs, stopSeqSeen)
-    try body(run) finally run.close()
   }
 
   // ------------------------------------------------- connected components
@@ -803,26 +540,10 @@ object GraphOps {
    */
   /** `stopped = true` means a cooperative STOP ended the run BEFORE
     * convergence: `components` is the partially-contracted state (valid to
-    * resume from, NOT final component assignments). `components` is kept by
-    * the run as local-checkpoint rows: the caller frees them with
-    * [[release]] once it has consumed the labels; a caller that drops the
-    * result leaves them to the context cleaner. */
+    * resume from, NOT final component assignments). `components` reads
+    * local-checkpoint rows the result frees with `release()`. */
   final case class CcResult(components: DataFrame, metrics: Seq[SuperstepMetric], rounds: Int,
-                            stopped: Boolean = false)(unpersistKept: () => Unit) {
-    /** Unpersists what this run kept. `components` must not be used
-      * afterwards. */
-    def release(): Unit = unpersistKept()
-  }
-
-  /** The rows behind `df` when it is a local checkpoint or a frame over
-    * kept rows; a frame that is a plan over such rows has none of its own. */
-  private def keptRows(df: DataFrame): Option[RDD[InternalRow]] = df.queryExecution.logical match {
-    case l: LogicalRDD => Some(l.rdd)
-    case _             => None
-  }
-
-  /** Frees the rows behind `df` ([[keptRows]]), if it has its own. */
-  private def free(df: DataFrame): Unit = keptRows(df).foreach(Bridge.free)
+                            stopped: Boolean = false)(free: () => Unit) extends Releasable(free)
 
   def connectedComponents(spark: SparkSession, edges: DataFrame, maxIter: Int = 50): DataFrame =
     connectedComponentsResult(spark, edges, maxIter).components
@@ -839,7 +560,7 @@ object GraphOps {
                                 checkpointEvery: Int = 5, checkpointDir: Option[String] = None,
                                 stopFlag: Option[String] = None, stopAfterMs: Long = 0L,
                                 stopSeqSeen: Long = -1L): CcResult =
-    inRun(spark, "cc", checkpointDir, stopFlag, stopAfterMs, stopSeqSeen) { run =>
+    inRun(spark, "cc", KernelConf, checkpointDir, stopFlag, stopAfterMs, stopSeqSeen) { run =>
     import spark.implicits._
     // The loop-free start edges and the vertex set the labels are read
     // over are RDD operations over the edges' internal rows, which generate
@@ -1022,7 +743,7 @@ object GraphOps {
       val hubs = if (firstRound) hubSnapshot(sym, salt, nEdges) else hubsForRound
       afterBuilt = () => {
         hubsForRound = if (firstRound) hubs else hubSnapshot(sym, salt, nEdges)
-        free(sym)
+        run.free(sym)
       }
       edgeState(smallStar(largeStar(sym, mins, hubs), roundP))
     }
@@ -1042,20 +763,20 @@ object GraphOps {
     // roots and isolated vertices label themselves. (A stopped run's labels
     // are the PARTIAL contraction — flagged via `stopped`.) The labels are
     // one RDD join of the vertex set (every non-NULL end of the input) with
-    // the last state's rows, kept rows materialized by their count; nothing
-    // the result reads is registered in the session's cache, so a caller
-    // that drops the result (the `connectedComponents` facade) leaves them
-    // to the context cleaner.
-    val labels = rows.flatMap(r => Seq(0, 1).collect { case i if !r.isNullAt(i) => (r.getLong(i), ()) })
+    // the last state's rows, kept rows materialized by their count and
+    // handed to the result; nothing the result reads is registered in the
+    // session's cache, so a caller that drops the result (the
+    // `connectedComponents` facade) leaves them to the context cleaner.
+    val labels = run.handOff(rows.flatMap(r => Seq(0, 1).collect { case i if !r.isNullAt(i) => (r.getLong(i), ()) })
       .distinct()
       .leftOuterJoin(keptRows(e).get.map(r => (r.getLong(0), r.getLong(1))))
       .map { case (id, (_, c)) => InternalRow(id, c.getOrElse(id)) }
-      .localCheckpoint()
+      .localCheckpoint())
     labels.count()
-    free(e)
+    run.free(e)
     val components = Bridge.dataFrame(spark, labels,
       StructType(Seq("id", "component").map(StructField(_, LongType, nullable = false))))
-    CcResult(components, metrics, rounds, stopped)(() => Bridge.free(labels))
+    CcResult(components, metrics, rounds, stopped)(run.release)
   }
 
   // ------------------------------------------------------ label propagation
@@ -1070,13 +791,9 @@ object GraphOps {
    */
   /** `supersteps < iterations` after a cooperative STOP: `labels` is the
     * valid k-superstep result, resumable to the full target. `labels` reads
-    * the run's last state, kept as local-checkpoint rows, freed by
-    * [[release]] as [[PageRankResult]]'s are. */
+    * the run's last state, as [[PageRankResult]]'s `ranks` do. */
   final case class LpResult(labels: DataFrame, metrics: Seq[SuperstepMetric], supersteps: Int)(
-      unpersistKept: () => Unit) {
-    /** Unpersists what this run kept. `labels` must not be used afterwards. */
-    def release(): Unit = unpersistKept()
-  }
+      free: () => Unit) extends Releasable(free)
 
   def labelPropagation(spark: SparkSession, edges: DataFrame, iterations: Int): DataFrame =
     labelPropagationResult(spark, edges, iterations).labels
@@ -1092,7 +809,7 @@ object GraphOps {
                              checkpointEvery: Int = 5, checkpointDir: Option[String] = None,
                              stopFlag: Option[String] = None, stopAfterMs: Long = 0L,
                              stopSeqSeen: Long = -1L): LpResult =
-    inRun(spark, "lp", checkpointDir, stopFlag, stopAfterMs, stopSeqSeen) { run =>
+    inRun(spark, "lp", KernelConf, checkpointDir, stopFlag, stopAfterMs, stopSeqSeen) { run =>
     import spark.implicits._
     // The set-up is RDD operations over the edges' internal rows, which
     // generate no code of their own, and ONE exchange that lays out the
@@ -1153,7 +870,7 @@ object GraphOps {
     // The start state, every vertex labeled with itself, kept rows
     // materialized by their count.
     def start(restored: Option[DataFrame]) = restored.fold {
-      val labels = sym.mapPartitions(degrees(_).keysIterator.map(id => InternalRow(id, id))).localCheckpoint()
+      val labels = run.handOff(sym.mapPartitions(degrees(_).keysIterator.map(id => InternalRow(id, id))).localCheckpoint())
       labels.count()
       Bridge.dataFrame(spark, labels, StructType(Seq("id", "label").map(StructField(_, LongType, nullable = false))))
     }(_.localCheckpoint(true))
@@ -1194,7 +911,7 @@ object GraphOps {
     }
     val Steps(labels, metrics, steps, _) = run.loop(iterations, checkpointEvery, edgeCount,
       shufflePartitions, start, step)
-    LpResult(labels.select($"id", $"label"), metrics, steps)(() => free(labels))
+    LpResult(labels.select($"id", $"label"), metrics, steps)(run.release)
   }
 
   // ------------------------------------------------------------- triangles
@@ -1212,7 +929,7 @@ object GraphOps {
     // persisted for the session's lifetime. The total counts the close's
     // rows as an RDD, so no count aggregate is planned or generated after
     // the close.
-    val (total, close) = inRun(spark, "triangles") { _ =>
+    val (total, close) = inRun(spark, "triangles", KernelConf) { _ =>
       val close = trianglesPlan(spark, edges, sized = true)
       (close.queryExecution.toRdd.count(), close)
     }
@@ -1329,7 +1046,7 @@ object GraphOps {
    * Neo4j after export (SURVEY §2.9); here the frontier expansion is native.
    *
    * Scale shape: the loop-free edges are laid out by `src` once
-   * ([[KernelRun.edgeTable]]); each hop is then ONE join against that
+   * ([[edgeTable]]); each hop is then ONE join against that
    * layout (the frontier — the small side — moves to the edges), a
    * distinct, and an anti-join against the settled table, all keyed on
    * vertex id. The settled `(id, dist)` table — O(V), no adjacency — is
@@ -1345,9 +1062,9 @@ object GraphOps {
   def shortestPaths(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
                     maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    inRun(spark, "bfs") { run =>
+    inRun(spark, "bfs", KernelConf) { run =>
       import spark.implicits._
-      val e = run.edgeTable(edges)
+      val e = edgeTable(run, edges)
       val settled = new SameCount
       var hop = 0
       // by-name semi-join (the frontier — small side — moves to the fixed
@@ -1394,7 +1111,7 @@ object GraphOps {
   def kCoreResult(spark: SparkSession, edges: DataFrame, k: Int,
                   maxRounds: Int = 50): (DataFrame, Int) = {
     require(k >= 1, s"k must be >= 1, got $k")
-    inRun(spark, "kcore") { run =>
+    inRun(spark, "kcore", KernelConf) { run =>
       import spark.implicits._
       val nEdges = new SameCount
       // the edge set only shrinks: each round is sized from the last count
@@ -1413,10 +1130,10 @@ object GraphOps {
       val peeled = run.loop(maxRounds, 1, nEdges.rows, roundWidth,
         _ => undirected(edges).localCheckpoint(false), peel, nEdges, chain = false)
       val und = run.own(peeled.state)
-      val core = und.select($"u".as("id")).union(und.select($"v".as("id")))
+      val core = run.handOff(und.select($"u".as("id")).union(und.select($"v".as("id")))
         .groupBy($"id").agg(count(lit(1)).as("core_degree"))
         .filter($"core_degree" >= k)
-        .localCheckpoint(false)
+        .localCheckpoint(false))
       core.count()
       (core, peeled.step)
     }
@@ -1434,7 +1151,7 @@ object GraphOps {
    * (1e308) that bounds ~150 iterations even on a degree-10^4 graph, far
    * past HITS convergence (~10) — asserted finite at the end.
    *
-   * Scale shape: the loop-free edge table ([[KernelRun.edgeTable]]) is the
+   * Scale shape: the loop-free edge table ([[edgeTable]]) is the
    * join side of both half-steps, pinned once ([[KernelRun.joinSide]]) by
    * src (the a-step's key and the table's own layout) and by dst (the
    * h-step's); every half-step is one join + one map-side-combined sum
@@ -1447,9 +1164,9 @@ object GraphOps {
   def hits(spark: SparkSession, edges: DataFrame, iterations: Int,
            checkpointEvery: Int = 4): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    inRun(spark, "hits") { run =>
+    inRun(spark, "hits", KernelConf) { run =>
       import spark.implicits._
-      val e = run.edgeTable(edges)
+      val e = edgeTable(run, edges)
       require(e.count > 0, "hits: the edge table is empty")
       val eBySrc = run.joinSide(e.table, e.partitions, Seq("src"), Some(e.bySrc))
       val eByDst = run.joinSide(e.table, e.partitions, Seq("dst"))
@@ -1467,7 +1184,7 @@ object GraphOps {
         .select($"id", coalesce($"s", lit(0.0)).as("h"))
       val a = run.loop(iterations - 1, checkpointEvery, e.count, e.partitions,
         _ => authority(verts.withColumn("h", lit(1.0))), a => authority(hub(a))).state
-      val h = hub(a).localCheckpoint(true)
+      val h = run.handOff(hub(a).localCheckpoint(true))
       // single L1 normalization at the end; both sums in one tiny job each
       val normA = a.agg(sum($"a")).as[Double].head()
       val normH = h.agg(sum($"h")).as[Double].head()
@@ -1490,33 +1207,35 @@ object GraphOps {
    * Walks stop early at a vertex with no out-edges.
    *
    * Scale shape: the positional adjacency `(src, idx, dst)` is built once
-   * over the loop-free edges' src layout ([[KernelRun.edgeTable]]: one
+   * over the loop-free edges' src layout ([[edgeTable]]: one
    * windowed sort per src partition, no exchange); each step is then two
    * joins keyed on the CURRENT vertex id (degree lookup + positional
    * lookup), emitting one row per live walk. Hub vertices hold many walks
    * at once but each walk is one probe row — fan-IN, not fan-out. Steps
-   * materialize per level as kept rows, not registered in the session's
-   * cache: the levels are the result, so they run in a loop of their own
-   * ([[KernelRun.loop]] frees each state it supersedes). Returns
+   * materialize per level as kept rows handed to the result, not
+   * registered in the session's cache. Every level is part of the result,
+   * so the walk keeps a loop of its own: on [[KernelRun.loop]] a step's
+   * state would have to carry every level before it, so each step would
+   * rewrite the whole walk table, O(walkLen²) rows. Returns
    * `(seed, walk, step, vertex)`.
    */
   def randomWalks(spark: SparkSession, edges: DataFrame, walkLen: Int,
                   walksPerVertex: Int = 1): DataFrame = {
     require(walkLen >= 1 && walksPerVertex >= 1,
       "walkLen and walksPerVertex must be >= 1")
-    inRun(spark, "walks") { run =>
+    inRun(spark, "walks", KernelConf) { run =>
       import spark.implicits._
-      val e = run.edgeTable(edges).bySrc
+      val e = edgeTable(run, edges).bySrc
       val w = Window.partitionBy($"src").orderBy($"dst")
       val adj = run.cache(e.select($"src", $"dst", (row_number().over(w) - 1).cast("long").as("idx")))
       val deg = run.cache(e.groupBy($"src").agg(count(lit(1)).as("outdeg")))
       adj.count(); deg.count()
 
       val verts = e.select($"src".as("id")).union(e.select($"dst".as("id"))).distinct()
-      val start = verts
+      val start = run.handOff(verts
         .crossJoin(spark.range(walksPerVertex.toLong).select($"id".cast("int").as("walk")))
         .select($"id".as("seed"), $"walk", lit(0).as("step"), $"id".as("vertex"))
-        .localCheckpoint(false)
+        .localCheckpoint(false))
       start.count()
 
       def stepHash(seed: Column, walk: Column, step: Int): Column =
@@ -1529,13 +1248,13 @@ object GraphOps {
       var t = 1
       var drained = false
       while (t <= walkLen && !drained) {
-        val next = cur.select($"seed", $"walk", $"vertex".as("src"))
+        val next = run.handOff(cur.select($"seed", $"walk", $"vertex".as("src"))
           .join(deg, Seq("src"))
           .withColumn("idx", pmod(stepHash($"seed", $"walk", t), $"outdeg"))
           .join(adj, Seq("src", "idx"))
           .select($"seed", $"walk", lit(t).as("step"), $"dst".as("vertex"))
-          .localCheckpoint(false)
-        if (next.count() == 0L) { free(next); drained = true }
+          .localCheckpoint(false))
+        if (next.count() == 0L) { run.free(next); drained = true }
         else { levels += next; cur = next }
         t += 1
       }
@@ -1605,12 +1324,16 @@ object GraphOps {
    * once, so lazy chaining re-executes. The color and backward loops run
    * on [[KernelRun.loop]] without `chain` (each state cut lazily, its count
    * the iteration's one action), joining edge sides pinned once per outer
-   * round ([[KernelRun.joinSide]]). Outer rounds are bounded by the
+   * round ([[KernelRun.joinSide]]). The outer and trim loops stay
+   * hand-written until the trim is rewritten: a trim round peels the edge
+   * and vertex tables together and appends to the assigned parts, state
+   * the loop's single frame does not carry. Outer rounds are bounded by the
    * condensation's longest root-blocked chain; real link graphs peel in a
    * handful because every color class with its root inside resolves each
    * round. Cycle detection (`scc size > 1`) is the dependency-graph use
-   * case this serves. The result is kept rows, materialized once; the run
-   * frees every intermediate table, on success and on failure.
+   * case this serves. The result is kept rows, materialized once and
+   * handed to the caller; the run frees every intermediate table, on
+   * success and on failure.
    */
   /** Per-phase iteration counts of an SCC run (probe/evidence surface). */
   final case class SccStats(outerRounds: Int, trimRounds: Int, colorIters: Int,
@@ -1627,17 +1350,17 @@ object GraphOps {
     import spark.implicits._
     var trimRounds = 0; var colorIters = 0; var backIters = 0
     var trimmedVerts = 0L; var coloredVerts = 0L
-    inRun(spark, "scc") { run =>
-      val edgeTable = run.edgeTable(edges)
-      val p = edgeTable.partitions
+    inRun(spark, "scc", KernelConf) { run =>
+      val table = edgeTable(run, edges)
+      val p = table.partitions
       // the live edges by src; a superseded set is freed once the next is built
-      var e = edgeTable.bySrc
+      var e = table.bySrc
       def peelEdges(next: DataFrame): Unit = {
         val built = run.own(next.select($"src", $"dst").repartition(p, $"src").localCheckpoint(true))
-        free(e)
+        run.free(e)
         e = built
       }
-      var (verts, nv) = edgeTable.vertices
+      var (verts, nv) = table.vertices
       val assignedParts = scala.collection.mutable.ListBuffer.empty[DataFrame]
       var outer = 0
       while (nv > 0 && outer < maxOuter) {
@@ -1698,7 +1421,7 @@ object GraphOps {
                 (coalesce($"mc", $"color") > $"color").as("ch"))
           }
           var changed = 0L
-          val colored = run.loop(maxColorIters, 1, edgeTable.count, p,
+          val colored = run.loop(maxColorIters, 1, table.count, p,
             _ => verts.select($"id", $"id".as("color"), lit(true).as("ch")).localCheckpoint(false), color,
             (_, c) => { changed = keptRows(c).get.filter(_.getBoolean(2)).count(); changed == 0 }, chain = false)
           val colors = run.own(colored.state).select($"id", $"color")
@@ -1722,7 +1445,7 @@ object GraphOps {
               .withColumn("it", lit(k))).coalesce(p)
           }
           val reached = new SameCount
-          val collected = run.loop(Int.MaxValue, 1, edgeTable.count, p,
+          val collected = run.loop(Int.MaxValue, 1, table.count, p,
             _ => colors.filter($"id" === $"color").select($"id", $"color".as("scc"), lit(0).as("it"))
               .localCheckpoint(false), collect, reached, chain = false)
           val members = run.own(collected.state).select($"id", $"scc")
@@ -1745,7 +1468,7 @@ object GraphOps {
         // canonicalize: min member id per component
         val assigned = assignedParts.reduce(_.unionByName(_))
         val relabel = assigned.groupBy($"scc").agg(min($"id").as("mid"))
-        (assigned.join(relabel, Seq("scc")).select($"id", $"mid".as("scc")).localCheckpoint(true), stats)
+        (run.handOff(assigned.join(relabel, Seq("scc")).select($"id", $"mid".as("scc")).localCheckpoint(true)), stats)
       }
     }
   }

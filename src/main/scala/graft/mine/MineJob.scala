@@ -2,7 +2,8 @@ package graft.mine
 
 import graft.manifest.ManifestParser
 import graft.model._
-import graft.util.CodegenPolicy
+import graft.util.Releasable
+import graft.util.KernelRun.{inRun, CodegenConf}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -26,21 +27,15 @@ final case class ParseOutcome(repo: String, path: String, commit: String, conten
 /**
  * Outputs of the mining stage (the reference's `start` lifecycle, SURVEY §3.1).
  * The parse, `apEdges`, `artifacts` and `ppEdges` are computed once and kept
- * as persisted rows (`kept`); `parsed`, `quarantine` and `packages` read
- * them. The caller owns those rows and frees them with [[release]] once it
- * has consumed the tables; until then they live for the session.
+ * as persisted rows; `parsed`, `quarantine` and `packages` read them. The
+ * caller frees them with `release()` once it has consumed the tables.
  */
 final case class Mined(packages: Dataset[PackageRow],
                        artifacts: Dataset[ArtifactRow],
                        apEdges: Dataset[ApEdge],
                        ppEdges: Dataset[PpEdge],
                        quarantine: Dataset[QuarantineRow],
-                       parsed: Dataset[ParsedManifest],
-                       kept: Seq[RDD[_]] = Nil) {
-  /** Unpersists the rows this mining run kept. The tables must not be used
-    * afterwards. */
-  def release(): Unit = kept.foreach(_.unpersist(false))
-}
+                       parsed: Dataset[ParsedManifest])(free: () => Unit) extends Releasable(free)
 
 /**
  * MineJob: repo-file table -> normalized vertex/edge tables.
@@ -53,7 +48,7 @@ final case class Mined(packages: Dataset[PackageRow],
  *
  * Why the pipelines have this shape: at small and medium sizes a mining run
  * costs Spark's fixed per-job floor plus compiling its generated code, and
- * Spark keeps at most 100 compiled classes (see [[CodegenPolicy]]). Every
+ * Spark keeps at most 100 compiled classes (see [[graft.util.CodegenPolicy]]). Every
  * distinct pipeline is at least one class, and a table recomputed inside a
  * later query, at another stage position, is another. So:
  *  - the parse emits ONE row type, [[ParseOutcome]], through one object
@@ -144,15 +139,14 @@ object MineJob {
       if (byKey != 0) byKey > 0 else c.getUTF8String(6).compareTo(kept.getUTF8String(6)) > 0
     }
 
-  def run(spark: SparkSession, repoFiles: Dataset[RepoFile]): Mined = CodegenPolicy(spark) {
+  def run(spark: SparkSession, repoFiles: Dataset[RepoFile]): Mined = inRun(spark, "mine", CodegenConf) { run =>
     import spark.implicits._
-    val kept = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
     // persisted and counted before any consumer: later queries read the
     // rows from several independently-submitted jobs, and RDD block loading
     // has no cross-job compute lock, so unmaterialized rows are computed once
     // per reader (up to 5x); the count also sizes the table for the planner
     def keep(rows: RDD[InternalRow], schema: StructType): DataFrame = {
-      kept += rows.persist(StorageLevel.MEMORY_AND_DISK)
+      run.handOff(rows.persist(StorageLevel.MEMORY_AND_DISK))
       Bridge.dataFrame(spark, rows, schema, Some(BigInt(rows.count())))
     }
 
@@ -216,7 +210,7 @@ object MineJob {
       .select(col("id"), col("name"), col("repo"), col("isPrototype"), col("attrs"))
       .as[PackageRow]
 
-    Mined(packages, artifacts, apEdges, ppEdges, quarantine, parsed, kept.toSeq)
+    Mined(packages, artifacts, apEdges, ppEdges, quarantine, parsed)(run.release)
   }
 
   /** Per-row invariant vs the reference: sha256 of the manifest content,

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.gen.SyntheticRepoFiles.mix
+import graft.util.KernelRun
+import graft.util.KernelRun.{inRun, keptRows}
 
 /**
  * Deduplication operators for training-data pipelines, each designed
@@ -17,49 +19,17 @@ import graft.gen.SyntheticRepoFiles.mix
  *    (never all-pairs);
  *  - embedding cosine near-dup: random-hyperplane LSH buckets + exact cosine.
  *
- * Cache ownership: each LSH path persists its corpus-sized banding/signature
- * frame only until the (candidate-proportional) pair set is materialized,
- * then releases it. The small candidate cache itself backs the returned lazy
- * DataFrame, so the CALLER owns its lifetime: call
- * [[releaseCandidateCaches]] once the returned frame's output is
- * materialized (written/collected) to drop every candidate cache this
- * object registered for the session — the same explicit-release ownership
- * contract as Multimodal.extractFeaturesIsolated's `release()`.
+ * Data ownership: each LSH path runs in a [[KernelRun]]. Its corpus-sized
+ * banding or signature table is cached only until the
+ * (candidate-proportional) pair set is built, and a failed run frees it
+ * too. The candidate pairs are kept rows handed to the returned lazy frame,
+ * which reads them: they never enter the session's cache, and the context
+ * cleaner frees them once the frame is unreachable, as it does the results
+ * of BFS and k-core.
  */
 object Dedup {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Candidate-pair frames persisted by the LSH paths, per session: they
-    * back the returned lazy DataFrames, so they cannot be unpersisted inside
-    * the operator — the caller releases them when done. */
-  private val candidateCaches =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, scala.collection.mutable.ArrayBuffer[DataFrame])]()
-
-  private def sessionKey(spark: SparkSession): String =
-    spark.sparkContext.applicationId + "@" + spark.sparkContext.startTime
-
-  private def registerCandidateCache(spark: SparkSession, df: DataFrame): DataFrame = {
-    // evict entries of stopped sessions (mirrors Queries.edgeCache): a
-    // long-lived driver running many sessions must not accumulate frames
-    candidateCaches.entrySet.removeIf(e => e.getValue._1.sparkContext.isStopped)
-    val buf = candidateCaches.computeIfAbsent(sessionKey(spark),
-      _ => (spark, scala.collection.mutable.ArrayBuffer.empty))._2
-    buf.synchronized { buf += df }
-    // a concurrent releaseCandidateCaches may have removed the entry between
-    // the computeIfAbsent and the append — that frame would never be
-    // released; honor the release by dropping the cache now
-    if (!candidateCaches.containsKey(sessionKey(spark))) df.unpersist(false)
-    df
-  }
-
-  /** Unpersist every candidate-pair cache the LSH paths registered for this
-    * session. Call after the returned near-dup frames are materialized;
-    * re-using a returned frame afterwards recomputes its candidates. */
-  def releaseCandidateCaches(spark: SparkSession): Unit = {
-    val entry = candidateCaches.remove(sessionKey(spark))
-    if (entry != null) entry._2.synchronized { entry._2.foreach(_.unpersist(false)) }
-  }
 
   /**
    * Cap LSH bucket sizes before a bucketed self-join: a degenerate bucket
@@ -80,6 +50,66 @@ object Dedup {
         s"(largest ${over.getLong(1)}); members are handled by exact dedup")
     banded.join(sizes.filter(col("bsz") <= maxBucket).select(keyCols.map(col): _*),
       keyCols, "left_semi")
+  }
+
+  /**
+   * The candidate pairs of the four banded LSH paths: `banded` (a doc's
+   * `id` and `payload` columns per bucket `keys`) is cached for the
+   * bucket-size pass and both join sides, buckets over `maxBucket` drop
+   * ([[capBuckets]]), and two rows of a bucket pair as `(id_a < id_b)` with
+   * `p_a` and `p_b` per payload column `p`. With `store` (an index's rows),
+   * buckets are capped over store ∪ batch and each batch row pairs with
+   * its bucket's other rows in either. The distinct pairs are kept rows
+   * handed to the result; their count builds them, then `banded` is freed.
+   */
+  private def bandedPairs(run: KernelRun, op: String, banded: DataFrame, keys: Seq[String], maxBucket: Int,
+                          payload: Seq[String] = Nil, store: Option[DataFrame] = None): DataFrame = {
+    val batch = run.cache(banded)
+    val capped = capBuckets(store.fold(batch)(_.unionByName(batch)), keys, maxBucket, op)
+    val sameBucket = keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _)
+    val pairs = store match {
+      case None =>
+        capped.as("l").join(capped.as("r"), sameBucket && col("l.id") < col("r.id"))
+          .select(Seq(col("l.id").as("id_a"), col("r.id").as("id_b")) ++
+            payload.flatMap(p => Seq(col(s"l.$p").as(s"${p}_a"), col(s"r.$p").as(s"${p}_b"))): _*)
+      case Some(_) =>
+        batch.join(capped.select(keys.map(col): _*).distinct(), keys, "left_semi").as("l")
+          .join(capped.as("r"), sameBucket && col("l.id") =!= col("r.id"))
+          .select(least(col("l.id"), col("r.id")).as("id_a"), greatest(col("l.id"), col("r.id")).as("id_b"))
+    }
+    val cand = run.handOff(pairs.distinct().localCheckpoint(false))
+    keptRows(cand).get.count()
+    batch.unpersist(false)
+    cand
+  }
+
+  /**
+   * Exact Jaccard verification of candidate pairs `(id_a, id_b)` over the
+   * `(id, text)` rows of `docs`, kept at `threshold` and up. Shingle sets
+   * are computed for candidate docs ONLY: the docs are semi-joined against
+   * the (tiny, post-LSH) candidate id set BEFORE the shingles, so the
+   * verify stage's shuffle is proportional to the candidate count, never
+   * the corpus — at 100 TB shingle sets are ~corpus-sized derived data and
+   * must not be computed for all docs.
+   */
+  private def verifiedJaccard(spark: SparkSession, cand: DataFrame, docs: DataFrame,
+                              sh: String => Set[Long], threshold: Double): DataFrame = {
+    import spark.implicits._
+    val candIds = cand.select(col("id_a").as("id"))
+      .union(cand.select(col("id_b").as("id"))).distinct()
+    val shingleDs = docs
+      .join(candIds, Seq("id"), "left_semi")
+      .as[(Long, String)]
+      .map { case (id, text) => (id, sh(text).toSeq) }
+      .toDF("id", "sh")
+    cand
+      .join(shingleDs.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), Seq("id_a"))
+      .join(shingleDs.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), Seq("id_b"))
+      .as[(Long, Long, Seq[Long], Seq[Long])]
+      .map { case (b, a, sa, sb) => (a, b, jaccard(sa.toSet, sb.toSet)) }
+      .toDF("id_a", "id_b", "jaccard")
+      .filter(col("jaccard") >= threshold)
+      .select(least($"id_a", $"id_b").as("id_a"), greatest($"id_a", $"id_b").as("id_b"), round($"jaccard", 6).as("jaccard"))
   }
 
   // ------------------------------------------------------------------ exact
@@ -129,6 +159,13 @@ object Dedup {
     if (toks.length < n) Set(mix(hash64(toks.mkString(" "))))
     else toks.sliding(n).map(w => mix(hash64(w.mkString(" ")), n.toLong, 31L)).toSet
   }
+
+  /** The shingle function of the LSH paths: word n-grams with
+    * `wordNgrams > 0` (document-level dedup: robust to intra-word edits,
+    * |tokens|-sized sets instead of |chars|-sized on long documents), else
+    * character k-grams. */
+  private def shingler(k: Int, wordNgrams: Int): String => Set[Long] =
+    if (wordNgrams > 0) t => wordShingles(t, wordNgrams) else t => shingles(t, k)
 
   def jaccard(a: Set[Long], b: Set[Long]): Double =
     if (a.isEmpty && b.isEmpty) 1.0
@@ -180,58 +217,17 @@ object Dedup {
   def minhashNearDups(spark: SparkSession, docs: DataFrame, idCol: String, textCol: String,
                       k: Int = 5, perms: Int = 32, bands: Int = 8,
                       threshold: Double = 0.7, maxBucket: Int = 2000,
-                      exhaustive: Boolean = false, wordNgrams: Int = 0): DataFrame = {
+                      exhaustive: Boolean = false, wordNgrams: Int = 0): DataFrame = inRun(spark, "minhash") { run =>
     import spark.implicits._
-    // wordNgrams > 0 switches the shingle unit from character k-grams to
-    // word n-grams (document-level dedup: robust to intra-word edits,
-    // |tokens|-sized sets instead of |chars|-sized on long documents)
-    val sh: String => Set[Long] =
-      if (wordNgrams > 0) t => wordShingles(t, wordNgrams) else t => shingles(t, k)
+    val sh = shingler(k, wordNgrams)
     val base = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text")).as[(Long, String)]
-
     val candidates = if (exhaustive) {
       val ids = base.toDF("id", "text").select($"id")
       ids.as("l").join(ids.as("r"), col("l.id") < col("r.id"))
         .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-    } else {
-      // persisted: reused by the bucket-size pass and both sides of the self-join
-      val banded = bandedSignatures(spark, base, sh, perms, bands)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-      val kept = capBuckets(banded, Seq("band", "bandHash"), maxBucket, "minhashNearDups")
-      val cand = registerCandidateCache(spark, kept.as("l").join(kept.as("r"),
-          col("l.band") === col("r.band") && col("l.bandHash") === col("r.bandHash") &&
-            col("l.id") < col("r.id"))
-        .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      // materialize the (small, post-LSH) pair set so the corpus-sized
-      // banding cache can be RELEASED here instead of living for the session
-      cand.count()
-      banded.unpersist(false)
-      cand
-    }
-
-    // Exact verification on candidate docs ONLY: the corpus is semi-joined
-    // against the (tiny, post-LSH) candidate id set BEFORE shingle sets are
-    // materialized, so the verify stage's shuffle is proportional to the
-    // candidate count, never the corpus — at 100 TB shingle sets are
-    // ~corpus-sized derived data and must not be computed for all docs.
-    val candIds = candidates.select(col("id_a").as("id"))
-      .union(candidates.select(col("id_b").as("id"))).distinct()
-    val shingleDs = base.toDF("id", "text")
-      .join(candIds, Seq("id"), "left_semi")
-      .as[(Long, String)]
-      .map { case (id, text) => (id, sh(text).toSeq) }
-      .toDF("id", "sh")
-    candidates
-      .join(shingleDs.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), Seq("id_a"))
-      .join(shingleDs.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), Seq("id_b"))
-      .as[(Long, Long, Seq[Long], Seq[Long])]
-      .map { case (b, a, sa, sb) => (a, b, jaccard(sa.toSet, sb.toSet)) }
-      .toDF("id_a", "id_b", "jaccard")
-      .filter(col("jaccard") >= threshold)
-      .select(least($"id_a", $"id_b").as("id_a"), greatest($"id_a", $"id_b").as("id_b"), round($"jaccard", 6).as("jaccard"))
+    } else bandedPairs(run, "minhashNearDups", bandedSignatures(spark, base, sh, perms, bands),
+      Seq("band", "bandHash"), maxBucket)
+    verifiedJaccard(spark, candidates, base.toDF("id", "text"), sh, threshold)
   }
 
   // ------------------------------------------- persisted signature index
@@ -251,8 +247,7 @@ object Dedup {
                         dir: String, k: Int = 5, perms: Int = 32, bands: Int = 8,
                         wordNgrams: Int = 0): Unit = {
     import spark.implicits._
-    val sh: String => Set[Long] =
-      if (wordNgrams > 0) t => wordShingles(t, wordNgrams) else t => shingles(t, k)
+    val sh = shingler(k, wordNgrams)
     val base = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text")).as[(Long, String)]
     bandedSignatures(spark, base, sh, perms, bands)
       .write.mode("overwrite").partitionBy("band").parquet(s"$dir/bands")
@@ -272,8 +267,7 @@ object Dedup {
                          dir: String): Unit = {
     import spark.implicits._
     val (k, perms, bands, wordNgrams) = readIndexParams(spark, dir)
-    val sh: String => Set[Long] =
-      if (wordNgrams > 0) t => wordShingles(t, wordNgrams) else t => shingles(t, k)
+    val sh = shingler(k, wordNgrams)
     val base = newDocs.select(col(idCol).cast("long").as("id"), col(textCol).as("text")).as[(Long, String)]
     bandedSignatures(spark, base, sh, perms, bands)
       .write.mode("append").partitionBy("band").parquet(s"$dir/bands")
@@ -300,49 +294,19 @@ object Dedup {
   def incrementalNearDups(spark: SparkSession, newDocs: DataFrame, idCol: String, textCol: String,
                           corpus: DataFrame, corpusIdCol: String, corpusTextCol: String,
                           indexDir: String, threshold: Double = 0.7,
-                          maxBucket: Int = 2000): DataFrame = {
+                          maxBucket: Int = 2000): DataFrame = inRun(spark, "incremental") { run =>
     import spark.implicits._
     val (k, perms, bands, wordNgrams) = readIndexParams(spark, indexDir)
-    val sh: String => Set[Long] =
-      if (wordNgrams > 0) t => wordShingles(t, wordNgrams) else t => shingles(t, k)
+    val sh = shingler(k, wordNgrams)
     val newBase = newDocs.select(col(idCol).cast("long").as("id"), col(textCol).as("text")).as[(Long, String)]
-    val newBanded = bandedSignatures(spark, newBase, sh, perms, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val stored = spark.read.parquet(s"$indexDir/bands")
       .select(col("band").cast("int").as("band"), col("bandHash"), col("id"))
-    val combined = stored.unionByName(newBanded)
-    // cap over store ∪ batch: bucket sizes (and drops) match a full rebuild
-    val keptAll = capBuckets(combined, Seq("band", "bandHash"), maxBucket, "incrementalNearDups")
-    val keptNew = newBanded.join(keptAll.select("band", "bandHash").distinct(),
-      Seq("band", "bandHash"), "left_semi")
-    val cand = registerCandidateCache(spark, keptNew.as("l").join(keptAll.as("r"),
-        col("l.band") === col("r.band") && col("l.bandHash") === col("r.bandHash") &&
-          col("l.id") =!= col("r.id"))
-      .select(least(col("l.id"), col("r.id")).as("id_a"),
-        greatest(col("l.id"), col("r.id")).as("id_b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    cand.count()
-    newBanded.unpersist(false)
-
+    // capped over store ∪ batch: bucket sizes (and drops) match a full rebuild
+    val cand = bandedPairs(run, "incrementalNearDups", bandedSignatures(spark, newBase, sh, perms, bands),
+      Seq("band", "bandHash"), maxBucket, store = Some(stored))
     val allDocs = corpus.select(col(corpusIdCol).cast("long").as("id"), col(corpusTextCol).as("text"))
       .unionByName(newBase.toDF("id", "text"))
-    val candIds = cand.select(col("id_a").as("id"))
-      .union(cand.select(col("id_b").as("id"))).distinct()
-    val shingleDs = allDocs
-      .join(candIds, Seq("id"), "left_semi")
-      .as[(Long, String)]
-      .map { case (id, text) => (id, sh(text).toSeq) }
-      .toDF("id", "sh")
-    cand
-      .join(shingleDs.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), Seq("id_a"))
-      .join(shingleDs.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), Seq("id_b"))
-      .as[(Long, Long, Seq[Long], Seq[Long])]
-      .map { case (b, a, sa, sb) => (a, b, jaccard(sa.toSet, sb.toSet)) }
-      .toDF("id_a", "id_b", "jaccard")
-      .filter(col("jaccard") >= threshold)
-      .select(least($"id_a", $"id_b").as("id_a"), greatest($"id_a", $"id_b").as("id_b"),
-        round($"jaccard", 6).as("jaccard"))
+    verifiedJaccard(spark, cand, allDocs, sh, threshold)
   }
 
   // ------------------------------------------------------- cluster collapse
@@ -415,10 +379,9 @@ object Dedup {
                     threshold: Double = 0.7, maxBucket: Int = 2000,
                     exhaustive: Boolean = false, wordNgrams: Int = 0,
                     minSharedGrams: Int = 0,
-                    broadcastGramLimit: Long = 20000000L): DataFrame = {
+                    broadcastGramLimit: Long = 20000000L): DataFrame = inRun(spark, "decontaminate") { run =>
     import spark.implicits._
-    val sh: String => Set[Long] =
-      if (wordNgrams > 0) t => wordShingles(t, wordNgrams) else t => shingles(t, k)
+    val sh = shingler(k, wordNgrams)
     val corpus = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text")).as[(Long, String)]
     val evalSet = evalDocs.select(col(evalIdCol).cast("long").as("id"), col(evalTextCol).as("text")).as[(Long, String)]
 
@@ -426,8 +389,7 @@ object Dedup {
       corpus.toDF("id", "text").select($"id".as("doc_id"))
         .crossJoin(evalSet.toDF("id", "text").select($"id".as("eval_id")))
     } else {
-      val banded = bandedSignatures(spark, corpus, sh, perms, bands)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val banded = run.cache(bandedSignatures(spark, corpus, sh, perms, bands))
       val lshCand = capBuckets(banded, Seq("band", "bandHash"), maxBucket, "decontaminate")
         .join(bandedSignatures(spark, evalSet, sh, perms, bands).withColumnRenamed("id", "eval_id"),
           Seq("band", "bandHash"))
@@ -446,10 +408,9 @@ object Dedup {
       // the corpus pass) and above `broadcastGramLimit` rows the join
       // degrades to a plain shuffle join instead of dying in a broadcast OOM.
       val evalGrams = if (minSharedGrams <= 0) None else Some {
-        evalSet
+        run.cache(evalSet
           .flatMap { case (id, t) => sh(t).iterator.map(g => (g, id)) }
-          .toDF("g", "eval_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .toDF("g", "eval_id"))
       }
       val gramCand = evalGrams.map { eg =>
         val evalGramCount = eg.count()
@@ -469,13 +430,13 @@ object Dedup {
           .filter($"sg" >= minSharedGrams)
           .select($"doc_id", $"eval_id")
       }
-      val cand = registerCandidateCache(spark,
-        gramCand.map(lshCand.unionByName(_)).getOrElse(lshCand)
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      // materialize the candidate pairs, release the corpus-sized banding
-      // cache and the eval gram table
-      cand.count()
+      // the candidate pairs are kept rows handed to the result; once their
+      // count builds them, the corpus-sized banding cache and the eval gram
+      // table are freed
+      val cand = run.handOff(gramCand.map(lshCand.unionByName(_)).getOrElse(lshCand)
+        .distinct()
+        .localCheckpoint(false))
+      keptRows(cand).get.count()
       banded.unpersist(false)
       evalGrams.foreach(_.unpersist(false))
       cand
@@ -592,27 +553,15 @@ object Dedup {
     * Hamming distance <= maxHamming shares at least one band when
     * maxHamming < 4), then exact Hamming verify. */
   def simhashNearDups(spark: SparkSession, docs: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int = 3, maxBucket: Int = 2000): DataFrame = {
+                      maxHamming: Int = 3, maxBucket: Int = 2000): DataFrame = inRun(spark, "simhash") { run =>
     import spark.implicits._
-    // persisted: reused by the bucket-size pass and both sides of the self-join
     val banded = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
       .as[(Long, String)]
       .flatMap { case (id, t) =>
         val sig = simhash(t)
         (0 until 4).map(b => (b, (sig >>> (16 * b)) & 0xFFFFL, id, sig))
       }.toDF("band", "key", "id", "sig")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val kept = capBuckets(banded, Seq("band", "key"), maxBucket, "simhashNearDups")
-    val cand = registerCandidateCache(spark, kept.as("l").join(kept.as("r"),
-        col("l.band") === col("r.band") && col("l.key") === col("r.key") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        col("l.sig").as("sig_a"), col("r.sig").as("sig_b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // materialize the candidate pairs, release the corpus-sized banding cache
-    cand.count()
-    banded.unpersist(false)
-    cand
+    bandedPairs(run, "simhashNearDups", banded, Seq("band", "key"), maxBucket, payload = Seq("sig"))
       .as[(Long, Long, Long, Long)]
       .map { case (a, b, sa, sb) => (a, b, hamming(sa, sb)) }
       .toDF("id_a", "id_b", "hamming")
@@ -632,7 +581,7 @@ object Dedup {
     * approximates is certified exactly by an external engine. */
   def embeddingNearDups(spark: SparkSession, embeddings: DataFrame, idCol: String, vecCol: String,
                         planes: Int = 12, threshold: Double = 0.95, seed: Long = 13L,
-                        maxBucket: Int = 2000, exhaustive: Boolean = false): DataFrame = {
+                        maxBucket: Int = 2000, exhaustive: Boolean = false): DataFrame = inRun(spark, "embedding") { run =>
     import spark.implicits._
     val base = embeddings.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .as[(Long, Seq[Float])]
@@ -642,23 +591,9 @@ object Dedup {
         b.as("l").join(b.as("r"), col("l.id") < col("r.id"))
           .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
             col("l.v").as("va"), col("r.v").as("vb"))
-      } else {
-        val withSig = base.map { case (id, v) =>
-          val sig = Similarity.hyperplaneSignature(v.toArray, planes, seed)
-          (id, v, sig)
-        }.toDF("id", "v", "sig")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val kept = capBuckets(withSig, Seq("sig"), maxBucket, "embeddingNearDups")
-        val cand = registerCandidateCache(spark, kept.as("l").join(kept.as("r"),
-            col("l.sig") === col("r.sig") && col("l.id") < col("r.id"))
-          .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-            col("l.v").as("va"), col("r.v").as("vb"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        // materialize the candidate pairs, release the corpus-sized signature cache
-        cand.count()
-        withSig.unpersist(false)
-        cand
-      }
+      } else bandedPairs(run, "embeddingNearDups", base.map { case (id, v) =>
+          (id, v, Similarity.hyperplaneSignature(v.toArray, planes, seed))
+        }.toDF("id", "v", "sig"), Seq("sig"), maxBucket, payload = Seq("v"))
     candidates
       .as[(Long, Long, Seq[Float], Seq[Float])]
       .map { case (a, b, va, vb) => (a, b, Similarity.cosine(va.toArray, vb.toArray)) }

@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Releasable
+import graft.util.KernelRun.{inRun, keptRows}
 
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
@@ -226,21 +228,18 @@ object Multimodal {
     media.mapPartitions(it => it.map(decodeOne))
   }
 
-  /** Both isolated outputs share one persisted decode pass; the caller owns
-    * the cached blocks and MUST call [[release]] after consuming both —
-    * otherwise the blocks live for the session. */
+  /** Both isolated outputs read one decode pass, kept rows built by one
+    * count, so every payload is decoded once however the sides are read. */
   final class IsolatedFeatures(val features: Dataset[MediaFeatures],
                                val quarantine: Dataset[MediaQuarantine],
-                               releaseFn: () => Unit) {
-    def release(): Unit = releaseFn()
-  }
+                               free: () => Unit) extends Releasable(free)
 
   /** Feature extraction with per-element error isolation: decode failures
     * become quarantine rows on a side output instead of failing the job —
     * the same Either-shape as MineJob.run. Call `.release()` on the result
-    * once both sides are consumed (unpersists the shared decode cache). */
+    * once both sides are consumed (frees the shared decode pass). */
   def extractFeaturesIsolated(spark: SparkSession, media: Dataset[MediaRow])
-      : IsolatedFeatures = {
+      : IsolatedFeatures = inRun(spark, "features") { run =>
     import spark.implicits._
     val results = media.mapPartitions { it =>
       it.map { m =>
@@ -252,9 +251,9 @@ object Multimodal {
               m.payload.length.toLong)))
         }
       }
-    }.persist()
-    new IsolatedFeatures(results.flatMap(_._1), results.flatMap(_._2),
-      () => { results.unpersist(); () })
+    }.localCheckpoint(false)
+    keptRows(run.handOff(results.toDF())).get.count()
+    new IsolatedFeatures(results.flatMap(_._1), results.flatMap(_._2), run.release)
   }
 
   private def decodeOne(m: MediaRow): MediaFeatures = m.kind match {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.gen.SyntheticRepoFiles.mix
+import graft.util.KernelRun.inRun
 
 /**
  * Approximate-nearest-neighbor search over an embedding column
@@ -142,12 +143,15 @@ object Similarity {
    * per-cluster mean (reduceGroups => map-side partial aggregation) — both
    * 100 TB-able; only the k x dim centroid table ever reaches the driver
    * (model parameters, not data).
+   * The iterations keep their own loop, not [[graft.util.KernelRun.loop]]:
+   * k-means' state is the centroid array it collects, not a frame.
    */
   def trainCentroids(spark: SparkSession, corpus: DataFrame, k: Int, iters: Int = 4,
-                     seed: Long = 47L, cId: String = "vec_id", cVec: String = "embedding"): Array[Array[Float]] = {
+                     seed: Long = 47L, cId: String = "vec_id", cVec: String = "embedding"): Array[Array[Float]] =
+    inRun(spark, "kmeans") { run =>
     import spark.implicits._
-    val base = corpus.select(col(cId).cast("long").as("id"), col(cVec).as("v"))
-      .as[(Long, Seq[Float])].persist()
+    val base = run.cache(corpus.select(col(cId).cast("long").as("id"), col(cVec).as("v")))
+      .as[(Long, Seq[Float])]
     var centroids: Array[Array[Float]] = base
       .map { case (id, v) => (mix(seed, id), id, v) }
       .orderBy($"_1", $"_2").limit(k)
@@ -163,7 +167,6 @@ object Similarity {
         .collect().sortBy(_._1).map(_._2.toArray)
       bc.destroy()
     }
-    base.unpersist(false)
     centroids
   }
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.util.KernelRun.{inRun, keptRows}
 
 /**
  * Text-analysis operators for large-scale training-data pipelines: token
@@ -194,21 +195,33 @@ object TextOps {
     * column, so composed filters ([[qualityFilter]]) can inline them into
     * the SAME zero-shuffle scan instead of joining signal frames. */
   private[graft] def repetitionCols(text: Column): (Column, Column, Column) = {
-    val ws = split(text, "\\s+")
-    def ngrams(n: Int): Column =
+    // `v` bound as a lambda variable, so the regex split and each gram array
+    // run once per row: inside an interpreted lambda body an expression is
+    // evaluated again at every use
+    def let(v: Column)(body: Column => Column): Column = element_at(transform(array(v), body), 1)
+    def ngrams(ws: Column, n: Int): Column =
       when(size(ws) >= n, transform(sequence(lit(1), size(ws) - (n - 1), lit(1)),
         i => concat_ws(" ", (0 until n).map(k => element_at(ws, i + lit(k))): _*)))
         .otherwise(array().cast("array<string>"))
-    def topFrac(n: Int): Column = {
-      val gs = ngrams(n)
-      val best = array_max(transform(array_distinct(gs),
-        b => struct(size(filter(gs, x => x === b)).as("cnt"), b.as("g"))))
+    // one pass over the sorted grams: the (count, gram) struct-max over each
+    // run's prefixes is the struct-max over the grams' full counts
+    def topFrac(ws: Column, n: Int): Column = let(ngrams(ws, n)) { gs =>
+      val best = aggregate(array_sort(gs),
+        struct(lit(null).cast("string").as("prev"), lit(0).as("run"), struct(lit(0).as("cnt"), lit("").as("g")).as("best")),
+        (acc, x) => {
+          val run = when(acc.getField("prev") === x, acc.getField("run") + 1).otherwise(lit(1))
+          struct(x.as("prev"), run.as("run"), greatest(acc.getField("best"), struct(run.as("cnt"), x.as("g"))).as("best"))
+        },
+        acc => acc.getField("best"))
       when(size(gs) >= 1,
         round(best.getField("cnt") * length(best.getField("g")) /
           length(text).cast("double"), 6)).otherwise(lit(0.0))
     }
-    (topFrac(2), topFrac(3),
-      round(lit(1.0) - size(array_distinct(ws)).cast("double") / size(ws), 6))
+    val signals = let(split(text, "\\s+")) { ws =>
+      struct(topFrac(ws, 2).as("top2"), topFrac(ws, 3).as("top3"),
+        round(lit(1.0) - size(array_distinct(ws)).cast("double") / size(ws), 6).as("dup"))
+    }
+    (signals.getField("top2"), signals.getField("top3"), signals.getField("dup"))
   }
 
   /** Composed corpus keep/reject decision (the C4/Gopher filter shape) over
@@ -296,37 +309,35 @@ object TextOps {
     * LIMIT 1 argmax — exactly one row crosses to the driver per merge — and
     * a narrow per-row rewrite of the sequences. Ties break deterministically
     * (max count, then lexicographically smallest (left, right)), so the
-    * learned rules are identical across runs and cluster sizes. Lineage is
-    * truncated every 8 merges (localCheckpoint) so plan analysis cost stays
-    * flat over long rule lists. */
+    * learned rules are identical across runs and cluster sizes. The merges
+    * run on [[graft.util.KernelRun.loop]]: each merge's word table supersedes the last
+    * one, kept rows cut from the lineage and built by the convergence
+    * test's count, so plan analysis cost stays flat over long rule lists
+    * and a failed run frees the table it held. */
   def bpeMerges(docs: DataFrame, textCol: String, nMerges: Int,
                 minPairCount: Long = 2L): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    var words = bpeWordTable(docs, textCol).select(col("seq"), col("n")).persist()
-    words.count()
-    val rules = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
-    var rank = 1
-    var exhausted = false
-    while (rank <= nMerges && !exhausted) {
-      val top = bpePairCounts(words)
-        .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (top.isEmpty || top(0).getLong(2) < minPairCount) exhausted = true
-      else {
-        val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        rules += ((rank, a, b, c))
-        val rewritten = words.select(applyMerge(col("seq"), a, b).as("seq"), col("n"))
-        val next = (if (rank % 8 == 0) rewritten.localCheckpoint(false)
-                    else rewritten).persist()
-        next.count()
-        words.unpersist(false)
-        words = next
-        rank += 1
+    inRun(spark, "bpe") { run =>
+      val rules = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
+      var exhausted = false
+      def merge(words: DataFrame) = {
+        val top = bpePairCounts(words)
+          .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
+          .limit(1).collect()
+        if (top.isEmpty || top(0).getLong(2) < minPairCount) { exhausted = true; words }
+        else {
+          val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+          rules += ((rules.size + 1, a, b, c))
+          words.select(applyMerge(col("seq"), a, b).as("seq"), col("n"))
+        }
       }
+      val words = run.loop(nMerges, 1, 0L, 0,
+        _ => bpeWordTable(docs, textCol).select(col("seq"), col("n")).localCheckpoint(false), merge,
+        (_, words) => exhausted || { keptRows(words).get.count(); false }, chain = false).state
+      run.own(words)
+      rules.toSeq.toDF("rank", "left", "right", "score")
     }
-    words.unpersist(false)
-    rules.toSeq.toDF("rank", "left", "right", "score")
   }
 
   // ------------------------------------------------------- sequence packing

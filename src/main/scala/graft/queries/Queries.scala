@@ -718,7 +718,7 @@ object Queries {
       val m = MineJob.run(spark, SyntheticRepoFiles.generate(spark, cfg))
       // the other tables are cached by MineJob already; all of them stay
       // for the session
-      (spark, m.copy(packages = m.packages.persist(), quarantine = m.quarantine.persist()))
+      (spark, m.copy(packages = m.packages.persist(), quarantine = m.quarantine.persist())(() => m.release()))
     })._2
   }
 

@@ -1,7 +1,8 @@
 package graft.resolve
 
 import graft.model._
-import graft.util.{BoundedCollect, CodegenPolicy}
+import graft.util.BoundedCollect
+import graft.util.KernelRun.{inRun, CodegenConf}
 import graft.versionrange.Resolvers
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -39,7 +40,7 @@ final case class Resolved(aaEdges: Dataset[AaEdge], apEdges: Dataset[ApEdge])
  *
  * Why the pipelines have this shape: `aaEdges` is returned lazy and runs
  * in its caller's action, under the caller's conf; the one action resolve
- * runs itself, the hot-key histogram, runs under the [[CodegenPolicy]].
+ * runs itself, the hot-key histogram, runs under [[graft.util.CodegenPolicy]].
  * What keeps the caller's query small is the plan: the resolution is a
  * UDF and an explode inside the join pipeline (a typed mapPartitions cut
  * it in two, with an object deserializer and serializer around it), and
@@ -177,7 +178,7 @@ object ResolveJob {
     edges.queryExecution.optimizedPlan.stats.rowCount.fold(edges.count())(_.toLong)
 
   def run(spark: SparkSession, apEdges: Dataset[ApEdge], artifacts: Dataset[ArtifactRow]): Resolved =
-    CodegenPolicy(spark) {
+    inRun(spark, "resolve", CodegenConf) { _ =>
     import spark.implicits._
 
     // Column predicate, not a typed lambda: `filter(!_.resolved)`
@@ -218,7 +219,8 @@ object ResolveJob {
    * (`Neo4jDatabaseController.java:154-184`).
    */
   def resolveDelta(spark: SparkSession, resolvedApEdges: Dataset[ApEdge],
-                   newArtifacts: Dataset[ArtifactRow]): Dataset[AaEdge] = CodegenPolicy(spark) {
+                   newArtifacts: Dataset[ArtifactRow]): Dataset[AaEdge] =
+    inRun(spark, "resolve", CodegenConf) { _ =>
     // column predicate (codegen), same reasoning as `run`'s unresolved filter
     val resolved = resolvedApEdges.filter(col("resolved"))
     val matches = matchSpecs(distinctSpecs(spark, resolved), versionDict(spark, newArtifacts))

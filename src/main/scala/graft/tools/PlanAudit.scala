@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.util.KernelRun
 
 /**
  * Plan audit: dumps formatted physical plans for the load-bearing queries to
@@ -136,12 +137,12 @@ object PlanAudit {
 
     // AQE off for this dump only: the AdaptiveSparkPlan wrapper prints the
     // un-executed initial plan without codegen ids, hiding the evidence.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    audit("q24 ANN brute-force scoring (native codegen'd cosine)",
-      "Expect (AQE off so codegen ids print): the corpus scan broadcast-joins the (tiny) query side and the Project computing cosine_similarity shows a [codegen id : N] annotation — the scoring kernel is the native Catalyst expression inside the generated join loop, NOT an aggregate/zip_with higher-order chain (those are CodegenFallback and would fence codegen around every scored row).") {
-      graft.queries.Queries.queries("q24_ann_brute")(spark, sfDir)
+    KernelRun.inRun(spark, "audit", Seq(KernelRun.AqeKey -> "false")) { _ =>
+      audit("q24 ANN brute-force scoring (native codegen'd cosine)",
+        "Expect (AQE off so codegen ids print): the corpus scan broadcast-joins the (tiny) query side and the Project computing cosine_similarity shows a [codegen id : N] annotation — the scoring kernel is the native Catalyst expression inside the generated join loop, NOT an aggregate/zip_with higher-order chain (those are CodegenFallback and would fence codegen around every scored row).") {
+        graft.queries.Queries.queries("q24_ann_brute")(spark, sfDir)
+      }
     }
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
 
     audit("resolve fan-out join with hub-key salting",
       "Expect: the hot-key set joins as BroadcastHashJoin on both inputs; the fan-out is a shuffle join keyed (dstPackageId, versionRange, salt) so one hub key spreads over SaltBuckets tasks; matches side exploded only for hot keys.") {

@@ -120,28 +120,26 @@ object Probe {
     * per mille repeat their block's first doc. Its verify stage must shuffle
     * in proportion to the candidates; the counterfactual is what
     * materializing every doc's shingle set would write (docs x shingles x 8 B). */
-  private def dedup(spark: SparkSession, docs: Long): Report => String = {
+  private def dedup(spark: SparkSession, docs: Long): Report => String = graft.util.KernelRun.inRun(spark, "probe") { run =>
     import spark.implicits._
-    val corpus = spark.range(docs).map { boxed =>
+    val corpus = run.cache(spark.range(docs).map { boxed =>
       val i = boxed.longValue
       val base = if (i % 1000 < 5 && i % 1000 > 0) i - i % 1000 else i
       val sb = new StringBuilder(220)
       var w = 0
       while (w < 25) { sb.append("w").append(mix(base, w.toLong) & 0xFFFFFF).append(' '); w += 1 }
       (i, sb.toString)
-    }.toDF("doc_id", "text").persist()
-    try {
-      val nDocs = corpus.count()
-      val nPairs = graft.ops.Dedup.minhashNearDups(spark, corpus, "doc_id", "text", threshold = 0.7).count()
-      val sample = corpus.limit(1000).as[(Long, String)].collect()
-      val avgShingles = sample.map(d => graft.ops.Dedup.shingles(d._2).size).sum.toDouble / sample.length
-      val corpusBytes = (nDocs * avgShingles * 8).toLong
-      r => {
-        val largest = r.stageShuffleBytes.values.maxOption.getOrElse(0L)
-        f"docs=$nDocs nearDupPairs=$nPairs largest stage shuffle ${largest / 1e6}%.1fMB vs " +
-          f"full-corpus shingle counterfactual ${corpusBytes / 1e6}%.1fMB (ratio ${largest.toDouble / corpusBytes}%.3f)"
-      }
-    } finally corpus.unpersist()
+    }.toDF("doc_id", "text"))
+    val nDocs = corpus.count()
+    val nPairs = graft.ops.Dedup.minhashNearDups(spark, corpus, "doc_id", "text", threshold = 0.7).count()
+    val sample = corpus.limit(1000).as[(Long, String)].collect()
+    val avgShingles = sample.map(d => graft.ops.Dedup.shingles(d._2).size).sum.toDouble / sample.length
+    val corpusBytes = (nDocs * avgShingles * 8).toLong
+    r => {
+      val largest = r.stageShuffleBytes.values.maxOption.getOrElse(0L)
+      f"docs=$nDocs nearDupPairs=$nPairs largest stage shuffle ${largest / 1e6}%.1fMB vs " +
+        f"full-corpus shingle counterfactual ${corpusBytes / 1e6}%.1fMB (ratio ${largest.toDouble / corpusBytes}%.3f)"
+    }
   }
 
   /** Runs `body` under a fresh job group with a [[Work]] listener attached

@@ -101,14 +101,13 @@ class GraphOpsSpec extends AnyFunSuite {
     // own vertex set cached
     val g = Seq((7001L, 7002L), (7002L, 7003L), (7010L, 7011L)).toDF("src", "dst")
     val expected = Map(7001L -> 7001L, 7002L -> 7001L, 7003L -> 7001L, 7010L -> 7010L, 7011L -> 7010L)
-    val sc = spark.sparkContext
     def run(): Unit = {
-      val before = sc.getPersistentRDDs.keySet
-      val r = GraphOps.connectedComponentsResult(spark, g)
-      assert(r.components.collect().map(row => row.getLong(0) -> row.getLong(1)).toMap == expected)
-      r.release()
-      val left = sc.getPersistentRDDs.keySet -- before
-      assert(left.isEmpty, s"the released run left RDDs $left persisted")
+      val (_, left) = SparkTestHarness.leaksOf {
+        val r = GraphOps.connectedComponentsResult(spark, g)
+        assert(r.components.collect().map(row => row.getLong(0) -> row.getLong(1)).toMap == expected)
+        r.release()
+      }
+      assert(left.rdds.isEmpty, s"the released run left RDDs ${left.rdds} persisted")
     }
     run()
     val log = logOf(CacheManager)(run())
@@ -281,14 +280,9 @@ class GraphOpsSpec extends AnyFunSuite {
   }
 
   test("kernels restore session conf and release their caches, on success and on failure") {
-    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
-      "spark.sql.join.preferSortMergeJoin", "spark.sql.codegen.useIdInClassName",
-      "spark.sql.codegen.aggregate.map.twolevel.enabled")
-    def conf = keys.map(k => k -> spark.conf.getOption(k))
     val widthWas = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "12")
     try {
-      val before = conf
       val runs: Seq[(String, () => Any)] = Seq(
         "pagerank" -> (() => GraphOps.pageRank(spark, edgeDf, 6)),
         "cc" -> (() => GraphOps.connectedComponentsResult(spark, edgeDf)),
@@ -299,8 +293,9 @@ class GraphOpsSpec extends AnyFunSuite {
         "kcore" -> (() => GraphOps.kCoreResult(spark, edgeDf, 2)),
         "walks" -> (() => GraphOps.randomWalks(spark, edgeDf, 2)))
       for ((name, run) <- runs) {
-        run()
-        assert(conf == before, s"$name changed the session conf")
+        val (result, left) = SparkTestHarness.leaksOf(run())
+        result.get
+        assert(left.conf.isEmpty, s"$name changed the session conf: ${left.conf}")
       }
       // a released result leaves nothing persisted
       val released: Seq[(String, () => Unit)] = Seq(
@@ -308,10 +303,9 @@ class GraphOpsSpec extends AnyFunSuite {
         "cc" -> (() => { val r = GraphOps.connectedComponentsResult(spark, edgeDf); r.components.collect(); r.release() }),
         "lp" -> (() => { val r = GraphOps.labelPropagationResult(spark, edgeDf, 3); r.labels.collect(); r.release() }))
       for ((name, run) <- released) {
-        val cached = spark.sparkContext.getPersistentRDDs.keySet
-        run()
-        val left = spark.sparkContext.getPersistentRDDs.keySet -- cached
-        assert(left.isEmpty, s"released $name left persisted RDDs $left")
+        val (result, left) = SparkTestHarness.leaksOf(run())
+        result.get
+        assert(left.rdds.isEmpty, s"released $name left persisted RDDs ${left.rdds}")
       }
       // a failed require must not leave the run's persisted frames behind
       val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
@@ -323,11 +317,10 @@ class GraphOpsSpec extends AnyFunSuite {
         // vertex, survivor and color tables
         "scc" -> (() => GraphOps.sccResult(spark, edgeDf, maxColorIters = 1)))
       for ((name, run) <- failing) {
-        val cached = spark.sparkContext.getPersistentRDDs.keySet
-        intercept[IllegalArgumentException](run())
-        val left = spark.sparkContext.getPersistentRDDs.keySet -- cached
-        assert(left.isEmpty, s"failed $name left persisted RDDs $left")
-        assert(conf == before, s"failed $name changed the session conf")
+        val (result, left) = SparkTestHarness.leaksOf(run())
+        assert(result.failed.get.isInstanceOf[IllegalArgumentException], s"$name: $result")
+        assert(left.rdds.isEmpty, s"failed $name left persisted RDDs ${left.rdds}")
+        assert(left.conf.isEmpty, s"failed $name changed the session conf: ${left.conf}")
       }
     } finally spark.conf.set("spark.sql.shuffle.partitions", widthWas)
   }

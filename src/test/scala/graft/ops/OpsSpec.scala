@@ -61,6 +61,34 @@ class OpsSpec extends AnyFunSuite {
     assert(got(3L) == ((1.0, 0.0, 0.0)))
   }
 
+  test("repetition signals equal the per-gram counting expression on tied, repeated and odd texts") {
+    // the reference counts each distinct gram with its own filter over the
+    // gram array, the form the one-pass sort-and-fold replaced
+    def reference(text: org.apache.spark.sql.Column) = {
+      val ws = split(text, "\\s+")
+      def ngrams(n: Int) = when(size(ws) >= n, transform(sequence(lit(1), size(ws) - (n - 1), lit(1)),
+        i => concat_ws(" ", (0 until n).map(k => element_at(ws, i + lit(k))): _*)))
+        .otherwise(array().cast("array<string>"))
+      def topFrac(n: Int) = {
+        val gs = ngrams(n)
+        val best = array_max(transform(array_distinct(gs), b => struct(size(filter(gs, x => x === b)).as("cnt"), b.as("g"))))
+        when(size(gs) >= 1, round(best.getField("cnt") * length(best.getField("g")) / length(text).cast("double"), 6))
+          .otherwise(lit(0.0))
+      }
+      Seq(topFrac(2), topFrac(3), round(lit(1.0) - size(array_distinct(ws)).cast("double") / size(ws), 6))
+    }
+    val rnd = new scala.util.Random(42)
+    val words = Seq("a", "b", "ab", "ba", "zz", "é", "a b")
+    val odd = Seq(null, "", " ", "  lead", "trail  ", "x", "a a", "a b a b c", "b a b a", "c\tc\nc c",
+      "ab ab a b ab", "é é e é", "q r q r q r s")
+    val generated = (0 until 200).map(_ => Seq.fill(1 + rnd.nextInt(14))(words(rnd.nextInt(words.size))).mkString(" "))
+    val d = (odd ++ generated).zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val (top2, top3, dup) = TextOps.repetitionCols($"text")
+    val got = d.select($"doc_id", top2, top3, dup).collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    val want = d.select($"doc_id" +: reference($"text"): _*).collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    assert(got == want)
+  }
+
   test("quality filter: ordered first-fail reasons, keep iff no rule trips") {
     val d = Seq(
       // 24 tokens, varied words, no dominant bigram -> keep
@@ -658,13 +686,15 @@ class OpsSpec extends AnyFunSuite {
     val good = MediaRow(1L, "image", Multimodal.encodePng(1L, 8, 8), 8, 8, 0L)
     val corrupt = MediaRow(2L, "image", Array[Byte](1, 2, 3), 8, 8, 0L)
     val ds = spark.createDataset(Seq(good, corrupt))
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
-    val isolated = Multimodal.extractFeaturesIsolated(spark, ds)
-    assert(isolated.features.collect().map(_.media_id).toSeq == Seq(1L))
-    val q = isolated.quarantine.collect()
-    assert(q.length == 1 && q.head.media_id == 2L && q.head.errorClass.nonEmpty)
-    isolated.release() // caller owns the shared decode cache
-    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore)
+    val (result, left) = SparkTestHarness.leaksOf {
+      val isolated = Multimodal.extractFeaturesIsolated(spark, ds)
+      assert(isolated.features.collect().map(_.media_id).toSeq == Seq(1L))
+      val q = isolated.quarantine.collect()
+      assert(q.length == 1 && q.head.media_id == 2L && q.head.errorClass.nonEmpty)
+      isolated.release() // caller owns the shared decode pass
+    }
+    result.get
+    assert(left.rdds.isEmpty && left.cacheEntries == 0, left)
   }
 
   test("stratified sampling threshold ROUNDS rate*1e6: boundary semantics match a rounding engine") {
@@ -703,23 +733,18 @@ class OpsSpec extends AnyFunSuite {
     assert(viaShuffle == viaBroadcast && viaShuffle.exists(_._1 == 50L))
   }
 
-  test("releaseCandidateCaches drops the LSH candidate caches; released frames still recompute") {
-    def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    def awaitStable(target: Set[Int] => Boolean): Boolean = {
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (System.nanoTime() < deadline && !target(persisted())) Thread.sleep(100)
-      target(persisted())
+  test("banded minhash and simhash near-dups add no session cache entry; their candidates follow the returned frame") {
+    for ((name, op) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "minhash" -> (() => Dedup.minhashNearDups(spark, docs, "doc_id", "text", threshold = 0.5)),
+        "simhash" -> (() => Dedup.simhashNearDups(spark, docs, "doc_id", "text")))) {
+      val (pairs, left) = SparkTestHarness.leaksOf(op())
+      val frame = pairs.get
+      assert(left.cacheEntries == 0, s"$name added ${left.cacheEntries} cache entries")
+      assert(left.rdds.nonEmpty && left.rdds.subsetOf(SparkTestHarness.rddsRead(frame)),
+        s"$name left ${left.rdds} persisted, the frame reads ${SparkTestHarness.rddsRead(frame)}")
+      // the kept candidates serve repeated reads of the frame
+      assert(frame.collect().toSet == frame.collect().toSet && frame.count() > 0)
     }
-    Dedup.releaseCandidateCaches(spark) // clear caches left by earlier tests
-    val base = persisted()
-    val pairs = Dedup.minhashNearDups(spark, docs, "doc_id", "text", threshold = 0.5)
-    val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert((persisted() -- base).nonEmpty, "candidate cache should be registered while in use")
-    Dedup.releaseCandidateCaches(spark)
-    assert(awaitStable(now => (now -- base).isEmpty),
-      s"candidate caches must be gone after release; extra=${persisted() -- base}")
-    // the returned frame stays usable — it just recomputes its candidates
-    assert(pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == got)
   }
 
   test("persisted minhash index: incremental equals full rebuild minus old pairs; append maintains the store") {
