@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.internal.SQLConf
 import graft.functions.MaxCountMinLabel
-import graft.util.{BoundedCollect, KernelRun, Releasable, SameCount, Steps, SuperstepMetric}
+import graft.util.{GroupCap, HubSalt, Hubs, KernelRun, Releasable, SameCount, Steps, SuperstepMetric}
 import graft.util.KernelRun.{inRun, keptRows, CodegenConf, KernelConf, WidthKey}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
@@ -13,7 +13,6 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, KnownNotNull, 
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.Partitioner
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
-import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -32,9 +31,10 @@ import org.apache.spark.sql.graftbridge.Bridge
  *    (plan-size blowup, SURVEY §4.3-1) and optionally persisted to a
  *    checkpoint dir with a manifest for mid-convergence resume;
  *  - skew is handled explicitly, not by AQE (the iterative kernels run with
- *    AQE off): hub keys are salted over sub-keys (`HubSalt`), and triangle
- *    counting uses degree-ordered orientation so hub vertices don't
- *    quadratically explode wedges;
+ *    AQE off): PageRank, CC and LP salt hub keys over sub-keys by the
+ *    engine's one policy, [[graft.util.HubSalt]], which resolve's fan-out
+ *    join shares, and triangle counting uses degree-ordered orientation so
+ *    hub vertices don't quadratically explode wedges;
  *  - every kernel runs in one [[KernelRun]] (`graft.util`), which sets the
  *    kernels' conf ([[KernelRun.KernelConf]]), frees what the kernel kept
  *    and runs the supersteps of PageRank, CC, LP, HITS, BFS, k-core and
@@ -431,10 +431,20 @@ object GraphOps {
     adjacency.iterator.flatMap { case (s, ds) => ds.keysIterator.map(InternalRow(s, _)) }
   }
 
-  /** A local `(src, nsalt)` frame of collected hubs. */
-  private def hubFrame(spark: SparkSession, hubs: Seq[(Long, Int)]): DataFrame =
-    Bridge.localFrame(spark, hubs.map { case (v, n) => InternalRow(v, n) },
-      StructType(Seq(StructField("src", LongType, nullable = false), StructField("nsalt", IntegerType, nullable = false))))
+  /** Each src of one partition's rows with its row count: its degree,
+    * when the rows are laid out by src. */
+  private def srcDegrees(rows: Iterator[InternalRow]): scala.collection.mutable.LongMap[Long] = {
+    val deg = scala.collection.mutable.LongMap.empty[Long]
+    rows.foreach(r => deg(r.getLong(0)) = deg.getOrElse(r.getLong(0), 0L) + 1L)
+    deg
+  }
+
+  /** The hubs of a join on `src` whose many side is `rows`, laid out by
+    * src: each partition counts its own srcs' degrees, so finding them
+    * shuffles nothing and generates no code. */
+  private def srcHubs(spark: SparkSession, salt: HubSalt, rows: => RDD[InternalRow]): Option[Hubs] =
+    salt.hubs(spark, Seq(StructField("src", LongType, nullable = false)),
+      rows.mapPartitions(srcDegrees(_).iterator.map { case (v, d) => InternalRow(v, d) }))
 
   /** A never-NULL Long `id` column. */
   private val idSchema = StructType(Seq(StructField("id", LongType, nullable = false)))
@@ -445,28 +455,6 @@ object GraphOps {
   /** `c`, declared never NULL, for a column the kernel knows holds no NULL:
     * plans then carry no NULL checks or inferred NULL filters for it. */
   private def notNull(c: Column): Column = Bridge.column(KnownNotNull(Bridge.expression(c)))
-
-  /** The hub-salting policy of PageRank, CC and LP. A join of at most
-    * [[EdgesPerPartition]] rows, one partition's budget, has no hubs: no key
-    * of it can hold more work than a partition is sized for, so it plans
-    * the hub-free shape whatever its degrees are. In a larger join, a key
-    * whose degree is over `threshold` = max(1000, rows/P/4) for `rows` join
-    * rows at width P is a hub: its rows split over nsalt = least(P,
-    * deg/threshold + 1) sub-keys. The many-rows side of the join takes the
-    * sub-key pmod(hash(dst), nsalt), and the one-row-per-key side is
-    * replicated over 0 .. nsalt-1. Non-hubs have nsalt 1. */
-  private final case class HubSalt(partitions: Int, rows: Long) {
-    val salts: Boolean = rows > EdgesPerPartition
-    val threshold: Long = if (salts) math.max(1000L, rows / partitions / 4) else Long.MaxValue
-    def nsalt(deg: Long): Int = math.min(partitions.toLong, deg / threshold + 1L).toInt
-  }
-  private object HubSalt {
-    def key(nsalt: Column): Column = pmod(hash(col("dst")), nsalt)
-    /** The same sub-key for a row's `dst` (Spark's `hash` is Murmur3 with
-      * seed 42). */
-    def key(dst: Long, nsalt: Int): Int = Math.floorMod(Murmur3_x86_32.hashLong(dst, 42), nsalt)
-    def fanOut(nsalt: Column): Column = explode(sequence(lit(0), nsalt - 1)).as("salt")
-  }
 
   /** Kernel partition count: the configured shuffle partitions, scaled DOWN
     * for SMALL graphs (~150k edges per partition, floor 8). Guide §2.2 sizes
@@ -482,10 +470,7 @@ object GraphOps {
   private[graph] def kernelPartitions(conf: Int, edgeCount: Long): Int =
     // never EXCEED the configured value (a 4-core box configured to 4 stays
     // at 4); below it, floor at 8 so tiny graphs keep some parallelism
-    math.min(conf.toLong, math.max(8L, edgeCount / EdgesPerPartition + 1L)).toInt
-
-  /** The edges [[kernelPartitions]] budgets for one partition. */
-  private val EdgesPerPartition = 150000L
+    math.min(conf.toLong, math.max(8L, edgeCount / HubSalt.Floor + 1L)).toInt
 
   /** The loop-free, deduplicated Long edge table of HITS, SCC, BFS and
     * random walks. One count of the loop-free input rows (repeats
@@ -585,43 +570,20 @@ object GraphOps {
     // boundary, splits a hot key's sym rows across nsalt sub-keys by
     // hash(dst) and replicates the (one-row-per-hub) mins side, mirroring
     // the pageRank salting scheme. Hub-free rounds skip the machinery.
-    def largeStar(sym: DataFrame, mins: DataFrame, hubs: Option[DataFrame]): DataFrame = {
+    def largeStar(sym: DataFrame, mins: DataFrame, hubs: Option[Hubs]): DataFrame = {
       // no distinct here: duplicates are collapsed by the small-star round
       // that always follows — saves a full edge-set shuffle per round
-      hubs match {
-        case None =>
-          sym.join(mins.hint("shuffle_hash"), Seq("src"))
-            .filter($"dst" > $"src")
-            .select($"dst".as("src"), $"m".as("dst"))
-        case Some(h) =>
-          val symS = sym.join(broadcast(h), Seq("src"), "left")
-            .select($"src", $"dst", HubSalt.key(coalesce($"nsalt", lit(1))).as("salt"))
-          val minsR = mins.join(broadcast(h), Seq("src"), "left")
-            .select($"src", $"m", HubSalt.fanOut(coalesce($"nsalt", lit(1))))
-          symS.join(minsR.hint("shuffle_hash"), Seq("src", "salt"))
-            .filter($"dst" > $"src")
-            .select($"dst".as("src"), $"m".as("dst"))
-      }
+      val (symS, minsR) = hubs.fold((sym, mins))(h => (h.salted(sym, $"dst"), h.fannedOut(mins)))
+      symS.join(minsR.hint("shuffle_hash"), hubs.fold(Seq("src"))(_.joinKeys))
+        .filter($"dst" > $"src")
+        .select($"dst".as("src"), $"m".as("dst"))
     }
 
-    // A hub snapshot: a bounded collect of the round's hub degrees (they sum
-    // to 2E, so #keys with deg > thr <= 2E/thr, at most 4*roundP rows since
-    // thr >= E/(2*roundP) — partition-bounded at any scale, the IVF-centroid
-    // size class), then a local frame the per-round broadcast builds from
-    // with zero extra distributed jobs. sym's kept rows are laid out by src,
-    // so each partition counts its own srcs' degrees: no shuffle, and no
-    // generated code, whatever the round's threshold. A round too small to
-    // salt ([[HubSalt]]) takes no snapshot and runs no job for it.
-    def hubSnapshot(sym: DataFrame, salt: HubSalt, nEdges: Long): Option[DataFrame] = if (!salt.salts) None else {
-      val thr = salt.threshold
-      val hubs = keptRows(sym).get.mapPartitions { it =>
-        val deg = scala.collection.mutable.HashMap.empty[Long, Long]
-        it.foreach(r => deg(r.getLong(0)) = deg.getOrElse(r.getLong(0), 0L) + 1L)
-        deg.iterator.collect { case (v, d) if d > thr => (v, salt.nsalt(d)) }
-      }
-      val rows = BoundedCollect(hubs, 2L * nEdges / thr, s"2E / hubThreshold (2 * $nEdges / $thr)")
-      if (rows.isEmpty) None else Some(hubFrame(spark, rows.toSeq))
-    }
+    // A hub snapshot of the round ([[srcHubs]]) over sym's kept rows, laid
+    // out by src: a local frame the per-round broadcast builds from with
+    // zero extra distributed jobs. A round too small to salt takes no
+    // snapshot and runs no job for it.
+    def hubSnapshot(sym: DataFrame, salt: HubSalt): Option[Hubs] = srcHubs(spark, salt, keptRows(sym).get)
 
     // small-star: orient every edge high->low; every low neighbor (and u
     // itself) links to m = min(N(u) ∪ {u}). Each joined row emits both of
@@ -691,7 +653,7 @@ object GraphOps {
     }
 
     // null = no snapshot yet (round 1 probes eagerly); None = probed, hub-free
-    var hubsForRound: Option[DataFrame] = null
+    var hubsForRound: Option[Hubs] = null
     // what follows once a round's state is built: it takes the next round's
     // hub snapshot and releases its sym
     var afterBuilt: () => Unit = () => ()
@@ -740,9 +702,9 @@ object GraphOps {
       // probe cost at sf0.1. Every round's hub table is such a local
       // snapshot, so rounds with the same hub state plan the same shape.
       val firstRound = hubsForRound == null
-      val hubs = if (firstRound) hubSnapshot(sym, salt, nEdges) else hubsForRound
+      val hubs = if (firstRound) hubSnapshot(sym, salt) else hubsForRound
       afterBuilt = () => {
-        hubsForRound = if (firstRound) hubs else hubSnapshot(sym, salt, nEdges)
+        hubsForRound = if (firstRound) hubs else hubSnapshot(sym, salt)
         run.free(sym)
       }
       edgeState(smallStar(largeStar(sym, mins, hubs), roundP))
@@ -834,43 +796,28 @@ object GraphOps {
     // (= every distinct sym src = every distinct sym dst) share a partition.
     val sym = run.keep(Bridge.dataFrame(spark, pairs.flatMap { case (s, d) => Iterator(InternalRow(s, d), InternalRow(d, s)) },
       edgeSchema).repartition(shufflePartitions, $"src").queryExecution.toRdd.mapPartitions(distinctPairs))
-    // each src of one partition's rows with its degree
-    def degrees(rows: Iterator[InternalRow]) = {
-      val deg = scala.collection.mutable.LongMap.empty[Long]
-      rows.foreach(r => deg(r.getLong(0)) = deg.getOrElse(r.getLong(0), 0L) + 1L)
-      deg
-    }
-
-    // Hub salting, same scheme as pageRank: a symmetrized hub's adjacency
-    // otherwise sits in ONE partition of every superstep's join. ONE job
-    // over the kept rows gives the table's size and its hubs (their degrees
-    // sum to at most E, so #hubs <= E/threshold).
-    val salt = HubSalt(shufflePartitions, edgeCount)
-    val (symCount, hubList) = sym.mapPartitions { it =>
-      val deg = degrees(it)
-      Iterator((deg.valuesIterator.sum, deg.iterator.collect { case (v, d) if d > salt.threshold => (v, salt.nsalt(d)) }.toList))
-    }.reduce((a, b) => (a._1 + b._1, a._2 ++ b._2))
-    require(hubList.size <= edgeCount / salt.threshold,
-      s"${hubList.size} hubs exceed their bound E / hubThreshold ($edgeCount / ${salt.threshold})")
-    val haveHubs = hubList.nonEmpty
-    val lpHubs = hubFrame(spark, hubList)
-
-    // The adjacency every superstep joins: on hubby graphs each edge also
-    // carries its salt (0 for a non-hub's edges).
-    val hubSalt = hubList.toMap
-    val keys = if (haveHubs) Seq("src", "salt") else Seq("src")
+    // Hub salting, the policy pageRank's takes ([[HubSalt]]): a symmetrized
+    // hub's adjacency otherwise sits in ONE partition of every superstep's
+    // join. The adjacency is salted once, here; each superstep fans the
+    // label state out over the hubs' sub-keys.
+    val symCount = sym.count()
+    val hubs = srcHubs(spark, HubSalt(shufflePartitions, edgeCount), sym)
+    val keys = hubs.fold(Seq("src"))(_.joinKeys)
     def symTable(hashedBy: Seq[String]) = Bridge.dataFrame(spark, sym, edgeSchema, Some(BigInt(symCount)), hashedBy)
-    val symSide =
-      if (!haveHubs) run.joinSide(symTable(Nil), shufflePartitions, keys, Some(symTable(keys)))
-      else run.joinSide(Bridge.dataFrame(spark, sym.map(r => InternalRow(r.getLong(0), r.getLong(1),
-          HubSalt.key(r.getLong(1), hubSalt.getOrElse(r.getLong(0), 1)))),
-        StructType(edgeSchema :+ StructField("salt", IntegerType, nullable = false)), Some(BigInt(symCount))),
-        shufflePartitions, keys)
+    val symSide = hubs match {
+      case None => run.joinSide(symTable(Nil), shufflePartitions, keys, Some(symTable(keys)))
+      case Some(h) =>
+        val nsalt = h.rows.map(r => r.getLong(0) -> r.getInt(1)).toMap
+        run.joinSide(Bridge.dataFrame(spark, sym.map(r => InternalRow(r.getLong(0), r.getLong(1),
+            HubSalt.key(r.getLong(1), nsalt.getOrElse(r.getLong(0), 1)))),
+          StructType(edgeSchema :+ StructField("salt", IntegerType, nullable = false)), Some(BigInt(symCount))),
+          shufflePartitions, keys)
+    }
 
     // The start state, every vertex labeled with itself, kept rows
     // materialized by their count.
     def start(restored: Option[DataFrame]) = restored.fold {
-      val labels = run.handOff(sym.mapPartitions(degrees(_).keysIterator.map(id => InternalRow(id, id))).localCheckpoint())
+      val labels = run.handOff(sym.mapPartitions(srcDegrees(_).keysIterator.map(id => InternalRow(id, id))).localCheckpoint())
       labels.count()
       Bridge.dataFrame(spark, labels, StructType(Seq("id", "label").map(StructField(_, LongType, nullable = false))))
     }(_.localCheckpoint(true))
@@ -878,16 +825,13 @@ object GraphOps {
     // supersteps chain lazily between boundaries, cut+materialized only at
     // checkpoints — same fixed-cost reasoning as pageRank
     def step(labels: DataFrame) = {
-      val saltedLabels =
-        if (!haveHubs) labels.withColumnRenamed("id", "src")
-        else labels.join(broadcast(lpHubs.withColumnRenamed("src", "id")), Seq("id"), "left")
-          .select($"id".as("src"), $"label", HubSalt.fanOut(coalesce($"nsalt", lit(1))))
+      val bySrc = labels.withColumnRenamed("id", "src")
       // ONE exchange serves both aggregation levels: repartition the message
       // stream by id, then groupBy(id, label) AND groupBy(id) both run
       // in place (hashpartitioning(id) satisfies either clustering) — the
       // direct groupBy(id, label) route paid a second full exchange to get
       // from (id, label) hash space to id hash space (guide §2.4).
-      val msgs = saltedLabels
+      val msgs = hubs.fold(bySrc)(_.fannedOut(bySrc))
         .join(symSide, keys)
         .select($"dst".as("id"), $"label")
         .repartition(shufflePartitions, $"id")
@@ -1486,7 +1430,7 @@ object GraphOps {
    * group's SIZE, never in the item count — and one combinable count agg
    * keyed on the (a, b) pair. Mega-groups (a group containing half the
    * catalog) are the skew risk at 100 TB: `maxGroupSize` drops them with
-   * a logged count, the capBuckets discipline from the LSH paths (a
+   * a logged count ([[GroupCap]], as the LSH paths cap their buckets; a
    * group that large carries no co-occurrence signal anyway).
    */
   def coOccurrenceProjection(spark: SparkSession, facts: DataFrame,
@@ -1498,18 +1442,8 @@ object GraphOps {
       .distinct()
     // uncapped default: no group-size aggregation, no semi-join — the cap
     // machinery only enters the plan when a cap is actually set
-    val kept = if (maxGroupSize == Int.MaxValue) m else {
-      val sized = m.groupBy($"g").agg(count(lit(1)).as("sz"))
-      // logged drops, the capBuckets discipline: silent truncation reads
-      // as "covered everything" when it didn't
-      val over = sized.filter($"sz" > maxGroupSize)
-        .agg(count(lit(1)).as("n"), max($"sz").as("largest")).first()
-      if (over.getLong(0) > 0)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"coOccurrenceProjection: dropping ${over.getLong(0)} groups over " +
-            s"maxGroupSize=$maxGroupSize items (largest ${over.get(1)})")
-      m.join(sized.filter($"sz" <= maxGroupSize).select($"g"), Seq("g"), "left_semi")
-    }
+    val kept = if (maxGroupSize == Int.MaxValue) m
+      else GroupCap(m, Seq("g"), maxGroupSize, "coOccurrenceProjection", "groups")
     val a1 = kept.select($"g", $"item".as("a"))
     val a2 = kept.select($"g".as("g2"), $"item".as("b"))
     a1.join(a2, a1("g") === a2("g2") && a1("a") < a2("b"))

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.gen.SyntheticRepoFiles.mix
-import graft.util.KernelRun
+import graft.util.{GroupCap, KernelRun}
 import graft.util.KernelRun.{inRun, keptRows}
 
 /**
@@ -19,6 +19,13 @@ import graft.util.KernelRun.{inRun, keptRows}
  *    (never all-pairs);
  *  - embedding cosine near-dup: random-hyperplane LSH buckets + exact cosine.
  *
+ * Bucket cap: an LSH bucket self-join is quadratic in a bucket's size, and
+ * a degenerate bucket (empty docs, license boilerplate, zero vectors) of k
+ * members generates k²/2 candidate pairs in one task. Buckets over
+ * `maxBucket` are DROPPED with a logged count ([[GroupCap]]): their members
+ * are byte-near-identical en masse, which exact dedup (one hash agg)
+ * handles at scan cost.
+ *
  * Data ownership: each LSH path runs in a [[KernelRun]]. Its corpus-sized
  * banding or signature table is cached only until the
  * (candidate-proportional) pair set is built, and a failed run frees it
@@ -32,32 +39,11 @@ object Dedup {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /**
-   * Cap LSH bucket sizes before a bucketed self-join: a degenerate bucket
-   * (empty docs, license boilerplate, zero vectors) of k members generates
-   * k²/2 candidate pairs — quadratic in one task at 100 TB. Buckets over
-   * `maxBucket` are DROPPED with a logged metric: their members are
-   * byte-near-identical en masse, which exact dedup (one hash agg) handles
-   * at scan cost; pairwise verification inside them adds nothing but heat.
-   * Returns the rows of `banded` belonging to surviving buckets.
-   */
-  private def capBuckets(banded: DataFrame, keyCols: Seq[String], maxBucket: Int,
-                         op: String): DataFrame = {
-    val sizes = banded.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("bsz"))
-    val over = sizes.filter(col("bsz") > maxBucket)
-      .agg(count(lit(1)).as("n"), max(col("bsz")).as("largest")).first()
-    if (over.getLong(0) > 0)
-      log.warn(s"$op: dropping ${over.getLong(0)} LSH buckets over $maxBucket docs " +
-        s"(largest ${over.getLong(1)}); members are handled by exact dedup")
-    banded.join(sizes.filter(col("bsz") <= maxBucket).select(keyCols.map(col): _*),
-      keyCols, "left_semi")
-  }
-
-  /**
    * The candidate pairs of the four banded LSH paths: `banded` (a doc's
    * `id` and `payload` columns per bucket `keys`) is cached for the
    * bucket-size pass and both join sides, buckets over `maxBucket` drop
-   * ([[capBuckets]]), and two rows of a bucket pair as `(id_a < id_b)` with
-   * `p_a` and `p_b` per payload column `p`. With `store` (an index's rows),
+   * (the bucket cap above), and two rows of a bucket pair as
+   * `(id_a < id_b)` with `p_a` and `p_b` per payload column `p`. With `store` (an index's rows),
    * buckets are capped over store ∪ batch and each batch row pairs with
    * its bucket's other rows in either. The distinct pairs are kept rows
    * handed to the result; their count builds them, then `banded` is freed.
@@ -65,7 +51,7 @@ object Dedup {
   private def bandedPairs(run: KernelRun, op: String, banded: DataFrame, keys: Seq[String], maxBucket: Int,
                           payload: Seq[String] = Nil, store: Option[DataFrame] = None): DataFrame = {
     val batch = run.cache(banded)
-    val capped = capBuckets(store.fold(batch)(_.unionByName(batch)), keys, maxBucket, op)
+    val capped = GroupCap(store.fold(batch)(_.unionByName(batch)), keys, maxBucket, op, "LSH buckets")
     val sameBucket = keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _)
     val pairs = store match {
       case None =>
@@ -390,7 +376,7 @@ object Dedup {
         .crossJoin(evalSet.toDF("id", "text").select($"id".as("eval_id")))
     } else {
       val banded = run.cache(bandedSignatures(spark, corpus, sh, perms, bands))
-      val lshCand = capBuckets(banded, Seq("band", "bandHash"), maxBucket, "decontaminate")
+      val lshCand = GroupCap(banded, Seq("band", "bandHash"), maxBucket, "decontaminate", "LSH buckets")
         .join(bandedSignatures(spark, evalSet, sh, perms, bands).withColumnRenamed("id", "eval_id"),
           Seq("band", "bandHash"))
         .select($"id".as("doc_id"), $"eval_id")

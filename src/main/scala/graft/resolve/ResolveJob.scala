@@ -1,7 +1,7 @@
 package graft.resolve
 
 import graft.model._
-import graft.util.BoundedCollect
+import graft.util.HubSalt
 import graft.util.KernelRun.{inRun, CodegenConf}
 import graft.versionrange.Resolvers
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -35,12 +35,12 @@ final case class Resolved(aaEdges: Dataset[AaEdge], apEdges: Dataset[ApEdge])
  *     packages (no artifacts) stay unresolved.
  *
  * Skew: hub packages (junit/lodash analogues) fan out on the (package, spec)
- * join in step 4. The matches side is tiny relative to the edge table, so we
- * broadcast it when it fits; AQE skew-join splitting covers the rest.
+ * join in step 4, and its hub keys are salted by the engine's one policy
+ * ([[HubSalt]], see `saltedFanout`).
  *
  * Why the pipelines have this shape: `aaEdges` is returned lazy and runs
  * in its caller's action, under the caller's conf; the one action resolve
- * runs itself, the hot-key histogram, runs under [[graft.util.CodegenPolicy]].
+ * runs itself, the hub histogram, runs under [[graft.util.CodegenPolicy]].
  * What keeps the caller's query small is the plan: the resolution is a
  * UDF and an explode inside the join pipeline (a typed mapPartitions cut
  * it in two, with an object deserializer and serializer around it), and
@@ -106,79 +106,40 @@ object ResolveJob {
         explode(matchingArtifacts(specs("repo"), specs("versionRange"),
           versionsByPkg("versions"), versionsByPkg("artifactIds"))).as("dstArtifactId"))
 
-  /** Edge-count threshold above which a (package, spec) key is salted in the
-    * fan-out join. Sized so an unsalted key's rows stay within one healthy
-    * task (~100k edges x ~100B ≈ 10 MB); hub artifacts (junit/lodash
-    * analogues) at 100 TB exceed it by orders of magnitude. */
-  val HotKeyThreshold = 100000L
-
-  /** Salt fan-out width for hot keys. */
-  val SaltBuckets = 32
-
   /**
    * The step-4 fan-out join (matches back to every edge with that
    * (package, spec)), with EXPLICIT hub-key salting (north_star: "salted ...
-   * edge partitions with explicit skew handling for hub artifacts"): a
-   * degree histogram finds keys with more than `HotKeyThreshold` edges; hot
-   * edges get a salt from a hash of their source, the (small) matches side
-   * is replicated across all salts for hot keys only. Cold keys pay one
-   * broadcast-join of the (tiny, by construction) hot-key set. Unlike AQE
-   * skew splitting this also works inside AQE-off contexts and never relies
-   * on runtime stats being fresh.
+   * edge partitions with explicit skew handling for hub artifacts") by the
+   * engine's one policy, [[HubSalt]], at the session's shuffle width `p`:
+   * in a table of more than [[HubSalt.Floor]] edges, a degree histogram
+   * finds the hub keys; hub edges take a sub-key from a hash of their
+   * source, and the (small) matches side is replicated over a hub's
+   * sub-keys only. Unlike AQE skew splitting this also works inside AQE-off
+   * contexts and never relies on runtime stats being fresh. A smaller
+   * table runs no histogram, and with no hub the salt machinery drops out
+   * of the plan.
    */
-  private def saltedFanout(spark: SparkSession, edges: DataFrame, edgeBound: Long,
+  private def saltedFanout(spark: SparkSession, edges: DataFrame, edgeBound: Long, p: Int,
                            matches: DataFrame): Dataset[AaEdge] = {
     import spark.implicits._
     val keys = Seq("dstPackageId", "versionRange")
-    // The hot-key set is collected ONCE to the driver and re-shipped as a
-    // LocalRelation: it is bounded by edges/HotKeyThreshold rows (the same
-    // magnitude class the former broadcast(hot) already put on the driver
-    // and every executor), it feeds TWO broadcast attaches (left and right)
-    // whose independently-submitted build jobs each re-ran the full groupBy
-    // histogram over the edge table, and — the common case — when NO key is
-    // hot the whole salt machinery (two broadcast joins, a salt column on
-    // every row, a wider join key) drops out of the plan entirely. A table
-    // of at most HotKeyThreshold edges has no hot key, so it runs no
-    // histogram at all.
-    val hotRows = if (edgeBound <= HotKeyThreshold) Array.empty[(String, String)] else BoundedCollect(
-      edges.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
-        .filter($"n" > HotKeyThreshold)
-        .select(keys.map(col): _*)
-        .as[(String, String)],
-      edgeBound / HotKeyThreshold, s"edges / HotKeyThreshold ($edgeBound / $HotKeyThreshold)")
-    if (hotRows.isEmpty) {
-      edges.join(matches, keys)
-        .select($"srcArtifactId", $"dstArtifactId")
-        .as[AaEdge]
-        .distinct()
-    } else {
-      val hot = hotRows.toSeq.toDF(keys: _*).withColumn("isHot", lit(true))
-      val saltsArr = array((0 until SaltBuckets).map(lit): _*)
-      val left = edges
-        .join(broadcast(hot), keys, "left")
-        .withColumn("salt",
-          when($"isHot", pmod(xxhash64($"srcArtifactId"), lit(SaltBuckets)).cast("int"))
-            .otherwise(lit(0)))
-        .drop("isHot")
-      val right = matches
-        .join(broadcast(hot), keys, "left")
-        .withColumn("salt", explode(when($"isHot", saltsArr).otherwise(array(lit(0)))))
-        .drop("isHot")
-      left.join(right, keys :+ "salt")
-        .select($"srcArtifactId", $"dstArtifactId")
-        .as[AaEdge]
-        .distinct()
-    }
+    val hubs = HubSalt(p, edgeBound).hubs(spark, keys.map(StructField(_, StringType)),
+      edges.groupBy(keys.map(col): _*).agg(count(lit(1))).queryExecution.toRdd)
+    val (many, one) = hubs.fold((edges, matches))(h => (h.salted(edges, $"srcArtifactId"), h.fannedOut(matches)))
+    many.join(one, hubs.fold(keys)(_.joinKeys))
+      .select($"srcArtifactId", $"dstArtifactId")
+      .as[AaEdge]
+      .distinct()
   }
 
   /** Rows of an edge table: from its plan statistics when it was counted
-    * (the mined tables are), else one count. The hot-key bound is stated in
+    * (the mined tables are), else one count. The hub policy is sized by
     * it. */
   private def rowCount(edges: Dataset[ApEdge]): Long =
     edges.queryExecution.optimizedPlan.stats.rowCount.fold(edges.count())(_.toLong)
 
   def run(spark: SparkSession, apEdges: Dataset[ApEdge], artifacts: Dataset[ArtifactRow]): Resolved =
-    inRun(spark, "resolve", CodegenConf) { _ =>
+    inRun(spark, "resolve", CodegenConf) { run =>
     import spark.implicits._
 
     // Column predicate, not a typed lambda: `filter(!_.resolved)`
@@ -190,7 +151,7 @@ object ResolveJob {
 
     // Fan matches back out to every unresolved edge with that (package,
     // spec), hub keys salted explicitly. MERGE semantics -> distinct.
-    val aa = saltedFanout(spark, unresolved.toDF(), rowCount(apEdges), matches)
+    val aa = saltedFanout(spark, unresolved.toDF(), rowCount(apEdges), run.confWidth, matches)
 
     // Candidates actually processed: unresolved incoming edges AND >=1
     // artifact. Needs only the package-id sets — no version lists (the
@@ -220,10 +181,10 @@ object ResolveJob {
    */
   def resolveDelta(spark: SparkSession, resolvedApEdges: Dataset[ApEdge],
                    newArtifacts: Dataset[ArtifactRow]): Dataset[AaEdge] =
-    inRun(spark, "resolve", CodegenConf) { _ =>
+    inRun(spark, "resolve", CodegenConf) { run =>
     // column predicate (codegen), same reasoning as `run`'s unresolved filter
     val resolved = resolvedApEdges.filter(col("resolved"))
     val matches = matchSpecs(distinctSpecs(spark, resolved), versionDict(spark, newArtifacts))
-    saltedFanout(spark, resolved.toDF(), rowCount(resolvedApEdges), matches)
+    saltedFanout(spark, resolved.toDF(), rowCount(resolvedApEdges), run.confWidth, matches)
   }
 }

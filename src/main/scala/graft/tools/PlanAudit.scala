@@ -27,7 +27,9 @@ object PlanAudit {
 > kernels' plans are not rebuilt here: with `GRAFT_KERNEL_EXPLAIN` set,
 > each loop kernel (PageRank, CC, LP, HITS, SCC, BFS, k-core) prints the
 > executed physical plan of its first boundary block to stderr from inside
-> its run, and SCC also its first trim round. The round-6 before/after
+> its run scope (`KernelRun.explain`, `graft/util/RunScope.scala`), and
+> SCC also its first trim round. BPE training runs on the same loop and
+> prints its first merge's plan the same way. The round-6 before/after
 > snapshots of the headline queries are the files under `plans/r06/`; the
 > changes behind them are logged in `OPTIMIZATION_r06.md`.
 """)
@@ -145,10 +147,13 @@ object PlanAudit {
     }
 
     audit("resolve fan-out join with hub-key salting",
-      "Expect: the hot-key set joins as BroadcastHashJoin on both inputs; the fan-out is a shuffle join keyed (dstPackageId, versionRange, salt) so one hub key spreads over SaltBuckets tasks; matches side exploded only for hot keys.") {
-      import spark.implicits._
-      val m = graft.queries.Queries.mined(spark, sfDir)
-      graft.resolve.ResolveJob.run(spark, m.apEdges, m.artifacts).aaEdges.toDF()
+      "Corpus: `Probe`'s resolve corpus at 200,000 AP edges, over the 150,000-row floor below which no join " +
+        "salts, with one (package, spec) key holding 10% of them (a mined sf0.001 corpus has no hub and plans " +
+        "the unsalted join). Expect: the hub set, a local relation of (dstPackageId, versionRange, nsalt), " +
+        "joins as BroadcastHashJoin onto both inputs; the fan-out is a shuffle join keyed (dstPackageId, " +
+        "versionRange, salt), so the hub key's edges spread over its nsalt sub-keys (`HubSalt`); the matches " +
+        "side is exploded over sub-keys for the hub key only.") {
+      graft.resolve.ResolveJob.run(spark, Probe.hubCorpus(spark, 200000L), Probe.artifacts(spark)).aaEdges.toDF()
     }
 
     java.nio.file.Files.writeString(java.nio.file.Paths.get("PLANS.md"), out.toString)

@@ -100,7 +100,7 @@ object Probe {
 
   /** AP edges where one package+spec key carries 10% of all edges (the
     * junit analogue); the rest spread uniformly over [[Packages]]. */
-  private def hubCorpus(spark: SparkSession, m: Long) = {
+  private[tools] def hubCorpus(spark: SparkSession, m: Long) = {
     import spark.implicits._
     spark.range(m).map { i =>
       val pkg = if (i % 10 == 0) 0L else 1L + Math.floorMod(mix(3L, i), Packages - 1)
@@ -108,7 +108,7 @@ object Probe {
     }
   }
 
-  private def artifacts(spark: SparkSession) = {
+  private[tools] def artifacts(spark: SparkSession) = {
     import spark.implicits._
     spark.range(Packages).flatMap { p =>
       Seq("1.0.0", "1.5.0", "2.0.0").map(v =>

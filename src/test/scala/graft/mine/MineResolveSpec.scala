@@ -7,7 +7,8 @@ import graft.manifest.ManifestParser
 import graft.model._
 import graft.resolve.ResolveJob
 import graft.versionrange.Resolvers
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MapType
 import org.scalatest.funsuite.AnyFunSuite
@@ -135,8 +136,16 @@ class MineResolveSpec extends AnyFunSuite {
     assert(mined.quarantine.count() == expectedBad)
   }
 
+  /** Whether `aa`'s plan joins on a hub sub-key: the salted fan-out. */
+  private def salted(aa: Dataset[AaEdge]): Boolean = aa.queryExecution.optimizedPlan.exists {
+    case j: Join => j.condition.exists(_.references.exists(_.name == "salt"))
+    case _ => false
+  }
+
   test("AA resolution matches a literal reference-semantics oracle") {
     val resolved = ResolveJob.run(spark, mined.apEdges, mined.artifacts)
+    // the corpus is under the 150,000-row floor below which no join salts
+    assert(!salted(resolved.aaEdges))
     val got = resolved.aaEdges.collect().map(e => (e.srcArtifactId, e.dstArtifactId)).toSet
 
     // Oracle: per target package, version->artifact map, per incoming edge
@@ -161,6 +170,38 @@ class MineResolveSpec extends AnyFunSuite {
     val withArtifacts = artifactsByPkg.keySet
     assert(ap.filter(e => withArtifacts.contains(e.dstPackageId)).forall(_.resolved))
     assert(ap.filter(e => !withArtifacts.contains(e.dstPackageId)).forall(!_.resolved))
+  }
+
+  test("a hub (package, spec) key above the salting floor resolves exactly through the salted join") {
+    // 170,000 AP edges, 160,000 of them on one (package, spec) key: more
+    // than the 150,000-row floor alone, so the fan-out join salts it. The
+    // rest spread over 40 packages and three specs.
+    val n = 170000L
+    val edge: Long => ApEdge = i => {
+      val (pkg, spec) =
+        if (i % 17 != 0) ("npm:pkg0", "^1.0.0") else (s"npm:pkg${1 + i % 40}", Seq(">=1.0.0", "~1.5.0", "<2.0.0")((i % 3).toInt))
+      ApEdge(s"npm:src${i % 4000}:1.0.0", pkg, "npm", spec, resolved = false, Map.empty)
+    }
+    val artifacts = for (p <- 0 to 40; v <- Seq("1.0.0", "1.5.0", "2.0.0"))
+      yield ArtifactRow(s"npm:pkg$p:$v", s"npm:pkg$p", v, VersionCompare.key(v), Map.empty)
+    val aa = ResolveJob.run(spark, spark.range(n).map(i => edge(i)), artifacts.toDS()).aaEdges
+    assert(salted(aa), "the hub key did not take the salted join")
+    val got = aa.collect().map(e => (e.srcArtifactId, e.dstArtifactId)).toSet
+
+    // driver-side fold: each distinct (package, spec) resolved once by the
+    // range library, then fanned out to its edges
+    val byPkg = artifacts.groupBy(_.packageId).view.mapValues(_.map(a => a.version -> a.id).toMap).toMap
+    val matches = scala.collection.mutable.Map.empty[(String, String), Set[String]]
+    val expected = (0L until n).iterator.map(edge).flatMap { e =>
+      val versions = byPkg.getOrElse(e.dstPackageId, Map.empty[String, String])
+      matches.getOrElseUpdate((e.dstPackageId, e.versionRange),
+        Resolvers.findMatchingVersions(e.repo, e.versionRange, versions.keys).map(versions))
+        .map(e.srcArtifactId -> _)
+    }.toSet
+    val (missing, extra) = (expected -- got, got -- expected)
+    assert(missing.isEmpty && extra.isEmpty,
+      s"${missing.size} AA edges missing (${missing.take(3)}), ${extra.size} extra (${extra.take(3)})")
+    assert(got.count(_._2.startsWith("npm:pkg0:")) == 8000)
   }
 
   test("update mode: anti-join skips known artifacts, delta re-resolution completes AA") {
