@@ -38,7 +38,9 @@ import org.apache.spark.sql.graftbridge.Bridge
  *  - every kernel runs in one [[KernelRun]] (`graft.util`), which sets the
  *    kernels' conf ([[KernelRun.KernelConf]]), frees what the kernel kept
  *    and runs the supersteps of PageRank, CC, LP, HITS, BFS, k-core and
- *    SCC's color and backward phases ([[KernelRun.loop]]). The rows a
+ *    SCC's outer, trim, color and backward loops ([[KernelRun.loop]]);
+ *    random walks keep a loop of their own, for the reason their scaladoc
+ *    gives. The rows a
  *    result reads are handed to it: PageRank's, CC's and LP's `release()`
  *    frees them; the other results leave them to the context cleaner.
  */
@@ -410,6 +412,12 @@ object GraphOps {
   private def edgeRows(edges: DataFrame, extra: Column*): RDD[InternalRow] =
     edges.select(Seq(col("src").cast("long"), col("dst").cast("long")) ++ extra: _*).queryExecution.toRdd
 
+  /** The `(src, dst)` pairs of [[edgeRows]]' `rows` that are edges of a
+    * loop-free kernel: a row with a NULL end is no edge, nor is a self-loop. */
+  private def loopFree(rows: RDD[InternalRow]): RDD[(Long, Long)] =
+    rows.flatMap(r =>
+      if (r.isNullAt(0) || r.isNullAt(1) || r.getLong(0) == r.getLong(1)) None else Some((r.getLong(0), r.getLong(1))))
+
   /** `rows` keyed by a never-NULL Long, laid out as an exchange by that
     * key at width `p` leaves them: each row in the partition Spark's hash
     * partitioning gives its key. A frame over them declares that layout
@@ -479,8 +487,7 @@ object GraphOps {
     * kept until the run closes and counted, which sizes them for the
     * planner; RDD work, it generates no code. A NULL end is no edge. */
   private def edgeTable(run: KernelRun, edges: DataFrame): EdgeTable = {
-    val pairs = edgeRows(edges).flatMap(r =>
-      if (r.isNullAt(0) || r.isNullAt(1) || r.getLong(0) == r.getLong(1)) None else Some((r.getLong(0), r.getLong(1))))
+    val pairs = loopFree(edgeRows(edges))
     val p = kernelPartitions(run.confWidth, pairs.count())
     run.width(p)
     val laid = run.keep(laidOutBy(pairs.map { case (s, d) => (s, InternalRow(s, d)) }, p).mapPartitions(distinctPairs))
@@ -644,9 +651,8 @@ object GraphOps {
     // edges. Like every round's state it is materialized by its digest.
     var edgePartitions = 0
     def start(restored: Option[DataFrame]) = {
-      val e = restored.fold(Bridge.dataFrame(spark, rows.flatMap(r =>
-        if (r.isNullAt(0) || r.isNullAt(1) || r.getLong(0) == r.getLong(1)) None
-        else Some(InternalRow(r.getLong(0), r.getLong(1)))).localCheckpoint(), edgeSchema))(
+      val e = restored.fold(Bridge.dataFrame(spark,
+        loopFree(rows).map { case (s, d) => InternalRow(s, d) }.localCheckpoint(), edgeSchema))(
         edgeState(_).localCheckpoint(false))
       edgePartitions = keptRows(e).fold(0)(_.getNumPartitions)
       e
@@ -925,9 +931,8 @@ object GraphOps {
    */
   private def trianglesPlan(spark: SparkSession, edges: DataFrame, sized: Boolean): DataFrame = {
     val part = new org.apache.spark.HashPartitioner(spark.conf.get(WidthKey, "32").toInt)
-    val neighbors = edgeRows(edges)
-      .flatMap(r => if (r.isNullAt(0) || r.isNullAt(1) || r.getLong(0) == r.getLong(1)) Iterator.empty
-        else Iterator((r.getLong(0), r.getLong(1)), (r.getLong(1), r.getLong(0))))
+    val neighbors = loopFree(edgeRows(edges))
+      .flatMap { case (s, d) => Iterator((s, d), (d, s)) }
       .partitionBy(part)
       .mapPartitions { it =>
         val adj = scala.collection.mutable.LongMap.empty[scala.collection.mutable.LongMap[Unit]]
@@ -1033,46 +1038,34 @@ object GraphOps {
    * degree >= k, by iterative peeling. Returns `(id, core_degree)` for the
    * surviving vertices with their degree INSIDE the core.
    *
-   * Scale shape: each peel round is one map-side-combined degree
-   * aggregation plus two semi-joins keyed on the endpoint ids; the edge
-   * set only ever SHRINKS, so round cost decreases monotonically.
+   * Scale shape: each peel round ([[peel]], SCC's trim too) is one
+   * map-side-combined degree aggregation plus two semi-joins keyed on the
+   * endpoint ids, which keep the edges whose two ends have degree >= k;
+   * the edge set only ever SHRINKS, so round cost decreases monotonically.
    * The edge set is the loop's state, cut lazily every round, and its
    * count is the round's one action: it materializes the round and is the
    * convergence test — every vertex present in `und` has >= 1 edge, so an
    * unchanged edge count implies an unchanged vertex set (no second
    * probe). Peel depth tracks the graph's degeneracy ordering width and is
-   * small on real link graphs (3 rounds on the sf0.01 mined-shape graph);
-   * `maxRounds` is a backstop bound, mirroring connectedComponents'
-   * maxIter. The core is returned as kept rows, not registered in the
-   * session's cache.
+   * small on real link graphs (3 rounds on the sf0.01 mined-shape graph),
+   * but a pendant chain peels one vertex per round, so by default the peel
+   * runs to its fixpoint, as SCC's trim does. A `maxRounds` bound the run
+   * reaches returns the partly peeled edges' core, as connectedComponents'
+   * maxIter returns partly contracted labels. The core is returned as kept
+   * rows, not registered in the session's cache.
    */
-  def kCore(spark: SparkSession, edges: DataFrame, k: Int, maxRounds: Int = 50): DataFrame =
+  def kCore(spark: SparkSession, edges: DataFrame, k: Int, maxRounds: Int = Int.MaxValue): DataFrame =
     kCoreResult(spark, edges, k, maxRounds)._1
 
   /** kCore plus the number of peel rounds it took to converge (face-honesty
     * evidence: the q62 oracle unrolls a fixed round count, so tests assert
     * convergence within it). */
   def kCoreResult(spark: SparkSession, edges: DataFrame, k: Int,
-                  maxRounds: Int = 50): (DataFrame, Int) = {
+                  maxRounds: Int = Int.MaxValue): (DataFrame, Int) = {
     require(k >= 1, s"k must be >= 1, got $k")
     inRun(spark, "kcore", KernelConf) { run =>
       import spark.implicits._
-      val nEdges = new SameCount
-      // the edge set only shrinks: each round is sized from the last count
-      def roundWidth = kernelPartitions(run.confWidth, nEdges.rows)
-      def peel(state: DataFrame) = {
-        // with no declared layout: over the checkpoint's, the two joins' same
-        // survivor subtree was not reused (two aggregations and broadcasts)
-        val und = Bridge.dataFrame(spark, keptRows(state).get, state.schema, Some(BigInt(nEdges.rows)))
-        run.width(roundWidth)
-        val surv = und.select($"u".as("x")).union(und.select($"v".as("x")))
-          .groupBy($"x").agg(count(lit(1)).as("c"))
-          .filter($"c" >= k).select($"x")
-        und.join(surv.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
-          .join(surv.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
-      }
-      val peeled = run.loop(maxRounds, 1, nEdges.rows, roundWidth,
-        _ => undirected(edges).localCheckpoint(false), peel, nEdges, chain = false)
+      val peeled = peel(run, undirected(edges).localCheckpoint(false), maxRounds, new SameCount)($"o" + $"i" >= k)
       val und = run.own(peeled.state)
       val core = run.handOff(und.select($"u".as("id")).union(und.select($"v".as("id")))
         .groupBy($"id").agg(count(lit(1)).as("core_degree"))
@@ -1081,6 +1074,33 @@ object GraphOps {
       core.count()
       (core, peeled.step)
     }
+  }
+
+  /** The peel of k-core and of SCC's trim: a [[KernelRun.loop]] from
+    * `start`, a two-column edge set, whose step keeps the edges with both
+    * ends passing `survives`, a test over an end's live degree as the first
+    * and as the second column, `o` and `i` (its out- and in-degree). The
+    * edge set only shrinks: each step is sized from the last count, and the
+    * first step that keeps every edge ends the loop (`live`, whose `rows` is
+    * then the final count). A step's count is its one job: it materializes
+    * the lazily cut step and tests it. */
+  private def peel(run: KernelRun, start: DataFrame, maxSteps: Int, live: SameCount)(survives: Column): Steps = {
+    def width = kernelPartitions(run.confWidth, live.rows)
+    def step(state: DataFrame) = {
+      // with no declared layout: over the checkpoint's, the two joins' same
+      // survivor subtree was not reused (two aggregations and broadcasts)
+      val es = Bridge.dataFrame(run.spark, keptRows(state).get, state.schema, Some(BigInt(live.rows)))
+      val Array(a, b) = es.columns
+      run.width(width)
+      val ends = es.select(col(a).as("x"), lit(1L).as("o"), lit(0L).as("i"))
+        .union(es.select(col(b).as("x"), lit(0L).as("o"), lit(1L).as("i")))
+        .groupBy("x").agg(sum("o").as("o"), sum("i").as("i"))
+        .filter(survives).select("x")
+      es.join(ends.withColumnRenamed("x", a), Seq(a), "left_semi")
+        .join(ends.withColumnRenamed("x", b), Seq(b), "left_semi")
+        .select(a, b)
+    }
+    run.loop(maxSteps, 1, live.rows, width, _ => start, step, live, chain = false)
   }
 
   /**
@@ -1253,33 +1273,37 @@ object GraphOps {
 
   /**
    * Strongly connected components via the distributed coloring algorithm
-   * (Orzan): per outer round, (1) TRIM vertices with no live in- or
-   * out-edges as singleton SCCs, (2) propagate the max-ancestor color
-   * forward to fixpoint, (3) collect each color root's SCC by backward
+   * (Orzan): per outer round, (1) TRIM the live edges to the ones whose two
+   * ends both keep a live in- and out-edge, (2) propagate the max-ancestor
+   * color forward to fixpoint, (3) collect each color root's SCC by backward
    * reachability INSIDE its color class (on-path vertices provably share
-   * the root's color), then peel the assigned vertices and repeat. Labels
-   * are canonicalized to the MIN member id at the end (engine-neutral).
+   * the root's color), then peel the collected members' edges and repeat
+   * until no edge is live. Every vertex no color class collects is a
+   * singleton SCC. Labels are canonicalized to the MIN member id at the end
+   * (engine-neutral).
    *
    * Scale notes: every phase is a vertex-keyed join/aggregation over the
    * live edge set, which only SHRINKS; trim drains the DAG tail en masse
    * (on dependency-graph shapes most vertices leave through trim, not
-   * coloring). Inner loops materialize per round with lineage cuts — the
-   * CC lesson: star/propagation rounds reference their input more than
-   * once, so lazy chaining re-executes. The color and backward loops run
-   * on [[KernelRun.loop]] without `chain` (each state cut lazily, its count
-   * the iteration's one action), joining edge sides pinned once per outer
-   * round ([[KernelRun.joinSide]]). The outer and trim loops stay
-   * hand-written until the trim is rewritten: a trim round peels the edge
-   * and vertex tables together and appends to the assigned parts, state
-   * the loop's single frame does not carry. Outer rounds are bounded by the
-   * condensation's longest root-blocked chain; real link graphs peel in a
-   * handful because every color class with its root inside resolves each
-   * round. Cycle detection (`scc size > 1`) is the dependency-graph use
-   * case this serves. The result is kept rows, materialized once and
-   * handed to the caller; the run frees every intermediate table, on
+   * coloring). Every loop runs on [[KernelRun.loop]] without `chain` (each
+   * state cut lazily, its count the step's one action) — the CC lesson:
+   * star/propagation rounds reference their input more than once, so lazy
+   * chaining re-executes. The outer loop's state is the live edge set; its
+   * step runs the trim as k-core's edge peel ([[peel]]), then the color and
+   * backward loops over edge sides pinned once per round
+   * ([[KernelRun.joinSide]]), and returns the edges the members leave. Outer
+   * rounds are bounded by the condensation's longest root-blocked chain;
+   * real link graphs peel in a handful because every color class with its
+   * root inside resolves each round. Cycle detection (`scc size > 1`) is
+   * the dependency-graph use case this serves. The result is one join of
+   * the vertex set with the collected members, kept rows materialized once
+   * and handed to the caller; the run frees every intermediate table, on
    * success and on failure.
    */
-  /** Per-phase iteration counts of an SCC run (probe/evidence surface). */
+  /** Per-phase iteration counts of an SCC run (probe/evidence surface):
+    * outer rounds, trim steps that removed edges, color and backward steps,
+    * the vertices no color class collected (singleton SCCs, whether the
+    * trim or the end of the run labels them) and the collected ones. */
   final case class SccStats(outerRounds: Int, trimRounds: Int, colorIters: Int,
                             backIters: Int, trimmedVerts: Long, coloredVerts: Long)
 
@@ -1293,127 +1317,109 @@ object GraphOps {
                 maxColorIters: Int = 500): (DataFrame, SccStats) = {
     import spark.implicits._
     var trimRounds = 0; var colorIters = 0; var backIters = 0
-    var trimmedVerts = 0L; var coloredVerts = 0L
+    var coloredVerts = 0L
     inRun(spark, "scc", KernelConf) { run =>
       val table = edgeTable(run, edges)
-      val p = table.partitions
-      // the live edges by src; a superseded set is freed once the next is built
-      var e = table.bySrc
-      def peelEdges(next: DataFrame): Unit = {
-        val built = run.own(next.select($"src", $"dst").repartition(p, $"src").localCheckpoint(true))
-        run.free(e)
-        e = built
-      }
-      var (verts, nv) = table.vertices
-      val assignedParts = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      var outer = 0
-      while (nv > 0 && outer < maxOuter) {
-        // (1) trim TO FIXPOINT: no live out-edges OR no live in-edges ->
-        // singleton SCC. On dependency-graph shapes the overwhelming
-        // majority of vertices leave here (sf0.01 face: 23,516
-        // of 23,808 through 10 trim rounds; coloring then touches 292),
-        // so iterating the cheap trim before any coloring collapses the
-        // expensive phase onto the small cyclic core — 33 s vs ~8 min
-        // with one-trim-per-outer-round, measured.
-        //
-        // Round shape (r6): ONE endpoint-tag aggregation decides the whole
-        // round — a vertex SURVIVES iff it has both a live out-edge and a
-        // live in-edge; everything else in `verts` (including vertices the
-        // previous peel left edge-less) is a singleton SCC. The survivor
-        // table IS the next vertex set (endpoints of e are always a subset
-        // of verts) and the trimmed part is a lazy anti-join of two
-        // checkpointed frames, scanned once in the final assemble. The
-        // src-side peel join rides e's hash(src) layout exchange-free.
-        // (A driver-known-size broadcast peel was tried here and REJECTED:
-        // two per-round broadcast builds added ~0.3 s/round of driver
-        // latency at probe scale, and the rounds small enough to qualify
-        // are the cheap tail anyway — guide §1.1's empirical loop.)
-        var trimming = true
-        while (trimming && nv > 0) {
-          val survPlan = e.select($"src".as("id"), lit(1).as("o"), lit(0).as("i"))
-            .union(e.select($"dst".as("id"), lit(0).as("o"), lit(1).as("i")))
-            .groupBy($"id").agg(max($"o").as("o"), max($"i").as("i"))
-            .filter($"o" === 1 && $"i" === 1)
-            .select($"id")
-          run.explain("trim round", survPlan)
-          val surv = run.own(survPlan.localCheckpoint(true))
-          val nSurv = surv.count()
-          val nTrim = nv - nSurv
-          if (nTrim == 0) trimming = false
-          else {
-            trimRounds += 1; trimmedVerts += nTrim
-            assignedParts += verts.join(surv, Seq("id"), "left_anti")
-              .select($"id", $"id".as("scc"))
-            verts = surv
-            nv = nSurv
-            peelEdges(e.join(surv.select($"id".as("src")), Seq("src"), "left_semi")
-              .join(surv.select($"id".as("dst")), Seq("dst"), "left_semi"))
-          }
+      // the vertex set, taken before the outer loop frees its start, the
+      // table's rows
+      val (vertices, n) = table.vertices
+      // (2) and (3) over the trimmed live edges `t`, `rows` of them: the
+      // members their color classes collect. Only the members outlive it.
+      def collectMembers(t: DataFrame, rows: Long): DataFrame = {
+        val p = kernelPartitions(run.confWidth, rows)
+        val colorSide = run.joinSide(t, p, Seq("src"))
+        val backSide = run.joinSide(t, p, Seq("dst"))
+        // (2) forward max-ancestor coloring to fixpoint over t's vertices
+        // (each has an out-edge); a state row is (id, color, whether the
+        // step that made it raised the color)
+        def color(c: DataFrame) = {
+          val contrib = c.select($"id".as("src"), $"color")
+            .join(colorSide, Seq("src"))
+            .groupBy($"dst".as("id")).agg(max($"color").as("mc"))
+          c.join(contrib, Seq("id"), "left")
+            .select($"id",
+              greatest($"color", coalesce($"mc", $"color")).as("color"),
+              (coalesce($"mc", $"color") > $"color").as("ch"))
         }
-        if (nv > 0) {
-          val colorSide = run.joinSide(e, p, Seq("src"), Some(e))
-          val backSide = run.joinSide(e, p, Seq("dst"))
-          // (2) forward max-ancestor coloring to fixpoint; a state row is
-          // (id, color, whether the step that made it raised the color)
-          def color(c: DataFrame) = {
-            val contrib = c.select($"id".as("src"), $"color")
-              .join(colorSide, Seq("src"))
-              .groupBy($"dst".as("id")).agg(max($"color").as("mc"))
-            c.join(contrib, Seq("id"), "left")
-              .select($"id",
-                greatest($"color", coalesce($"mc", $"color")).as("color"),
-                (coalesce($"mc", $"color") > $"color").as("ch"))
-          }
-          var changed = 0L
-          val colored = run.loop(maxColorIters, 1, table.count, p,
-            _ => verts.select($"id", $"id".as("color"), lit(true).as("ch")).localCheckpoint(false), color,
-            (_, c) => { changed = keptRows(c).get.filter(_.getBoolean(2)).count(); changed == 0 }, chain = false)
-          val colors = run.own(colored.state).select($"id", $"color")
-          colorIters += colored.step
-          require(changed == 0, s"scc: color propagation did not converge in $maxColorIters rounds")
-          // (3) backward collection inside color classes, from the roots.
-          // The state is the cumulative member table, each row tagged with
-          // the step that reached it, so a step expands the last step's
-          // rows (coalesced as BFS's); the loop ends at the first step that
-          // reaches no vertex.
-          var k = 0
-          def collect(m: DataFrame) = {
-            k += 1
-            m.union(m.filter($"it" === k - 1).select($"id".as("dst"), $"scc")
-              .join(backSide, Seq("dst"))
-              .select($"src".as("id"), $"scc").distinct()
-              .join(colors, Seq("id"))
-              .filter($"color" === $"scc")
-              .select($"id", $"scc")
-              .join(m, Seq("id"), "left_anti")
-              .withColumn("it", lit(k))).coalesce(p)
-          }
-          val reached = new SameCount
-          val collected = run.loop(Int.MaxValue, 1, table.count, p,
-            _ => colors.filter($"id" === $"color").select($"id", $"color".as("scc"), lit(0).as("it"))
-              .localCheckpoint(false), collect, reached, chain = false)
-          val members = run.own(collected.state).select($"id", $"scc")
-          backIters += collected.step - 1
-          coloredVerts += reached.rows
-          assignedParts += members
-          verts = run.own(verts.join(members, Seq("id"), "left_anti").localCheckpoint(true))
-          nv -= reached.rows // members is a subset of verts and distinct
-          peelEdges(e.join(members.select($"id".as("src")), Seq("src"), "left_anti")
-            .join(members.select($"id".as("dst")), Seq("dst"), "left_anti"))
-          Seq(colorSide, backSide).foreach(_.unpersist(false))
+        var changed = 0L
+        val colored = run.loop(maxColorIters, 1, rows, p,
+          _ => t.select($"src".as("id")).distinct().select($"id", $"id".as("color"), lit(true).as("ch"))
+            .localCheckpoint(false), color,
+          (_, c) => { changed = keptRows(c).get.filter(_.getBoolean(2)).count(); changed == 0 }, chain = false)
+        val colors = colored.state.select($"id", $"color")
+        colorIters += colored.step
+        require(changed == 0, s"scc: color propagation did not converge in $maxColorIters rounds")
+        // (3) backward collection inside color classes, from the roots.
+        // The state is the cumulative member table, each row tagged with
+        // the step that reached it, so a step expands the last step's
+        // rows (coalesced as BFS's); the loop ends at the first step that
+        // reaches no vertex.
+        var k = 0
+        def collect(m: DataFrame) = {
+          k += 1
+          m.union(m.filter($"it" === k - 1).select($"id".as("dst"), $"scc")
+            .join(backSide, Seq("dst"))
+            .select($"src".as("id"), $"scc").distinct()
+            .join(colors, Seq("id"))
+            .filter($"color" === $"scc")
+            .select($"id", $"scc")
+            .join(m, Seq("id"), "left_anti")
+            .withColumn("it", lit(k))).coalesce(p)
         }
-        outer += 1
+        val reached = new SameCount
+        val collected = run.loop(Int.MaxValue, 1, rows, p,
+          _ => colors.filter($"id" === $"color").select($"id", $"color".as("scc"), lit(0).as("it"))
+            .localCheckpoint(false), collect, reached, chain = false)
+        backIters += collected.step - 1
+        coloredVerts += reached.rows
+        Seq(colorSide, backSide).foreach(_.unpersist(false))
+        run.free(colored.state)
+        run.own(collected.state).select($"id", $"scc")
       }
-      require(nv == 0, s"scc: did not peel the graph in $maxOuter outer rounds")
-      val stats = SccStats(outer, trimRounds, colorIters, backIters, trimmedVerts, coloredVerts)
-      // empty edge table (or self-loops only): no vertices, empty result
-      if (assignedParts.isEmpty) (Seq.empty[(Long, Long)].toDF("id", "scc"), stats)
-      else {
-        // canonicalize: min member id per component
-        val assigned = assignedParts.reduce(_.unionByName(_))
-        val relabel = assigned.groupBy($"scc").agg(min($"id").as("mid"))
-        (run.handOff(assigned.join(relabel, Seq("scc")).select($"id", $"mid".as("scc")).localCheckpoint(true)), stats)
+
+      val members = scala.collection.mutable.ListBuffer.empty[DataFrame]
+      // the last round's trimmed edges, which its live edges are built from
+      var trimmedLast: Option[DataFrame] = None
+      def round(e: DataFrame): DataFrame = {
+        // (1) trim TO FIXPOINT: an edge stays while both its ends have a
+        // live in-edge and a live out-edge; every other vertex is a singleton
+        // SCC. On dependency-graph shapes the overwhelming majority of
+        // vertices leave here (sf0.01 face: 23,516 of 23,808 through 10 trim
+        // rounds; coloring then touches 292), so iterating the cheap trim
+        // before any coloring collapses the expensive phase onto the small
+        // cyclic core — 33 s vs ~8 min with one-trim-per-outer-round,
+        // measured.
+        val trim = new SameCount
+        val trimmed = peel(run, e, Int.MaxValue, trim)($"o" > 0 && $"i" > 0)
+        trimRounds += trimmed.step - 1
+        trimmedLast = Some(trimmed.state)
+        val t = Bridge.dataFrame(spark, keptRows(trimmed.state).get, edgeSchema, Some(BigInt(trim.rows)))
+        if (trim.rows == 0) t
+        else {
+          val m = collectMembers(t, trim.rows)
+          members += m
+          t.join(m.select($"id".as("src")), Seq("src"), "left_anti")
+            .join(m.select($"id".as("dst")), Seq("dst"), "left_anti")
+            .select($"src", $"dst")
+        }
       }
+      // the live edge count: the start's is the table's, counted already
+      var live = 0L
+      val outer = run.loop(maxOuter, 1, live, table.partitions, _ => table.bySrc, round, (prev, e) => {
+        live = prev.fold(table.count)(_ => keptRows(e).get.count())
+        trimmedLast.foreach(run.free)
+        live == 0
+      }, chain = false)
+      run.free(outer.state)
+      require(live == 0, s"scc: did not peel the graph in $maxOuter outer rounds")
+      val stats = SccStats(outer.step, trimRounds, colorIters, backIters, n - coloredVerts, coloredVerts)
+      // every vertex no color class collected is its own SCC; canonicalize:
+      // min member id per component
+      val labels = members.reduceOption(_.unionByName(_)).fold(vertices.select($"id", $"id".as("scc"))) { m =>
+        val assigned = vertices.join(m, Seq("id"), "left").select($"id", coalesce($"scc", $"id").as("scc"))
+        assigned.join(assigned.groupBy($"scc").agg(min($"id").as("mid")), Seq("scc")).select($"id", $"mid".as("scc"))
+      }
+      (run.handOff(labels.localCheckpoint(true)), stats)
     }
   }
 

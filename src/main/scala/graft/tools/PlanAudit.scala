@@ -27,9 +27,9 @@ object PlanAudit {
 > kernels' plans are not rebuilt here: with `GRAFT_KERNEL_EXPLAIN` set,
 > each loop kernel (PageRank, CC, LP, HITS, SCC, BFS, k-core) prints the
 > executed physical plan of its first boundary block to stderr from inside
-> its run scope (`KernelRun.explain`, `graft/util/RunScope.scala`), and
-> SCC also its first trim round. BPE training runs on the same loop and
-> prints its first merge's plan the same way. The round-6 before/after
+> its run scope (`KernelRun.explain`, `graft/util/RunScope.scala`); SCC's
+> is its first trim step. BPE training runs on the same loop and prints
+> its first merge's plan the same way. The round-6 before/after
 > snapshots of the headline queries are the files under `plans/r06/`; the
 > changes behind them are logged in `OPTIMIZATION_r06.md`.
 """)
@@ -65,6 +65,15 @@ object PlanAudit {
     audit("q03 broadcast join",
       "Expect: BroadcastHashJoin for the nation dim; no shuffle on the small side.") {
       graft.queries.Queries.queries("q03_join_agg")(spark, sfDir)
+    }
+
+    audit("q06 distinct pairs",
+      "Expect: a partial HashAggregate on (l_suppkey, l_partkey) over the two-column scan, ONE Exchange " +
+        "hashpartitioning(l_suppkey, l_partkey) at the session width, then the final HashAggregate. The parquet " +
+        "scan carries no layout by those keys, so that exchange is the distinct's one shuffle; at sf0.1 the " +
+        "partial aggregate removes almost nothing (600,000 rows in, 590,973 distinct pairs out), so nearly every " +
+        "row crosses it.") {
+      graft.queries.Queries.queries("q06_distinct_pairs")(spark, sfDir)
     }
 
     audit("q17 lazy per-vertex triangles (trianglesPerVertex)",

@@ -85,8 +85,10 @@ object Probe {
       case "scc" =>
         val (scc, s) = GraphOps.sccResult(spark, graph)
         val n = scc.count()
+        // trimRounds counts the trim steps that removed edges; trimmed is
+        // every vertex no color class collected, trimmed + colored = vertices
         _ => s"vertices=$n outer=${s.outerRounds} trimRounds=${s.trimRounds} colorIters=${s.colorIters} " +
-          s"backIters=${s.backIters} trimmed=${s.trimmedVerts} colored=${s.coloredVerts}"
+          s"backIters=${s.backIters} colored=${s.coloredVerts} trimmed=${s.trimmedVerts} (vertices - colored)"
       case "resolve" =>
         val aa = graft.resolve.ResolveJob.run(spark, hubCorpus(spark, rows), artifacts(spark)).aaEdges.count()
         _ => s"apEdges=$rows aaEdges=$aa"

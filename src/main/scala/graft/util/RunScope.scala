@@ -128,9 +128,9 @@ private[graft] final class KernelRun private (val spark: SparkSession, kernel: S
 
   /** With `GRAFT_KERNEL_EXPLAIN` set, prints the formatted physical plan of
     * the first frame passed here as `what` — the loop passes its first
-    * boundary block, SCC also its first trim round — to stderr: the shape
-    * the kernel really executes, dumped from inside it without touching
-    * the hot path. Later calls with the same `what` print nothing. */
+    * boundary block — to stderr: the shape the kernel really executes,
+    * dumped from inside it without touching the hot path. Later calls with
+    * the same `what` print nothing. */
   def explain(what: String, df: DataFrame): Unit =
     if (!explained(what) && sys.env.contains("GRAFT_KERNEL_EXPLAIN")) {
       explained += what
